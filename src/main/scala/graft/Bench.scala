@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round perf record. Honest in two ways a naive harness isn't:
   *
   *  - every query is evaluated through a noop sink (full evaluation of
@@ -56,21 +54,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed, not passed through: the emitted JSON interpolates this
-    // unquoted as "cpus":N, so a non-numeric value (e.g. "*") must fail
-    // here rather than emit malformed JSON downstream parsers choke on
-    // default 8 (capped to the host): the r6–r8 steady-state numbers
-    // were all measured at local[8]; 4 threads doubles wall-clock on a
-    // 173-entry sweep and 32 regresses sub-second queries on overhead.
-    // The emitted JSON carries `cpus` so rounds stay comparable.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(8, Runtime.getRuntime.availableProcessors).toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the emitted JSON carries `cpus` so rounds stay comparable
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
 
     // quiesce check (r12 verdict #6): medians taken at loadavg 6 showed
     // two phantom 2.5x regressions that vanished at min-of-iters. The

@@ -10,6 +10,17 @@ import org.apache.spark.sql.SparkSession
   * UTC session time zone for oracle parity.
   */
 object GraftSession {
+  /** Core count for the driver-side mains (Bench, Verify, Probe):
+    * `SPARK_GRAFT_CPUS`, else the host's cores capped at 8 — the r6–r8
+    * steady-state numbers were all measured at local[8]; 4 threads
+    * doubles wall-clock on a full sweep and 32 regresses sub-second
+    * queries on overhead. Parsed, not passed through: Bench emits it
+    * unquoted as `"cpus":N`, so a non-numeric value (e.g. "*") must
+    * fail here rather than as malformed JSON downstream.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(8, Runtime.getRuntime.availableProcessors))
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
       .builder()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,18 +13,7 @@ object Verify {
         val pats = args(2).split(',').filter(_.nonEmpty)
         name => pats.exists(name.contains)
       } else _ => true
-    // default scaled to the host (capped): the dump now covers ~175
-    // queries and a 4-thread default doubles the gate's wall-clock for
-    // no correctness benefit; SPARK_GRAFT_CPUS still overrides
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(8, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

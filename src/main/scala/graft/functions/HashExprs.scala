@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 60-bit md5-prefix hash: the long whose value equals parsing
-  * the first 15 hex chars of md5(s) â i.e. the top 60 bits of the
-  * digest â computed straight from the digest bytes.
+  * the first 15 hex chars of md5(s) — i.e. the top 60 bits of the
+  * digest — computed straight from the digest bytes.
   *
   * Semantically identical to `conv(substring(md5(s),1,15),16,10)::long`
   * (and to the oracle's `('0x'||substr(md5(s),1,15))::BIGINT`) but
@@ -39,10 +39,10 @@ case class Md5Prefix60(child: Expression) extends UnaryExpression {
 }
 
 /** 60-bit SimHash over an array of 60-bit hashes, in one pass: per bit
-  * j, sign-sum of ((h >> j) & 1)Â·2â1 over the array; bit j of the
+  * j, sign-sum of ((h >> j) & 1)·2−1 over the array; bit j of the
   * result is set iff the sum is positive.
   *
-  * Replaces the explode â 60 partial-sum aggregates â reassemble
+  * Replaces the explode → 60 partial-sum aggregates → reassemble
   * formulation: same value (the oracle's unnest+SUM SQL is unchanged)
   * but computed per row in whole-stage codegen with NO shuffle of the
   * exploded gram relation.
@@ -70,8 +70,8 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 
 /** SimHash60 fused with the gram hashing: input array<string> of
   * shingles, output the 60-bit simhash of their Md5Prefix60 hashes.
-  * The two-step composition (`transform(gs, md5_60)` â SimHash60) pays
-  * higher-order-function interpretation per element â ArrayTransform
+  * The two-step composition (`transform(gs, md5_60)` → SimHash60) pays
+  * higher-order-function interpretation per element — ArrayTransform
   * has no codegen; this fusion is one native loop.
   */
 case class SimHashGrams(child: Expression) extends UnaryExpression {
@@ -97,7 +97,7 @@ case class SimHashGrams(child: Expression) extends UnaryExpression {
 
 /** Null contract (both entry points, registered as `graft_simhash60` /
   * `graft_simhash_grams` for arbitrary user arrays): null elements are
-  * SKIPPED â the simhash of the non-null elements, never garbage from
+  * SKIPPED — the simhash of the non-null elements, never garbage from
   * reading a null slot.
   */
 object SimHash60 {
@@ -142,11 +142,11 @@ object SimHash60 {
   }
 }
 
-/** Fused tokenize â word n-gram shingle â 60-bit hash: input the raw
+/** Fused tokenize → word n-gram shingle → 60-bit hash: input the raw
   * text, output `array<long>` of (optionally distinct, first-occurrence
   * order) Md5Prefix60 hashes of the space-joined n-grams of the
-  * lowercased space-split tokens â value-identical to the composed
-  * `transform(sequenceâ¦, array_join(sliceâ¦))` + md5_60 pipeline, but
+  * lowercased space-split tokens — value-identical to the composed
+  * `transform(sequence…, array_join(slice…))` + md5_60 pipeline, but
   * one native loop instead of three interpreted higher-order functions
   * per row. Downstream joins/aggregates shuffle 8-byte longs instead
   * of gram strings.
@@ -177,7 +177,7 @@ case class GramHashes(child: Expression, n: Int, distinct: Boolean)
 object GramHashes {
   // Named `compute`, NOT `eval`: the case class inherits Expression.eval,
   // and Scala suppresses the companion's static forwarder on a name
-  // collision â a static `eval(UTF8String,int,boolean)` would not exist
+  // collision — a static `eval(UTF8String,int,boolean)` would not exist
   // in bytecode, Janino compilation would fail, and Spark would silently
   // fall back to interpreted projections for every gram-based query.
   def compute(s: UTF8String, n: Int, distinct: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
@@ -218,14 +218,14 @@ object GramHashes {
   }
 }
 
-/** Fused tokenize â word n-gram STRINGS â GramHashes' sibling for
+/** Fused tokenize → word n-gram STRINGS — GramHashes' sibling for
   * consumers that need the gram text itself (collocations, repetition
   * stats): `array<string>` of space-joined n-grams of the lowercased
   * space-split tokens, optionally distinct (first-occurrence order).
-  * EMPTY for docs with fewer than n tokens â a 1-token doc has no
+  * EMPTY for docs with fewer than n tokens — a 1-token doc has no
   * bigrams (unlike GramHashes' whole-text fallback, whose consumers
   * want every doc representable). Value-identical to the composed
-  * `transform(sequenceâ¦, concat(element_atâ¦))` formulation, which at
+  * `transform(sequence…, concat(element_at…))` formulation, which at
   * sf0.1 spent ~2.7 s/query in interpreted lambda evaluation; this is
   * one native loop inlined into whole-stage codegen.
   */
@@ -254,7 +254,7 @@ case class WordGrams(child: Expression, n: Int, distinct: Boolean)
 }
 
 object WordGrams {
-  // `compute`, not `eval` â see the GramHashes forwarder-suppression note
+  // `compute`, not `eval` — see the GramHashes forwarder-suppression note
   def compute(s: UTF8String, n: Int, distinct: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
     val toks = s.toLowerCase.toString.split(" ", -1)
     if (toks.length < n)
@@ -285,21 +285,21 @@ object WordGrams {
 }
 
 /** Minimum polynomial rolling hash over fixed-size character windows
-  * (RabinâKarp): h(w) = fold((a,c) -> (aÂ·B + c) mod P) over the
+  * (Rabin–Karp): h(w) = fold((a,c) -> (a·B + c) mod P) over the
   * window's chars; result = min over all windows (docs shorter than
   * the window hash whole). Computed with the O(n) rolling recurrence
-  * (subtract the outgoing term via B^(kâ1) mod P, shift, add) â the
-  * DuckDB oracle recomputes each window's fold O(nÂ·k); identical
+  * (subtract the outgoing term via B^(k−1) mod P, shift, add) — the
+  * DuckDB oracle recomputes each window's fold O(n·k); identical
   * values, which is exactly what makes it a *rolling* hash.
   * Chars are taken as bytes (== code points for the ASCII corpus).
   */
 /** Sliding-window minima over an `array<long>` (the winnowing
   * selection step, Schleimer et al.): the DISTINCT minima of every
   * `w`-wide window, first-occurrence order; whole-array min for inputs
-  * shorter than the window. One O(n) monotonic-deque pass in codegen â
-  * the composed `transform(sequenceâ¦, array_min(sliceâ¦))` +
+  * shorter than the window. One O(n) monotonic-deque pass in codegen —
+  * the composed `transform(sequence…, array_min(slice…))` +
   * `array_distinct` formulation is its reference semantics (asserted
-  * in GramFusionSpec) but costs O(nÂ·w) in interpreted lambda eval
+  * in GramFusionSpec) but costs O(n·w) in interpreted lambda eval
   * (measured 9.3 s for text_winnow at sf0.1; this expression is the
   * reason that query is sub-second).
   */
@@ -360,12 +360,12 @@ object WinnowMins {
   }
 }
 
-/** ALL window hashes of the RabinâKarp roll (RollingHashMin's
+/** ALL window hashes of the Rabin–Karp roll (RollingHashMin's
   * recurrence, emitted per position instead of min-folded): element i
-  * is h(s[i .. i+window)) â the relation content-defined chunking cuts
-  * on. O(n) one pass; the oracle recomputes each window's fold O(nÂ·k)
+  * is h(s[i .. i+window)) — the relation content-defined chunking cuts
+  * on. O(n) one pass; the oracle recomputes each window's fold O(n·k)
   * with identical values. Inputs shorter than the window yield an
-  * empty array (no full window exists â no cut candidates).
+  * empty array (no full window exists → no cut candidates).
   */
 case class RollingHashAll(child: Expression, window: Int) extends UnaryExpression {
 
@@ -396,7 +396,7 @@ case class RollingHashAll(child: Expression, window: Int) extends UnaryExpressio
 object RollingHashAll {
   import RollingHashMin.{B, P}
 
-  /** String input hashes its UTF-8 OCTETS â identical to handing the
+  /** String input hashes its UTF-8 OCTETS — identical to handing the
     * raw bytes to the binary overload (the property the byte-level CDC
     * arc rides: cut offsets are byte offsets regardless of charset
     * width).
@@ -480,7 +480,7 @@ object RollingHashMin {
 
 /** 16-permutation MinHash signature over an `array<long>` of shingle
   * hashes, one native pass: element i of the result is
-  * min over the array of (aáµ¢Â·(h mod 2Â³â°)+báµ¢) mod P â value-identical
+  * min over the array of (aᵢ·(h mod 2³⁰)+bᵢ) mod P — value-identical
   * to the batch groupBy-per-permutation-min formulation (same
   * per-element values, same minima), but computed PER ROW. That is
   * the form the streaming probe needs: a groupBy(doc_id) signature
@@ -523,7 +523,7 @@ object MinHashSig {
   private val A = Hashing.Perms.map(_._1).toArray
   private val B = Hashing.Perms.map(_._2).toArray
 
-  // `compute`, not `eval` â see the GramHashes forwarder-suppression note
+  // `compute`, not `eval` — see the GramHashes forwarder-suppression note
   def compute(arr: org.apache.spark.sql.catalyst.util.ArrayData): org.apache.spark.sql.catalyst.util.ArrayData = {
     val n = arr.numElements()
     if (n == 0)
@@ -550,7 +550,7 @@ object MinHashSig {
 /** F6: 60-bit gradient ("difference hash") perceptual signature over a
   * binary payload: the payload's first 61 `blockBytes`-sized blocks
   * are summed (blocks past the end sum to 0); bit i is set iff block
-  * i's sum exceeds block i+1's â integer compares, so the oracle's
+  * i's sum exceeds block i+1's — integer compares, so the oracle's
   * SQL formulation is bit-exact with no floating-point divergence.
   * 60 bits keeps the value positive in a BIGINT on both engines,
   * matching the md5_60/simhash60 convention.
@@ -558,16 +558,16 @@ object MinHashSig {
   * The gradient rule (not the global-mean blockhash rule) matters: a
   * mean-threshold bit is set for every nonempty block of a
   * short-payload asset, so the signature degenerates into a length
-  * hash (measured: 13 808 banded pairs at hamming â¤ 4 on the sf0.01
+  * hash (measured: 13 808 banded pairs at hamming ≤ 4 on the sf0.01
   * corpus, nearly all length coincidences vs 343 under the gradient
   * rule). Near-dup assets survive re-encode/light edits under a
   * block-gradient hash where F5's exact checksum misses them; the
   * stub grid stands in for the decoded luma plane (this container
-  * has no codecs) â a real deployment hashes decoded bytes with the
+  * has no codecs) — a real deployment hashes decoded bytes with the
   * identical bit rule.
   */
-/** Byte-gradient ENERGY Î£|b[i+1]âb[i]| over the payload (unsigned
-  * bytes) â F16's sharpness proxy in ONE tight pass. The composed
+/** Byte-gradient ENERGY Σ|b[i+1]−b[i]| over the payload (unsigned
+  * bytes) — F16's sharpness proxy in ONE tight pass. The composed
   * `sequence()+aggregate()` formulation materializes a position array
   * per row (measured 6.5 s over 5k sf0.1 assets); this is the DHash60
   * discipline instead: no allocation, codegen'd via a static call.
@@ -604,7 +604,7 @@ case class GradEnergy(child: Expression) extends UnaryExpression {
 }
 
 object GradEnergy {
-  // `compute`, not `eval` â see the GramHashes forwarder-suppression note
+  // `compute`, not `eval` — see the GramHashes forwarder-suppression note
   def compute(bytes: Array[Byte]): Long = {
     var s = 0L
     var i = 1
@@ -647,7 +647,7 @@ case class DHash60(child: Expression, blockBytes: Int) extends UnaryExpression {
 }
 
 object DHash60 {
-  // `compute`, not `eval` â see the GramHashes forwarder-suppression note
+  // `compute`, not `eval` — see the GramHashes forwarder-suppression note
   def compute(bytes: Array[Byte], blockBytes: Int): Long = {
     val sums = new Array[Long](61)
     var i = 0
@@ -689,11 +689,11 @@ object Md5Prefix60 {
   }
 }
 
-/** Count of DISTINCT common values of two long-array shingle sets â
+/** Count of DISTINCT common values of two long-array shingle sets —
   * value-identical to `size(array_intersect(a, b))` (common VALUES
   * counted once even under duplicates) but with no intermediate
   * intersection array: the Jaccard verify evaluates this once per
-  * candidate pair (~10â¶ rows/query), where array_intersect's
+  * candidate pair (~10⁶ rows/query), where array_intersect's
   * allocated-and-discarded ArrayData per row is pure overhead. Hash
   * set built from the smaller side, probed by the larger,
   * remove-on-match so each common value counts once.
@@ -739,7 +739,7 @@ object IntersectCount {
   // Open-addressing scratch table, thread-local and grow-only: the
   // verify stage calls compute() millions of times per task (one per
   // candidate pair), and the previous java.util.HashSet[java.lang.Long]
-  // form allocated a table + ~|small| boxed Longs PER CALL â an
+  // form allocated a table + ~|small| boxed Longs PER CALL — an
   // allocation storm that dominated the hottest dedup stage and made
   // its pre-JIT interpreted window catastrophically slow (measured 98 s
   // task-time vs 6 s warm for the identical stage). Primitive longs,
@@ -750,15 +750,15 @@ object IntersectCount {
     override def initialValue(): Array[Long] = Array.fill(1024)(EMPTY)
   }
 
-  // static entry named `compute`, not `eval` â see GramHashes note
+  // static entry named `compute`, not `eval` — see GramHashes note
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
       b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
     val (small, large) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
     val n = small.numElements()
-    // sentinel collision (values within 2 of Long.MinValue â impossible
+    // sentinel collision (values within 2 of Long.MinValue — impossible
     // for the 60-bit gram/fingerprint hashes this serves, but compute()
     // is generic): correctness fallback to the boxed path. BOTH sides
-    // must be scanned â a sentinel-valued probe from `large` would
+    // must be scanned — a sentinel-valued probe from `large` would
     // false-match EMPTY slots (tombstoning one per duplicate until no
     // EMPTY remains and the probe loop can never terminate)
     var i = 0

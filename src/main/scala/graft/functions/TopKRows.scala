@@ -4,11 +4,12 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** EXACT top-k-per-group as a typed Aggregator with ≤k-pair map-side
-  * merged state. Honest scale note (TopKProbe, 4M rows × 5 groups,
+  * merged state. Honest scale note (measured at 4M rows × 5 groups,
   * cpus=8): Spark ≥3.5's InferWindowGroupLimit ALREADY pushes a
-  * `row_number() <= k` rank window below the shuffle
-  * (WindowGroupLimitExec: 120 rows shuffled, not 4M — the naive
-  * "window shuffles every row" claim is stale on this engine), so the
+  * `row_number() <= k` rank window below the shuffle (a partial
+  * WindowGroupLimit under the exchange, pinned by PlanSpec: 120 rows
+  * shuffled, not 4M — the naive "window shuffles every row" claim is
+  * stale on this engine), so the
   * aggregator's remaining edge is structural, not asymptotic:
   * (a) top-k becomes an AGGREGATE — composable with other per-group
   * aggregates in the SAME map-side pass (the window form forces a

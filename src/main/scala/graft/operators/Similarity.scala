@@ -2656,7 +2656,7 @@ object Similarity {
         .select(col("q_id"), col("dst").as("vec_id"))
       // ONE eager checkpoint EVERY round. The r16 snapshot tried
       // checkpointing every other round ("half the eager jobs") — a
-      // back-to-back TimeQuery A/B measured ann_method_recall ~1.6-2×
+      // back-to-back `graft.Probe time` A/B measured ann_method_recall ~1.6-2×
       // SLOWER with the lazy gap (min 18.6→29.5 s at sf0.1, control-
       // normalized ~2×): the skipped round's un-truncated subtree is
       // consumed twice by the next round (expansion + union), and the
@@ -2920,7 +2920,7 @@ object Similarity {
     * tight true-neighbor cliques (that is what NN-descent optimizes),
     * so a greedy walk can enter but not leave a region — the probe
     * measured symmetrization alone worth +0.025–0.2 recall at every
-    * budget (NndProbe). In-edges are the escape hatches; effective
+    * budget (the D53 probe set below). In-edges are the escape hatches; effective
     * degree stays ≤ 2·kOut.
     */
   private[graft] def symmetrizeEdges(edges: DataFrame): DataFrame =
@@ -2929,7 +2929,7 @@ object Similarity {
       .distinct()
 
   /** D53: graph-ANN search over the NN-DESCENT-refined graph — the
-    * deployable graph leg. Probe-set design (NndProbe, sf0.1,
+    * deployable graph leg. Probe-set design (r12 probe runs, sf0.1,
     * recall@5 vs exact / mean distinct vertices scored per query):
     * raw bucketed graph 0.225/179; refined directed flat 0.200/114
     * (QUALITY without NAVIGABILITY — the tight kNN cliques trap the

@@ -256,7 +256,8 @@ private[graft] class KubeWatchClient(
   }
 
   /** Spawns the ingest thread on first use, then waits (bounded) for
-    * the initial list so the first micro-batch isn't spuriously empty.
+    * the initial list, or a full buffer if the list is larger, so the
+    * first micro-batch isn't spuriously empty.
     * The wait happens OUTSIDE any monitor and the list itself runs on
     * the INGEST thread — running it on the engine thread deadlocked
     * when the initial list exceeded maxBuffer (append parks waiting
@@ -306,7 +307,14 @@ private[graft] class KubeWatchClient(
   def backpressureStalls: Long = stalls.get
 
   private def append(line: String): Unit = lock.synchronized {
-    if (buf.length >= maxBuffer) stalls.incrementAndGet()
+    if (buf.length >= maxBuffer) {
+      stalls.incrementAndGet()
+      // a full buffer means the first batch cannot be empty, which is
+      // all the initial-list latch waits for: release it now, or every
+      // source call would wait listWaitMs until the rest of a list
+      // larger than maxBuffer was buffered
+      listAttempted.countDown()
+    }
     // parked ingest is woken by release()'s notifyAll; the 100 ms
     // timeout only guards the close()-races-notify window, it is not a
     // poll loop

@@ -662,8 +662,8 @@ object Sinks {
     * read — ~p/d of the vector bytes at the I/O layer, not a multiply
     * count — and the bounded rerank fetches full vectors through a
     * planned vec_id pushdown that the sorted layout's row-group stats
-    * prune. PrefixSliceProbe measures both from the file footers and
-    * the executed plans; SinksSpec pins concat(v_prefix, v_tail) ≡
+    * prune. The r15 measurement (SURVEY G43) read both from the file
+    * footers and the executed plans; SinksSpec pins concat(v_prefix, v_tail) ≡
     * the in-query withNorm vector bit-for-bit.
     */
   def writeEmbeddingsPrefixSliced(t: Tables, path: String, p: Int = 16,

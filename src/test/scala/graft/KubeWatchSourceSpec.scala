@@ -123,17 +123,21 @@ class KubeWatchSourceSpec extends SparkSpec {
       val client = new graft.sources.KubeWatchClient(
         s"http://localhost:${api.port}", None, 10, 100, maxBuffer = 1)
       try {
-        val lister = new Thread(() => client.seenCount) // triggers list; blocks on event 2
+        val lister = new Thread(() => client.seenCount) // triggers list; ingest parks on event 2
         lister.start()
         val deadline = System.currentTimeMillis() + 10000
         while (client.backpressureStalls == 0 && System.currentTimeMillis() < deadline)
           Thread.sleep(20)
         assert(client.backpressureStalls >= 1, "append must record the stall")
         assert(client.bufferedEvents == 1, "buffer holds exactly its capacity")
-        client.release(1) // consumer commits the first event → slot frees
         lister.join(10000)
-        assert(!lister.isAlive, "release must un-park the parked ingest")
-        assert(client.bufferedEvents == 1, "second event lands after release")
+        assert(!lister.isAlive, "a full buffer releases the first source call")
+        client.release(1) // consumer commits the first event → slot frees
+        // the un-parked ingest appends event 2 on its own thread
+        val landBy = System.currentTimeMillis() + 10000
+        while (client.seenCount < 2 && System.currentTimeMillis() < landBy) Thread.sleep(20)
+        assert(client.seenCount == 2 && client.bufferedEvents == 1,
+          "release must un-park the parked ingest: second event lands after release")
       } finally client.close()
     } finally api.stop()
   }
@@ -145,12 +149,16 @@ class KubeWatchSourceSpec extends SparkSpec {
       // before the ingest-thread fix, the first seenCount ran the list
       // on the caller thread and parked forever on event 3 (release()
       // could only come from that same blocked thread)
+      // a full buffer releases the initial-list latch: before that, each
+      // source call waited listWaitMs until the whole list was buffered
+      val listWaitMs = 5000L
       val client = new graft.sources.KubeWatchClient(
-        s"http://localhost:${api.port}", None, 10, 100, maxBuffer = 2, listWaitMs = 300)
+        s"http://localhost:${api.port}", None, 10, 100, maxBuffer = 2, listWaitMs = listWaitMs)
       try {
         var delivered = Vector[String]()
         var committed = 0L
-        val deadline = System.currentTimeMillis() + 15000
+        val t0 = System.currentTimeMillis()
+        val deadline = t0 + 15000
         while (delivered.size < 6 && System.currentTimeMillis() < deadline) {
           val n = client.seenCount
           if (n > committed) {
@@ -163,6 +171,8 @@ class KubeWatchSourceSpec extends SparkSpec {
           assert(delivered.exists(_.contains(s"\"uid\":\"u$i\"")),
             s"event u$i missing from ${delivered.size} delivered")
         }
+        val elapsed = System.currentTimeMillis() - t0
+        assert(elapsed < listWaitMs, s"6 events took $elapsed ms to drain (listWaitMs = $listWaitMs)")
       } finally client.close()
     } finally api.stop()
   }

@@ -57,4 +57,18 @@ class RegistryHygieneSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"queries keys with no SURVEY §2 row: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("sessions are built only in GraftSession; only the product mains define main") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main")
+    assume(Files.exists(root), "src/main not found from test CWD")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def filesMatching(re: String): Set[String] = sources.filter { f =>
+      re.r.findFirstIn(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).nonEmpty
+    }.map(_.getFileName.toString).toSet
+    assert(filesMatching("SparkSession\\s*\\.builder") == Set("GraftSession.scala"))
+    assert(filesMatching("def main\\s*\\(") ==
+      Set("KesMain.scala", "CurateMain.scala", "Bench.scala", "Verify.scala", "Probe.scala"))
+  }
 }

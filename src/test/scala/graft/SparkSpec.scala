@@ -5,12 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for specs (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
   def tables: graft.sources.Tables = graft.sources.Tables(spark, sfDir)

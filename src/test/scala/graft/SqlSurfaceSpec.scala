@@ -58,4 +58,31 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(ragged.getMessage.contains("ragged")
       || Option(ragged.getCause).exists(_.getMessage.contains("ragged")), ragged.getMessage)
   }
+
+  test("a foreign function under a graft name is refused by Tables(), naming the function") {
+    // a fresh session: its own function registry, so the foreign
+    // graft_dot never reaches the shared session's
+    val s = spark.newSession()
+    s.udf.register("graft_dot", (a: Seq[Double], b: Seq[Double]) => 0.0)
+    val e = intercept[IllegalStateException](graft.sources.Tables(s, sfDir))
+    assert(e.getMessage.contains("graft_dot"), e.getMessage)
+  }
+
+  test("a GraftExtensions-configured session passes the registration check") {
+    import org.apache.spark.sql.SparkSession
+    // the deploy builder; its spark.sql.extensions only takes effect on
+    // a new SparkContext, so the shared one gets the extension directly
+    val s = GraftSession.clusterBuilder(4).withExtensions(new GraftExtensions).create()
+    try {
+      // registered by the extension, before any Tables() call
+      val described = s.sql("DESCRIBE FUNCTION graft_dot").collect().mkString
+      assert(described.contains(classOf[graft.functions.DotProduct].getName), described)
+      graft.sources.Tables(s, sfDir)
+      val d = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head().getDouble(0)
+      assert(d == 11.0)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 }
