@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.lang.management.ManagementFactory
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** Per-query probe — the surgical sibling of [[Bench]] for iterating on
@@ -22,9 +23,10 @@ import scala.jdk.CollectionConverters._
   * knows `training_data_job`, Bench's composed-pipeline entry.
   *
   *  - `time` runs each entry through Bench's noop sink `iters` times
-  *    (default 3). Per iteration it prints wall, GC and JIT seconds and
-  *    the four heaviest stages by task time; then every iteration's
-  *    seconds with their min and median.
+  *    (default 3). Per iteration it prints wall, GC and JIT seconds,
+  *    the Spark jobs started and stages completed, and the four
+  *    heaviest stages by task time; then every iteration's seconds with
+  *    their min and median.
   *  - `plan` writes the PRE-execution plan (`explain("formatted")`, the
   *    AQE-initial shape the code pins) to `<outDir>/<key>_<suffix>.txt`,
   *    suffix `plan` by default.
@@ -98,7 +100,9 @@ object Probe {
     def jitMillis: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
     // per-stage task-time accounting, to localize warmup/slow modes
     val stages = new ConcurrentHashMap[Int, (String, Long)]()
+    val jobs = new AtomicInteger()
     val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val m = sc.stageInfo.taskMetrics
         stages.put(sc.stageInfo.stageId, (f"in=${m.inputMetrics.recordsRead}%,d " +
@@ -110,12 +114,14 @@ object Probe {
     spark.sparkContext.addSparkListener(listener)
     val ts = try (1 to iters).map { i =>
       stages.clear()
+      jobs.set(0)
       val (t0, g0, j0) = (System.nanoTime(), gcMillis, jitMillis)
       execute(spark, sfDir, name)
       val secs = (System.nanoTime() - t0) / 1e9
-      emit(f"PROBE $name iter=$i $secs%.3f s " +
-        f"gc=${(gcMillis - g0) / 1000.0}%.1f s jit=${(jitMillis - j0) / 1000.0}%.1f s")
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      emit(f"PROBE $name iter=$i $secs%.3f s " +
+        f"gc=${(gcMillis - g0) / 1000.0}%.1f s jit=${(jitMillis - j0) / 1000.0}%.1f s " +
+        s"jobs=${jobs.get} stages=${stages.size}")
       stages.asScala.toSeq.sortBy(-_._2._2).take(4).foreach { case (id, (desc, t)) =>
         emit(f"  stage $id%4d ${t / 1000.0}%8.1f s-task  $desc")
       }

@@ -946,7 +946,7 @@ object Similarity {
     * against the (nQueries × m × nCodes)-row distance table; the
     * per-(query, vector) sum partial-aggregates in place (a vector's m
     * code rows are colocated by construction) before the only shuffle;
-    * top-k is the two-stage exact pattern. Per-cell distances are
+    * top-k is the shared exact [[adcTopK]]. Per-cell distances are
     * r6'd and decimal-summed — order-independent, oracle-portable.
     */
   def annPqAdc(t: Tables, nQueries: Int = 8, k: Int = 5,
@@ -981,18 +981,7 @@ object Similarity {
           col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-    val local = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    val global = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    scored
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_dist_r"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(scored, k)
   }
 
   /** D10: IVF-ADC — the FAISS IVFPQ search shape, composing D4's cell
@@ -1011,7 +1000,7 @@ object Similarity {
     * window, the center set is literal); candidates meet the tiny
     * (q_id, cell) probe relation in a broadcast join, the ADC distance
     * table in a second broadcast join; the per-(query, vector) sum and
-    * the two-stage exact top-k are the D9 pattern unchanged. Both
+    * the exact [[adcTopK]] are the D9 pattern unchanged. Both
     * quantizers are the seeded-hash artifact family (G15-persistable);
     * coarse and PQ center sets share the hash order by construction.
     */
@@ -1050,7 +1039,7 @@ object Similarity {
         col("pos").cast("long").as("qcode"), col("col").as("d_r"))
     // candidates: only vectors in probed cells (the broadcast is the
     // in-query analog of reading nProbe cell dirs), then code → table
-    // lookup, sum, exact two-stage top-k
+    // lookup, sum, exact top-k
     val scored = codes
       .join(broadcast(pcells),
         col("cell") === col("pcell") && col("vec_id") =!= col("q_id"))
@@ -1059,18 +1048,7 @@ object Similarity {
           col("code") === col("qcode"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-    val local = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    val global = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    scored
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_dist_r"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(scored, k)
   }
 
   /** D11: IVF-ADC with exact re-ranking — the FAISS refine step: D10's
@@ -1314,7 +1292,7 @@ object Similarity {
     * Scale shape: assignment + residual + encode are ONE narrow
     * literal-centers pass (no shuffle); the query table is
     * nQueries·nProbe·m·nCodes rows — broadcast; the per-(query,
-    * vector) decimal sum and two-stage exact top-k are the D9/D10
+    * vector) decimal sum and exact [[adcTopK]] are the D9/D10
     * pattern unchanged. Both codebooks are bounded persisted-artifact
     * material (G15 shape).
     */
@@ -1408,26 +1386,22 @@ object Similarity {
     adcTopK(scored, k)
   }
 
-  /** The shared exact two-stage top-k tail over a scored
-    * (q_id, vec_id, adc_dist_r) relation: per-partition pre-top-k
-    * bounds the shuffle to ≤ k rows per (query, partition), the global
-    * window ranks the survivors — exact because a global top-k row is
-    * a top-k row of its own partition.
+  /** The shared exact top-k tail over a scored (q_id, vec_id,
+    * adc_dist_r) relation: one `row_number() <= k` window over q_id,
+    * ties to the lowest vec_id. The shuffle still carries ≤ k rows per
+    * (query, partition): Spark's InferWindowGroupLimit plans a partial
+    * WindowGroupLimit below the exchange (PlanSpec "rank-window top-k"
+    * and "index search" pin it), so a hand-written per-partition
+    * pre-window would only add a sort and a stage.
     */
-  private def adcTopK(scored: DataFrame, k: Int): DataFrame = {
-    val local = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    val global = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
     scored
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global).cast("long"))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("adc_dist_r").asc, col("vec_id").asc)))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_dist_r"))
+      .select(col("q_id"), col("rank").cast("long").as("rank"), col("vec_id"),
+        col("adc_dist_r"))
       .orderBy(col("q_id"), col("rank"))
-  }
 
   /** The G26 index's code layout: ONE row per vector — (vec_id, cell,
     * `codes` array in sub_j order). The row-per-(vector, subspace)
@@ -1527,8 +1501,8 @@ object Similarity {
     * `cell IN (probed)` so Spark prunes non-probed cell DIRECTORIES at
     * planning time (PartitionFilters, spec-pinned): nProbe/nCells of
     * the bytes are all that is read, which is the entire point of the
-    * layout. Scoring is D10's broadcast + decimal-sum + two-stage
-    * top-k unchanged.
+    * layout. Scoring is D10's broadcast + decimal-sum + [[adcTopK]]
+    * unchanged.
     *
     * The query vectors come from the layout too (filter on vec_id) —
     * a full-scan read for them would defeat the pruning, so they are
@@ -1592,18 +1566,7 @@ object Similarity {
           col("code") === col("qcode"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-    val local = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    val global = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    scored
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_dist_r"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(scored, k)
   }
 
   /** Per-dimension (min, max) quantization bounds — the SQ8 "training"
@@ -1707,7 +1670,7 @@ object Similarity {
     * instead); the tiny query side broadcasts into a nested-loop join
     * and the distance is one codegen'd fold over the zipped arrays
     * (sequential order, so the oracle's list_reduce reproduces it
-    * bit-for-bit); top-k is the two-stage exact pattern.
+    * bit-for-bit); top-k is the shared exact [[adcTopK]].
     */
   def annSq8Adc(t: Tables, nQueries: Int = 8, k: Int = 5): DataFrame =
     annSq8AdcWith(t, sq8Bounds(t), nQueries, k)
@@ -1736,18 +1699,7 @@ object Similarity {
       lit(0.0), (acc, x) => acc + x))
     val scored = cands.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"), dist.as("adc_dist_r"))
-    val local = Window.partitionBy(col("q_id"), col("pid"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    val global = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist_r").asc, col("vec_id").asc)
-    scored
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_dist_r"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(scored, k)
   }
 
   /** D3: per-label vector-norm statistics (codegen'd array math). */

@@ -617,12 +617,12 @@ object Sinks {
 
   /** Load a [[writeQuantizer]] artifact. Driver-side collect bounded
     * by nCenters rows (the artifact IS the broadcast-as-literals
-    * input; it never holds corpus-scale data).
+    * input; it never holds corpus-scale data). The schema is declared,
+    * so a load is one collect job with no schema-inference job first.
     */
   def readQuantizer(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[(Int, Seq[Double], Double)] =
-    spark.read.parquet(path)
-      .select(col("cell"), col("center"), col("c2"))
+    spark.read.schema("cell INT, center ARRAY<DOUBLE>, c2 DOUBLE").parquet(path)
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
@@ -1447,14 +1447,6 @@ object Sinks {
       .parquet(s"$path/codes")
   }
 
-  /** D46 off a persisted [[writeIvfPqIndex]] — the serving path: load
-    * both center sets (bounded artifacts), compute each query's probe
-    * cells, and scan ONLY those `cell=` code partitions (the probe
-    * union lands in the scan's PartitionFilters — planning-time
-    * pruning, spec-pinned); per-query cell restriction stays exact
-    * via the ADC join keys. Result ≡ the in-query
-    * [[graft.operators.Similarity.annIvfRpq]] row-for-row.
-    */
   /** G32: index DELETE — the third lifecycle op (write / append /
     * delete): removals land as vec_id TOMBSTONES (an append-only
     * relation, the LSM discipline every serving store uses — base code
@@ -1471,12 +1463,27 @@ object Sinks {
       .write.mode(SaveMode.Append)
       .parquet(s"${resolveIndexRoot(spark, path)}/tombstones")
 
+  /** D46 off a persisted [[writeIvfPqIndex]] — the serving path: load
+    * both center sets once (bounded artifacts, one collect job each),
+    * compute each query's probe cells, and scan ONLY those `cell=`
+    * code partitions. Pruning happens at LISTING time (only the probed
+    * cell dirs are listed — O(probed cells), not O(nCells)) and at
+    * PLANNING time (the probe union lands in the scan's
+    * PartitionFilters); both are spec-pinned. Per-query cell
+    * restriction stays exact via the ADC join keys. Result ≡ the
+    * in-query [[graft.operators.Similarity.annIvfRpq]] row-for-row.
+    *
+    * Job budget per call (SinksSpec-pinned at ≤ 9): two quantizer
+    * loads, the probe collect, and the scoring plan's own stages — no
+    * schema-inference and no distributed file-listing job.
+    */
   def searchIvfPqIndex(t: Tables, rawPath: String, nQueries: Int = 8,
       k: Int = 5, m: Int = 8, nProbe: Int = 4): DataFrame = {
     val spark = t.spark
     val path = resolveIndexRoot(spark, rawPath)
     val sim = graft.operators.Similarity
     val coarse = readQuantizer(spark, s"$path/coarse")
+    val pqr = readQuantizer(spark, s"$path/codebook")
     // ONE bounded collect (≤ nQueries·nProbe rows incl. the query
     // vectors) yields both the probe list and a localized probe
     // relation — the scoring plan then reads ONLY the probed code
@@ -1484,33 +1491,45 @@ object Sinks {
     // once (inside probeCells) to load the query vectors
     val pcRows = sim.probeCells(t, coarse, nQueries, nProbe).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSeq
-    searchIvfPqIndexLocal(spark, path, pcRows, k, m)
+    searchIvfPqIndexLocal(spark, path, pcRows, k, m, (coarse, pqr))
   }
 
   /** The shared serving core: score the persisted index against a
     * LOCALIZED probe set (q_id, probe cell, query vector — already
-    * collected, ≤ #queries·nProbe tuples). The scan carries
-    * `cell IN (probed)` on the partition column, so non-probed cell
-    * DIRECTORIES prune at PLANNING time (PartitionFilters — the G12
-    * discipline); per-batch online serving re-plans through this with
-    * each micro-batch's own probe set, which is what makes the static
-    * side read ∝ probed cells instead of ∝ corpus.
+    * collected, ≤ #queries·nProbe tuples) with the (coarse, codebook)
+    * center sets the caller already loaded — a long-lived server once
+    * per index version, the batch entry point once per call. Non-probed
+    * cell DIRECTORIES prune at LISTING time (the read names only the
+    * probed `cell=` dirs that exist, under the codes `basePath`) and at
+    * PLANNING time (the scan carries `cell IN (probed)` on the
+    * partition column: PartitionFilters — the G12 discipline). The
+    * codes schema is declared, so planning runs no job: the only jobs
+    * are the scoring plan's own stages. Per-batch online serving
+    * re-plans through this with each micro-batch's own probe set,
+    * which is what makes the static side read ∝ probed cells instead
+    * of ∝ corpus.
     */
   private[graft] def searchIvfPqIndexLocal(
       spark: org.apache.spark.sql.SparkSession, path: String,
       pcRows: Seq[(Long, Long, Seq[Double])], k: Int, m: Int,
-      quantizers: Option[(Array[(Int, Seq[Double], Double)],
-        Array[(Int, Seq[Double], Double)])] = None): DataFrame = {
+      quantizers: (Array[(Int, Seq[Double], Double)],
+        Array[(Int, Seq[Double], Double)])): DataFrame = {
     val sim = graft.operators.Similarity
-    // a long-lived server loads the two bounded center sets once and
-    // hands them in; the batch entry point loads per call
-    val (coarse, pqr) = quantizers.getOrElse(
-      (readQuantizer(spark, s"$path/coarse"),
-        readQuantizer(spark, s"$path/codebook")))
+    val (coarse, pqr) = quantizers
     val probed = pcRows.map(_._2).distinct.sorted
     import spark.implicits._
     val pcLocal = pcRows.toDF("q_id", "pcell", "v")
-    val codesBase = spark.read.parquet(s"$path/codes")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    // list ONLY the probed cell dirs that exist (a cell no vector
+    // landed in has none; no dir at all reads as an empty relation):
+    // reading the codes root would list all nCells dirs, as a
+    // distributed listing job once they pass
+    // parallelPartitionDiscovery.threshold
+    val cellDirs = probed.map(c => s"$path/codes/cell=$c").filter(exists)
+    val codesBase = spark.read.schema("vec_id BIGINT, codes ARRAY<BIGINT>, cell INT")
+      .option("basePath", s"$path/codes").parquet(cellDirs: _*)
       .filter(col("cell").isin(probed: _*)) // partition-dir pruning
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
         col("codes"))
@@ -1518,9 +1537,7 @@ object Sinks {
     // against the (tiny, broadcastable) removal relation; absent dir =
     // no deletions ever recorded
     val codes =
-      if (new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
+      if (exists(s"$path/tombstones"))
         codesBase.join(broadcast(spark.read.parquet(s"$path/tombstones")
           .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
       else codesBase

@@ -200,7 +200,7 @@ object AnnStreamJob {
           .toSeq
         if (pcRows.nonEmpty) {
           val out = sinks.searchIvfPqIndexLocal(spark, live, pcRows, k, m,
-            quantizers = Some((coarse, pqr)))
+            quantizers = (coarse, pqr))
           val rows = out.collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
             .toSeq

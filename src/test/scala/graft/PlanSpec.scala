@@ -691,6 +691,34 @@ class PlanSpec extends SparkSpec {
       s"no WindowGroupLimit below the shuffle:\n${df.queryExecution.executedPlan}")
   }
 
+  test("ivfpq index search: the top-k window's WindowGroupLimit runs below its shuffle exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    // adcTopK is one row_number() <= k window over q_id: the partial
+    // group limit below the exchange is what bounds the shuffle to
+    // <= k rows per (query, partition), in place of a per-partition
+    // pre-window
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_plan").toString
+    graft.sources.Sinks.writeIvfPqIndex(tables, dir, nCells = 16)
+    val df = graft.sources.Sinks.searchIvfPqIndex(tables, dir)
+    assert(df.collect().nonEmpty)
+    def walk(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec        => walk(s.plan)
+      case o                        => o +: o.children.flatMap(walk)
+    }
+    val plan = walk(df.queryExecution.executedPlan)
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.size == 1 && windows.head.partitionSpec.map(_.toString).mkString.contains("q_id"),
+      s"expected one q_id top-k window:\n${df.queryExecution.executedPlan}")
+    val belowShuffle = walk(windows.head).collect { case e: ShuffleExchangeExec => e }
+      .flatMap(e => walk(e.child)).collect { case l: WindowGroupLimitExec => l }
+    assert(belowShuffle.nonEmpty,
+      s"no WindowGroupLimit below the top-k window's shuffle:\n${df.queryExecution.executedPlan}")
+  }
+
   test("prefix-dim recall: every q_id rank window is two-stage — no corpus-sized relation feeds a single-stage rank (checkpoint-hidden plans audited via listener)") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

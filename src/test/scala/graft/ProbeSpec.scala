@@ -20,8 +20,11 @@ class ProbeSpec extends SparkSpec {
     val lines = ArrayBuffer[String]()
     Probe.run(spark, Seq("time", sfDir, q, "2"), lines += _)
     val all = lines.mkString("\n")
-    assert(lines.exists(_.startsWith(s"PROBE $q iter=1 ")), all)
-    assert(lines.exists(_.startsWith(s"PROBE $q iter=2 ")), all)
+    for (i <- 1 to 2) {
+      val iter = s"PROBE $q iter=$i [0-9.]+ s gc=[0-9.]+ s jit=[0-9.]+ s jobs=(\\d+) stages=(\\d+)".r
+      val counts = lines.collectFirst { case iter(j, st) => (j.toInt, st.toInt) }
+      assert(counts.exists { case (j, st) => j >= 1 && st >= j }, all)
+    }
     assert(lines.exists(_.matches(s"PROBE $q iters=[0-9.]+,[0-9.]+ min=[0-9.]+ median=[0-9.]+")), all)
     assert(lines.exists(_.trim.startsWith("stage ")), all)
   }

@@ -1060,6 +1060,91 @@ class SinksSpec extends SparkSpec {
       "tombstoned search must equal scoring an index that never contained the deleted vectors")
   }
 
+  test("ivfpq probed-dir read: a probed cell without a dir serves nothing, all-missing probes serve empty, an append into an emptied cell serves at once") {
+    val dir = Files.createTempDirectory("ivfpq_holes").toString
+    Sinks.writeIvfPqIndex(tables, dir, nCells = 16)
+    val quantizers = (Sinks.readQuantizer(spark, s"$dir/coarse"),
+      Sinks.readQuantizer(spark, s"$dir/codebook"))
+    val pcRows = graft.operators.Similarity.probeCells(tables, quantizers._1, 8, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def serve(pc: Seq[(Long, Long, Seq[Double])]) =
+      rows(Sinks.searchIvfPqIndexLocal(spark, dir, pc, 5, 8, quantizers))
+    val full = rows(Sinks.searchIvfPqIndex(tables, dir))
+    // empty the cell of the first served vector: the index then has a
+    // probed cell with no `cell=` dir, as a cell no vector landed in
+    val cellOf = spark.read.parquet(s"$dir/codes").select(col("vec_id"), col("cell"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
+    val hole = cellOf(full.head(2).asInstanceOf[Long])
+    val holeIds = cellOf.collect { case (v, c) if c == hole => v }.toSeq
+    val holeDir = new java.io.File(s"$dir/codes/cell=$hole")
+    org.apache.commons.io.FileUtils.deleteDirectory(holeDir)
+    // 1. a probe into the missing dir serves the rows of a probe set without it
+    val withHole = rows(Sinks.searchIvfPqIndex(tables, dir))
+    assert(withHole != full && !withHole.exists(r => holeIds.contains(r(2))),
+      "the emptied cell's vectors must no longer serve")
+    assert(withHole == serve(pcRows) && withHole == serve(pcRows.filter(_._2 != hole)),
+      "probing a cell with no dir must serve what the probe set without it serves")
+    // 2. every probed cell missing: an empty result, not PATH_NOT_FOUND
+    assert(serve(pcRows.filter(_._2 == hole)).isEmpty)
+    // 3. re-appending the cell's vectors recreates its dir; the next
+    // search lists it (no stale listing) and serves them again
+    Sinks.appendToIvfPqIndex(spark, dir,
+      tables.embeddings.filter(col("vec_id").isin(holeIds: _*)))
+    assert(holeDir.isDirectory)
+    assert(rows(Sinks.searchIvfPqIndex(tables, dir)) == full,
+      "after the append the search must equal the original index's")
+  }
+
+  test("ivfpq index search job budget: at autoNCells (> the parallel-listing threshold) a call runs <= 9 jobs, none a file listing; the codes scan's roots are the probed cell dirs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val dir = Files.createTempDirectory("ivfpq_budget").toString
+    Sinks.writeIvfPqIndex(tables, dir) // autoNCells: 500 vectors -> 92 cells
+    val cells = new java.io.File(s"$dir/codes").listFiles()
+      .filter(_.getName.startsWith("cell=")).map(_.getName.stripPrefix("cell=").toLong).toSet
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    assert(cells.size > threshold,
+      s"${cells.size} cell dirs must exceed the listing threshold $threshold")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val served = try {
+      val df = Sinks.searchIvfPqIndex(tables, dir)
+      assert(df.collect().nonEmpty)
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    val descs = jobs.toArray.toSeq.map(_.toString)
+    assert(descs.size <= 9, s"${descs.size} jobs per search call:\n${descs.mkString("\n")}")
+    assert(!descs.exists(_.startsWith("Listing leaf files")), descs.mkString("\n"))
+    // listing-time pruning: the codes relation is rooted at exactly the
+    // probed cell dirs that exist
+    val coarse = Sinks.readQuantizer(spark, s"$dir/coarse")
+    val probed = graft.operators.Similarity.probeCells(tables, coarse, 8, 4)
+      .select(col("pcell")).distinct().collect().map(_.getLong(0)).toSet
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec        => walk(s.plan)
+      case o                        => o +: o.children.flatMap(walk)
+    }
+    val roots = walk(served.queryExecution.executedPlan).collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten.toSet
+    assert(roots.nonEmpty && roots.size < cells.size)
+    assert(roots == probed.intersect(cells).map(c => s"$dir/codes/cell=$c"),
+      s"codes scan roots $roots != probed cell dirs ${probed.toSeq.sorted}")
+  }
+
   test("sample shard artifact: merged half-corpus samples == whole-corpus sample at pair and quantile level") {
     val k = 64
     val bkp = udaf(graft.functions.BottomKPairs(k),
