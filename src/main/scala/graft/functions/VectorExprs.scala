@@ -99,7 +99,12 @@ case class DotProduct(left: Expression, right: Expression)
   * the sf0.01 verify run) and Spark silently drops the WHOLE stage
   * out of whole-stage codegen. This loop form is constant bytecode
   * regardless of codebook size, so D8/D9 stay codegen'd at any
-  * (m, nCodes).
+  * (m, nCodes). It is the COARSE-quantizer kernel too
+  * (`Similarity.centerDists`: every cell assignment and IVF probe,
+  * with the full center set as the codebook): the unrolled coarse
+  * form hit the same limit at 256 cells, and since the generated code
+  * never embeds codebook values, re-trained centers reuse the
+  * compiled class.
   *
   * Bit parity with the unrolled form (and therefore the unchanged
   * DuckDB oracle): ascending-index folds for x·x and x·c (DotProduct's

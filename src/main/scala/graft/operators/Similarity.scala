@@ -203,16 +203,8 @@ object Similarity {
     val coarse = trainedCenters(t, nCells) // Lloyd-trained (r10), not the seed
     val assigned = withCell(withNorm(t.embeddings), coarse)
       .select(col("vec_id"), col("v"), col("n2"), col("cell"))
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
-    val probes = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"),
-        explode(slice(array_sort(array(cellCands: _*)), 1, nProbe)).as("p"))
-      .select(col("q_id"), col("qv"), col("qn2"), col("p.cell").as("pcell"))
+    val probes = probesWithNorm(withNorm(t.embeddings).filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("v")), coarse, nProbe)
     val local = Window.partitionBy(col("q_id"), col("pid"))
       .orderBy(col("cos_r").desc, col("vec_id").asc)
     val global = Window.partitionBy(col("q_id"))
@@ -462,27 +454,58 @@ object Similarity {
     maybeSort(stats.reduce(_ unionByName _), ordered)(col("round"))
   }
 
+  /** The coarse-center distance kernel every IVF path shares: the r6'd
+    * squared L2 from `v` to each center, in cell-id order, as ONE native
+    * [[graft.functions.PqDists]] over the literal center array, paired
+    * with the literal cell ids (BIGINT: the oracle's ROW_NUMBER cell).
+    * The centers fold once into `double[]` reference objects, so the
+    * generated code is constant in nCells (one struct per center
+    * overflowed janino's 64 KB at 256 cells; CodegenSpec pins it) and
+    * its text never depends on the center values: Lloyd rounds, the
+    * residual pass, the encode and later searches all hit the codegen
+    * cache.
+    *
+    * Oracle parity: PqDists folds x·x, x·c and ‖c‖² (from the center
+    * itself — the same fold as the tuple's c2) in ascending order and
+    * combines them as (x·x − 2·x·c) + ‖c‖², so finite rows are
+    * bit-identical. A null `v` yields an array of nulls rather than
+    * null, so both readers keep the oracle's answer for it: the lowest
+    * cell, a null distance. A NaN element gives NaN distances, as the
+    * oracle's r6 does; the cell is the lowest one.
+    */
+  private def centerDists(centers: Array[(Int, Seq[Double], Double)]): (Column, Column) = {
+    val sorted = centers.sortBy(_._1).toSeq
+    (coalesce(VectorExprs.pqDists(col("v"), typedLit(sorted.map(_._2))),
+      array_repeat(lit(null).cast("double"), sorted.size)),
+      typedLit(sorted.map(_._1.toLong)))
+  }
+
+  /** The `n` nearest centers to `v` as (dist2_r, cell) structs, nearest
+    * first, ties to the lowest cell (struct order). */
+  private[graft] def nearestCells(centers: Array[(Int, Seq[Double], Double)],
+      n: Int): Column = {
+    val (ds, cells) = centerDists(centers)
+    slice(array_sort(arrays_zip(ds.as("dist2_r"), cells.as("cell"))), 1, n)
+  }
+
   /** Adds a `cell` + `dist2_r` column: nearest (squared L2, 6dp-rounded,
-    * ties → lowest cell id) of the broadcast-as-literals center set.
-    * ONE narrow projection — the argmin is an `array_min` over per-center
-    * (dist2_r, cell) structs built from literal centers, so the corpus
-    * is never shuffled or joined to assign cells. The oracle expresses
-    * the same argmin as a per-vector ROW_NUMBER window (correctness
-    * shape, not scale shape).
+    * ties → lowest cell id) of the literal center set. ONE narrow pass
+    * over the [[centerDists]] kernel — no shuffle, no join. The argmin
+    * is `array_position(ds, array_min(ds))` (the [[pqCodesOf]] pattern:
+    * the min is materialized once, in its own projection, and its first
+    * occurrence is the lowest cell). The oracle expresses the same
+    * argmin as a per-vector ROW_NUMBER window (correctness shape, not
+    * scale shape).
     */
   private[graft] def withCell(e: DataFrame,
       centers: Array[(Int, Seq[Double], Double)]): DataFrame = {
-    val cands = centers.map { case (cell, cv, c2) =>
-      struct(
-        // same op order as the oracle: (n2 - 2*dot) + c2
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell")) // long: the oracle's ROW_NUMBER cell is BIGINT
-    }
-    e.withColumn("best", array_min(array(cands: _*)))
-      .withColumn("cell", col("best.cell"))
-      .withColumn("dist2_r", col("best.dist2_r"))
-      .drop("best")
+    val (ds, cells) = centerDists(centers)
+    e.withColumn("cell_ds", ds)
+      .withColumn("cell_min", array_min(col("cell_ds")))
+      .withColumn("cell", element_at(cells,
+        coalesce(array_position(col("cell_ds"), col("cell_min")), lit(1L)).cast("int")))
+      .withColumn("dist2_r", col("cell_min"))
+      .drop("cell_ds", "cell_min")
   }
 
   /** D7: deterministic k-means-style cell assignment — every vector
@@ -1013,19 +1036,12 @@ object Similarity {
     val codes = pqCodesOf(withCell(withNorm(t.embeddings), coarse), pq, m,
       carry = Seq("cell"))
       .select(col("vec_id"), col("cell"), col("sub_j"), col("code"))
-    // queries: nProbe nearest coarse cells via array_sort over literal
-    // center distances (r6'd, ties to lowest cell — the withCell rule)
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
+    // queries: nProbe nearest coarse cells (ties to lowest cell — the
+    // withCell rule)
     val queries = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
-    val pcells = queries
-      .select(col("vec_id").as("q_id"),
-        explode(slice(array_sort(array(cellCands: _*)), 1, nProbe)).as("p"))
-      .select(col("q_id"), col("p.cell").as("pcell"))
+    val pcells = probeCellsOf(queries.select(col("vec_id").as("q_id"), col("v")),
+        coarse, nProbe)
+      .select(col("q_id"), col("pcell"))
     // per-query ADC distance table (the D9 construction)
     val perJ = (0 until m).map { j =>
       val xv = slice(col("v"), j * dsub + 1, dsub)
@@ -1155,19 +1171,11 @@ object Similarity {
     val dsub = pqr.head._2.length / m
     val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
     val codes = pqCodesFor(t, coarse, pqr, m)
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
     // probe list at the widest level, 1-based rank in probe order,
     // with the query residual against each probed cell's center
     val pc = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
-        posexplode(slice(array_sort(array(cellCands: _*)), 1, maxP))
-          .as(Seq("pi", "p")),
-        col("v"))
+        posexplode(nearestCells(coarse, maxP)).as(Seq("pi", "p")), col("v"))
       .select(col("q_id"), (col("pi") + 1).cast("long").as("crank"),
         col("p.cell").as("pcell"),
         zip_with(col("v"),
@@ -1304,11 +1312,6 @@ object Similarity {
       nQueries, k, m, nProbe)
   }
 
-  /** D46 against externally supplied artifacts — the deploy form
-    * behind [[graft.sources.Sinks.searchIvfPqIndex]]: coarse centers,
-    * residual codebook and the code relation come from a persisted
-    * index; raw embeddings are only read for the query vectors.
-    */
   /** The D46 corpus-side encode: coarse cell + residual + residual-PQ
     * codes in one narrow pass — also what G26's index sink persists
     * (partitioned by `cell`). */
@@ -1329,27 +1332,34 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("v")),
       coarse, nProbe)
 
-  /** [[probeCells]] over an ARBITRARY (q_id, v) query relation — the
-    * online serving path computes each micro-batch's probe set through
-    * this (same native dot, same r6 + lowest-cell tie rule, so stream
-    * probes are bit-identical to batch probes). */
+  /** [[probeCells]] over an ARBITRARY (q_id, v) query relation, as
+    * (q_id, carry…, pcell, v) — every IVF probe in graft, batch and
+    * online, goes through this one [[nearestCells]] reader, so stream
+    * probes are bit-identical to batch probes. */
   private[graft] def probeCellsOf(q: DataFrame,
-      coarse: Array[(Int, Seq[Double], Double)], nProbe: Int): DataFrame = {
+      coarse: Array[(Int, Seq[Double], Double)], nProbe: Int,
+      carry: Seq[String] = Nil): DataFrame = {
     VectorExprs.ensureRegistered(q.sparkSession)
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
-    q.select(col("q_id"), col("v"))
-      .withColumn("n2", VectorExprs.dot(col("v"), col("v")))
-      .select(col("q_id"),
-        explode(slice(array_sort(array(cellCands: _*)), 1, nProbe)).as("p"),
-        col("v"))
-      .select(col("q_id"), col("p.cell").as("pcell"), col("v"))
+    val keep = col("q_id") +: carry.map(col)
+    q.select(keep ++ Seq(explode(nearestCells(coarse, nProbe)).as("p"), col("v")): _*)
+      .select(keep ++ Seq(col("p.cell").as("pcell"), col("v")): _*)
   }
 
+  /** [[probeCellsOf]] as the (q_id, qv, qn2, pcell) probe relation the
+    * exact-cosine IVF paths join against. */
+  private def probesWithNorm(q: DataFrame,
+      coarse: Array[(Int, Seq[Double], Double)], nProbe: Int): DataFrame =
+    probeCellsOf(q, coarse, nProbe)
+      .select(col("q_id"), col("v").as("qv"),
+        VectorExprs.dot(col("v"), col("v")).as("qn2"), col("pcell"))
+
+  /** D46 against supplied artifacts: coarse centers, residual codebook
+    * and a row-per-(vector, subspace) code relation; raw embeddings are
+    * only read for the query vectors. [[annIvfRpq]]'s core; the
+    * persisted index ([[graft.sources.Sinks.searchIvfPqIndex]]) serves
+    * the packed layout through [[annIvfRpqPackedFor]], ≡ this
+    * row-for-row.
+    */
   private[graft] def annIvfRpqWith(t: Tables,
       coarse: Array[(Int, Seq[Double], Double)],
       pqr: Array[(Int, Seq[Double], Double)], codes: DataFrame,
@@ -2218,17 +2228,11 @@ object Similarity {
     val coarse = hashCenters(t, nCells)
     val assigned = withCell(withNorm(t.embeddings), coarse)
       .select(col("vec_id"), col("v"), col("n2"), col("cell"))
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
     // (q_id, cell, crank): the query's probe list at the largest level,
     // 1-based rank in probe order — nQueries × maxP rows.
     val probesRel = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"),
-        posexplode(slice(array_sort(array(cellCands: _*)), 1, maxP)).as(Seq("pi", "p")))
+        posexplode(nearestCells(coarse, maxP)).as(Seq("pi", "p")))
       .select(col("q_id"), col("qv"), col("qn2"),
         (col("pi") + 1).cast("long").as("crank"), col("p.cell").as("pcell"))
     val levels = spark.range(1)
@@ -3133,11 +3137,9 @@ object Similarity {
     // (cell === pcell && q_id =!= vec_id), one row per (q, probed
     // vector, probed cell), and probed cells are distinct per query.
     val coarse = trainedCenters(t, nCells)
-    val probesI = probeCellsOf(
+    val probesI = probesWithNorm(
       e.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("v")), coarse, nProbe)
-      .select(col("q_id"), col("pcell"), col("v").as("qv"),
-        VectorExprs.dot(col("v"), col("v")).as("qn2"))
     val ivfHits = Dedup.stableCheckpoint(
       withCell(e, coarse).select(col("vec_id"), col("v"), col("n2"), col("cell"))
         .join(broadcast(probesI),
@@ -3372,16 +3374,8 @@ object Similarity {
     val coarse = lloydTrainOn(ep, nCells, TrainRounds)._1
     val assigned = withCell(ep, coarse)
       .select(col("vec_id"), col("v"), col("n2"), col("cell"))
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
-          .as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
-    val probes = ep.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"),
-        explode(slice(array_sort(array(cellCands: _*)), 1, nProbe)).as("p"))
-      .select(col("q_id"), col("qv"), col("qn2"), col("p.cell").as("pcell"))
+    val probes = probesWithNorm(ep.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("v")), coarse, nProbe)
     val local = Window.partitionBy(col("q_id"), col("pid"))
       .orderBy(col("cos_r").desc, col("vec_id").asc)
     val global = Window.partitionBy(col("q_id"))

@@ -1378,17 +1378,6 @@ object Sinks {
   def hllEstimate(regs: DataFrame): DataFrame =
     graft.operators.Analytics.hllCard(regs)
 
-  /** G26: persist the FULL IVFPQ index — the D46 deploy artifact that
-    * makes 100 TB ANN serving cheap: `path/coarse` and
-    * `path/codebook` are G15-shaped center sets (coarse quantizer +
-    * residual-space PQ codebook, Lloyd-trained), `path/codes` is the
-    * m-codes-per-vector relation PARTITIONED BY CELL (`cell=N/`
-    * dirs), so a search's probe set prunes code partitions at
-    * PLANNING time and reads m small ints per candidate — the raw
-    * embedding column is never touched after indexing (queries read
-    * only their own vectors). Rebuild cost: one narrow
-    * literal-centers pass over the corpus.
-    */
   /** Default cell count for an IVFPQ index build: the FAISS sizing
     * rule nlist ≈ 4·√N (clamped to [16, 4096]) — keeps the per-query
     * read fraction at nProbe/nCells ≈ nProbe/(4√N) while cells stay
@@ -1400,6 +1389,17 @@ object Sinks {
   def autoNCells(n: Long): Int =
     math.max(16, math.min(4096, 4 * math.ceil(math.sqrt(n.toDouble)).toInt))
 
+  /** G26: persist the FULL IVFPQ index — the D46 deploy artifact that
+    * makes 100 TB ANN serving cheap: `path/coarse` and
+    * `path/codebook` are G15-shaped center sets (coarse quantizer +
+    * residual-space PQ codebook, Lloyd-trained), `path/codes` is the
+    * m-codes-per-vector relation PARTITIONED BY CELL (`cell=N/`
+    * dirs), so a search's probe set prunes code partitions at
+    * PLANNING time and reads m small ints per candidate — the raw
+    * embedding column is never touched after indexing (queries read
+    * only their own vectors). Rebuild cost: one narrow
+    * literal-centers pass over the corpus.
+    */
   def writeIvfPqIndex(t: Tables, path: String, nCells: Int = 0,
       nCodes: Int = 8, m: Int = 8): Unit = {
     val spark = t.spark
@@ -1415,8 +1415,11 @@ object Sinks {
     writeCenters(pqr, s"$path/codebook")
     // PACKED layout (r11): one row per vector, codes array in sub_j
     // order — a probed scan reads (nProbe/nCells)·N rows of m small
-    // ints, never m rows per vector (the r10 layout's measured loss)
+    // ints, never m rows per vector (the r10 layout's measured loss).
+    // Hash-partitioned by cell first, so each `cell=N` dir holds ONE
+    // file (≤ nCells files, not nTasks × nCells)
     sim.pqCodesPacked(t, coarse, pqr, m)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .parquet(s"$path/codes")
   }
@@ -1459,7 +1462,8 @@ object Sinks {
     */
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, vecIds: DataFrame): Unit =
-    vecIds.select(col("vec_id")).coalesce(1)
+    // BIGINT: the type searchIvfPqIndexLocal declares on read
+    vecIds.select(col("vec_id").cast("long").as("vec_id")).coalesce(1)
       .write.mode(SaveMode.Append)
       .parquet(s"${resolveIndexRoot(spark, path)}/tombstones")
 
@@ -1535,11 +1539,13 @@ object Sinks {
         col("codes"))
     // G32 tombstones: deleted vectors must never serve — an anti-join
     // against the (tiny, broadcastable) removal relation; absent dir =
-    // no deletions ever recorded
+    // no deletions ever recorded. The declared schema skips an
+    // inference job, and no distinct (an anti-join ignores duplicate
+    // keys) skips a shuffle stage: tombstones cost their broadcast only
     val codes =
       if (exists(s"$path/tombstones"))
-        codesBase.join(broadcast(spark.read.parquet(s"$path/tombstones")
-          .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
+        codesBase.join(broadcast(spark.read.schema("vec_id BIGINT")
+          .parquet(s"$path/tombstones")), Seq("vec_id"), "left_anti")
       else codesBase
     sim.annIvfRpqPackedFor(coarse, pqr, codes, pcLocal, k, m)
   }

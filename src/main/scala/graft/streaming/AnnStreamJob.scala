@@ -86,26 +86,13 @@ object AnnStreamJob {
     val pqr = sinks.readQuantizer(spark, s"$indexPath/codebook")
     val dsub = pqr.head._2.length / m
     val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
-    val r6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-    // per-row probe cells: literal-center r6'd dist2 + cell tiebreak,
-    // mirroring Similarity.probeCells bit for bit (same native dot)
-    val n2 = graft.functions.VectorExprs.dot(col("v"), col("v"))
-    val cellCands = coarse.map { case (cell, cv, c2) =>
-      struct(
-        r6(col("n2") - lit(2.0) * graft.functions.VectorExprs.dot(col("v"), typedLit(cv))
-          + lit(c2)).as("dist2_r"),
-        lit(cell.toLong).as("cell"))
-    }
-    val probed = queries
-      .withWatermark("ingest_ts", watermarkDelay)
-      .withColumn("n2", n2)
-      .select(col("q_id"), col("ingest_ts"),
-        explode(slice(array_sort(array(cellCands: _*)), 1, nProbe)).as("p"),
-        col("v"))
-      .select(col("q_id"), col("ingest_ts"), col("p.cell").as("pcell"),
+    // per-row probe cells: the batch path's own probe (Similarity.probeCells)
+    val probed = graft.operators.Similarity.probeCellsOf(
+        queries.withWatermark("ingest_ts", watermarkDelay), coarse, nProbe,
+        carry = Seq("ingest_ts"))
+      .select(col("q_id"), col("ingest_ts"), col("pcell"),
         zip_with(col("v"),
-          element_at(byCell, col("p.cell").cast("int") + 1),
+          element_at(byCell, col("pcell").cast("int") + 1),
           (x, c) => x - c).as("qr"))
     val perJ = (0 until m).map { j =>
       val xv = slice(col("qr"), j * dsub + 1, dsub)

@@ -125,6 +125,20 @@ class CodegenSpec extends SparkSpec {
     assert(graft.operators.Similarity.annPqAdc(t).count() > 0)
   }
 
+  test("coarse assignment + probes over 256 centers compile under CODEGEN_ONLY (janino 64 KB regression)") {
+    val t = graft.sources.Tables(codegenOnly, sfDir)
+    val sim = graft.operators.Similarity
+    // the unrolled per-center struct form generated ~3k chars of Java
+    // per center and hit "Code grows beyond 64 KB" at 256; the native
+    // PqDists kernel is constant in nCells
+    val centers = sim.hashCenters(t, 256)
+    val e = sim.withNorm(t.embeddings)
+    val cells = sim.withCell(e, centers).select(col("cell"), col("dist2_r")).collect()
+    assert(cells.nonEmpty && cells.forall(r => r.getLong(0) >= 0 && r.getLong(0) < 256))
+    val probes = sim.probeCellsOf(e.select(col("vec_id").as("q_id"), col("v")), centers, 4)
+    assert(probes.count() == 4 * cells.length)
+  }
+
   test("gram-based dedup pipeline runs end-to-end under CODEGEN_ONLY") {
     val t = graft.sources.Tables(codegenOnly, sfDir)
     // exercises GramHashes + SimHashGrams + SimHash60 inside real

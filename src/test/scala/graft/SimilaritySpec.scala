@@ -804,4 +804,69 @@ class SimilaritySpec extends SparkSpec {
     assert(t1.map(_._1).toSeq == Similarity.hashCenters(tables, 8).map(_._1).toSeq,
       "cell ids stable through training")
   }
+
+  test("coarse kernel: withCell and probeCellsOf match the unrolled struct-argmin at 1, 7 and 256 centers, duplicate centers, a null and a NaN embedding") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.Row
+    import graft.functions.VectorExprs
+    val e = Similarity.withNorm(tables.embeddings).select(col("vec_id"), col("v"))
+    // edge rows: a null embedding, and a NaN in the first element
+    val edges = e.filter(col("vec_id") === 0L).select(lit(-1L).as("vec_id"),
+        lit(null).cast("array<double>").as("v"))
+      .unionByName(e.filter(col("vec_id") === 0L).select(lit(-2L).as("vec_id"),
+        concat(array(lit(Double.NaN)), slice(col("v"), 2, 1 << 16)).as("v")))
+    val rel = e.unionByName(edges).withColumn("n2", VectorExprs.dot(col("v"), col("v")))
+    val n = e.count()
+    // the reference: the unrolled per-center form both readers replaced
+    def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
+    def unrolled(cs: Array[(Int, Seq[Double], Double)]) = array(cs.map { case (cell, cv, c2) =>
+      struct(r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), typedLit(cv)) + lit(c2))
+        .as("dist2_r"), lit(cell.toLong).as("cell"))
+    }.toSeq: _*)
+    def dist(r: Row, i: Int): Option[Double] = if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    val seed7 = Similarity.hashCenters(tables, 7)
+    val cases = Seq(
+      "1 center" -> Similarity.hashCenters(tables, 1),
+      "7 centers" -> seed7,
+      "256 centers" -> Similarity.hashCenters(tables, 256),
+      // every center twice (cells 7..13 copy 0..6), listed out of order:
+      // ties must go to the lowest cell
+      "duplicates" -> (seed7.map { case (c, v, c2) => (c + 7, v, c2) } ++ seed7).reverse)
+    cases.foreach { case (name, cs) =>
+      val got = Similarity.withCell(rel, cs)
+        .select(col("vec_id"), col("cell"), col("dist2_r")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), dist(r, 2))).toMap
+      val ref = rel.select(col("vec_id"), array_min(unrolled(cs)).as("b"))
+        .select(col("vec_id"), col("b.cell"), col("b.dist2_r")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), dist(r, 2))).toMap
+      assert(got.keySet == ref.keySet && got.size == n + 2, name)
+      got.foreach { case (id, (cell, d)) =>
+        assert(cell == ref(id)._1, s"$name: vec $id cell $cell != ${ref(id)._1}")
+        if (id == -2L) assert(d.exists(_.isNaN) && ref(id)._2.contains(0.0),
+          s"$name: NaN row distance is NaN (the unrolled BIGINT floor gave 0.0), got $d")
+        else assert(d == ref(id)._2, s"$name: vec $id dist2_r $d != ${ref(id)._2}")
+      }
+      assert(got(-1L) == (cs.map(_._1).min.toLong, None),
+        s"$name: a null embedding takes the lowest cell with a null distance")
+      if (name == "duplicates") assert(got.values.forall(_._1 < 7), "lowest duplicate wins")
+      // probes: top-4 (dist2_r, cell) lists in order, and probeCellsOf's cells
+      def lists(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getLong(0) -> r.getSeq[Row](1).map(p => (dist(p, 0), p.getLong(1))))
+        .toMap
+      val gotP = lists(rel.select(col("vec_id"), Similarity.nearestCells(cs, 4)))
+      val refP = lists(rel.select(col("vec_id"), slice(array_sort(unrolled(cs)), 1, 4)))
+      assert(gotP.keySet == refP.keySet, name)
+      gotP.foreach { case (id, ps) =>
+        assert(ps.map(_._2) == refP(id).map(_._2), s"$name: vec $id probe cells")
+        if (id == -2L) assert(ps.forall(_._1.exists(_.isNaN)), s"$name: NaN row probe distances")
+        else assert(ps.map(_._1) == refP(id).map(_._1), s"$name: vec $id probe distances")
+      }
+      assert(gotP(-1L).map(_._2) == cs.map(_._1.toLong).sorted.take(4).toSeq,
+        s"$name: a null embedding probes the lowest cells")
+      val probed = Similarity.probeCellsOf(rel.withColumnRenamed("vec_id", "q_id"), cs, 4)
+        .collect().toSeq.map(r => r.getLong(0) -> r.getLong(1))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2) }
+      assert(probed == gotP.map { case (q, ps) => q -> ps.map(_._2) }, s"$name: probeCellsOf")
+    }
+  }
 }

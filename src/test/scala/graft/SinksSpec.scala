@@ -1107,24 +1107,28 @@ class SinksSpec extends SparkSpec {
     val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     assert(cells.size > threshold,
       s"${cells.size} cell dirs must exceed the listing threshold $threshold")
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.add(Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        ()
+    // (the served DataFrame, the descriptions of the jobs one call ran)
+    def searchJobs(): (org.apache.spark.sql.DataFrame, Seq[String]) = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = {
+          jobs.add(Option(js.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))).getOrElse(""))
+          ()
+        }
       }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
-    val served = try {
-      val df = Sinks.searchIvfPqIndex(tables, dir)
-      assert(df.collect().nonEmpty)
+      val sc = spark.sparkContext
       org.apache.spark.graft.ListenerDrain.drain(sc)
-      df
-    } finally sc.removeSparkListener(listener)
-    val descs = jobs.toArray.toSeq.map(_.toString)
+      sc.addSparkListener(listener)
+      val df = try {
+        val df = Sinks.searchIvfPqIndex(tables, dir)
+        assert(df.collect().nonEmpty)
+        org.apache.spark.graft.ListenerDrain.drain(sc)
+        df
+      } finally sc.removeSparkListener(listener)
+      (df, jobs.toArray.toSeq.map(_.toString))
+    }
+    val (served, descs) = searchJobs()
     assert(descs.size <= 9, s"${descs.size} jobs per search call:\n${descs.mkString("\n")}")
     assert(!descs.exists(_.startsWith("Listing leaf files")), descs.mkString("\n"))
     // listing-time pruning: the codes relation is rooted at exactly the
@@ -1143,6 +1147,25 @@ class SinksSpec extends SparkSpec {
     assert(roots.nonEmpty && roots.size < cells.size)
     assert(roots == probed.intersect(cells).map(c => s"$dir/codes/cell=$c"),
       s"codes scan roots $roots != probed cell dirs ${probed.toSeq.sorted}")
+    // tombstones cost exactly their broadcast: no schema-inference job
+    import spark.implicits._
+    Sinks.deleteFromIvfPqIndex(spark, dir, Seq(1L, 2L, 3L).toDF("vec_id"))
+    val (_, tombDescs) = searchJobs()
+    assert(tombDescs.size <= descs.size + 1,
+      s"${tombDescs.size} jobs with tombstones vs ${descs.size} without:\n${tombDescs.mkString("\n")}")
+  }
+
+  test("ivfpq index build: every cell dir holds exactly one parquet file") {
+    val dir = Files.createTempDirectory("ivfpq_files").toString
+    Sinks.writeIvfPqIndex(tables, dir, nCells = 16)
+    val cellDirs = new java.io.File(s"$dir/codes").listFiles()
+      .filter(_.getName.startsWith("cell="))
+    assert(cellDirs.length > 1)
+    cellDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
+    }
+    assert(spark.read.parquet(s"$dir/codes").count() == tables.embeddings.count())
   }
 
   test("sample shard artifact: merged half-corpus samples == whole-corpus sample at pair and quantile level") {
