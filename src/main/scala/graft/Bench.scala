@@ -260,7 +260,7 @@ object Bench {
       // curate verdict + CC feeder composition (measured warm sf1
       // probe 18.6 s vs 3.8 s sf0.1 ⇒ ~0.7)
       "doc_curation_funnel" -> 1.2,
-      // IVFPQ end-to-end (r10): two memoized Lloyd trainings (rounds ×
+      // IVFPQ end-to-end (r10): two Lloyd trainings per call (rounds ×
       // one narrow pass + one (cell,dim) aggregate each), residual
       // encode, bounded broadcast probes — every stage linear
       "ann_ivf_rpq" -> 1.2,

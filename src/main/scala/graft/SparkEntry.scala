@@ -181,8 +181,8 @@ object SparkEntry {
     "ann_prefix_ivf_rerank" -> q(Similarity.annPrefixIvfRerank(_)), // D57 Matryoshka INDEX variant: prefix-space IVF + full-dim rerank
     // G43: the SAME two serving paths off the persisted prefix-sliced
     // layout (bit-equal by construction — the oracle is shared), built
-    // once per corpus state and read back; retrieval scans only the
-    // prefix column group, the rerank fetches the bounded pool by id
+    // by each call and read back; retrieval scans only the prefix
+    // column group, the rerank fetches the bounded pool by id
     "ann_prefix_rerank_sliced" -> q(t =>
       graft.sources.Sinks.searchPrefixSliced(t.spark,
         graft.sources.Sinks.prefixSlicedFor(t))),

@@ -356,8 +356,11 @@ object VectorExprs {
     // filter drops nothing; and (b) constraint RECOMPUTATION is the
     // dominant optimizer cost on the unrolled iterative-ANN plans
     // (ann_method_recall's 222 KB plan — VERDICT r15 item 5's
-    // driver-bound analysis cost).
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    // driver-bound analysis cost). Only when the session has no value
+    // of its own: a user's explicit setting is theirs to keep.
+    val propagation = "spark.sql.constraintPropagation.enabled"
+    if (!spark.sessionState.conf.contains(propagation))
+      spark.conf.set(propagation, "false")
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, cls, builder) =>
       val id = FunctionIdentifier(name)

@@ -818,23 +818,19 @@ object Sinks {
     prefixSlicedRerank(spark, path, pool, q, k)
   }
 
-  private val prefixSlicedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), String]()
-
-  /** Build-once sliced artifact for a corpus STATE (the NndCache
-    * discipline: keyed on (dir, data fingerprint, p), so a rewritten
-    * corpus re-slices instead of serving stale bytes) — what lets the
-    * gated `ann_prefix_*_sliced` registry keys and Bench iterations
-    * share one build per JVM.
+  /** A fresh sliced artifact of the corpus, written on every call —
+    * what the `ann_prefix_*_sliced` registry keys search, so their time
+    * includes the build. The temp dir is registered with the Hadoop
+    * `FileSystem.deleteOnExit`, so nothing outlives the session's
+    * FileSystem (closed at JVM shutdown at the latest).
     */
-  private[graft] def prefixSlicedFor(t: Tables, p: Int = 16): String =
-    prefixSlicedCache.computeIfAbsent(
-      (t.dir, graft.operators.Similarity.embFingerprint(t), p), { _ =>
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_prefix_sliced").toString
-        writeEmbeddingsPrefixSliced(t, dir, p)
-        dir
-      })
+  private[graft] def prefixSlicedFor(t: Tables, p: Int = 16): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_prefix_sliced")
+    val path = new org.apache.hadoop.fs.Path(dir.toUri)
+    path.getFileSystem(t.spark.sparkContext.hadoopConfiguration).deleteOnExit(path)
+    writeEmbeddingsPrefixSliced(t, dir.toString, p)
+    dir.toString
+  }
 
   /** Bits per dimension of the z-value (16 → 32-bit z, plenty for
     * file-level clustering).
@@ -1407,7 +1403,7 @@ object Sinks {
     val sim = graft.operators.Similarity
     val nc = if (nCells > 0) nCells else autoNCells(t.embeddings.count())
     val coarse = sim.trainedCenters(t, nc)
-    val pqr = sim.residualPqCenters(t, nc, nCodes)
+    val pqr = sim.residualPqCenters(t, coarse, nCodes)
     def writeCenters(cs: Array[(Int, Seq[Double], Double)], p: String): Unit =
       cs.toSeq.toDF("cell", "center", "c2").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(p)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Registry-hygiene tripwire (VERDICT r9 item 3): every
   * `SparkEntry.queries` key must be BOTH oracle-gated (or on the
@@ -58,17 +58,32 @@ class RegistryHygieneSpec extends AnyFunSuite {
       s"queries keys with no SURVEY §2 row: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
-  test("sessions are built only in GraftSession; only the product mains define main") {
+  private val mainRoot = Paths.get("src/main")
+
+  /** (path, text) of every Scala file under src/main. */
+  private lazy val mainSources: Seq[(Path, String)] = {
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main")
-    assume(Files.exists(root), "src/main not found from test CWD")
-    val sources = Files.walk(root).iterator().asScala
+    Files.walk(mainRoot).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    def filesMatching(re: String): Set[String] = sources.filter { f =>
-      re.r.findFirstIn(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).nonEmpty
-    }.map(_.getFileName.toString).toSet
+      .map(f => f -> new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+  }
+
+  test("sessions are built only in GraftSession; only the product mains define main") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    def filesMatching(re: String): Set[String] = mainSources.collect {
+      case (f, text) if re.r.findFirstIn(text).nonEmpty => f.getFileName.toString
+    }.toSet
     assert(filesMatching("SparkSession\\s*\\.builder") == Set("GraftSession.scala"))
     assert(filesMatching("def main\\s*\\(") ==
       Set("KesMain.scala", "CurateMain.scala", "Bench.scala", "Verify.scala", "Probe.scala"))
+  }
+
+  test("no hidden memo caches: no graft-cache dir in src/main, no map memo in operators or sources") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    assert(mainSources.collect { case (f, text) if text.contains("graft-cache") => f }.isEmpty)
+    val memoDirs = Seq("operators", "sources").map(d => mainRoot.resolve(s"scala/graft/$d"))
+    val memo = mainSources.collect { case (f, text) if memoDirs.exists(f.startsWith(_)) &&
+        "ConcurrentHashMap|computeIfAbsent".r.findFirstIn(text).nonEmpty => f }
+    assert(memo.isEmpty, s"memo maps in operators/sources: ${memo.mkString(", ")}")
   }
 }

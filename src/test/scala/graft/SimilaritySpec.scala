@@ -798,11 +798,24 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(curve.last._3 < curve.head._3,
       "training must actually reduce SSE vs the seed on this corpus")
-    // the deploy-arc centers are the trained set, memoized deterministically
+    // the deploy-arc centers are the trained set, deterministic
     val t1 = Similarity.trainedCenters(tables, 8)
     assert(t1.toSeq == Similarity.trainedCenters(tables, 8).toSeq)
     assert(t1.map(_._1).toSeq == Similarity.hashCenters(tables, 8).map(_._1).toSeq,
       "cell ids stable through training")
+  }
+
+  test("trainedCenters over an embOverride corpus equals training on the same vectors written to their own dir") {
+    import org.apache.spark.sql.functions._
+    val flipped = tables.embeddings.withColumn("embedding", transform(col("embedding"), x => -x))
+    val dir = java.nio.file.Files.createTempDirectory("emb_flipped").toString
+    flipped.write.parquet(s"$dir/embeddings.parquet")
+    val canonical = Similarity.trainedCenters(tables, 8)
+    val viaOverride = Similarity.trainedCenters(tables.copy(embOverride = Some(flipped)), 8)
+    val written = Similarity.trainedCenters(graft.sources.Tables(spark, dir), 8)
+    assert(viaOverride.sameElements(written),
+      "an override corpus must train on its own vectors, not the table dir's")
+    assert(!viaOverride.sameElements(canonical), "flipped vectors train different centers")
   }
 
   test("coarse kernel: withCell and probeCellsOf match the unrolled struct-argmin at 1, 7 and 256 centers, duplicate centers, a null and a NaN embedding") {

@@ -68,6 +68,18 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(e.getMessage.contains("graft_dot"), e.getMessage)
   }
 
+  test("an explicit user constraintPropagation setting survives Tables()") {
+    val key = "spark.sql.constraintPropagation.enabled"
+    val s = spark.newSession()
+    s.conf.set(key, "true")
+    graft.sources.Tables(s, sfDir)
+    assert(s.conf.get(key) == "true", "Tables() overrode the user's explicit setting")
+    // a session without a value of its own still gets graft's default
+    val fresh = spark.newSession()
+    graft.sources.Tables(fresh, sfDir)
+    assert(fresh.conf.get(key) == "false")
+  }
+
   test("a GraftExtensions-configured session passes the registration check") {
     import org.apache.spark.sql.SparkSession
     // the deploy builder; its spark.sql.extensions only takes effect on
