@@ -753,7 +753,8 @@ object SparkEntry {
 
     // the bitmap-distinct card is EXACT, so the oracle is plain
     // COUNT(DISTINCT ...) arithmetic — word index = id // 64 matches
-    // the aggregator's id >>> 6 on the nonnegative key domain
+    // the Spark side's id >>> 6 on the nonnegative key domain (a
+    // negative key fails the query); both ignore NULL keys
     "q_distinct_bitmap" ->
       """SELECT event_type,
         |  COUNT(DISTINCT user_id) AS n_distinct,

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Deterministic bottom-k ROW sample as a typed Aggregator — the
@@ -105,11 +106,10 @@ final case class BottomKSample(k: Int)
   override def finish(r: (Array[Long], Array[Double])): Array[Double] = r._2
 
   override def bufferEncoder: Encoder[(Array[Long], Array[Double])] =
-    Encoders.tuple(Encoders.javaSerialization[Array[Long]],
-      Encoders.javaSerialization[Array[Double]])
+    ExpressionEncoder[(Array[Long], Array[Double])]()
 
   override def outputEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
+    ExpressionEncoder[Array[Double]]()
 }
 
 /** [[BottomKSample]] finishing with the (hash, value) PAIRS instead of
@@ -130,5 +130,5 @@ final case class BottomKPairs(k: Int)
   override def bufferEncoder: Encoder[(Array[Long], Array[Double])] =
     s.bufferEncoder
   override def outputEncoder: Encoder[Seq[(Long, Double)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Double)]]()
+    ExpressionEncoder[Seq[(Long, Double)]]()
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded posting-list aggregate for df-capped candidate generation
@@ -72,8 +73,8 @@ final case class BoundedPostings(cap: Int)
   override def finish(r: (Long, Array[Long])): (Long, Array[Long]) = r
 
   override def bufferEncoder: Encoder[(Long, Array[Long])] =
-    Encoders.tuple(Encoders.scalaLong, Encoders.javaSerialization[Array[Long]])
+    ExpressionEncoder[(Long, Array[Long])]()
 
   override def outputEncoder: Encoder[(Long, Array[Long])] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Array[Long])]()
+    ExpressionEncoder[(Long, Array[Long])]()
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** KMV (k-minimum-values) distinct-count sketch as a typed Aggregator —
@@ -68,8 +69,8 @@ final case class KmvSketch(k: Int)
   override def finish(r: Array[Long]): Array[Long] = r
 
   override def bufferEncoder: Encoder[Array[Long]] =
-    Encoders.javaSerialization[Array[Long]]
+    ExpressionEncoder[Array[Long]]()
 
   override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    ExpressionEncoder[Array[Long]]()
 }

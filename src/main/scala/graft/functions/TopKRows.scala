@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** EXACT top-k-per-group as a typed Aggregator with ≤k-pair map-side
@@ -104,9 +105,8 @@ final case class TopKRows(k: Int)
     r._1.zip(r._2).toSeq
 
   override def bufferEncoder: Encoder[(Array[Double], Array[Long])] =
-    Encoders.tuple(Encoders.javaSerialization[Array[Double]],
-      Encoders.javaSerialization[Array[Long]])
+    ExpressionEncoder[(Array[Double], Array[Long])]()
 
   override def outputEncoder: Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
+    ExpressionEncoder[Seq[(Double, Long)]]()
 }

@@ -1791,7 +1791,7 @@ object Similarity {
   /** D16: per-label centroid distance — every vector's euclidean
     * distance to its own label's centroid (cluster cohesion / outlier
     * signal: a far-from-centroid vector is mislabeled or an outlier;
-    * the oracle-gated consumer of D5's VectorAvg shape). Embeddings
+    * the centroids are native aggregates with an oracle). Embeddings
     * snap to an exact integer micro-unit lattice first so the per-
     * (label, dim) centroid sums are exact integer arithmetic (a
     * decimal cast of raw doubles rounds engine-specifically); the only

@@ -86,4 +86,10 @@ class RegistryHygieneSpec extends AnyFunSuite {
         "ConcurrentHashMap|computeIfAbsent".r.findFirstIn(text).nonEmpty => f }
     assert(memo.isEmpty, s"memo maps in operators/sources: ${memo.mkString(", ")}")
   }
+
+  test("no Java-serialised aggregation buffer in src/main") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    val javaSer = mainSources.collect { case (f, text) if text.contains("javaSerialization") => f }
+    assert(javaSer.isEmpty, s"Encoders.javaSerialization in: ${javaSer.mkString(", ")}")
+  }
 }

@@ -99,30 +99,62 @@ class SketchSpec extends SparkSpec {
     }
   }
 
-  test("bitmap distinct: merge(splits) == reduce(whole) == exact set count; in-place OR never drops a word") {
-    import graft.functions.BitmapDistinct
-    val s = BitmapDistinct()
-    // clustered + scattered keys with heavy duplication: exercises the
-    // in-place OR path (same word), the insertion path (new word), and
-    // word-boundary keys (multiples of 64)
+  /** A planted events corpus of (event_type, user_id) rows. */
+  private def plantedEvents(prefix: String, rows: Seq[(String, Option[Long])]): graft.sources.Tables = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    // ts as raw int64 nanos — Tables.events reads the column with an
+    // explicit LongType schema (TIMESTAMP(NANOS) parquet convention)
+    rows.zipWithIndex.map { case ((ty, uid), i) =>
+        (i.toLong, 1704067200000000000L + i, uid, ty, 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    graft.sources.Tables(spark, tmp)
+  }
+
+  /** (event_type → (n_distinct, n_words, max_word, density_r)) with NULLs as None. */
+  private def bitmapCards(t: graft.sources.Tables) =
+    Analytics.qDistinctBitmap(t).collect().map { r =>
+      r.getString(0) -> (r.getLong(1), r.getLong(2),
+        Option(r.get(3)).map(_.asInstanceOf[Long]), Option(r.get(4)).map(_.asInstanceOf[Double]))
+    }.toMap
+
+  test("bitmap distinct: planted word-boundary keys and real corpus == countDistinct") {
+    // clustered keys with heavy duplication (many bits per word) plus
+    // the word-boundary keys, split over two event types
     val vals = (0 until 8000).map(i => (i * 2654435761L) % 4096) ++
       Seq(0L, 63L, 64L, 127L, 128L, 4095L)
-    def reduceAll(xs: Seq[Long]) = xs.foldLeft(s.zero)((b, x) => s.reduce(b, x))
-    val whole = reduceAll(vals)
-    val thirds = vals.grouped(vals.size / 3 + 1).toSeq
-    val merged = thirds.map(reduceAll).reduce(s.merge)
-    assert(java.util.Arrays.equals(whole, merged), "merge of splits must equal one-pass reduce")
-    val card = s.finish(whole)
-    assert(card.n_distinct == vals.distinct.size, "bitmap popcount is the exact distinct count")
-    assert(card.n_words == vals.map(_ >>> 6).distinct.size, "one pair per touched word")
-    assert(card.max_word == vals.max >>> 6)
+    val t = plantedEvents("graft-bitmap",
+      vals.zipWithIndex.map { case (v, i) => (if (i % 3 == 0) "click" else "view", Some(v)) })
+    val exact = t.events.groupBy(col("event_type"))
+      .agg(countDistinct(col("user_id")), countDistinct(shiftrightunsigned(col("user_id"), 6)),
+        shiftrightunsigned(max(col("user_id")), 6))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), Some(r.getLong(3)))).toMap
+    val got = bitmapCards(t).view.mapValues { case (d, w, m, _) => (d, w, m) }.toMap
+    assert(got == exact, "bitmap popcount, touched words and top word must be exact")
+    assert(exact.keySet == Set("click", "view"))
     // the operator's card equals countDistinct on the real corpus
-    val got = Analytics.qDistinctBitmap(tables).collect()
+    val real = Analytics.qDistinctBitmap(tables).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = tables.events.groupBy(col("event_type"))
+    val realExact = tables.events.groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("d")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == exact, "bitmap distinct must be exact per group")
+    assert(real == realExact, "bitmap distinct must be exact per group")
+  }
+
+  test("bitmap distinct ignores NULL keys, as COUNT(DISTINCT) does") {
+    val t = plantedEvents("graft-bitmap-null",
+      Seq("a" -> Some(1L), "a" -> None, "a" -> Some(70L), "b" -> None))
+    assert(bitmapCards(t) == Map(
+      "a" -> (2L, 2L, Some(1L), Some(0.015625)),
+      "b" -> (0L, 0L, None, None)))
+  }
+
+  test("bitmap distinct rejects a negative key") {
+    val t = plantedEvents("graft-bitmap-neg", Seq("a" -> Some(3L), "a" -> Some(-5L)))
+    val e = intercept[Exception](Analytics.qDistinctBitmap(t).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("requires nonnegative keys, got -5")), e)
   }
 
   test("portable HLL: 3-sigma error bound; duplicate-insensitive; linear counting engages on small groups") {

@@ -80,6 +80,19 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(fresh.conf.get(key) == "false")
   }
 
+  test("an explicit user excludedRules setting survives Tables()") {
+    val key = "spark.sql.optimizer.excludedRules"
+    val mine = "org.apache.spark.sql.catalyst.optimizer.CombineUnions"
+    val s = spark.newSession()
+    s.conf.set(key, mine)
+    graft.sources.Tables(s, sfDir)
+    assert(s.conf.get(key) == mine, "Tables() rewrote the user's explicit setting")
+    // a session without a value of its own still gets graft's exclusion
+    val fresh = spark.newSession()
+    graft.sources.Tables(fresh, sfDir)
+    assert(fresh.conf.get(key) == "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+  }
+
   test("a GraftExtensions-configured session passes the registration check") {
     import org.apache.spark.sql.SparkSession
     // the deploy builder; its spark.sql.extensions only takes effect on
