@@ -6,17 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.functions._
 import graft.plans.AsOfJoinStrategy
 
-/** SparkSessionExtensions entry point — deploy-time registration of
-  * everything graft adds to a session:
+/** SparkSessionExtensions entry point: everything graft adds to a
+  * session — the `graft_*` functions of [[VectorExprs.functions]] and
+  * the as-of join planner strategy. [[GraftSession]]'s builders install
+  * it; a session built elsewhere names it in its launch conf:
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (Library code paths also self-register through Tables/GraftPlans,
-  * so embedded use needs no config.)
-  *
-  * The function list mirrors VectorExprs.ensureRegistered exactly — a
-  * config-registered cluster session must resolve every graft_*
-  * function the library path does (SqlSurfaceSpec cross-checks).
+  * No library code path registers either by itself; `Tables(...)`
+  * refuses a session whose graft functions are missing or shadowed.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -261,13 +261,10 @@ object VectorExprs {
   private val FnName = "graft_dot"
 
   /** (name, implementing class, builder) for EVERY graft native
-    * function — the single registration list consumed by both the
-    * library path (ensureRegistered, via Tables) and the deploy
-    * extension point (GraftExtensions.injectFunction). One list means
-    * the two paths cannot drift: a cluster session configured with
-    * spark.sql.extensions resolves exactly what embedded use does. The
-    * class name feeds ExpressionInfo so DESCRIBE FUNCTION reports the
-    * actual expression class, not the registrar.
+    * function — the one list GraftExtensions injects into every graft
+    * session, and [[requireInstalled]] checks. The class name feeds
+    * ExpressionInfo so DESCRIBE FUNCTION reports the actual expression
+    * class, not the registrar.
     */
   val functions: Seq[(String, String,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
@@ -315,69 +312,25 @@ object VectorExprs {
     ("graft_grad_energy", classOf[GradEnergy].getName,
       exprs => GradEnergy(exprs.head)))
 
-  /** InferFiltersFromGenerate wraps every explode in
-    * `size(child) > 0 AND isnotnull(child)`; PushDownPredicates then
-    * moves that filter through the projection that DEFINES the child,
-    * substituting the alias — so the generator input is re-evaluated
-    * per row below the Generate. For gram/vector explodes that input
-    * is the most expensive expression of the whole query (the
-    * corpus_dedup_stats plan carried gram hashing 3× per doc: size +
-    * isnotnull + the projection itself), and graft's array producers
-    * never emit empty arrays (GramHashes falls back to hashing the
-    * whole text; embeddings are fixed-width), so the inferred filter
-    * drops nothing. Results are identical without the rule — exploding
-    * an empty/null array already emits no rows; this is a pure
-    * plan-shape exclusion (guide §4.4's duplicate-eval, optimizer-made).
+  /** Fails unless every name in [[functions]] resolves, in `spark`'s
+    * function registry, to graft's own expression class. Read-only: a
+    * missing name means the session was built without GraftExtensions;
+    * a name taken by another class is a foreign function shadowing
+    * graft's, which every graft query would silently call.
     */
-  private val ExcludedRule =
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-
-  /** Register the native expressions in the session's function registry
-    * (the public extension point — same mechanism
-    * SparkSessionExtensions' injectFunction uses) and expose them as
-    * Columns. Also sets graft's two optimizer overrides — excluding
-    * `InferFiltersFromGenerate` and turning constraint propagation
-    * off — each only when the session has no value of its own for
-    * the key: a user's explicit setting is theirs to keep.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val excluded = "spark.sql.optimizer.excludedRules"
-    if (!spark.sessionState.conf.contains(excluded))
-      spark.conf.set(excluded, ExcludedRule)
-    // Constraint propagation OFF: an inferred IsNotNull is a pure
-    // optimization (join/filter semantics already drop null keys, so
-    // results are identical without it), and in this engine every such
-    // filter is a net LOSS twice over — (a) PushDownPredicates moves
-    // the attribute-level isnotnull through the projection that
-    // DEFINES the attribute, re-evaluating simhash/gram/phash per row
-    // below the Project (doc_simhash_pairs carried
-    // isnotnull(simhash60(gramhashes(text))) at the scan on both join
-    // sides; nullIntolerant can't help once the constraint is already
-    // attribute-level), while the corpus columns are never null so the
-    // filter drops nothing; and (b) constraint RECOMPUTATION is the
-    // dominant optimizer cost on the unrolled iterative-ANN plans
-    // (ann_method_recall's 222 KB plan — VERDICT r15 item 5's
-    // driver-bound analysis cost).
-    val propagation = "spark.sql.constraintPropagation.enabled"
-    if (!spark.sessionState.conf.contains(propagation))
-      spark.conf.set(propagation, "false")
+  def requireInstalled(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (name, cls, builder) =>
-      val id = FunctionIdentifier(name)
-      // registering only when absent: re-registering on every Tables()
-      // construction spammed "function replaced" WARNs through every
-      // bench/verify log. A name already taken by another class is a
-      // foreign function shadowing graft's: every graft query would
-      // silently call it, so refuse instead. Registration records the
-      // expression class, as GraftExtensions does, so a session set up
-      // by either path passes this check.
-      reg.lookupFunction(id) match {
-        case Some(info) if info.getClassName != cls =>
-          throw new IllegalStateException(s"function $name is already registered by " +
+    functions.foreach { case (name, cls, _) =>
+      reg.lookupFunction(FunctionIdentifier(name)) match {
+        case Some(info) if info.getClassName == cls =>
+        case Some(info) =>
+          throw new IllegalStateException(s"function $name is registered by " +
             s"${Option(info.getClassName).getOrElse("an anonymous builder")}, not graft's " +
             s"$cls; drop it or use a fresh session")
-        case Some(_) =>
-        case None => reg.registerFunction(id, new ExpressionInfo(cls, name), builder)
+        case None =>
+          throw new IllegalStateException(s"function $name is not registered in this " +
+            "session; build it with graft.GraftSession, or launch it with " +
+            "spark.sql.extensions=graft.GraftExtensions")
       }
     }
   }

@@ -23,7 +23,6 @@ object Similarity {
     * oracle's list_reduce, ~10× the higher-order-function formulation.
     */
   def withNorm(emb: DataFrame): DataFrame = {
-    VectorExprs.ensureRegistered(emb.sparkSession)
     emb
       // array-level Cast, not transform(x -> cast): elementwise
       // float→double widening is value-identical, but Cast is
@@ -262,14 +261,11 @@ object Similarity {
     * clusterCenters), fetched via TakeOrderedAndProject (per-partition
     * top-k + driver merge, never a full range exchange).
     */
-  private[graft] def hashCenters(t: Tables, nCenters: Int): Array[(Int, Seq[Double], Double)] = {
-    graft.functions.VectorExprs.ensureRegistered(t.spark)
+  private[graft] def hashCenters(t: Tables, nCenters: Int): Array[(Int, Seq[Double], Double)] =
     hashCentersOf(withNorm(t.embeddings), nCenters)
-  }
 
   /** [[hashCenters]] over a prepared (vec_id, v, n2) relation. */
   private def hashCentersOf(rel: DataFrame, nCenters: Int): Array[(Int, Seq[Double], Double)] = {
-    graft.functions.VectorExprs.ensureRegistered(rel.sparkSession)
     rel
       .select(col("vec_id"), col("v"), col("n2"),
         graft.functions.Hashing.md5_60(
@@ -1317,7 +1313,6 @@ object Similarity {
   private[graft] def probeCellsOf(q: DataFrame,
       coarse: Array[(Int, Seq[Double], Double)], nProbe: Int,
       carry: Seq[String] = Nil): DataFrame = {
-    VectorExprs.ensureRegistered(q.sparkSession)
     val keep = col("q_id") +: carry.map(col)
     q.select(keep ++ Seq(explode(nearestCells(coarse, nProbe)).as("p"), col("v")): _*)
       .select(keep ++ Seq(col("p.cell").as("pcell"), col("v")): _*)
@@ -1500,7 +1495,6 @@ object Similarity {
   def annIvfAdcFromLayout(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, quantizerPath: String,
       nQueries: Int = 8, k: Int = 5, m: Int = 8, nProbe: Int = 4): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val centers = graft.sources.Sinks.readQuantizer(spark, quantizerPath)
     val dsub = centers.head._2.length / m
     val layout = spark.read.parquet(layoutPath)

@@ -2,10 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
 
-/** Public wrapper for the custom plan nodes: registers the planner
-  * strategy (idempotently, via the public ExperimentalMethods hook —
-  * the same mechanism SparkSessionExtensions.injectPlannerStrategy
-  * feeds) and builds the DataFrame from the logical node.
+/** Public wrapper for the custom plan nodes: builds the DataFrame from
+  * the logical node. The session plans it with [[AsOfJoinStrategy]],
+  * which GraftExtensions installs in every graft session.
   */
 object GraftPlans {
 
@@ -20,9 +19,6 @@ object GraftPlans {
       leftTime: String, rightTime: String,
       tolerance: Option[java.time.Duration] = None): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, name: String) =

@@ -703,7 +703,6 @@ object Sinks {
     * ReadSchema — and its bytes — stay ∝ p/d. */
   private[graft] def prefixSlicedRetrievalRel(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(spark)
     spark.read.parquet(s"$path/sliced")
       .select(col("vec_id"), col("v_prefix").as("v"))
       .withColumn("n2",
@@ -718,7 +717,6 @@ object Sinks {
   private[graft] def prefixSlicedFullRel(
       spark: org.apache.spark.sql.SparkSession, path: String,
       pred: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.VectorExprs.ensureRegistered(spark)
     spark.read.parquet(s"$path/sliced")
       .filter(pred)
       .select(col("vec_id"),
@@ -1324,7 +1322,6 @@ object Sinks {
       maxIter: Int = 20): Unit = {
     val from = resolveIndexRoot(spark, rawFrom)
     val dd = graft.operators.Dedup
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val tombPath = new org.apache.hadoop.fs.Path(s"$from/doc_tombstones")
     val idxAll = spark_read_index(spark, from)
     val idx =

@@ -76,7 +76,6 @@ object AnnStreamJob {
       m: Int = 8, nProbe: Int = 4,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val sinks = graft.sources.Sinks
     // the composable form is ONE continuously-planned query, so the
     // version pointer resolves once at start — a G41 swap needs a
@@ -151,7 +150,6 @@ object AnnStreamJob {
       onBatch: (Long, Seq[(Long, Long, Long, Double)]) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val sim = graft.operators.Similarity
     val sinks = graft.sources.Sinks
     // bounded artifacts load once PER VERSION, driver-side (the
@@ -250,7 +248,6 @@ object AnnStreamJob {
       onBatch: (Long, Seq[(Long, Long, Long, Double)]) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val sim = graft.operators.Similarity
     val sinks = graft.sources.Sinks
     val dd = graft.operators.Dedup
@@ -328,7 +325,6 @@ object AnnStreamJob {
       onBatch: (Long, Seq[(Long, Long, Long, Double)]) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val sinks = graft.sources.Sinks
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

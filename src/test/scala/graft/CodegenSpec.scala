@@ -23,7 +23,6 @@ class CodegenSpec extends SparkSpec {
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     s.conf.set("spark.sql.codegen.fallback", "false")
-    graft.functions.VectorExprs.ensureRegistered(s)
     s
   }
 

@@ -208,7 +208,6 @@ class ExprPropertiesSpec extends SparkSpec {
   test("md5_60Jvm == the md5_60 Column on arbitrary strings (typed-state parity)") {
     import org.apache.spark.sql.functions.{col, lit, concat}
     import spark.implicits._
-    graft.functions.VectorExprs.ensureRegistered(spark)
     val samples = Seq("", "a", "kmv:0", "kmv:123456789", "cms:42",
       "unicode ✓ ünïcødé", "long " * 50)
     val viaColumn = samples.toDF("s")

@@ -19,7 +19,7 @@ class PlanSpec extends SparkSpec {
     // the substantive claim is the shipdate predicate reaching the
     // scan; the inferred IsNotNull companion is gone since r16 turned
     // constraint propagation off (it only duplicated expression
-    // evaluation engine-wide — see VectorExprs.ensureRegistered)
+    // evaluation engine-wide — see GraftSession.sqlDefaults)
     assert(p.contains("PushedFilters: [LessThanOrEqual(l_shipdate"), p.take(500))
   }
 
@@ -838,5 +838,49 @@ class PlanSpec extends SparkSpec {
       case s: org.apache.spark.sql.execution.SortExec if s.global => s
     }
     assert(globalSorts.isEmpty, "deploy plan pays no global sort (ordered=false default)")
+  }
+
+  test("constraint propagation off loses no pushed predicate but IsNotNull (q1 + the query_mix keys)") {
+    // graft's session turns constraint propagation off (GraftSession
+    // .sqlDefaults); this pins the cost side of that trade-off on one
+    // or more oracle-gated keys per family: every parquet scan pushes
+    // the same filters as under a session with propagation on, but for
+    // the inferred IsNotNull entries. Planned only, never executed.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val keys = Seq("q1_pricing_summary", "ev_top_keys", "ev_time_derivation",
+      "q_revenue_delta", "q_distinct_bitmap", "doc_exact_dedup", "doc_simhash",
+      "text_fingerprint", "emb_norm_stats", "mm_phash", "mm_binary_meta")
+    val on = spark.newSession()
+    on.conf.set("spark.sql.constraintPropagation.enabled", "true")
+    assert(spark.conf.get("spark.sql.constraintPropagation.enabled") == "false")
+    /** Top-level entries of `[a, f(b, c), d]`. */
+    def entries(list: String): Seq[String] = {
+      val body = list.stripPrefix("[").stripSuffix("]")
+      val out = Seq.newBuilder[String]
+      var depth = 0
+      var from = 0
+      body.indices.foreach { i =>
+        body(i) match {
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case ',' if depth == 0 =>
+            out += body.substring(from, i).trim; from = i + 1
+          case _ =>
+        }
+      }
+      (out += body.substring(from).trim).result().filter(_.nonEmpty)
+    }
+    /** Per parquet scan (sorted): its pushed filters without IsNotNull. */
+    def pushed(s: org.apache.spark.sql.SparkSession, key: String): Seq[Seq[String]] =
+      SparkEntry.queries(key)(s, sfDir).queryExecution.sparkPlan.collectWithSubqueries {
+        case scan: FileSourceScanExec =>
+          entries(scan.metadata.getOrElse("PushedFilters", "[]"))
+            .filterNot(_.startsWith("IsNotNull(")).sorted
+      }.sortBy(_.mkString("|"))
+    for (key <- keys) {
+      val off = pushed(spark, key)
+      assert(off.nonEmpty, s"$key: no parquet scan planned")
+      assert(off == pushed(on, key), s"$key: pushed filters differ with constraint propagation on")
+    }
   }
 }

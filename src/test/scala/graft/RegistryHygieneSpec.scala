@@ -92,4 +92,17 @@ class RegistryHygieneSpec extends AnyFunSuite {
     val javaSer = mainSources.collect { case (f, text) if text.contains("javaSerialization") => f }
     assert(javaSer.isEmpty, s"Encoders.javaSerialization in: ${javaSer.mkString(", ")}")
   }
+
+  test("graft installs itself only through GraftSession: no registration, strategy or optimizer write elsewhere") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    val installs = mainSources.collect {
+      case (f, text) if "ensureRegistered|registerFunction|extraStrategies".r.findFirstIn(text).nonEmpty => f
+    }
+    assert(installs.isEmpty, s"session installs outside GraftExtensions: ${installs.mkString(", ")}")
+    val optimizerKeys = mainSources.collect {
+      case (f, text) if Seq("spark.sql.constraintPropagation.enabled",
+          "spark.sql.optimizer.excludedRules").exists(text.contains) => f.getFileName.toString
+    }.toSet
+    assert(optimizerKeys == Set("GraftSession.scala"), optimizerKeys.toString)
+  }
 }

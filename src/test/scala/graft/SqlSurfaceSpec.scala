@@ -95,9 +95,9 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("a GraftExtensions-configured session passes the registration check") {
     import org.apache.spark.sql.SparkSession
-    // the deploy builder; its spark.sql.extensions only takes effect on
-    // a new SparkContext, so the shared one gets the extension directly
-    val s = GraftSession.clusterBuilder(4).withExtensions(new GraftExtensions).create()
+    // the deploy builder, on the shared SparkContext: its extension
+    // needs no new context to take effect
+    val s = GraftSession.clusterBuilder(4).create()
     try {
       // registered by the extension, before any Tables() call
       val described = s.sql("DESCRIBE FUNCTION graft_dot").collect().mkString
@@ -109,5 +109,48 @@ class SqlSurfaceSpec extends SparkSpec {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("a fresh session with no Tables() has graft's functions, streams and as-of strategy") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    // everything graft adds comes with the session, whatever is called first
+    val s = spark.newSession()
+    graft.functions.VectorExprs.functions.foreach { case (name, cls, _) =>
+      val described = s.sql(s"DESCRIBE FUNCTION $name").collect().mkString
+      assert(described.contains(cls), s"$name: $described")
+    }
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val docs = MemoryStream[graft.model.IngestDoc]
+    graft.streaming.DocStreamJob.streamDocNearDupWithin(docs.toDS().toDF())
+      .queryExecution.assertAnalyzed()
+    val left = Seq((1L, 100L)).toDF("id", "t").select(col("id"), timestamp_micros(col("t")).as("t"))
+    val right = Seq((1L, 90L, "a")).toDF("id2", "t2", "v")
+      .select(col("id2"), timestamp_micros(col("t2")).as("t2"), col("v"))
+    val asof = graft.plans.GraftPlans.asofJoin(left, right, "id", "id2", "t", "t2")
+    assert(asof.queryExecution.sparkPlan.collect { case e: graft.plans.AsOfJoinExec => e }.nonEmpty,
+      asof.queryExecution.sparkPlan.toString)
+  }
+
+  test("a launch-conf value wins over graft's SQL default for the same key") {
+    val key = "spark.sql.constraintPropagation.enabled"
+    val launch = new org.apache.spark.SparkConf(false).set(key, "true")
+    val applied = GraftSession.unsetIn(launch, GraftSession.sqlDefaults)
+    assert(applied == GraftSession.sqlDefaults.filterNot(_._1 == key), applied.toString)
+    assert(GraftSession.unsetIn(new org.apache.spark.SparkConf(false), GraftSession.sqlDefaults)
+      == GraftSession.sqlDefaults)
+  }
+
+  test("a session without graft's functions is refused by Tables(), naming the fix") {
+    // the registry check is read-only: a missing function is an error,
+    // never registered on the fly
+    val s = spark.newSession()
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_md5_60")
+    assert(s.sessionState.functionRegistry.dropFunction(id))
+    val e = intercept[IllegalStateException](graft.sources.Tables(s, sfDir))
+    assert(e.getMessage.contains("graft_md5_60") && e.getMessage.contains("GraftSession"),
+      e.getMessage)
+    assert(!s.sessionState.functionRegistry.functionExists(id))
   }
 }

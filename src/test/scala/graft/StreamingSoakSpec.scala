@@ -26,10 +26,6 @@ class StreamingSoakSpec extends SparkSpec {
 
   private val base = Instant.parse("2024-01-01T00:00:00Z")
 
-  // the near-dup soaks use the native graft_* expressions directly
-  // (no Tables construction on that path to register them)
-  graft.functions.VectorExprs.ensureRegistered(spark)
-
   /** Total state rows currently held by `q` (sum over its stateful
     * operators, from the most recent progress).
     */

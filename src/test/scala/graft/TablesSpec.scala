@@ -39,6 +39,44 @@ class TablesSpec extends SparkSpec {
     assert(cols == Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
   }
 
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-events").toString
+
+  test("an events file without ts raises instead of loading NULL timestamps") {
+    import spark.implicits._
+    val dir = tempDir()
+    Seq((1L, 7L, "click", 1.0, "{}")).toDF("event_id", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val e = intercept[IllegalStateException](graft.sources.Tables(spark, dir).events.collect())
+    assert(e.getMessage.contains("events.ts"), e.getMessage)
+  }
+
+  test("a TIMESTAMP(NANOS) events.ts takes the fallback and truncates to micros") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tempDir()
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id; required binary event_type (STRING);
+        |  required double value; required binary props (STRING);
+        |}""".stripMargin)
+    val at = java.time.Instant.parse("2024-03-01T12:00:00.123456789Z")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", at.getEpochSecond * 1000000000L + at.getNano)
+      .append("user_id", 7L).append("event_type", "click").append("value", 1.0)
+      .append("props", "{}"))
+    finally w.close()
+    val ev = graft.sources.Tables(spark, dir).events
+    assert(ev.schema("ts").dataType == TimestampType)
+    assert(ev.select(col("ts")).head().getTimestamp(0).toInstant ==
+      java.time.Instant.parse("2024-03-01T12:00:00.123456Z"))
+  }
+
   test("every table's loaded schema matches the operator contract (drift tripwire)") {
     // the r7 lesson generalized: a regenerated-testdata schema change
     // should fail HERE, not as 100 silent oracle mismatches. Pins the
