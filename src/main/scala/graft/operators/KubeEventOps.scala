@@ -31,24 +31,15 @@ object KubeEventOps {
       lit(":"),
       coalesce(ev.getField("metadata").getField("resourceVersion"), lit("")))
 
-  /** Parsed events + the derived `time` and cache `key` columns.
-    *
-    * `processingTimeFallback` is the reference's types.rs:38 behavior
-    * opt-in: when all three event timestamps are missing, substitute
-    * the processing time (`current_timestamp()` — the ingest batch's
-    * clock) instead of yielding null. Off by default deliberately: a
-    * wall-clock fallback makes replays non-deterministic (the
-    * reference has the same property and logs a warning; here the
-    * substitution count rides an observed metric in streamPipeline).
+  /** Parsed events + the derived `time` and cache `key` columns. An
+    * event with none of the three timestamps gets a null `time`; the
+    * streaming pipeline's `processingTimeFallback` is the one place
+    * that fills it (see [[streamPipeline]]).
     */
-  def withDerived(events: DataFrame, processingTimeFallback: Boolean = false): DataFrame = {
-    val derived = events
+  def withDerived(events: DataFrame): DataFrame =
+    events
       .withColumn("time", derivedTime(col("kubernetes_event")))
       .withColumn("key", eventKey(col("kubernetes_event")))
-    if (processingTimeFallback)
-      derived.withColumn("time", coalesce(col("time"), current_timestamp()))
-    else derived
-  }
 
   /** The stdout record (types.rs:10): one JSON line per event. */
   def stdoutRecord(derived: DataFrame): DataFrame =
@@ -78,6 +69,13 @@ object KubeEventOps {
   /** Streaming form: watermark-bounded exact dedup on the cache key
     * (the reference's TTL cache — state expires with the watermark just
     * as clean_cache purges by CACHE_TTL).
+    *
+    * `processingTimeFallback` is the reference's types.rs:38 behavior
+    * opt-in: when all three event timestamps are missing, substitute
+    * the processing time (`current_timestamp()` — the micro-batch's
+    * clock) instead of dropping the event. Off by default deliberately:
+    * a wall-clock fallback makes replays non-deterministic (the
+    * reference has the same property and logs a warning).
     *
     * Cache observability rides the plan itself: two CollectMetrics
     * nodes count rows entering and leaving the dedup, and

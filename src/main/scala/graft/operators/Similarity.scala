@@ -382,15 +382,27 @@ object Similarity {
     * persisted quantizers instead of the corpus table.
     */
   private[graft] def residualRelOf(emb: DataFrame,
-      coarse: Array[(Int, Seq[Double], Double)]): DataFrame = {
-    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
+      coarse: Array[(Int, Seq[Double], Double)]): DataFrame =
     withCell(withNorm(emb), coarse)
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("v"),
-          element_at(byCell, col("cell").cast("int") + 1),
-          (x, c) => x - c).as("v"))
+      .select(col("vec_id"), col("cell"), minusCenter(coarse, col("cell")).as("v"))
       .withColumn("n2", VectorExprs.dot(col("v"), col("v")))
+
+  /** `v − c_cell`: `v` minus the coarse center whose id is in `cell` —
+    * the residual the corpus is encoded as and the query looks codes
+    * up with. */
+  private def minusCenter(coarse: Array[(Int, Seq[Double], Double)],
+      cell: Column): Column = {
+    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
+    zip_with(col("v"), element_at(byCell, cell.cast("int") + 1), (x, c) => x - c)
   }
+
+  /** A probe relation (q_id, pcell, v, carry…) as the RPQ scorer's
+    * (q_id, pcell, x, carry…): x is the query's residual against each
+    * probed cell's center. Every residual-PQ search (D46, D49, D50, the
+    * G26 index and the online server) probes through this. */
+  private[graft] def residualProbes(probes: DataFrame,
+      coarse: Array[(Int, Seq[Double], Double)]): DataFrame =
+    probes.withColumn("x", minusCenter(coarse, col("pcell"))).drop("v")
 
   /** The residual-space PQ codebook D46 consumes: Lloyd-trained on
     * [[residualRel]] against the caller's `coarse` centers (same
@@ -458,9 +470,9 @@ object Similarity {
   /** Adds a `cell` + `dist2_r` column: nearest (squared L2, 6dp-rounded,
     * ties → lowest cell id) of the literal center set. ONE narrow pass
     * over the [[centerDists]] kernel — no shuffle, no join. The argmin
-    * is `array_position(ds, array_min(ds))` (the [[pqCodesOf]] pattern:
-    * the min is materialized once, in its own projection, and its first
-    * occurrence is the lowest cell). The oracle expresses the same
+    * is `array_position(ds, array_min(ds))` (the [[pqEncode]] argmin;
+    * here the min is materialized once, in its own projection, and its
+    * first occurrence is the lowest cell). The oracle expresses the same
     * argmin as a per-vector ROW_NUMBER window (correctness shape, not
     * scale shape).
     */
@@ -806,10 +818,10 @@ object Similarity {
         r6(sum(col("dist2_r").cast(DecimalType(18, 6))).cast("double") /
           count(lit(1)).cast("double")).as("mean_dist2_r"))
       .select(lit(variant).as("variant"), col("n"), col("mean_dist2_r"))
-    val raw = pqCodesOf(withNorm(t.embeddings), trainedCenters(t, nCodes), m)
+    val raw = codeRows(pqEncode(withNorm(t.embeddings), trainedCenters(t, nCodes), m))
     val coarse = trainedCenters(t, nCells)
-    val res = pqCodesOf(residualRel(t, coarse),
-      residualPqCenters(t, coarse, nCodes), m)
+    val res = codeRows(pqEncode(residualRel(t, coarse),
+      residualPqCenters(t, coarse, nCodes), m))
     maybeSort(card(raw, "pq_raw").unionByName(card(res, "pq_residual")),
       ordered)(col("variant"))
   }
@@ -870,7 +882,7 @@ object Similarity {
     * 32×), with asymmetric distance computed from the codes.
     *
     * Scale shape: codebooks are literals; the whole computation is one
-    * narrow pass (explode ×m of per-subspace argmin structs — no
+    * narrow pass ([[pqEncode]]'s packed row, posexploded ×m — no
     * shuffle, no join; PlanSpec pins zero exchanges). One output row
     * per (vector, subspace) with the r6'd residual.
     */
@@ -889,40 +901,60 @@ object Similarity {
   private[graft] def embPqCodesWith(t: Tables,
       centers: Array[(Int, Seq[Double], Double)], m: Int,
       ordered: Boolean): DataFrame = maybeSort(
-    pqCodesOf(withNorm(t.embeddings), centers, m),
+    codeRows(pqEncode(withNorm(t.embeddings), centers, m)),
     ordered)(col("vec_id"), col("sub_j"))
 
-  /** The D8 encode over a prepared relation (must expose `vec_id` and
-    * `v`); `carry` columns ride through unchanged — D10 carries the
-    * coarse `cell` so encode + assignment stay ONE narrow pass.
+  /** The one PQ encoder: each row of a prepared relation (`vec_id`, `v`
+    * and the `carry` columns — IVF callers carry the coarse `cell`) as
+    * ONE row (vec_id, carry…, codes, dists), `codes` the nearest code per
+    * subspace in sub_j order, `dists` its r6'd squared distance (the
+    * per-subspace reconstruction error D8/D29/D48 report). The packed
+    * row is what the G26 index persists and what [[ivfAdcScores]]
+    * scans; [[codeRows]] turns it into the row-per-subspace cards.
+    *
+    * One native PqDists per subspace (loop codegen, constant bytecode —
+    * the unrolled argmin blew janino's 64 KB method limit); argmin with
+    * the lowest-code tiebreak is the first-occurrence
+    * `array_position(ds, array_min(ds))`. One narrow pass, no shuffle. A
+    * null `v` encodes as codes and dists of nulls.
+    *
+    * The lambdas take the pass out of whole-stage codegen; D8 measured
+    * ~20% slower than its old explode-first encode for it at sf0.1. An
+    * unrolled lambda-free form (m `element_at`s per output) measured
+    * ~2× slower still, so the lambdas stay.
     */
-  private def pqCodesOf(e: DataFrame,
-      centers: Array[(Int, Seq[Double], Double)], m: Int,
+  private[graft] def pqEncode(e: DataFrame,
+      codebook: Array[(Int, Seq[Double], Double)], m: Int,
       carry: Seq[String] = Nil): DataFrame = {
-    val dsub = centers.head._2.length / m
-    require(dsub * m == centers.head._2.length, s"dim must divide into $m subspaces")
-    // One native PqDists per subspace (loop codegen, constant bytecode
-    // — the unrolled argmin blew janino's 64 KB method limit and
-    // dropped the stage to interpreted eval); argmin + lowest-code
-    // tiebreak via first-occurrence array_position, bit-identical to
-    // the old struct(dist, code) array_min.
-    val subs = (0 until m).map { j =>
-      val xv = slice(col("v"), j * dsub + 1, dsub)
-      struct(lit(j.toLong).as("sub_j"),
-        VectorExprs.pqDists(xv, subCodebook(centers, j, dsub)).as("ds"))
+    val dsub = codebook.head._2.length / m
+    require(dsub * m == codebook.head._2.length, s"dim must divide into $m subspaces")
+    val ds = (0 until m).map { j =>
+      VectorExprs.pqDists(slice(col("v"), j * dsub + 1, dsub), subCodebook(codebook, j, dsub))
     }
     val keep = col("vec_id") +: carry.map(col)
-    // the min is materialized once per row in its own projection:
-    // aliasing array_min twice in one select would re-run the O(nCodes)
-    // scan per use (CollapseProject keeps this split for non-cheap
-    // multi-referenced aliases, so the shape survives optimization)
-    e.select(keep :+ explode(array(subs: _*)).as("s"): _*)
-      .select(keep ++ Seq(col("s.sub_j").as("sub_j"),
-        col("s.ds").as("ds"), array_min(col("s.ds")).as("mn")): _*)
-      .select(keep ++ Seq(col("sub_j"),
-        (array_position(col("ds"), col("mn")) - 1L).as("code"),
-        col("mn").as("dist2_r")): _*)
+    e.select(keep :+ array(ds: _*).as("ds"): _*)
+      .select(keep ++ Seq(
+        transform(col("ds"), d => array_position(d, array_min(d)) - 1L).as("codes"),
+        transform(col("ds"), d => array_min(d)).as("dists")): _*)
   }
+
+  /** [[pqEncode]]'s packed rows as one (vec_id, sub_j, code, dist2_r) row
+    * per (vector, subspace). */
+  private def codeRows(packed: DataFrame): DataFrame =
+    packed.select(col("vec_id"),
+        posexplode(arrays_zip(col("codes"), col("dists"))).as(Seq("sub_j", "c")))
+      .select(col("vec_id"), col("sub_j").cast("long").as("sub_j"),
+        col("c.codes").as("code"), col("c.dists").as("dist2_r"))
+
+  /** The corpus side of every residual-PQ search: coarse cell, residual
+    * and residual-PQ codes of `emb` in one narrow pass, as (vec_id, cell,
+    * codes) — what the G26 index persists (partitioned by `cell`) and
+    * what G30 appends. */
+  private[graft] def rpqCodesOf(emb: DataFrame,
+      coarse: Array[(Int, Seq[Double], Double)],
+      pqr: Array[(Int, Seq[Double], Double)], m: Int): DataFrame =
+    pqEncode(residualRelOf(emb, coarse), pqr, m, carry = Seq("cell"))
+      .select(col("vec_id"), col("cell"), col("codes"))
 
   /** D9: PQ asymmetric-distance ANN (ADC) — approximate top-k where
     * candidate distances come from the D8 CODES, not the raw vectors:
@@ -938,6 +970,12 @@ object Similarity {
     * code rows are colocated by construction) before the only shuffle;
     * top-k is the shared exact [[adcTopK]]. Per-cell distances are
     * r6'd and decimal-summed — order-independent, oracle-portable.
+    *
+    * D9 is the one ADC path not on [[ivfAdcScores]]: it has no coarse
+    * cell, so the packed scorer's `cell` join key would be a literal,
+    * which folds into a nested-loop join (PlanSpec "pq adc" forbids
+    * one). Its equi-join keys are (sub_j, code) instead, over the one
+    * encoder's output exploded to a row per subspace.
     */
   def annPqAdc(t: Tables, nQueries: Int = 8, k: Int = 5,
       m: Int = 8, nCodes: Int = 8): DataFrame =
@@ -987,51 +1025,21 @@ object Similarity {
     * Scale shape: cell assignment + encode are ONE literal-centers
     * narrow pass (no shuffle); probed cells per query come from an
     * array_sort over the per-center distance structs (narrow — no
-    * window, the center set is literal); candidates meet the tiny
-    * (q_id, cell) probe relation in a broadcast join, the ADC distance
-    * table in a second broadcast join; the per-(query, vector) sum and
-    * the exact [[adcTopK]] are the D9 pattern unchanged. Both
-    * quantizers are the seeded-hash artifact family (G15-persistable);
-    * coarse and PQ center sets share the hash order by construction.
+    * window, the center set is literal); [[ivfAdcScores]] meets the
+    * code stream with ONE broadcast of the (query, probed cell,
+    * distance table) relation, the query's raw vector being its lookup
+    * side; the exact [[adcTopK]] ranks. Both quantizers are the
+    * seeded-hash artifact family (G15-persistable); coarse and PQ
+    * center sets share the hash order by construction.
     */
   def annIvfAdc(t: Tables, nQueries: Int = 8, k: Int = 5, m: Int = 8,
       nCodes: Int = 8, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val coarse = trainedCenters(t, nCells)
     val pq = trainedCenters(t, nCodes)
-    val dsub = pq.head._2.length / m
-    // corpus: coarse cell + PQ codes, one pass
-    val codes = pqCodesOf(withCell(withNorm(t.embeddings), coarse), pq, m,
+    val codes = pqEncode(withCell(withNorm(t.embeddings), coarse), pq, m,
       carry = Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("sub_j"), col("code"))
-    // queries: nProbe nearest coarse cells (ties to lowest cell — the
-    // withCell rule)
-    val queries = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
-    val pcells = probeCellsOf(queries.select(col("vec_id").as("q_id"), col("v")),
-        coarse, nProbe)
-      .select(col("q_id"), col("pcell"))
-    // per-query ADC distance table (the D9 construction)
-    val perJ = (0 until m).map { j =>
-      val xv = slice(col("v"), j * dsub + 1, dsub)
-      struct(lit(j.toLong).as("sub_j"),
-        VectorExprs.pqDists(xv, subCodebook(pq, j, dsub)).as("cs"))
-    }
-    val adc = queries
-      .select(col("vec_id").as("q_id2"), explode(array(perJ: _*)).as("s"))
-      .select(col("q_id2"), col("s.sub_j").as("qsub_j"), posexplode(col("s.cs")))
-      .select(col("q_id2"), col("qsub_j"),
-        col("pos").cast("long").as("qcode"), col("col").as("d_r"))
-    // candidates: only vectors in probed cells (the broadcast is the
-    // in-query analog of reading nProbe cell dirs), then code → table
-    // lookup, sum, exact top-k
-    val scored = codes
-      .join(broadcast(pcells),
-        col("cell") === col("pcell") && col("vec_id") =!= col("q_id"))
-      .join(broadcast(adc),
-        col("q_id") === col("q_id2") && col("sub_j") === col("qsub_j") &&
-          col("code") === col("qcode"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-    adcTopK(scored, k)
+    val probes = probeCells(t, coarse, nQueries, nProbe).withColumnRenamed("v", "x")
+    adcTopK(ivfAdcScores(codes, probes, pq, m), k)
   }
 
   /** D11: IVF-ADC with exact re-ranking — the FAISS refine step: D10's
@@ -1111,7 +1119,7 @@ object Similarity {
     // quantizer pair and one encode
     val coarse = trainedCenters(t, nCells)
     val pqr = residualPqCenters(t, coarse, nCodes)
-    val codes = pqCodesFor(t, coarse, pqr, m)
+    val codes = rpqCodesOf(t.embeddings, coarse, pqr, m)
     def rpq(kk: Int) = annIvfRpqWith(t, coarse, pqr, codes, nQueries, kk, m, nProbe)
     val adc = rpq(k)
     val refined = exactRerankOf(t, rpq(rerankR).select(col("q_id"), col("vec_id")),
@@ -1142,40 +1150,15 @@ object Similarity {
     val maxP = probes.max
     val coarse = trainedCenters(t, nCells)
     val pqr = residualPqCenters(t, coarse, nCodes)
-    val dsub = pqr.head._2.length / m
-    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
-    val codes = pqCodesFor(t, coarse, pqr, m)
-    // probe list at the widest level, 1-based rank in probe order,
-    // with the query residual against each probed cell's center
+    // probe list at the widest level, 1-based rank in probe order
     val pc = withNorm(t.embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"),
         posexplode(nearestCells(coarse, maxP)).as(Seq("pi", "p")), col("v"))
       .select(col("q_id"), (col("pi") + 1).cast("long").as("crank"),
-        col("p.cell").as("pcell"),
-        zip_with(col("v"),
-          element_at(byCell, col("p.cell").cast("int") + 1),
-          (x, c) => x - c).as("qr"))
-    val perJ = (0 until m).map { j =>
-      val xv = slice(col("qr"), j * dsub + 1, dsub)
-      struct(lit(j.toLong).as("sub_j"),
-        VectorExprs.pqDists(xv, subCodebook(pqr, j, dsub)).as("cs"))
-    }
-    val adcT = pc
-      .select(col("q_id").as("q_id2"), col("pcell").as("pcell2"),
-        col("crank"), explode(array(perJ: _*)).as("s"))
-      .select(col("q_id2"), col("pcell2"), col("crank"),
-        col("s.sub_j").as("qsub_j"), posexplode(col("s.cs")))
-      .select(col("q_id2"), col("pcell2"), col("crank"), col("qsub_j"),
-        col("pos").cast("long").as("qcode"), col("col").as("d_r"))
-    // one scored row per (q, vec), tagged with its cell's probe rank
-    val scored = codes
-      .join(broadcast(adcT),
-        col("cell") === col("pcell2") && col("sub_j") === col("qsub_j") &&
-          col("code") === col("qcode") && col("vec_id") =!= col("q_id2"))
-      .groupBy(col("q_id2"), col("vec_id"))
-      .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"),
-        max(col("crank")).as("crank"))
-      .select(col("q_id2").as("q_id"), col("vec_id"), col("adc_dist_r"), col("crank"))
+        col("p.cell").as("pcell"), col("v"))
+    // one scored row per (q, vec), carrying its cell's probe rank
+    val scored = ivfAdcScores(rpqCodesOf(t.embeddings, coarse, pqr, m),
+      residualProbes(pc, coarse), pqr, m)
     val levels = spark.range(1)
       .select(explode(typedLit(probes.map(_.toLong))).as("nprobe"))
     val wTop = Window.partitionBy(col("q_id"), col("nprobe"))
@@ -1268,36 +1251,26 @@ object Similarity {
     * vectors, so the same m×nCodes budget buys a finer grid — the
     * reason production IVFPQ encodes residuals. A query's distance
     * table is computed per PROBED CELL from its own residual
-    * (q − c_cell), so the table keys on (q, cell, subspace, code) and
-    * the probe-set restriction rides the same broadcast join.
+    * (q − c_cell, [[residualProbes]]), so the table keys on (q, cell)
+    * and the probe-set restriction rides the same broadcast join.
     *
     * Scale shape: assignment + residual + encode are ONE narrow
-    * literal-centers pass (no shuffle); the query table is
-    * nQueries·nProbe·m·nCodes rows — broadcast; the per-(query,
-    * vector) decimal sum and exact [[adcTopK]] are the D9/D10
-    * pattern unchanged. Both codebooks are bounded persisted-artifact
-    * material (G15 shape).
+    * literal-centers pass (no shuffle); the nQueries·nProbe probe rows
+    * with their distance tables are the one broadcast of
+    * [[ivfAdcScores]]; the exact [[adcTopK]] ranks. Both codebooks are
+    * bounded persisted-artifact material (G15 shape).
     */
   def annIvfRpq(t: Tables, nQueries: Int = 8, k: Int = 5, m: Int = 8,
       nCodes: Int = 8, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val coarse = trainedCenters(t, nCells)
     val pqr = residualPqCenters(t, coarse, nCodes)
-    annIvfRpqWith(t, coarse, pqr, pqCodesFor(t, coarse, pqr, m),
+    annIvfRpqWith(t, coarse, pqr, rpqCodesOf(t.embeddings, coarse, pqr, m),
       nQueries, k, m, nProbe)
   }
 
-  /** The D46 corpus-side encode: coarse cell + residual + residual-PQ
-    * codes in one narrow pass — also what G26's index sink persists
-    * (partitioned by `cell`). */
-  private[graft] def pqCodesFor(t: Tables,
-      coarse: Array[(Int, Seq[Double], Double)],
-      pqr: Array[(Int, Seq[Double], Double)], m: Int): DataFrame =
-    pqCodesOf(residualRel(t, coarse), pqr, m, carry = Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("sub_j"), col("code"))
-
   /** Per-query probe set (q_id, pcell, v): the nProbe nearest coarse
     * cells under the withCell (r6 dist2, cell) tie rule — shared by
-    * the in-query D46 and G26's pruned index scan. */
+    * the in-query D10/D46 and G26's pruned index scan. */
   private[graft] def probeCells(t: Tables,
       coarse: Array[(Int, Seq[Double], Double)],
       nQueries: Int, nProbe: Int): DataFrame =
@@ -1327,47 +1300,16 @@ object Similarity {
         VectorExprs.dot(col("v"), col("v")).as("qn2"), col("pcell"))
 
   /** D46 against supplied artifacts: coarse centers, residual codebook
-    * and a row-per-(vector, subspace) code relation; raw embeddings are
-    * only read for the query vectors. [[annIvfRpq]]'s core; the
-    * persisted index ([[graft.sources.Sinks.searchIvfPqIndex]]) serves
-    * the packed layout through [[annIvfRpqPackedFor]], ≡ this
-    * row-for-row.
+    * and a packed (vec_id, cell, codes) relation; raw embeddings are only
+    * read for the query vectors. [[annIvfRpq]]'s core (D49 shares one
+    * encode between its two legs through it).
     */
   private[graft] def annIvfRpqWith(t: Tables,
       coarse: Array[(Int, Seq[Double], Double)],
       pqr: Array[(Int, Seq[Double], Double)], codes: DataFrame,
-      nQueries: Int, k: Int, m: Int, nProbe: Int): DataFrame = {
-    val dsub = pqr.head._2.length / m
-    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
-    // queries: nProbe nearest coarse cells, then the query RESIDUAL
-    // against each probed cell's center
-    val pc = probeCells(t, coarse, nQueries, nProbe)
-      .select(col("q_id"), col("pcell"),
-        zip_with(col("v"),
-          element_at(byCell, col("pcell").cast("int") + 1),
-          (x, c) => x - c).as("qr"))
-    // per-(query, probed cell) ADC table against the residual codebook
-    val perJ = (0 until m).map { j =>
-      val xv = slice(col("qr"), j * dsub + 1, dsub)
-      struct(lit(j.toLong).as("sub_j"),
-        VectorExprs.pqDists(xv, subCodebook(pqr, j, dsub)).as("cs"))
-    }
-    val adc = pc
-      .select(col("q_id").as("q_id2"), col("pcell").as("pcell2"),
-        explode(array(perJ: _*)).as("s"))
-      .select(col("q_id2"), col("pcell2"), col("s.sub_j").as("qsub_j"),
-        posexplode(col("s.cs")))
-      .select(col("q_id2"), col("pcell2"), col("qsub_j"),
-        col("pos").cast("long").as("qcode"), col("col").as("d_r"))
-    val scored = codes
-      .join(broadcast(adc),
-        col("cell") === col("pcell2") && col("sub_j") === col("qsub_j") &&
-          col("code") === col("qcode") && col("vec_id") =!= col("q_id2"))
-      .groupBy(col("q_id2"), col("vec_id"))
-      .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-      .select(col("q_id2").as("q_id"), col("vec_id"), col("adc_dist_r"))
-    adcTopK(scored, k)
-  }
+      nQueries: Int, k: Int, m: Int, nProbe: Int): DataFrame =
+    adcTopK(ivfAdcScores(codes,
+      residualProbes(probeCells(t, coarse, nQueries, nProbe), coarse), pqr, m), k)
 
   /** The shared exact top-k tail over a scored (q_id, vec_id,
     * adc_dist_r) relation: one `row_number() <= k` window over q_id,
@@ -1377,7 +1319,7 @@ object Similarity {
     * and "index search" pin it), so a hand-written per-partition
     * pre-window would only add a sort and a stage.
     */
-  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
+  private[graft] def adcTopK(scored: DataFrame, k: Int): DataFrame =
     scored
       .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("adc_dist_r").asc, col("vec_id").asc)))
@@ -1386,169 +1328,78 @@ object Similarity {
         col("adc_dist_r"))
       .orderBy(col("q_id"), col("rank"))
 
-  /** The G26 index's code layout: ONE row per vector — (vec_id, cell,
-    * `codes` array in sub_j order). The row-per-(vector, subspace)
-    * relation annIvfRpqWith joins is the right shape for the broadcast
-    * ADC equijoin, but as a PERSISTED index it multiplies the scan by
-    * m rows/vector — the r10 probe measured the index side reading
-    * 19k rows vs 4k brute force at sf0.1 precisely because of it.
-    * Packing the m codes into one array row makes a probed scan read
-    * (nProbe/nCells)·N rows of ~m small ints each, which is the IVFPQ
-    * serving economics FAISS ships. Same narrow literal-centers pass,
-    * no shuffle; codes are bit-identical to pqCodesOf's argmin
-    * (array_position of array_min, lowest-code tiebreak).
+  /** The one IVF-ADC scorer. `codes` is a packed (vec_id, cell, codes)
+    * relation ([[pqEncode]] / the G26 index's `codes`); `probes` is
+    * (q_id, pcell, x, carry…): per query and probed cell, the vector
+    * whose distances to `codebook`'s sub-codewords form the lookup
+    * table — the raw query for D10, its residual against the probed
+    * cell's center ([[residualProbes]]) for residual PQ. Returns
+    * (q_id, vec_id, adc_dist_r, carry…) for every candidate in a probed
+    * cell other than the query itself; rank it with [[adcTopK]].
+    *
+    * Each probe row carries its [m][nCodes] distance table `dtab`, and
+    * the probe relation is the ONE broadcast the code stream meets, on
+    * `cell`; a candidate's distance is the sum of m lookups
+    * dtab[j][codes[j]], each r6'd distance cast to DECIMAL(18, 6) so the
+    * sum is exact and order-free (the oracle's law). One row per
+    * candidate — no per-subspace rows, no grouped sum, no shuffle
+    * before the top-k.
+    *
+    * A vector whose codes are NULL or hold a NULL (a NULL embedding
+    * encodes so) and a query whose `x` is NULL score nothing: a NULL
+    * distance would otherwise sort first in the top-k. The guard sits
+    * here, not at encode time, so codes already on disk and G30
+    * deliveries are covered too.
     */
-  private[graft] def pqCodesPacked(t: Tables,
-      coarse: Array[(Int, Seq[Double], Double)],
-      pqr: Array[(Int, Seq[Double], Double)], m: Int): DataFrame =
-    pqCodesPackedOf(t.embeddings, coarse, pqr, m)
-
-  private[graft] def pqCodesPackedOf(emb: DataFrame,
-      coarse: Array[(Int, Seq[Double], Double)],
-      pqr: Array[(Int, Seq[Double], Double)], m: Int): DataFrame = {
-    val dsub = pqr.head._2.length / m
-    require(dsub * m == pqr.head._2.length, s"dim must divide into $m subspaces")
-    val subs = (0 until m).map { j =>
-      val xv = slice(col("v"), j * dsub + 1, dsub)
-      struct(VectorExprs.pqDists(xv, subCodebook(pqr, j, dsub)).as("ds"))
-    }
-    residualRelOf(emb, coarse)
-      .select(col("vec_id"), col("cell"), array(subs: _*).as("subs"))
-      .select(col("vec_id"), col("cell"),
-        expr("transform(subs, s -> array_position(s.ds, array_min(s.ds)) - 1L)")
-          .as("codes"))
-  }
-
-  /** D46 scoring over the PACKED code layout ([[pqCodesPacked]]) —
-    * result ≡ [[annIvfRpqWith]] row-for-row: the per-(query, probed
-    * cell) ADC table rides the broadcast as an [m][nCodes] array
-    * `dtab`, and a candidate's distance is the decimal-exact sum of m
-    * array lookups dtab[j][codes[j]] (decimal addition is associative
-    * and exact, so the array fold equals the row-relation's grouped
-    * sum bit for bit). One broadcast join on `cell`, no per-subspace
-    * row blowup anywhere: the scan reads one ~m-small-int row per
-    * candidate in a probed cell.
-    */
-  private[graft] def annIvfRpqPackedWith(t: Tables,
-      coarse: Array[(Int, Seq[Double], Double)],
-      pqr: Array[(Int, Seq[Double], Double)], packed: DataFrame,
-      nQueries: Int, k: Int, m: Int, nProbe: Int,
-      pcOpt: Option[DataFrame] = None): DataFrame =
-    // pcOpt: a caller-supplied (q_id, pcell, v) probe relation — the
-    // serving path collects probeCells ONCE (≤ nQueries·nProbe rows)
-    // and hands the localized copy back in, so the query side never
-    // rescans the corpus inside the scoring plan
-    annIvfRpqPackedFor(coarse, pqr, packed,
-      pcOpt.getOrElse(probeCells(t, coarse, nQueries, nProbe)), k, m)
-
-  /** [[annIvfRpqPackedWith]] without the Tables dependency: score a
-    * packed code relation against an explicit (q_id, pcell, v) probe
-    * relation — what the per-micro-batch online server calls (its
-    * queries arrive on the stream; there is no corpus-side query set).
-    */
-  private[graft] def annIvfRpqPackedFor(
-      coarse: Array[(Int, Seq[Double], Double)],
-      pqr: Array[(Int, Seq[Double], Double)], packed: DataFrame,
-      pcRel: DataFrame, k: Int, m: Int): DataFrame = {
-    val dsub = pqr.head._2.length / m
-    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
-    val pc = pcRel
-      .select(col("q_id"), col("pcell"),
-        zip_with(col("v"),
-          element_at(byCell, col("pcell").cast("int") + 1),
-          (x, c) => x - c).as("qr"))
-    val perJ = (0 until m).map { j =>
-      val xv = slice(col("qr"), j * dsub + 1, dsub)
-      VectorExprs.pqDists(xv, subCodebook(pqr, j, dsub))
-    }
-    val adc = pc.select(col("q_id").as("q_id2"), col("pcell").as("pcell2"),
-      array(perJ: _*).as("dtab"))
-    val scored = packed
-      .join(broadcast(adc),
-        col("cell") === col("pcell2") && col("vec_id") =!= col("q_id2"))
-      .select(col("q_id2").as("q_id"), col("vec_id"),
-        expr("CAST(aggregate(zip_with(dtab, codes, " +
-          "(ds, c) -> element_at(ds, CAST(c AS INT) + 1)), " +
-          "CAST(0 AS DECIMAL(38, 6)), " +
-          "(acc, x) -> acc + CAST(x AS DECIMAL(18, 6))) AS DOUBLE)")
-          .as("adc_dist_r"))
-    adcTopK(scored, k)
+  private[graft] def ivfAdcScores(codes: DataFrame, probes: DataFrame,
+      codebook: Array[(Int, Seq[Double], Double)], m: Int): DataFrame = {
+    val dsub = codebook.head._2.length / m
+    val carry = probes.columns.filterNot(Set("q_id", "pcell", "x")).toSeq.map(col)
+    val dtab = array((0 until m).map { j =>
+      VectorExprs.pqDists(slice(col("x"), j * dsub + 1, dsub), subCodebook(codebook, j, dsub))
+    }: _*)
+    val perProbe = probes.filter(col("x").isNotNull)
+      .select(Seq(col("q_id"), col("pcell"), dtab.as("dtab")) ++ carry: _*)
+    // codes holding a NULL get a NULL join key, which matches nothing.
+    // The guard sits in the key, not in a filter: a filter on `codes`
+    // would be pushed below an in-query encode and run it twice per row
+    val cell = when(forall(col("codes"), _.isNotNull), col("cell"))
+    codes.join(broadcast(perProbe), cell === col("pcell") && col("vec_id") =!= col("q_id"))
+      .select(Seq(col("q_id"), col("vec_id"),
+        aggregate(zip_with(col("dtab"), col("codes"), (ds, c) => element_at(ds, c.cast("int") + 1)),
+          lit(0).cast(DecimalType(38, 6)), (acc, d) => acc + d.cast(DecimalType(18, 6)))
+          .cast("double").as("adc_dist_r")) ++ carry: _*)
   }
 
   /** D10 against the PERSISTED artifacts — the deploy form: the corpus
     * lives in the G12 cell layout (`Sinks.writeEmbeddingsByCell`), the
     * quantizer in the G15 parquet artifact, and the search never
-    * touches the original embeddings table. The probe set is computed
-    * first (bounded: nQueries × nProbe pairs on the driver via the
-    * literal-centers math — no corpus job), then the scan carries
-    * `cell IN (probed)` so Spark prunes non-probed cell DIRECTORIES at
-    * planning time (PartitionFilters, spec-pinned): nProbe/nCells of
-    * the bytes are all that is read, which is the entire point of the
-    * layout. Scoring is D10's broadcast + decimal-sum + [[adcTopK]]
-    * unchanged.
-    *
-    * The query vectors come from the layout too (filter on vec_id) —
-    * a full-scan read for them would defeat the pruning, so they are
-    * read once, collected (nQueries rows), and their probe cells and
-    * ADC tables are derived driver-side from the loaded centers.
+    * touches the original embeddings table. The query vectors come from
+    * the layout (filter on vec_id) and go through [[probeCellsOf]] in
+    * ONE bounded collect (nQueries × nProbe rows) — a full-scan read
+    * inside the scoring plan would defeat the pruning; the scan then
+    * carries `cell IN (probed)` so Spark prunes non-probed cell
+    * DIRECTORIES at planning time (PartitionFilters, spec-pinned):
+    * nProbe/nCells of the bytes are all that is read, which is the
+    * entire point of the layout. The probed cells are encoded with the
+    * loaded centers and scored by [[ivfAdcScores]] against the local
+    * probe relation, as [[annIvfAdc]] does in-query.
     */
   def annIvfAdcFromLayout(spark: org.apache.spark.sql.SparkSession,
       layoutPath: String, quantizerPath: String,
       nQueries: Int = 8, k: Int = 5, m: Int = 8, nProbe: Int = 4): DataFrame = {
+    import spark.implicits._
     val centers = graft.sources.Sinks.readQuantizer(spark, quantizerPath)
-    val dsub = centers.head._2.length / m
     val layout = spark.read.parquet(layoutPath)
-    // query vectors: tiny driver-side fetch (vec_id < nQueries rows)
-    val qRows = layout.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    // per-query probe cells, driver math over the loaded center set —
-    // same r6 + lowest-cell tiebreak as withCell
-    def dist2R(v: Seq[Double], cv: Seq[Double], c2: Double): Double = {
-      val n2 = v.foldLeft(0.0)((a, x) => a + x * x)
-      val dot = v.zip(cv).foldLeft(0.0) { case (a, (x, y)) => a + x * y }
-      math.floor((n2 - 2.0 * dot + c2) * 1e6 + 0.5) / 1e6
-    }
-    val probes: Seq[(Long, Long)] = qRows.toSeq.flatMap { case (q, v) =>
-      centers.toSeq.map { case (cell, cv, c2) => (dist2R(v, cv, c2), cell.toLong) }
-        .sorted.take(nProbe).map { case (_, cell) => (q, cell) }
-    }
-    val probedCells = probes.map(_._2).distinct
-    // the scan: cell IN (union of probed cells) → partition pruning
-    val codes = pqCodesOf(
-      layout.filter(col("cell").isin(probedCells: _*))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-          col("cell").cast("long").as("cell")),
-      centers, m, carry = Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("sub_j"), col("code"))
-    val spark2 = spark
-    import spark2.implicits._
-    val pcells = probes.toDF("q_id", "pcell")
-    // ADC tables driver-side: nQueries × m × nCodes rows, same
-    // subvector math + r6 rounding as PqDists
-    val adc = (for {
-      (q, v) <- qRows.toSeq
-      j <- 0 until m
-      (code, cv, _) <- centers.toSeq.sortBy(_._1)
-    } yield {
-      val xv = v.slice(j * dsub, (j + 1) * dsub)
-      val sub = cv.slice(j * dsub, (j + 1) * dsub)
-      val xn2 = xv.foldLeft(0.0)((a, x) => a + x * x)
-      val dot = xv.zip(sub).foldLeft(0.0) { case (a, (x, y)) => a + x * y }
-      val c2 = sub.foldLeft(0.0)((a, x) => a + x * x)
-      (q, j.toLong, code.toLong,
-        math.floor((xn2 - 2.0 * dot + c2) * 1e6 + 0.5) / 1e6)
-    }).toDF("q_id2", "qsub_j", "qcode", "d_r")
-    val scored = codes
-      .join(broadcast(pcells),
-        col("cell") === col("pcell") && col("vec_id") =!= col("q_id"))
-      .join(broadcast(adc),
-        col("q_id") === col("q_id2") && col("sub_j") === col("qsub_j") &&
-          col("code") === col("qcode"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"))
-    adcTopK(scored, k)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+        col("cell").cast("long").as("cell"))
+    val pcRows = probeCellsOf(layout.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("v")), centers, nProbe)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSeq
+    val probed = pcRows.map(_._2).distinct
+    val codes = pqEncode(layout.filter(col("cell").isin(probed: _*)), centers, m,
+      carry = Seq("cell"))
+    adcTopK(ivfAdcScores(codes, pcRows.toDF("q_id", "pcell", "x"), centers, m), k)
   }
 
   /** Per-dimension (min, max) quantization bounds — the SQ8 "training"

@@ -1411,7 +1411,7 @@ object Sinks {
     // ints, never m rows per vector (the r10 layout's measured loss).
     // Hash-partitioned by cell first, so each `cell=N` dir holds ONE
     // file (≤ nCells files, not nTasks × nCells)
-    sim.pqCodesPacked(t, coarse, pqr, m)
+    sim.rpqCodesOf(t.embeddings, coarse, pqr, m)
       .repartition(spark.sessionState.conf.numShufflePartitions, col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .parquet(s"$path/codes")
@@ -1438,7 +1438,7 @@ object Sinks {
     val sim = graft.operators.Similarity
     val coarse = readQuantizer(spark, s"$path/coarse")
     val pqr = readQuantizer(spark, s"$path/codebook")
-    sim.pqCodesPackedOf(newVectors, coarse, pqr, m)
+    sim.rpqCodesOf(newVectors, coarse, pqr, m)
       .write.mode(SaveMode.Append).partitionBy("cell")
       .parquet(s"$path/codes")
   }
@@ -1467,8 +1467,10 @@ object Sinks {
     * cell dirs are listed — O(probed cells), not O(nCells)) and at
     * PLANNING time (the probe union lands in the scan's
     * PartitionFilters); both are spec-pinned. Per-query cell
-    * restriction stays exact via the ADC join keys. Result ≡ the
-    * in-query [[graft.operators.Similarity.annIvfRpq]] row-for-row.
+    * restriction stays exact via the scorer's `cell` join key
+    * ([[graft.operators.Similarity.ivfAdcScores]]). SinksSpec law:
+    * result ≡ the in-query [[graft.operators.Similarity.annIvfRpq]]
+    * row-for-row.
     *
     * Job budget per call (SinksSpec-pinned at ≤ 9): two quantizer
     * loads, the probe collect, and the scoring plan's own stages — no
@@ -1540,7 +1542,7 @@ object Sinks {
         codesBase.join(broadcast(spark.read.schema("vec_id BIGINT")
           .parquet(s"$path/tombstones")), Seq("vec_id"), "left_anti")
       else codesBase
-    sim.annIvfRpqPackedFor(coarse, pqr, codes, pcLocal, k, m)
+    sim.adcTopK(sim.ivfAdcScores(codes, sim.residualProbes(pcLocal, coarse), pqr, m), k)
   }
 
   /** G39: persisted GRAPH-ANN index — the D53 deploy artifact, closing

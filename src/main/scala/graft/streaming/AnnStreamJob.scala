@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** ONLINE ANN serving off the persisted G26 IVFPQ index — the
   * streaming twin the vector-index deploy arc was missing (the r11
@@ -83,23 +82,13 @@ object AnnStreamJob {
     val indexPath = sinks.resolveIndexRoot(spark, rawIndexPath)
     val coarse = sinks.readQuantizer(spark, s"$indexPath/coarse")
     val pqr = sinks.readQuantizer(spark, s"$indexPath/codebook")
-    val dsub = pqr.head._2.length / m
-    val byCell = typedLit(coarse.sortBy(_._1).toSeq.map(_._2))
-    // per-row probe cells: the batch path's own probe (Similarity.probeCells)
-    val probed = graft.operators.Similarity.probeCellsOf(
-        queries.withWatermark("ingest_ts", watermarkDelay), coarse, nProbe,
-        carry = Seq("ingest_ts"))
-      .select(col("q_id"), col("ingest_ts"), col("pcell"),
-        zip_with(col("v"),
-          element_at(byCell, col("pcell").cast("int") + 1),
-          (x, c) => x - c).as("qr"))
-    val perJ = (0 until m).map { j =>
-      val xv = slice(col("qr"), j * dsub + 1, dsub)
-      graft.functions.VectorExprs.pqDists(xv,
-        graft.operators.Similarity.subCodebook(pqr, j, dsub))
-    }
-    val adc = probed.select(col("q_id"), col("ingest_ts"),
-      col("pcell"), array(perJ: _*).as("dtab"))
+    val sim = graft.operators.Similarity
+    // per-row probe cells and residuals: the batch path's own probe
+    // (Similarity.probeCells) and the one scorer's probe relation
+    val probes = sim.residualProbes(
+      sim.probeCellsOf(queries.withWatermark("ingest_ts", watermarkDelay), coarse,
+        nProbe, carry = Seq("ingest_ts")),
+      coarse)
     // static side: packed codes, tombstones anti-joined (G32 custody
     // holds online too)
     val codesBase = spark.read.parquet(s"$indexPath/codes")
@@ -110,15 +99,7 @@ object AnnStreamJob {
         codesBase.join(broadcast(spark.read.parquet(s"$indexPath/tombstones")
           .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
       else codesBase
-    val scored = adc.join(codes,
-        col("cell") === col("pcell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("ingest_ts"), col("vec_id"),
-        expr("CAST(aggregate(zip_with(dtab, codes, " +
-          "(ds, c) -> element_at(ds, CAST(c AS INT) + 1)), " +
-          "CAST(0 AS DECIMAL(38, 6)), " +
-          "(acc, x) -> acc + CAST(x AS DECIMAL(18, 6))) AS DOUBLE)")
-          .as("adc_dist_r"))
-    scored
+    sim.ivfAdcScores(codes, probes, pqr, m)
       .groupBy(col("q_id"), col("ingest_ts"))
       .agg(slice(sort_array(collect_list(
         struct(col("adc_dist_r"), col("vec_id")))), 1, k).as("top"))

@@ -83,11 +83,9 @@ class KubeEventSpec extends SparkSpec {
     import spark.implicits._
     val noTs =
       """{"metadata":{"name":"e9","uid":"u9","resourceVersion":"901"},"involvedObject":{"kind":"Pod","namespace":"default","name":"p9"},"reason":"Odd","type":"Normal"}"""
-    // batch surface: default yields null, the flag fills processing time
+    // batch surface: no fallback, the time is null
     val df = KubeEventSource.parsed(Seq(noTs).toDF("value"))
     assert(KubeEventOps.withDerived(df).select("time").head.isNullAt(0))
-    assert(!KubeEventOps.withDerived(df, processingTimeFallback = true)
-      .select("time").head.isNullAt(0))
 
     // streaming surface: the reference EMITS such events (with a
     // warning); default graft drops them but counts the drop

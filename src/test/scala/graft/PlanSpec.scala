@@ -135,14 +135,39 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ivf-adc: probe set and distance table broadcast — the corpus never sort-merges") {
-    val p = plan(graft.operators.Similarity.annIvfAdc(tables))
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = graft.operators.Similarity.annIvfAdc(tables)
+    val p = plan(df)
     // the probe restriction and the ADC table must reach the code
-    // stream as broadcasts: a sort-merge join would shuffle the corpus
+    // stream as a broadcast: a sort-merge join would shuffle the corpus
     // on the join key and erase the cell-pruning story
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"corpus-side shuffle join in IVF-ADC:\n${p.take(600)}")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, "probe + table broadcasts expected")
+    def walk(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec        => walk(s.plan)
+      case o                        => o +: o.children.flatMap(walk)
+    }
+    val nodes = walk(df.queryExecution.executedPlan)
+    val joins = nodes.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, s"one broadcast join expected, got ${joins.size}:\n${p.take(1200)}")
+    val j = joins.head
+    val buildPlan = if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildLeft) j.left
+      else j.right
+    val build = buildPlan.output.map(_.name).toSet
+    assert(Set("pcell", "dtab").subsetOf(build),
+      s"the broadcast side must carry the probe cell and the distance table: $build")
+    // a candidate is scored in its own row: no grouped-sum shuffle
+    // between the code scan and the top-k window
+    val window = nodes.collectFirst { case w: WindowExec => w }
+    assert(window.nonEmpty, "top-k window expected")
+    assert(!walk(window.get).exists(_.isInstanceOf[BaseAggregateExec]),
+      s"aggregate below the top-k window:\n${p.take(1200)}")
   }
 
   test("frame sample: pure built-ins — no typed object boundary in the plan") {

@@ -105,4 +105,19 @@ class RegistryHygieneSpec extends AnyFunSuite {
     }.toSet
     assert(optimizerKeys == Set("GraftSession.scala"), optimizerKeys.toString)
   }
+
+  test("one IVF-ADC scorer: row-form ADC join keys appear only in D9's annPqAdcWith") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    // the def each `qsub_j` / `qcode` occurrence sits in
+    val defName = "def\\s+(\\w+)".r
+    val owners = mainSources.flatMap { case (f, text) =>
+      "qsub_j|qcode".r.findAllMatchIn(text).map { m =>
+        val owner = defName.findAllMatchIn(text.substring(0, m.start)).toSeq.lastOption
+          .map(_.group(1)).getOrElse("")
+        s"${f.getFileName}:$owner"
+      }
+    }.toSet
+    assert(owners.subsetOf(Set("Similarity.scala:annPqAdcWith")),
+      s"row-form ADC join keys outside D9: ${owners.mkString(", ")}")
+  }
 }

@@ -785,6 +785,115 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** The row-form IVF-ADC path graft scored with before the packed
+    * scorer, kept as its reference: codes are one row per (vector,
+    * subspace), the distance table one row per (query, probed cell,
+    * subspace, code), and a candidate's distance is a three-key
+    * broadcast equi-join plus a grouped decimal sum. */
+  private object RowFormAdc {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DecimalType
+    type Centers = Array[(Int, Seq[Double], Double)]
+
+    private def perSub(x: String, cb: Centers, m: Int) = {
+      val dsub = cb.head._2.length / m
+      (0 until m).map { j =>
+        struct(lit(j.toLong).as("sub_j"), graft.functions.VectorExprs.pqDists(
+          slice(col(x), j * dsub + 1, dsub), Similarity.subCodebook(cb, j, dsub)).as("ds"))
+      }
+    }
+
+    /** (vec_id, cell, sub_j, code) from a (vec_id, cell, v) relation. */
+    def codes(e: DataFrame, cb: Centers, m: Int): DataFrame =
+      e.select(col("vec_id"), col("cell"), explode(array(perSub("v", cb, m): _*)).as("s"))
+        .select(col("vec_id"), col("cell"), col("s.sub_j").as("sub_j"),
+          col("s.ds").as("ds"), array_min(col("s.ds")).as("mn"))
+        .select(col("vec_id"), col("cell"), col("sub_j"),
+          (array_position(col("ds"), col("mn")) - 1L).as("code"))
+
+    /** (q_id, vec_id, adc_dist_r, crank) over a (q_id, pcell, x, crank)
+      * probe relation; D50's probe rank rides the group as its max. */
+    def scores(codes: DataFrame, probes: DataFrame, cb: Centers, m: Int): DataFrame = {
+      val adc = probes.select(col("q_id").as("q_id2"), col("pcell"), col("crank"),
+          explode(array(perSub("x", cb, m): _*)).as("s"))
+        .select(col("q_id2"), col("pcell"), col("crank"), col("s.sub_j").as("qsub_j"),
+          posexplode(col("s.ds")))
+        .select(col("q_id2"), col("pcell"), col("crank"), col("qsub_j"),
+          col("pos").cast("long").as("qcode"), col("col").as("d_r"))
+      codes.join(broadcast(adc), col("cell") === col("pcell") &&
+          col("sub_j") === col("qsub_j") && col("code") === col("qcode") &&
+          col("vec_id") =!= col("q_id2"))
+        .groupBy(col("q_id2"), col("vec_id"))
+        .agg(sum(col("d_r").cast(DecimalType(18, 6))).cast("double").as("adc_dist_r"),
+          max(col("crank")).as("crank"))
+        .select(col("q_id2").as("q_id"), col("vec_id"), col("adc_dist_r"), col("crank"))
+    }
+
+    /** v − c_cell, spelled out independently of the code under test. */
+    def minus(coarse: Centers, cell: String): org.apache.spark.sql.Column =
+      zip_with(col("v"), element_at(typedLit(coarse.sortBy(_._1).toSeq.map(_._2)),
+        col(cell).cast("int") + 1), (x, c) => x - c)
+  }
+
+  test("packed IVF-ADC scorer == the row-form scorer row-for-row for D10, D46 and D50, over duplicated vectors (ties) and a NULL embedding") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // every vector again under a higher id (its ADC distance ties the
+    // original's), plus one NULL embedding: the row form never scores it
+    val base = tables.embeddings
+    val corpus = base
+      .unionByName(base.withColumn("vec_id", col("vec_id") + 100000L))
+      .unionByName(Seq((999999L, Option.empty[Seq[Float]], 0))
+        .toDF("vec_id", "embedding", "label"))
+    val tt = tables.copy(embOverride = Some(corpus))
+    val (m, nQueries, k) = (8, 8, 5)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      rows(df).sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+    val e = Similarity.withNorm(tt.embeddings)
+    val coarse = Similarity.trainedCenters(tt, 16)
+    val queries = Similarity.probeCells(tt, coarse, nQueries, 4)
+
+    // D10: raw codes, raw query vectors
+    val pq = Similarity.trainedCenters(tt, 8)
+    val d10Ref = Similarity.adcTopK(RowFormAdc.scores(
+      RowFormAdc.codes(Similarity.withCell(e, coarse), pq, m),
+      queries.select(col("q_id"), col("pcell"), col("v").as("x"), lit(0L).as("crank")),
+      pq, m).drop("crank"), k)
+    val d10 = rows(Similarity.annIvfAdc(tt, nQueries, k, m))
+    assert(d10.nonEmpty && d10 == rows(d10Ref), "D10: packed scorer diverged from the row form")
+
+    // D46: residual codes, per-probed-cell residual queries
+    val pqr = Similarity.residualPqCenters(tt, coarse, 8)
+    val resCodes = RowFormAdc.codes(Similarity.withCell(e, coarse)
+      .select(col("vec_id"), col("cell"), RowFormAdc.minus(coarse, "cell").as("v")), pqr, m)
+    val d46Ref = Similarity.adcTopK(RowFormAdc.scores(resCodes,
+      queries.select(col("q_id"), col("pcell"), RowFormAdc.minus(coarse, "pcell").as("x"),
+        lit(0L).as("crank")), pqr, m).drop("crank"), k)
+    val d46 = rows(Similarity.annIvfRpq(tt, nQueries, k, m))
+    assert(d46.nonEmpty && d46 == rows(d46Ref), "D46: packed scorer diverged from the row form")
+
+    // D50: every probe rank up to 8 cells, carried through the scorer
+    val ranked = e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"),
+        posexplode(Similarity.nearestCells(coarse, 8)).as(Seq("pi", "p")), col("v"))
+      .select(col("q_id"), (col("pi") + 1).cast("long").as("crank"),
+        col("p.cell").as("pcell"), col("v"))
+    val d50Ref = RowFormAdc.scores(resCodes,
+      ranked.select(col("q_id"), col("pcell"), RowFormAdc.minus(coarse, "pcell").as("x"),
+        col("crank")), pqr, m)
+    val d50 = Similarity.ivfAdcScores(Similarity.rpqCodesOf(tt.embeddings, coarse, pqr, m),
+        Similarity.residualProbes(ranked, coarse), pqr, m)
+      .select(col("q_id"), col("vec_id"), col("adc_dist_r"), col("crank"))
+    assert(sorted(d50).nonEmpty && sorted(d50) == sorted(d50Ref),
+      "D50: packed scores with the carried probe rank diverged from the row form")
+
+    // the ties are real and the NULL vector never scores
+    assert(d46.exists(_(2).asInstanceOf[Long] >= 100000L), "duplicates must compete for the top-k")
+    assert(!(d10 ++ d46).exists(_(2) == 999999L) && !sorted(d50).exists(_(1) == 999999L))
+  }
+
   test("lloyd training: SSE non-increasing per round; trained centers beat the seed and move off it") {
     val rounds = 4
     val curve = Similarity.embKmeansTrainCurve(tables, nCenters = 8, rounds = rounds, ordered = true)

@@ -1035,6 +1035,27 @@ class SinksSpec extends SparkSpec {
       "search over the grown index must equal the in-query D46 row-for-row")
   }
 
+  test("ivfpq index: a NULL-embedding vector is never served, and the search equals the in-query D46 row-for-row") {
+    import spark.implicits._
+    val planted = tables.copy(embOverride = Some(tables.embeddings.unionByName(
+      Seq((999999L, Option.empty[Seq[Float]], 0)).toDF("vec_id", "embedding", "label"))))
+    val dir = Files.createTempDirectory("ivfpq_null").toString
+    Sinks.writeIvfPqIndex(planted, dir, nCells = 16)
+    // the NULL vector is indexed (codes of NULLs) in a cell a query probes
+    val nullCell = spark.read.parquet(s"$dir/codes").filter(col("vec_id") === 999999L)
+      .select(col("cell").cast("long")).collect().map(_.getLong(0))
+    assert(nullCell.length == 1)
+    val probed = graft.operators.Similarity
+      .probeCells(planted, Sinks.readQuantizer(spark, s"$dir/coarse"), 8, 4)
+      .select(col("pcell")).collect().map(_.getLong(0)).toSet
+    assert(probed.contains(nullCell.head), s"cell ${nullCell.head} must be probed: $probed")
+    val served = Sinks.searchIvfPqIndex(planted, dir).collect().map(_.toSeq).toSeq
+    assert(served.nonEmpty && !served.exists(r => r(2) == 999999L || r(3) == null),
+      s"a NULL embedding must never serve:\n${served.take(5).mkString("\n")}")
+    val inQuery = graft.operators.Similarity.annIvfRpq(planted).collect().map(_.toSeq).toSeq
+    assert(served == inQuery, "index search must equal the in-query D46 row-for-row")
+  }
+
   test("ivfpq index delete: tombstoned vectors never serve; results equal a never-indexed-them scorer run") {
     val dir = Files.createTempDirectory("ivfpq_del").toString
     Sinks.writeIvfPqIndex(tables, dir, nCells = 16)
@@ -1054,7 +1075,7 @@ class SinksSpec extends SparkSpec {
     val filtered = spark.read.parquet(s"$dir/codes")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("codes"))
       .filter(!col("vec_id").isin(doomed.toSeq: _*))
-    val expected = sim.annIvfRpqPackedWith(tables, coarse, pqr, filtered,
+    val expected = sim.annIvfRpqWith(tables, coarse, pqr, filtered,
       nQueries = 8, k = 5, m = 8, nProbe = 4).collect()
     assert(after.map(_.toSeq).toSeq == expected.map(_.toSeq).toSeq,
       "tombstoned search must equal scoring an index that never contained the deleted vectors")
