@@ -918,10 +918,10 @@ object Similarity {
     * `array_position(ds, array_min(ds))`. One narrow pass, no shuffle. A
     * null `v` encodes as codes and dists of nulls.
     *
-    * The lambdas take the pass out of whole-stage codegen; D8 measured
-    * ~20% slower than its old explode-first encode for it at sf0.1. An
-    * unrolled lambda-free form (m `element_at`s per output) measured
-    * ~2× slower still, so the lambdas stay.
+    * The minima are materialised once, in their own projection, and the
+    * codes read them back: computing `array_min` inside both outputs
+    * re-runs the O(nCodes) scan per subspace (CollapseProject keeps the
+    * split, `dists` being a non-cheap alias referenced twice).
     */
   private[graft] def pqEncode(e: DataFrame,
       codebook: Array[(Int, Seq[Double], Double)], m: Int,
@@ -933,9 +933,10 @@ object Similarity {
     }
     val keep = col("vec_id") +: carry.map(col)
     e.select(keep :+ array(ds: _*).as("ds"): _*)
+      .select(keep ++ Seq(col("ds"), transform(col("ds"), d => array_min(d)).as("dists")): _*)
       .select(keep ++ Seq(
-        transform(col("ds"), d => array_position(d, array_min(d)) - 1L).as("codes"),
-        transform(col("ds"), d => array_min(d)).as("dists")): _*)
+        zip_with(col("ds"), col("dists"), (d, mn) => array_position(d, mn) - 1L).as("codes"),
+        col("dists")): _*)
   }
 
   /** [[pqEncode]]'s packed rows as one (vec_id, sub_j, code, dist2_r) row
