@@ -136,13 +136,9 @@ object Bench {
       spark.listenerManager.register(tdjAudit)
       try (1 to Iters).map(_ => runTrainingJobOnce(sfDir, "target/bench-tdj"))
       finally {
-        // QueryExecutionListener fires async — wait for the bus to
-        // drain before reading the audit (the SinksSpec pattern)
-        val deadline = System.currentTimeMillis() + 15000
-        var last = -1
-        while (tdjAudit.size != last && System.currentTimeMillis() < deadline) {
-          last = tdjAudit.size; Thread.sleep(300)
-        }
+        // QueryExecutionListener fires async — drain the bus before
+        // reading the audit
+        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
         spark.listenerManager.unregister(tdjAudit)
       }
     }

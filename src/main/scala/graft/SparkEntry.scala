@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.operators._
 import graft.sources.Tables
@@ -12,8 +13,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1PricingSummary(Tables(spark, "/root/testdata/sf0.001"))
 
-  private def q(f: Tables => DataFrame): (SparkSession, String) => DataFrame =
-    (spark, dir) => f(Tables(spark, dir))
+  /** A registry entry: the operator over one scale factor's tables,
+    * then the ONE global sort, ascending on `sortKeys` when any are
+    * given. The registry sorts because Verify dumps every entry for a
+    * row-for-row DuckDB compare, so the dump's row order must be
+    * deterministic; the keys mirror the `ORDER BY` of the entry's
+    * oracle SQL. Operators never sort: their deploy callers
+    * (TrainingDataJob, Sinks, the streams) don't care about row order,
+    * and a global sort would make them pay a range exchange plus a sort
+    * of the whole output.
+    */
+  private def q(f: Tables => DataFrame, sortKeys: String*): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      val df = f(Tables(spark, dir))
+      if (sortKeys.isEmpty) df else df.orderBy(sortKeys.map(col): _*)
+    }
 
   // A29/A33 oracle SQL as vals so the A76 ensemble oracle nests the
   // EXACT gated member queries instead of re-stating their formulas
@@ -64,22 +78,22 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.A event-stream processing (reference semantics)
-    "ev_time_derivation"   -> q(EventOps.evTimeDerivation(_, ordered = true)),
-    "ev_dedup_exact"       -> q(EventOps.evDedupExact(_, ordered = true)),
-    "ev_ttl_cache"         -> q(EventOps.evTtlCache(_, ordered = true)),
-    "ev_throttle_lag"      -> q(EventOps.evThrottleLag(_, ordered = true)),
+    "ev_time_derivation"   -> q(EventOps.evTimeDerivation(_), "event_id"),
+    "ev_dedup_exact"       -> q(EventOps.evDedupExact(_), "key"),
+    "ev_ttl_cache"         -> q(EventOps.evTtlCache(_), "key", "ts", "event_id"),
+    "ev_throttle_lag"      -> q(EventOps.evThrottleLag(_), "key", "ts", "event_id"),
     "ev_counts_by_labels"  -> q(EventOps.evCountsByLabels),
     "ev_cache_stats"       -> q(EventOps.evCacheStats),
     "ev_windowed_rate"     -> q(EventOps.evWindowedRate),
     "ev_anomaly_mad"       -> q(EventOps.evAnomalyMad(_)),
     "ev_ewma"              -> q(EventOps.evEwma(_)),
     "ev_json_props"        -> q(EventOps.evJsonProps),
-    "ev_serialize_json"    -> q(EventOps.evSerializeJson(_, ordered = true)),
+    "ev_serialize_json"    -> q(EventOps.evSerializeJson(_), "event_id"),
     "ev_top_keys"          -> q(EventOps.evTopKeys(_)),
-    "ev_sessionize"        -> q(EventOps.evSessionize(_, ordered = true)),
+    "ev_sessionize"        -> q(EventOps.evSessionize(_), "user_id", "sid"),
     "ev_session_stats"     -> q(EventOps.evSessionStats(_)),
-    "ev_asof_enrich"       -> q(EventOps.evAsofEnrich(_, ordered = true)),
-    "ev_asof_tolerance"    -> q(EventOps.evAsofTolerance(_, ordered = true)),
+    "ev_asof_enrich"       -> q(EventOps.evAsofEnrich(_), "event_id"),
+    "ev_asof_tolerance"    -> q(EventOps.evAsofTolerance(_), "event_id"),
     // §2.B OLAP analytics core
     "q1_pricing_summary"   -> q(Analytics.q1PricingSummary),
     "q3_shipping_priority" -> q(Analytics.q3ShippingPriority),
@@ -130,54 +144,54 @@ object SparkEntry {
     "q_yoy_growth"         -> q(Analytics.qYoyGrowth),
     "ev_retention"         -> q(EventOps.evRetention),
     "ev_cohort_ltv"        -> q(EventOps.evCohortLtv),
-    "ev_state_transitions" -> q(EventOps.evStateTransitions(_, ordered = true)),
+    "ev_state_transitions" -> q(EventOps.evStateTransitions(_), "from_type", "to_type"),
     "ev_stationary_dist"   -> q(EventOps.evStationaryDist(_)),
-    "ev_markov_entropy"    -> q(EventOps.evMarkovEntropyRate(_, ordered = true)),
-    "ev_anomaly_seasonal"  -> q(EventOps.evAnomalySeasonal(_, ordered = true)),
-    "text_entropy"         -> q(TextOps.textEntropy(_, ordered = true)),
+    "ev_markov_entropy"    -> q(EventOps.evMarkovEntropyRate(_), "from_type"),
+    "ev_anomaly_seasonal"  -> q(EventOps.evAnomalySeasonal(_), "event_type", "hour_idx"),
+    "text_entropy"         -> q(TextOps.textEntropy(_), "doc_id"),
     "ev_gap_fill"          -> q(EventOps.evGapFill),
     // §2.C dedup family
-    "doc_exact_dedup"      -> q(Dedup.docExactDedup(_, ordered = true)),
-    "doc_minhash_sig"      -> q(Dedup.docMinhashSig(_, ordered = true)),
-    "doc_minhash_lsh_pairs" -> q(Dedup.docMinhashLshPairs(_, ordered = true)),
-    "doc_edit_distance"    -> q(Dedup.docEditDistance(_, ordered = true)),
-    "doc_minhash_jaccard_est" -> q(Dedup.docMinhashJaccardEst(_, ordered = true)),
-    "doc_bbit_minhash_est" -> q(Dedup.docBbitMinhashEst(_, ordered = true)),
+    "doc_exact_dedup"      -> q(Dedup.docExactDedup(_), "content_hash"),
+    "doc_minhash_sig"      -> q(Dedup.docMinhashSig(_), "doc_id"),
+    "doc_minhash_lsh_pairs" -> q(Dedup.docMinhashLshPairs(_), "doc_a", "doc_b"),
+    "doc_edit_distance"    -> q(Dedup.docEditDistance(_), "doc_a", "doc_b"),
+    "doc_minhash_jaccard_est" -> q(Dedup.docMinhashJaccardEst(_), "doc_a", "doc_b"),
+    "doc_bbit_minhash_est" -> q(Dedup.docBbitMinhashEst(_), "doc_a", "doc_b"),
     "doc_minhash_calibration" -> q(Dedup.docMinhashCalibration(_)),
     "doc_lsh_bucket_stats" -> q(Dedup.docLshBucketStats(_)),
     "doc_dup_bias"         -> q(Dedup.docDupBias(_)),
-    "doc_simhash"          -> q(Dedup.docSimhash(_, ordered = true)),
-    "doc_simhash_pairs"    -> q(Dedup.docSimhashPairs(_, ordered = true)),
+    "doc_simhash"          -> q(Dedup.docSimhash(_), "doc_id"),
+    "doc_simhash_pairs"    -> q(Dedup.docSimhashPairs(_), "doc_a", "doc_b"),
     "doc_simhash_hamming_hist" -> q(Dedup.docSimhashHammingHist(_)),
-    "doc_ngram_jaccard"    -> q(Dedup.docNgramJaccard(_, ordered = true)),
-    "doc_ngram_jaccard_capped" -> q(Dedup.docNgramJaccardCapped(_, ordered = true)),
-    "doc_ngram_containment" -> q(Dedup.docNgramContainment(_, ordered = true)),
-    "doc_ngram_novelty"    -> q(Dedup.docNgramNovelty(_, ordered = true)),
-    "doc_incremental_dedup" -> q(Dedup.docIncrementalDedup(_, ordered = true)),
-    "doc_incremental_minhash" -> q(Dedup.docIncrementalMinhash(_, ordered = true)),
-    "doc_decontaminate"    -> q(Dedup.docDecontaminate(_, ordered = true)),
-    "doc_decontaminate_bloom" -> q(Dedup.docDecontaminateBloom(_, ordered = true)),
-    "doc_dedup_clusters"   -> q(Dedup.docDedupClusters(_, ordered = true)),
-    "doc_split_leakage_safe" -> q(Dedup.docSplitLeakageSafe(_, ordered = true)),
-    "doc_lsh_band_planner" -> q(Dedup.docLshBandPlanner(_, ordered = true)),
-    "doc_split_leakage_audit" -> q(Dedup.docSplitLeakageAudit(_, ordered = true)),
+    "doc_ngram_jaccard"    -> q(Dedup.docNgramJaccard(_), "doc_a", "doc_b"),
+    "doc_ngram_jaccard_capped" -> q(Dedup.docNgramJaccardCapped(_), "doc_a", "doc_b"),
+    "doc_ngram_containment" -> q(Dedup.docNgramContainment(_), "doc_a", "doc_b"),
+    "doc_ngram_novelty"    -> q(Dedup.docNgramNovelty(_), "doc_id"),
+    "doc_incremental_dedup" -> q(Dedup.docIncrementalDedup(_), "doc_id"),
+    "doc_incremental_minhash" -> q(Dedup.docIncrementalMinhash(_), "doc_id"),
+    "doc_decontaminate"    -> q(Dedup.docDecontaminate(_), "doc_id"),
+    "doc_decontaminate_bloom" -> q(Dedup.docDecontaminateBloom(_), "doc_id"),
+    "doc_dedup_clusters"   -> q(Dedup.docDedupClusters(_), "doc_id"),
+    "doc_split_leakage_safe" -> q(Dedup.docSplitLeakageSafe(_), "doc_id"),
+    "doc_lsh_band_planner" -> q(Dedup.docLshBandPlanner(_), "bands"),
+    "doc_split_leakage_audit" -> q(Dedup.docSplitLeakageAudit(_), "method"),
     "doc_cluster_stats"    -> q(Dedup.docClusterStats(_)),
     "doc_dedup_rate_by_threshold" -> q(Dedup.docDedupRateByThreshold(_)),
-    "doc_cross_source_dup" -> q(Dedup.docCrossSourceDup(_, ordered = true)),
+    "doc_cross_source_dup" -> q(Dedup.docCrossSourceDup(_), "content_hash"),
     "ann_threshold_ladder" -> q(Dedup.annThresholdLadder(_)),
     "doc_lsh_tuning"       -> q(Dedup.docLshTuning(_)),
     "doc_lsh_recall"       -> q(Dedup.docLshRecall(_)),
     "doc_shingle_df_hist"  -> q(Dedup.docShingleDfHist),
-    "doc_dedup_keep_best"  -> q(Dedup.docDedupKeepBest(_, ordered = true)),
-    "doc_fingerprint_pairs" -> q(Dedup.docFingerprintPairs(_, ordered = true)),
-    "doc_winnow_pairs"     -> q(Dedup.docWinnowPairs(_, ordered = true)),
-    "doc_embed_cosine_dup" -> q(Dedup.docEmbedCosineDup(_, ordered = true)),
-    "doc_semdedup"         -> q(Dedup.docSemdedup(_, ordered = true)),
+    "doc_dedup_keep_best"  -> q(Dedup.docDedupKeepBest(_), "doc_id"),
+    "doc_fingerprint_pairs" -> q(Dedup.docFingerprintPairs(_), "doc_a", "doc_b"),
+    "doc_winnow_pairs"     -> q(Dedup.docWinnowPairs(_), "doc_a", "doc_b"),
+    "doc_embed_cosine_dup" -> q(Dedup.docEmbedCosineDup(_), "vec_a", "vec_b"),
+    "doc_semdedup"         -> q(Dedup.docSemdedup(_), "vec_id"),
     // §2.D similarity search
     "ann_topk_bruteforce"  -> q(Similarity.annTopkBruteforce(_)),
-    "ann_prefix_dim_recall" -> q(Similarity.annPrefixDimRecall(_, ordered = true)), // D55 Matryoshka prefix-dim card (r13)
+    "ann_prefix_dim_recall" -> q(Similarity.annPrefixDimRecall(_), "prefix_dims"), // D55 Matryoshka prefix-dim card (r13)
     "ann_prefix_rerank" -> q(Similarity.annPrefixRerank(_)), // D56 Matryoshka serving path (r14): prefix retrieve + full-dim rerank
-    "ann_prefix_rerank_ledger" -> q(Similarity.annPrefixRerankLedger(_, ordered = true)), // D56b recall/scan ledger at p ∈ {16,32} vs full
+    "ann_prefix_rerank_ledger" -> q(Similarity.annPrefixRerankLedger(_), "prefix_dims", "method"), // D56b recall/scan ledger at p ∈ {16,32} vs full
     "ann_prefix_ivf_rerank" -> q(Similarity.annPrefixIvfRerank(_)), // D57 Matryoshka INDEX variant: prefix-space IVF + full-dim rerank
     // G43: the SAME two serving paths off the persisted prefix-sliced
     // layout (bit-equal by construction — the oracle is shared), built
@@ -191,114 +205,114 @@ object SparkEntry {
         graft.sources.Sinks.prefixSlicedFor(t))),
     "ann_lsh_bucketed"     -> q(Similarity.annLshBucketed(_)),
     "ann_lsh_multitable"   -> q(Similarity.annLshMultiTable(_)),
-    "ann_knn_graph"        -> q(Similarity.annKnnGraph(_, ordered = true)),
-    "ann_graph_search"     -> q(Similarity.annGraphSearch(_, ordered = true)),
-    "ann_graph_reach"      -> q(Similarity.annGraphReach(_, ordered = true)),
-    "ann_graph_reach_single" -> q(Similarity.annGraphReach(_, nTables = 1, ordered = true)),
-    "ann_beam_tuning"      -> q(Similarity.annBeamTuning(_, ordered = true)),
-    "ann_method_recall"    -> q(Similarity.annMethodRecall(_, ordered = true)),
-    "ann_graph_search_nnd" -> q(Similarity.annGraphSearchNnd(_, ordered = true)),
-    "ann_nnd_tuning"       -> q(Similarity.annNndTuning(_, ordered = true)),
-    "ann_graph_search_layered" -> q(Similarity.annGraphSearchLayered(_, ordered = true)),
-    "ann_nlist_tuning"     -> q(Similarity.annNlistTuning(_, ordered = true)),
-    "ann_label_knn"        -> q(Similarity.annLabelKnn(_, ordered = true)),
-    "emb_centroid_dist"    -> q(Similarity.embCentroidDist(_, ordered = true)),
-    "ann_recall_eval"      -> q(Similarity.annRecallEval(_, ordered = true)),
-    "ann_nprobe_tuning"    -> q(Similarity.annNprobeTuning(_, ordered = true)),
-    "ann_mmr_diversify"    -> q(Similarity.annMmrDiversify(_, ordered = true)),
-    "emb_knn_clusters"     -> q(Similarity.embKnnClusters(_, ordered = true)),
+    "ann_knn_graph"        -> q(Similarity.annKnnGraph(_), "src", "rank"),
+    "ann_graph_search"     -> q(Similarity.annGraphSearch(_), "q_id", "rank"),
+    "ann_graph_reach"      -> q(Similarity.annGraphReach(_), "hop"),
+    "ann_graph_reach_single" -> q(Similarity.annGraphReach(_, nTables = 1), "hop"),
+    "ann_beam_tuning"      -> q(Similarity.annBeamTuning(_), "beam"),
+    "ann_method_recall"    -> q(Similarity.annMethodRecall(_), "method"),
+    "ann_graph_search_nnd" -> q(Similarity.annGraphSearchNnd(_), "q_id", "rank"),
+    "ann_nnd_tuning"       -> q(Similarity.annNndTuning(_), "desc_rounds"),
+    "ann_graph_search_layered" -> q(Similarity.annGraphSearchLayered(_), "q_id", "rank"),
+    "ann_nlist_tuning"     -> q(Similarity.annNlistTuning(_), "n_cells"),
+    "ann_label_knn"        -> q(Similarity.annLabelKnn(_), "src"),
+    "emb_centroid_dist"    -> q(Similarity.embCentroidDist(_), "vec_id"),
+    "ann_recall_eval"      -> q(Similarity.annRecallEval(_), "q_id"),
+    "ann_nprobe_tuning"    -> q(Similarity.annNprobeTuning(_), "nprobe"),
+    "ann_mmr_diversify"    -> q(Similarity.annMmrDiversify(_), "q_id", "rank"),
+    "emb_knn_clusters"     -> q(Similarity.embKnnClusters(_), "doc_id"),
     "ann_ivf"              -> q(Similarity.annIvf(_)),
     "ann_maxsim"           -> q(Similarity.annMaxsim(_)),
     "emb_norm_stats"       -> q(Similarity.embNormStats),
-    "emb_kmeans_assign"    -> q(Similarity.embKmeansAssign(_, ordered = true)),
-    "emb_kmeans_update"    -> q(Similarity.embKmeansUpdate(_, ordered = true)),
-    "emb_kmeans_reassign"  -> q(Similarity.embKmeansReassign(_, ordered = true)),
-    "emb_kmeans_train_curve" -> q(Similarity.embKmeansTrainCurve(_, ordered = true)),
-    "emb_cluster_purity"   -> q(Similarity.embClusterPurity(_, ordered = true)),
-    "emb_dim_stats"        -> q(Similarity.embDimStats(_, ordered = true)),
-    "emb_covariance"       -> q(Similarity.embCovariance(_, ordered = true)),
-    "emb_power_iteration"  -> q(Similarity.embPowerIteration(_, ordered = true)),
-    "emb_pca_project"      -> q(Similarity.embPcaProject(_, ordered = true)),
-    "emb_quantizer_drift"  -> q(Similarity.embQuantizerDrift(_, ordered = true)),
-    "emb_pq_codes"         -> q(Similarity.embPqCodes(_, ordered = true)),
+    "emb_kmeans_assign"    -> q(Similarity.embKmeansAssign(_), "vec_id"),
+    "emb_kmeans_update"    -> q(Similarity.embKmeansUpdate(_), "cell", "dim"),
+    "emb_kmeans_reassign"  -> q(Similarity.embKmeansReassign(_), "vec_id"),
+    "emb_kmeans_train_curve" -> q(Similarity.embKmeansTrainCurve(_), "round"),
+    "emb_cluster_purity"   -> q(Similarity.embClusterPurity(_), "cell"),
+    "emb_dim_stats"        -> q(Similarity.embDimStats(_), "dim"),
+    "emb_covariance"       -> q(Similarity.embCovariance(_), "i", "j"),
+    "emb_power_iteration"  -> q(Similarity.embPowerIteration(_), "i"),
+    "emb_pca_project"      -> q(Similarity.embPcaProject(_), "label"),
+    "emb_quantizer_drift"  -> q(Similarity.embQuantizerDrift(_), "cell"),
+    "emb_pq_codes"         -> q(Similarity.embPqCodes(_), "vec_id", "sub_j"),
     "emb_pq_error"         -> q(Similarity.embPqError(_)),
-    "emb_rpq_error"        -> q(Similarity.embRpqError(_, ordered = true)),
-    "emb_sq8_codes"        -> q(Similarity.embSq8Codes(_, ordered = true)),
-    "emb_sq8_error"        -> q(Similarity.embSq8Error(_, ordered = true)),
+    "emb_rpq_error"        -> q(Similarity.embRpqError(_), "variant"),
+    "emb_sq8_codes"        -> q(Similarity.embSq8Codes(_), "vec_id", "d"),
+    "emb_sq8_error"        -> q(Similarity.embSq8Error(_), "d"),
     "ann_ivf_imbalance"    -> q(Similarity.annIvfImbalance(_)),
     "ann_pq_adc"           -> q(Similarity.annPqAdc(_)),
-    "ann_range"            -> q(Similarity.annRange(_, ordered = true)),
+    "ann_range"            -> q(Similarity.annRange(_), "q_id", "vec_id"),
     "ann_sq8_adc"          -> q(Similarity.annSq8Adc(_)),
     "ann_ivf_adc"          -> q(Similarity.annIvfAdc(_)),
     "ann_ivf_rpq"          -> q(Similarity.annIvfRpq(_)),
     "ann_ivf_rpq_rerank"   -> q(Similarity.annIvfRpqRerank(_)),
-    "ann_rpq_recall"       -> q(Similarity.annRpqRecall(_, ordered = true)),
-    "ann_rpq_nprobe_tuning" -> q(Similarity.annRpqNprobeTuning(_, ordered = true)),
+    "ann_rpq_recall"       -> q(Similarity.annRpqRecall(_), "method", "q_id"),
+    "ann_rpq_nprobe_tuning" -> q(Similarity.annRpqNprobeTuning(_), "nprobe"),
     "ann_ivf_rerank"       -> q(Similarity.annIvfRerank(_)),
     "q_approx_percentiles" -> q(Analytics.qApproxPercentiles(_)), // rows-only: GK sketch, no SQL oracle
     // §2.E text analysis
-    "text_langid"          -> q(TextOps.textLangid(_, ordered = true)),
-    "text_quality"         -> q(TextOps.textQuality(_, ordered = true)),
-    "text_tokencount"      -> q(TextOps.textTokencount(_, ordered = true)),
-    "text_fingerprint"     -> q(TextOps.textFingerprint(_, ordered = true)),
-    "text_normalize_dedup" -> q(TextOps.textNormalizeDedup(_, ordered = true)),
-    "doc_stratified_sample" -> q(TextOps.docStratifiedSample(_, ordered = true)),
+    "text_langid"          -> q(TextOps.textLangid(_), "doc_id"),
+    "text_quality"         -> q(TextOps.textQuality(_), "doc_id"),
+    "text_tokencount"      -> q(TextOps.textTokencount(_), "doc_id"),
+    "text_fingerprint"     -> q(TextOps.textFingerprint(_), "doc_id"),
+    "text_normalize_dedup" -> q(TextOps.textNormalizeDedup(_), "norm_hash"),
+    "doc_stratified_sample" -> q(TextOps.docStratifiedSample(_), "doc_id"),
     "text_vocab"           -> q(TextOps.textVocab),
-    "doc_chunk"            -> q(TextOps.docChunk(_, ordered = true)),
+    "doc_chunk"            -> q(TextOps.docChunk(_), "doc_id", "chunk_idx"),
     // CDC gate keys run on the multi-byte-planted corpus so the
     // byte-level chunker is oracle-checked on text whose byte and char
     // offsets diverge (plantUtf8Docs ≡ the oracle's docs_aug CTE)
-    "doc_cdc_chunks"       -> q(t => TextOps.docCdcChunks(TextOps.plantUtf8Docs(t), ordered = true)),
-    "doc_cdc_dup_mass"     -> q(t => TextOps.docCdcDupMass(TextOps.plantUtf8Docs(t), ordered = true)),
-    "text_rolling_fingerprint" -> q(TextOps.textRollingFingerprint(_, ordered = true)),
-    "doc_pack"             -> q(TextOps.docPack(_, ordered = true)),
-    "doc_quality_filter"   -> q(TextOps.docQualityFilter(_, ordered = true)),
-    "text_repetition"      -> q(TextOps.textRepetition(_, ordered = true)),
-    "doc_gopher_rules"     -> q(TextOps.docGopherRules(_, ordered = true)), // E63 published Gopher rule card (r13)
-    "doc_html_extract"     -> q(TextOps.docHtmlExtract(_, ordered = true)), // E64 HTML→text extraction over planted formula HTML (r15)
-    "text_bpe_encode"      -> q(TextOps.textBpeEncode(_, ordered = true)), // E65 per-doc token-id sequences off the E47 merge table (r15)
-    "doc_url_canon"        -> q(UrlOps.docUrlCanon(_, ordered = true)), // E66 URL parse + canonicalize over planted formula URLs (r15)
-    "doc_url_dup"          -> q(UrlOps.docUrlDup(_, ordered = true)), // C42 URL-identity dedup post-canonicalization (r15)
-    "doc_host_stats"       -> q(UrlOps.docHostStats(_, ordered = true)), // E67 per-(reg_domain, host) crawl rollup card (r15)
-    "doc_html_links"       -> q(UrlOps.docHtmlLinks(_, ordered = true)), // E68 outlink extraction + RFC 3986 resolution (r15)
-    "host_rank"            -> q(UrlOps.hostRank(_, ordered = true)), // E69 host-graph PageRank on the integer lattice (r15)
-    "doc_host_throttle"    -> q(UrlOps.docHostThrottle(_, ordered = true)), // E70 per-host fetch throttle (crawl politeness, r15)
-    "doc_robots_filter"    -> q(UrlOps.docRobotsFilter(_, ordered = true)), // E71 RFC 9309 robots.txt filtering (r15)
-    "doc_charset_sniff"    -> q(UrlOps.docCharsetSniffGated(_, ordered = true)), // E72 UTF-8/Latin-1 charset custody (r15)
-    "crawl_intake_funnel"  -> q(UrlOps.crawlIntakeFunnel(_, ordered = true)), // E73 composed robots→throttle→extract→charset funnel (r15)
+    "doc_cdc_chunks"       -> q(t => TextOps.docCdcChunks(TextOps.plantUtf8Docs(t)), "doc_id", "chunk_idx"),
+    "doc_cdc_dup_mass"     -> q(t => TextOps.docCdcDupMass(TextOps.plantUtf8Docs(t)), "source"),
+    "text_rolling_fingerprint" -> q(TextOps.textRollingFingerprint(_), "doc_id"),
+    "doc_pack"             -> q(TextOps.docPack(_), "doc_id"),
+    "doc_quality_filter"   -> q(TextOps.docQualityFilter(_), "doc_id"),
+    "text_repetition"      -> q(TextOps.textRepetition(_), "doc_id"),
+    "doc_gopher_rules"     -> q(TextOps.docGopherRules(_), "doc_id"), // E63 published Gopher rule card (r13)
+    "doc_html_extract"     -> q(TextOps.docHtmlExtract(_), "doc_id"), // E64 HTML→text extraction over planted formula HTML (r15)
+    "text_bpe_encode"      -> q(TextOps.textBpeEncode(_), "doc_id"), // E65 per-doc token-id sequences off the E47 merge table (r15)
+    "doc_url_canon"        -> q(UrlOps.docUrlCanon(_), "doc_id"), // E66 URL parse + canonicalize over planted formula URLs (r15)
+    "doc_url_dup"          -> q(UrlOps.docUrlDup(_), "doc_id"), // C42 URL-identity dedup post-canonicalization (r15)
+    "doc_host_stats"       -> q(UrlOps.docHostStats(_), "reg_domain", "host"), // E67 per-(reg_domain, host) crawl rollup card (r15)
+    "doc_html_links"       -> q(UrlOps.docHtmlLinks(_), "doc_id", "link_ord"), // E68 outlink extraction + RFC 3986 resolution (r15)
+    "host_rank"            -> q(UrlOps.hostRank(_), "host"), // E69 host-graph PageRank on the integer lattice (r15)
+    "doc_host_throttle"    -> q(UrlOps.docHostThrottle(_), "doc_id"), // E70 per-host fetch throttle (crawl politeness, r15)
+    "doc_robots_filter"    -> q(UrlOps.docRobotsFilter(_), "doc_id"), // E71 RFC 9309 robots.txt filtering (r15)
+    "doc_charset_sniff"    -> q(UrlOps.docCharsetSniffGated(_), "doc_id"), // E72 UTF-8/Latin-1 charset custody (r15)
+    "crawl_intake_funnel"  -> q(UrlOps.crawlIntakeFunnel(_), "host"), // E73 composed robots→throttle→extract→charset funnel (r15)
     "text_collocations"    -> q(TextOps.textCollocations(_)),
-    "doc_curate"           -> q(TextOps.docCurate(_, ordered = true)),
+    "doc_curate"           -> q(TextOps.docCurate(_), "doc_id"),
     "doc_curate_explain"   -> q(TextOps.docCurateExplain(_)),
     "text_token_coverage"  -> q(TextOps.textTokenCoverage(_)),
     "doc_pack_efficiency"  -> q(TextOps.docPackEfficiency(_)),
-    "doc_scrub_pii"        -> q(TextOps.docScrubPii(_, ordered = true)),
+    "doc_scrub_pii"        -> q(TextOps.docScrubPii(_), "doc_id"),
     "corpus_stats"         -> q(TextOps.corpusStats),
     "corpus_stats_merged"  -> q(TextOps.corpusStatsMerged),
     "doc_pii_stats"        -> q(TextOps.docPiiStats),
-    "text_bm25"            -> q(TextOps.textBm25(_, ordered = true)),
-    "text_unigram_logprob" -> q(TextOps.textUnigramLogprob(_, ordered = true)),
-    "doc_span_dedup"       -> q(TextOps.docSpanDedup(_, ordered = true)),
-    "doc_span_removal"     -> q(TextOps.docSpanRemoval(_, ordered = true)),
-    "doc_mix_weights"      -> q(TextOps.docMixWeights(_, ordered = true)),
-    "doc_quality_bucket"   -> q(TextOps.docQualityBucket(_, ordered = true)),
-    "doc_quality_model"    -> q(TextOps.docQualityModel(_, ordered = true)),
-    "doc_quality_model_trained" -> q(TextOps.docQualityModelTrained(_, ordered = true)),
+    "text_bm25"            -> q(TextOps.textBm25(_), "doc_id"),
+    "text_unigram_logprob" -> q(TextOps.textUnigramLogprob(_), "doc_id"),
+    "doc_span_dedup"       -> q(TextOps.docSpanDedup(_), "doc_id"),
+    "doc_span_removal"     -> q(TextOps.docSpanRemoval(_), "doc_id"),
+    "doc_mix_weights"      -> q(TextOps.docMixWeights(_), "source"),
+    "doc_quality_bucket"   -> q(TextOps.docQualityBucket(_), "doc_id"),
+    "doc_quality_model"    -> q(TextOps.docQualityModel(_), "doc_id"),
+    "doc_quality_model_trained" -> q(TextOps.docQualityModelTrained(_), "doc_id"),
     "doc_quality_model_eval" -> q(TextOps.docQualityModelEval(_)),
-    "doc_quality_calibration" -> q(TextOps.docQualityCalibration(_, ordered = true)),
-    "text_bigram_logprob"  -> q(TextOps.textBigramLogprob(_, ordered = true)),
-    "text_keywords"        -> q(TextOps.textKeywords(_, ordered = true)),
-    "text_winnow"          -> q(TextOps.textWinnow(_, ordered = true)),
+    "doc_quality_calibration" -> q(TextOps.docQualityCalibration(_), "bin"),
+    "text_bigram_logprob"  -> q(TextOps.textBigramLogprob(_), "doc_id"),
+    "text_keywords"        -> q(TextOps.textKeywords(_), "doc_id", "rank"),
+    "text_winnow"          -> q(TextOps.textWinnow(_), "doc_id", "fingerprint"),
     "doc_contamination_stats" -> q(Dedup.docContaminationStats(_)),
     "corpus_dedup_stats"   -> q(Dedup.corpusDedupStats(_)),
-    "doc_mix_budget"       -> q(TextOps.docMixBudget(_, ordered = true)),
-    "doc_sample_k"         -> q(TextOps.docSampleK(_, ordered = true)),
-    "doc_sample_weighted"  -> q(TextOps.docSampleWeighted(_, ordered = true)),
+    "doc_mix_budget"       -> q(TextOps.docMixBudget(_), "doc_id"),
+    "doc_sample_k"         -> q(TextOps.docSampleK(_), "doc_id"),
+    "doc_sample_weighted"  -> q(TextOps.docSampleWeighted(_), "doc_id"),
     "doc_lang_confusion"   -> q(TextOps.docLangConfusion),
     "corpus_quality_stats" -> q(TextOps.corpusQualityStats(_)),
     "text_zipf"            -> q(TextOps.textZipf(_)),
-    "corpus_heaps_law"     -> q(TextOps.corpusHeapsLaw(_, ordered = true)),
-    "ev_user_lifespan"     -> q(EventOps.evUserLifespan(_, ordered = true)),
-    "ev_user_entropy"      -> q(EventOps.evUserEntropy(_, ordered = true)),
+    "corpus_heaps_law"     -> q(TextOps.corpusHeapsLaw(_), "bucket"),
+    "ev_user_lifespan"     -> q(EventOps.evUserLifespan(_), "user_id"),
+    "ev_user_entropy"      -> q(EventOps.evUserEntropy(_), "user_id"),
     "ev_type_affinity"     -> q(EventOps.evTypeAffinity),
     "ev_user_zipf"         -> q(EventOps.evUserZipf(_)),
     "ev_value_profile"     -> q(EventOps.evValueProfile),
@@ -306,25 +320,25 @@ object SparkEntry {
     "ev_cooccurrence"      -> q(EventOps.evCooccurrence),
     "ev_sliding_rate"      -> q(EventOps.evSlidingRate),
     "ev_top_paths"         -> q(EventOps.evTopPaths(_)),
-    "ev_dormant_users"     -> q(EventOps.evDormantUsers(_, ordered = true)),
-    "ev_cusum_changepoint" -> q(EventOps.evCusumChangepoint(_, ordered = true)),
-    "ev_cusum_drop"        -> q(EventOps.evCusumDrop(_, ordered = true)),
-    "ev_abtest"            -> q(EventOps.evAbtest(_, ordered = true)),
-    "ev_mde_power"         -> q(EventOps.evMdePower(_, ordered = true)),
-    "ev_ab_srm"            -> q(EventOps.evAbSrm(_, ordered = true)),
-    "ev_cuped"             -> q(EventOps.evCuped(_, ordered = true)),
+    "ev_dormant_users"     -> q(EventOps.evDormantUsers(_), "user_id"),
+    "ev_cusum_changepoint" -> q(EventOps.evCusumChangepoint(_), "event_type", "hour"),
+    "ev_cusum_drop"        -> q(EventOps.evCusumDrop(_), "event_type", "hour"),
+    "ev_abtest"            -> q(EventOps.evAbtest(_), "event_type"),
+    "ev_mde_power"         -> q(EventOps.evMdePower(_), "event_type"),
+    "ev_ab_srm"            -> q(EventOps.evAbSrm(_), "event_type"),
+    "ev_cuped"             -> q(EventOps.evCuped(_), "event_type"),
     "ev_bot_suspects"      -> q(EventOps.evBotSuspects(_)),
-    "ev_conversion_window_sweep" -> q(EventOps.evConversionWindowSweep(_, ordered = true)),
-    "mm_sharpness_proxy"   -> q(Multimodal.mmSharpnessProxy(_, ordered = true)),
-    "ev_anomaly_ensemble"  -> q(EventOps.evAnomalyEnsemble(_, ordered = true)),
-    "ev_ttl_tuning"        -> q(EventOps.evTtlTuning(_, ordered = true)),
+    "ev_conversion_window_sweep" -> q(EventOps.evConversionWindowSweep(_), "window_hours"),
+    "mm_sharpness_proxy"   -> q(Multimodal.mmSharpnessProxy(_), "doc_id"),
+    "ev_anomaly_ensemble"  -> q(EventOps.evAnomalyEnsemble(_), "event_type", "hour_idx"),
+    "ev_ttl_tuning"        -> q(EventOps.evTtlTuning(_), "ttl_hours"),
     "text_kl_source"       -> q(TextOps.textKlSource(_)),
     "text_bpe_pairs"       -> q(TextOps.textBpePairs(_)),
     "text_bpe_merge"       -> q(TextOps.textBpeMerge(_)),
     "text_bpe_train"       -> q(TextOps.textBpeTrain(_)),
     "text_jsd_pairs"       -> q(TextOps.textJsdPairs(_)),
     "doc_length_profile"   -> q(TextOps.docLengthProfile),
-    "ev_rfm"               -> q(EventOps.evRfm(_, ordered = true)),
+    "ev_rfm"               -> q(EventOps.evRfm(_), "user_id"),
     "ev_active_users"      -> q(EventOps.evActiveUsers),
     "ev_interarrival"      -> q(EventOps.evInterarrival),
     "ev_seasonality"       -> q(EventOps.evSeasonality),
@@ -333,37 +347,37 @@ object SparkEntry {
     "ev_new_vs_returning"  -> q(EventOps.evNewVsReturning),
     "ev_engagement_deciles" -> q(EventOps.evEngagementDeciles),
     "ev_type_share_drift"  -> q(EventOps.evTypeShareDrift),
-    "emb_outliers"         -> q(Similarity.embOutliers(_, ordered = true)),
-    "ann_pagerank"         -> q(Similarity.annPagerank(_, ordered = true)),
+    "emb_outliers"         -> q(Similarity.embOutliers(_), "vec_id"),
+    "ann_pagerank"         -> q(Similarity.annPagerank(_), "vec_id"),
     "text_hapax"           -> q(TextOps.textHapax),
-    "doc_template_prefix"  -> q(TextOps.docTemplatePrefix(_, ordered = true)),
-    "doc_split"            -> q(TextOps.docSplit(_, ordered = true)),
-    "doc_shard_shuffle"    -> q(TextOps.docShardShuffle(_, ordered = true)),
-    "ev_scrub_props"       -> q(EventOps.evScrubProps(_, ordered = true)),
+    "doc_template_prefix"  -> q(TextOps.docTemplatePrefix(_), "doc_id"),
+    "doc_split"            -> q(TextOps.docSplit(_), "doc_id"),
+    "doc_shard_shuffle"    -> q(TextOps.docShardShuffle(_), "doc_id"),
+    "ev_scrub_props"       -> q(EventOps.evScrubProps(_), "event_id"),
     "ev_funnel"            -> q(EventOps.evFunnel),
     "ev_funnel_latency"    -> q(EventOps.evFunnelLatency),
     "ev_interval_join"     -> q(EventOps.evIntervalJoin(_)),
     "ev_autocorr"          -> q(EventOps.evAutocorr(_)),
-    "ev_holt_forecast"     -> q(EventOps.evHoltForecast(_, ordered = true)),
-    "ev_token_bucket"      -> q(EventOps.evTokenBucket(_, ordered = true)),
-    "ev_forecast_eval"     -> q(EventOps.evForecastEval(_, ordered = true)),
+    "ev_holt_forecast"     -> q(EventOps.evHoltForecast(_), "event_type", "hour"),
+    "ev_token_bucket"      -> q(EventOps.evTokenBucket(_), "user_id"),
+    "ev_forecast_eval"     -> q(EventOps.evForecastEval(_), "event_type"),
     "ev_burst_windows"     -> q(EventOps.evBurstWindows(_)),
     "ev_burst_impact"      -> q(EventOps.evBurstImpact(_)),
     "q_distinct_kmv"       -> q(Analytics.qDistinctKmv(_)),
     "q_quantile_sample"    -> q(Analytics.qQuantileSample(_)),
-    "ev_value_quantile_sample" -> q(Analytics.evValueQuantileSample(_, ordered = true)),
-    "ev_topk_by_value"     -> q(Analytics.evTopkByValue(_, ordered = true)),
+    "ev_value_quantile_sample" -> q(Analytics.evValueQuantileSample(_), "event_type"),
+    "ev_topk_by_value"     -> q(Analytics.evTopkByValue(_), "event_type", "rnk"),
     "q_distinct_bitmap"    -> q(Analytics.qDistinctBitmap),
     "q_important_stock"    -> q(Analytics.qImportantStock(_)),
     "q_cms_portable"       -> q(Analytics.qCmsPortable(_)),
     "q_hll_portable"       -> q(Analytics.qHllPortable),
-    "text_vocab_hll"       -> q(TextOps.textVocabHll(_, ordered = true)),
-    "doc_quality_quantile_sample" -> q(TextOps.docQualityQuantileSample(_, ordered = true)),
+    "text_vocab_hll"       -> q(TextOps.textVocabHll(_), "source"),
+    "doc_quality_quantile_sample" -> q(TextOps.docQualityQuantileSample(_), "source"),
     // G36b: WARC grammar round-trip over planted multi-byte docs — the
     // Content-Length jump must count BYTES, not chars, to survive them
-    "doc_warc_roundtrip"   -> q(t => TextOps.docWarcRoundtrip(TextOps.plantUtf8Docs(t), ordered = true)),
-    "doc_quality_vs_dup"   -> q(TextOps.docQualityVsDup(_, ordered = true)),
-    "doc_snapshot_churn"   -> q(Dedup.docSnapshotChurn(_, ordered = true)),
+    "doc_warc_roundtrip"   -> q(t => TextOps.docWarcRoundtrip(TextOps.plantUtf8Docs(t)), "doc_id"),
+    "doc_quality_vs_dup"   -> q(TextOps.docQualityVsDup(_), "dup_bucket"),
+    "doc_snapshot_churn"   -> q(Dedup.docSnapshotChurn(_), "source"),
     "q_min_cost_supplier"  -> q(Analytics.qMinCostSupplier),
     "q_product_profit"     -> q(Analytics.qProductProfit(_)),
     "doc_ppl_reference"    -> q(TextOps.docPplReference(_)),
@@ -371,53 +385,53 @@ object SparkEntry {
     "q_partition_advisor"  -> q(Analytics.qPartitionAdvisor(_)),
     "q_potential_promotion" -> q(Analytics.qPotentialPromotion(_)),
     "q_bloom_join_reduce"  -> q(Analytics.qBloomJoinReduce(_)),
-    "q_range_frame"        -> q(Analytics.qRangeFrame(_, ordered = true)),
+    "q_range_frame"        -> q(Analytics.qRangeFrame(_), "o_custkey", "day_n", "o_orderkey"),
     "q_kmv_set_ops"        -> q(Analytics.qKmvSetOps(_)),
     "emb_energy_curve"     -> q(Similarity.embEnergyCurve(_)),
-    "ann_triangles"        -> q(Similarity.annTriangles(_, ordered = true)),
-    "ann_hubness"          -> q(Similarity.annHubness(_, ordered = true)),
+    "ann_triangles"        -> q(Similarity.annTriangles(_), "vec_id"),
+    "ann_hubness"          -> q(Similarity.annHubness(_), "vec_id"),
     "emb_explained_variance" -> q(Similarity.embExplainedVariance),
     "ann_hamming_rerank"   -> q(Similarity.annHammingRerank(_)),
     "ann_mips_topk"        -> q(Similarity.annMipsTopk(_)),
-    "mm_scene_cuts"        -> q(Multimodal.mmSceneCuts(_, ordered = true)),
-    "mm_keyframe_select"   -> q(Multimodal.mmKeyframeSelect(_, ordered = true)),
-    "mm_video_summary"     -> q(Multimodal.mmVideoSummary(_, ordered = true)),
-    "mm_cross_source_dup"  -> q(Multimodal.mmCrossSourceDup(_, ordered = true)),
+    "mm_scene_cuts"        -> q(Multimodal.mmSceneCuts(_), "doc_id", "frame_idx"),
+    "mm_keyframe_select"   -> q(Multimodal.mmKeyframeSelect(_), "doc_id", "scene_id"),
+    "mm_video_summary"     -> q(Multimodal.mmVideoSummary(_), "doc_id"),
+    "mm_cross_source_dup"  -> q(Multimodal.mmCrossSourceDup(_), "source_a", "source_b"),
     "doc_dedup_agreement"  -> q(Dedup.docDedupAgreement(_)),
-    "doc_dup_ngram_mass"   -> q(Dedup.docDupNgramMass(_, ordered = true)),
+    "doc_dup_ngram_mass"   -> q(Dedup.docDupNgramMass(_), "source"),
     "doc_curation_funnel"  -> q(TextOps.docCurationFunnel(_)),
     "doc_text_embedding_card" -> q(TextOps.docTextEmbeddingCard),
     "ev_funnel_by_cohort"  -> q(EventOps.evFunnelByCohort),
-    "ev_error_after_click" -> q(EventOps.evErrorAfterClick(_, ordered = true)),
+    "ev_error_after_click" -> q(EventOps.evErrorAfterClick(_), "user_id"),
     "q_month_trend"        -> q(Analytics.qMonthTrend),
     // §2.F multimodal plumbing
-    "mm_binary_meta"       -> q(Multimodal.mmBinaryMeta(_, ordered = true)),
-    "mm_feature_extract"   -> q(Multimodal.mmFeatureExtract(_, ordered = true)), // REAL netpbm decode (r10), oracle-gated
-    "mm_feature_extract_bmp" -> q(Multimodal.mmFeatureExtractBmp(_, ordered = true)), // REAL BMP decode (r11), oracle-gated
-    "mm_feature_extract_png" -> q(Multimodal.mmFeatureExtractPng(_, ordered = true)), // REAL PNG decode (r12), oracle-gated
-    "mm_feature_extract_png_gray" -> q(Multimodal.mmFeatureExtractPngGray(_, ordered = true)), // F25 grayscale PNG (r15): bpp=1 filters + channel replication
-    "mm_feature_extract_png_palette" -> q(Multimodal.mmFeatureExtractPngPalette(_, ordered = true)), // F25b palette PNG (r15): PLTE walk + index resolution
-    "mm_feature_extract_png_adam7" -> q(Multimodal.mmFeatureExtractPngAdam7(_, ordered = true)), // F27 Adam7 interlaced PNG (r15): per-pass defilter + scatter
-    "mm_feature_extract_jpeg" -> q(Multimodal.mmFeatureExtractJpeg(_, ordered = true)), // REAL baseline JPEG decode (r12), oracle-gated
-    "mm_feature_extract_jpeg_color" -> q(Multimodal.mmFeatureExtractJpegColor(_, ordered = true)), // REAL 4:2:0 color JPEG decode (r13), oracle-gated
-    "mm_feature_extract_jpeg_dri" -> q(Multimodal.mmFeatureExtractJpegDri(_, ordered = true)), // DRI restart-interval color JPEGs (r14), oracle-gated
-    "mm_feature_extract_jpeg_422" -> q(Multimodal.mmFeatureExtractJpeg422(_, ordered = true)), // F26 4:2:2 (Y 2×1) color JPEGs (r15), oracle-gated
-    "mm_feature_extract_jpeg_440" -> q(Multimodal.mmFeatureExtractJpeg440(_, ordered = true)), // F28 4:4:0 (Y 1×2) color JPEGs (r15), oracle-gated
-    "mm_feature_extract_jpeg_prog" -> q(Multimodal.mmFeatureExtractJpegProg(_, ordered = true)), // PROGRESSIVE (SOF2) color JPEGs (r14), oracle-gated
-    "mm_wav_features"      -> q(Multimodal.mmWavFeatures(_, ordered = true)), // REAL RIFF/WAVE PCM decode (r11), oracle-gated
-    "mm_channel_hist"      -> q(Multimodal.mmChannelHist(_, ordered = true)),
-    "mm_resize"            -> q(Multimodal.mmResize(_, ordered = true)),
-    "mm_frame_sample"      -> q(Multimodal.mmFrameSample(_, ordered = true)),
-    "mm_frame_phash_pairs" -> q(Multimodal.mmFramePhashPairs(_, ordered = true)),
-    "mm_exact_dedup"       -> q(Multimodal.mmExactDedup(_, ordered = true)),
-    "mm_phash"             -> q(Multimodal.mmPhash(_, ordered = true)),
-    "mm_phash_pairs"       -> q(Multimodal.mmPhashPairs(_, ordered = true)),
+    "mm_binary_meta"       -> q(Multimodal.mmBinaryMeta(_), "doc_id"),
+    "mm_feature_extract"   -> q(Multimodal.mmFeatureExtract(_), "doc_id"), // REAL netpbm decode (r10), oracle-gated
+    "mm_feature_extract_bmp" -> q(Multimodal.mmFeatureExtractBmp(_), "doc_id"), // REAL BMP decode (r11), oracle-gated
+    "mm_feature_extract_png" -> q(Multimodal.mmFeatureExtractPng(_), "doc_id"), // REAL PNG decode (r12), oracle-gated
+    "mm_feature_extract_png_gray" -> q(Multimodal.mmFeatureExtractPngGray(_), "doc_id"), // F25 grayscale PNG (r15): bpp=1 filters + channel replication
+    "mm_feature_extract_png_palette" -> q(Multimodal.mmFeatureExtractPngPalette(_), "doc_id"), // F25b palette PNG (r15): PLTE walk + index resolution
+    "mm_feature_extract_png_adam7" -> q(Multimodal.mmFeatureExtractPngAdam7(_), "doc_id"), // F27 Adam7 interlaced PNG (r15): per-pass defilter + scatter
+    "mm_feature_extract_jpeg" -> q(Multimodal.mmFeatureExtractJpeg(_), "doc_id"), // REAL baseline JPEG decode (r12), oracle-gated
+    "mm_feature_extract_jpeg_color" -> q(Multimodal.mmFeatureExtractJpegColor(_), "doc_id"), // REAL 4:2:0 color JPEG decode (r13), oracle-gated
+    "mm_feature_extract_jpeg_dri" -> q(Multimodal.mmFeatureExtractJpegDri(_), "doc_id"), // DRI restart-interval color JPEGs (r14), oracle-gated
+    "mm_feature_extract_jpeg_422" -> q(Multimodal.mmFeatureExtractJpeg422(_), "doc_id"), // F26 4:2:2 (Y 2×1) color JPEGs (r15), oracle-gated
+    "mm_feature_extract_jpeg_440" -> q(Multimodal.mmFeatureExtractJpeg440(_), "doc_id"), // F28 4:4:0 (Y 1×2) color JPEGs (r15), oracle-gated
+    "mm_feature_extract_jpeg_prog" -> q(Multimodal.mmFeatureExtractJpegProg(_), "doc_id"), // PROGRESSIVE (SOF2) color JPEGs (r14), oracle-gated
+    "mm_wav_features"      -> q(Multimodal.mmWavFeatures(_), "doc_id"), // REAL RIFF/WAVE PCM decode (r11), oracle-gated
+    "mm_channel_hist"      -> q(Multimodal.mmChannelHist(_), "doc_id", "bin"),
+    "mm_resize"            -> q(Multimodal.mmResize(_), "doc_id"),
+    "mm_frame_sample"      -> q(Multimodal.mmFrameSample(_), "doc_id", "frame_idx"),
+    "mm_frame_phash_pairs" -> q(Multimodal.mmFramePhashPairs(_), "doc_a", "doc_b"),
+    "mm_exact_dedup"       -> q(Multimodal.mmExactDedup(_), "keep_id"),
+    "mm_phash"             -> q(Multimodal.mmPhash(_), "doc_id"),
+    "mm_phash_pairs"       -> q(Multimodal.mmPhashPairs(_), "doc_a", "doc_b"),
     "mm_phash_hamming_hist" -> q(Multimodal.mmPhashHammingHist(_)),
-    "mm_phash_incremental" -> q(Multimodal.mmPhashIncremental(_, ordered = true)),
-    "mm_frame_dedup"       -> q(Multimodal.mmFrameDedup(_, ordered = true)),
-    "mm_phash_clusters"    -> q(Multimodal.mmPhashClusters(_, ordered = true)),
-    "mm_joint_dedup"       -> q(Multimodal.mmJointDedup(_, ordered = true)),
-    "mm_dedup_keep_best"   -> q(Multimodal.mmDedupKeepBest(_, ordered = true)),
+    "mm_phash_incremental" -> q(Multimodal.mmPhashIncremental(_), "doc_id"),
+    "mm_frame_dedup"       -> q(Multimodal.mmFrameDedup(_), "frame_md5"),
+    "mm_phash_clusters"    -> q(Multimodal.mmPhashClusters(_), "doc_id"),
+    "mm_joint_dedup"       -> q(Multimodal.mmJointDedup(_), "doc_id"),
+    "mm_dedup_keep_best"   -> q(Multimodal.mmDedupKeepBest(_), "doc_id"),
   )
 
   /** DuckDB-runnable oracle for each key in `queries` (driver gate).

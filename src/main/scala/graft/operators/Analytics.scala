@@ -224,8 +224,7 @@ object Analytics {
     * map-side-combined aggregate, ≤k pairs per (type, partition) on
     * the shuffle.
     */
-  def evValueQuantileSample(t: Tables, k: Int = 256,
-      ordered: Boolean = false): DataFrame = {
+  def evValueQuantileSample(t: Tables, k: Int = 256): DataFrame = {
     val bks = udaf(graft.functions.BottomKSample(k),
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong,
@@ -248,15 +247,14 @@ object Analytics {
         pick($("sv"), $("n_sample"), 0.50).as("q50"),
         pick($("sv"), $("n_sample"), 0.75).as("q75"),
         pick($("sv"), $("n_sample"), 0.90).as("q90"))
-    if (ordered) out.orderBy($("event_type")) else out
+    out
   }
 
   /** A88: per-event-type top-k events by value via the bounded
     * aggregator — A86's batch counterpart (the stream equals this
     * bit-for-bit); B63's pattern on the events measure.
     */
-  def evTopkByValue(t: Tables, k: Int = 3,
-      ordered: Boolean = false): DataFrame = {
+  def evTopkByValue(t: Tables, k: Int = 3): DataFrame = {
     val topk = udaf(graft.functions.TopKRows(k),
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaDouble,
@@ -268,7 +266,7 @@ object Analytics {
       .select($("event_type"), ($("i") + 1).cast("long").as("rnk"),
         $("p").getField("_2").as("event_id"),
         $("p").getField("_1").as("value"))
-    if (ordered) out.orderBy($("event_type"), $("rnk")) else out
+    out
   }
 
   /** B63: EXACT top-k per group via the bounded [[graft.functions.TopKRows]]
@@ -1364,7 +1362,7 @@ object Analytics {
     * exact integer µs division; the frame sum routes through
     * DECIMAL(18,6) so the per-frame set sums order-independently.
     */
-  def qRangeFrame(t: Tables, days: Int = 7, ordered: Boolean = false): DataFrame = {
+  def qRangeFrame(t: Tables, days: Int = 7): DataFrame = {
     // o_orderdate is TIMESTAMP_NTZ; cast through TIMESTAMP (session tz
     // pinned to UTC) so unix_micros resolves — same instant both engines
     val dayN = (unix_micros($("o_orderdate").cast("timestamp")) / lit(86400000000L))
@@ -1380,7 +1378,7 @@ object Analytics {
       .select($("o_custkey"), $("o_orderkey"), $("day_n"), $("n_in_window"),
         col("trail_sum"),
         r6(col("trail_sum") / $("n_in_window").cast("double")).as("trail_avg_r"))
-    maybeSort(out, ordered)($("o_custkey"), $("day_n"), $("o_orderkey"))
+    out
   }
 
   /** B55: product-type profit (TPC-H Q9 shape on the available data

@@ -145,12 +145,11 @@ object Dedup {
   /** C1: exact dedup via content hash — keep lowest doc_id per hash.
     * One hash-partitioned aggregation; no sort, no all-pairs.
     */
-  def docExactDedup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docExactDedup(t: Tables): DataFrame =
     t.documents
       .select(md5(col("text")).as("content_hash"), col("doc_id"))
       .groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),
-    ordered)(col("content_hash"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** MinHash signatures as 16 columns m0..m15 (internal shape), over a
     * caller-supplied grams relation — the gram hash IS the 60-bit base
@@ -164,18 +163,17 @@ object Dedup {
   /** C2: MinHash signature per document (16 permutations, csv-rendered
     * so the result is hashable by the driver).
     */
-  def docMinhashSig(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docMinhashSig(t: Tables): DataFrame =
     minhashSigCols(grams(t))
       .select(col("doc_id"),
-        concat_ws(",", Perms.indices.map(i => col(s"m$i")): _*).as("sig")),
-    ordered)(col("doc_id"))
+        concat_ws(",", Perms.indices.map(i => col(s"m$i")): _*).as("sig"))
 
   /** C3: MinHash-LSH near-dup pairs: band signatures (4 bands × 4 rows)
     * → candidates share a band bucket → exact Jaccard verification on
     * candidates only → threshold. The only shuffles are the band
     * self-join and the per-candidate gram intersection — never n².
     */
-  def docMinhashLshPairs(t: Tables, threshold: Double = 0.2, ordered: Boolean = false): DataFrame = {
+  def docMinhashLshPairs(t: Tables, threshold: Double = 0.2): DataFrame = {
     // one shared gram-set exchange (see sharedSets), consumed by the
     // signature aggregate (exploded, partitioning-aligned — no extra
     // shuffle) and the exact-Jaccard verify (arrays, intersected per
@@ -194,7 +192,7 @@ object Dedup {
         col("band") === col("band2") && col("band_val") === col("band_val2") &&
           col("doc_id") < col("db"))
       .select(col("doc_id").as("da"), col("db"))
-    verifiedJaccard(sets, cands, threshold, ordered)
+    verifiedJaccard(sets, cands, threshold)
   }
 
 
@@ -210,7 +208,7 @@ object Dedup {
     * gram sets join per-candidate only (the signature relation is the
     * same aggregate the banding consumed — exchange-reused).
     */
-  def docMinhashJaccardEst(t: Tables, ordered: Boolean = false): DataFrame = {
+  def docMinhashJaccardEst(t: Tables): DataFrame = {
     val sets = sharedSets(t)
     val sig = minhashSigCols(explodeSets(sets))
     val bands = sig.select(col("doc_id"),
@@ -234,15 +232,13 @@ object Dedup {
       .reduce(_ + _)
     val sa = sets.select(col("doc_id").as("da"), col("gs").as("gsa"), col("n_grams").as("na"))
     val sb = sets.select(col("doc_id").as("db3"), col("gs").as("gsb"), col("n_grams").as("nb"))
-    maybeSort(
-      cands.join(a, "da").join(b, col("db") === col("db2"))
-        .withColumn("agree", agree)
-        .join(sa, "da").join(sb, col("db") === col("db3"))
-        .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
-        .select(col("da").as("doc_a"), col("db").as("doc_b"), col("agree"),
-          (col("agree") / lit(16.0)).as("est_jaccard"),
-          (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard")),
-      ordered)(col("doc_a"), col("doc_b"))
+    cands.join(a, "da").join(b, col("db") === col("db2"))
+      .withColumn("agree", agree)
+      .join(sa, "da").join(sb, col("db") === col("db3"))
+      .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
+      .select(col("da").as("doc_a"), col("db").as("doc_b"), col("agree"),
+        (col("agree") / lit(16.0)).as("est_jaccard"),
+        (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
   }
 
   /** C28: b-bit minhash estimation card (Li & König, WWW'10) — the
@@ -263,8 +259,7 @@ object Dedup {
     * is exact binary fractions (agree/16, C=1/16) — bit-identical
     * across engines before the single r6.
     */
-  def docBbitMinhashEst(t: Tables, bBits: Int = 4,
-      ordered: Boolean = false): DataFrame = {
+  def docBbitMinhashEst(t: Tables, bBits: Int = 4): DataFrame = {
     val sets = sharedSets(t)
     val sig = minhashSigCols(explodeSets(sets))
     val bands = sig.select(col("doc_id"),
@@ -294,18 +289,16 @@ object Dedup {
     val cFloor = 1.0 / (1L << bBits)
     val sa = sets.select(col("doc_id").as("da"), col("gs").as("gsa"), col("n_grams").as("na"))
     val sb = sets.select(col("doc_id").as("db3"), col("gs").as("gsb"), col("n_grams").as("nb"))
-    maybeSort(
-      cands.join(a, "da").join(b, col("db") === col("db2"))
-        .withColumn("agree_full", agreeFull)
-        .withColumn("agree_bbit", agreeB)
-        .join(sa, "da").join(sb, col("db") === col("db3"))
-        .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
-        .select(col("da").as("doc_a"), col("db").as("doc_b"),
-          col("agree_full"), col("agree_bbit"),
-          r6((col("agree_bbit") / lit(16.0) - lit(cFloor)) / lit(1.0 - cFloor))
-            .as("est_bbit_r"),
-          (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard")),
-      ordered)(col("doc_a"), col("doc_b"))
+    cands.join(a, "da").join(b, col("db") === col("db2"))
+      .withColumn("agree_full", agreeFull)
+      .withColumn("agree_bbit", agreeB)
+      .join(sa, "da").join(sb, col("db") === col("db3"))
+      .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
+      .select(col("da").as("doc_a"), col("db").as("doc_b"),
+        col("agree_full"), col("agree_bbit"),
+        r6((col("agree_bbit") / lit(16.0) - lit(cFloor)) / lit(1.0 - cFloor))
+          .as("est_bbit_r"),
+        (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
   }
 
   /** C26: duplicate-bias card — are the COPIES systematically worse
@@ -422,7 +415,7 @@ object Dedup {
     * df aggregation + a per-doc rank (window partitioned by doc_id —
     * high cardinality, never a global window).
     */
-  def docNgramJaccard(t: Tables, threshold: Double = 0.2, ordered: Boolean = false): DataFrame =
+  def docNgramJaccard(t: Tables, threshold: Double = 0.2): DataFrame =
     // one materialization of the gram-set relation, shared by the df
     // aggregate, both prefix self-join sides, and both verify sides.
     // Persist (not the lazy shared exchange): the prefix join+window
@@ -430,7 +423,7 @@ object Dedup {
     // don't dedupe — lazy here measured 3× slower (see sharedSets).
     withShared(gramSets(t), col("doc_id")) { sets =>
       verifiedJaccard(sets,
-        prefixFilterCandidates(explodeSets(sets), threshold), threshold, ordered)
+        prefixFilterCandidates(explodeSets(sets), threshold), threshold)
     }
 
   /** C5b: df-capped n-gram Jaccard — the SURVEY §5b deploy knob
@@ -447,11 +440,9 @@ object Dedup {
     * the cap variant additionally caps the *verify* candidate volume,
     * which is the deploy trade §5b documents.
     */
-  def docNgramJaccardCapped(t: Tables, threshold: Double = 0.2, dfCap: Int = 100,
-      ordered: Boolean = false): DataFrame =
+  def docNgramJaccardCapped(t: Tables, threshold: Double = 0.2, dfCap: Int = 100): DataFrame =
     withShared(gramSets(t), col("doc_id")) { sets =>
-      verifiedJaccard(sets, cappedCandidates(explodeSets(sets), dfCap),
-        threshold, ordered)
+      verifiedJaccard(sets, cappedCandidates(explodeSets(sets), dfCap), threshold)
     }
 
   /** df-capped candidate pairs: (da < db) sharing ≥ 1 shingle with
@@ -520,24 +511,21 @@ object Dedup {
     * count. Same recall statement as C5b: a qualifying pair is missed
     * only if every shared shingle is above the cap.
     */
-  def docNgramContainment(t: Tables, threshold: Double = 0.4, dfCap: Int = 100,
-      ordered: Boolean = false): DataFrame =
+  def docNgramContainment(t: Tables, threshold: Double = 0.4, dfCap: Int = 100): DataFrame =
     withShared(gramSets(t), col("doc_id")) { sets =>
       val cands = cappedCandidates(explodeSets(sets), dfCap)
       val sa = sets.select(col("doc_id").as("da"), col("gs").as("gsa"), col("n_grams").as("na"))
       val sb = sets.select(col("doc_id").as("db2"), col("gs").as("gsb"), col("n_grams").as("nb"))
-      maybeSort(
-        cands
-          .join(sa, "da")
-          .join(sb, col("db") === col("db2"))
-          .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
-          .select(col("da").as("doc_a"), col("db").as("doc_b"),
-            (col("c") / col("na")).as("cont_a_in_b"),
-            (col("c") / col("nb")).as("cont_b_in_a"),
-            (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-          .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
-          .distinct(),
-        ordered)(col("doc_a"), col("doc_b"))
+      cands
+        .join(sa, "da")
+        .join(sb, col("db") === col("db2"))
+        .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
+        .select(col("da").as("doc_a"), col("db").as("doc_b"),
+          (col("c") / col("na")).as("cont_a_in_b"),
+          (col("c") / col("nb")).as("cont_b_in_a"),
+          (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
+        .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
+        .distinct()
     }
 
   /** C17: per-document n-gram NOVELTY — the fraction of a doc's
@@ -553,7 +541,7 @@ object Dedup {
     * would shuffle the same rows twice), then a per-doc aggregate that
     * rides the explode's doc_id partitioning.
     */
-  def docNgramNovelty(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docNgramNovelty(t: Tables): DataFrame =
     explodeSets(gramSets(t))
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("gram"))))
@@ -561,8 +549,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_grams"),
         sum((col("df") === 1).cast("long")).as("n_unique"))
       .select(col("doc_id"), col("n_grams"), col("n_unique"),
-        r6(col("n_unique") / col("n_grams")).as("novelty_r")),
-    ordered)(col("doc_id"))
+        r6(col("n_unique") / col("n_grams")).as("novelty_r"))
 
   /** C27: duplicate n-gram MASS per source — the fraction of each
     * source's (doc, shingle) rows whose shingle exists elsewhere in
@@ -577,7 +564,7 @@ object Dedup {
     * aggregate riding the doc-side join (broadcast dims-style: the
     * (doc_id, source) projection is narrow).
     */
-  def docDupNgramMass(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docDupNgramMass(t: Tables): DataFrame =
     explodeSets(gramSets(t))
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("gram"))))
@@ -587,8 +574,7 @@ object Dedup {
         sum((col("df") > 1).cast("long")).as("n_dup_grams"))
       .select(col("source"), col("n_grams"), col("n_dup_grams"),
         r6(col("n_dup_grams").cast("double") / col("n_grams").cast("double"))
-          .as("dup_mass_r")),
-    ordered)(col("source"))
+          .as("dup_mass_r"))
 
   /** C8: incremental dedup — the shape a production pipeline actually
     * runs: an immutable BASE corpus (here: doc_id % mod ≠ 0) with a
@@ -604,7 +590,7 @@ object Dedup {
     * the batch side shuffles only the batch. Intra-batch dedup is a
     * per-hash window over the batch alone, never the corpus.
     */
-  def docIncrementalDedup(t: Tables, mod: Int = 5, ordered: Boolean = false): DataFrame = {
+  def docIncrementalDedup(t: Tables, mod: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hashed = t.documents.select(col("doc_id"), md5(col("text")).as("content_hash"))
     val batch = hashed.filter(pmod(col("doc_id"), lit(mod)) === 0)
@@ -615,13 +601,11 @@ object Dedup {
     val dupOf = when(col("base_id").isNull, col("intra_id"))
       .when(col("intra_id").isNull, col("base_id"))
       .otherwise(least(col("base_id"), col("intra_id")))
-    maybeSort(
-      batch
-        .withColumn("intra_id", min(col("doc_id")).over(wB))
-        .join(baseIdx, Seq("content_hash"), "left")
-        .select(col("doc_id"), col("content_hash"), dupOf.as("dup_of"),
-          dupOf.isNull.cast("int").as("is_new")),
-      ordered)(col("doc_id"))
+    batch
+      .withColumn("intra_id", min(col("doc_id")).over(wB))
+      .join(baseIdx, Seq("content_hash"), "left")
+      .select(col("doc_id"), col("content_hash"), dupOf.as("dup_of"),
+        dupOf.isNull.cast("int").as("is_new"))
   }
 
   /** C8b: incremental NEAR-dup — C8 catches byte-identical re-crawls;
@@ -641,8 +625,7 @@ object Dedup {
     * band-bucketed candidate generation (never all-pairs), verify
     * bounded by candidates, no corpus window — are PlanSpec-pinned.
     */
-  def docIncrementalMinhash(t: Tables, mod: Int = 5, threshold: Double = 0.2,
-      ordered: Boolean = false): DataFrame = {
+  def docIncrementalMinhash(t: Tables, mod: Int = 5, threshold: Double = 0.2): DataFrame = {
     val sets = sharedSets(t)
     val bands = minhashSigCols(explodeSets(sets)).select(col("doc_id"),
       expr("""stack(4,
@@ -669,12 +652,10 @@ object Dedup {
       .agg(min(struct(col("db"), col("j"))).as("best"))
       .select(col("da").as("doc_id"),
         col("best.db").as("dup_of"), col("best.j").as("jaccard"))
-    maybeSort(
-      t.documents.filter(pmod(col("doc_id"), lit(mod)) === 0).select(col("doc_id"))
-        .join(best, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dup_of"), col("jaccard"),
-          col("dup_of").isNull.cast("int").as("is_new")),
-      ordered)(col("doc_id"))
+    t.documents.filter(pmod(col("doc_id"), lit(mod)) === 0).select(col("doc_id"))
+      .join(best, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("dup_of"), col("jaccard"),
+        col("dup_of").isNull.cast("int").as("is_new"))
   }
 
   /** C8b's static side as a buildable artifact: the base corpus's
@@ -722,8 +703,7 @@ object Dedup {
     * size) reach the one per-doc count aggregate. PlanSpec pins the
     * broadcast.
     */
-  def docDecontaminate(t: Tables, mod: Int = 10, minShared: Int = 1,
-      ordered: Boolean = false): DataFrame = {
+  def docDecontaminate(t: Tables, mod: Int = 10, minShared: Int = 1): DataFrame = {
     val sets = gramSets(t)
     val benchGrams = sets.filter(pmod(col("doc_id"), lit(mod)) === 0)
       .select(explode(col("gs")).as("gram")).distinct()
@@ -734,15 +714,13 @@ object Dedup {
     // consumed ONCE (one scan, one shuffle on doc_id), where an inner
     // join + join-back would run the GramHashes pass over ~(mod-1)/mod
     // of the corpus twice
-    maybeSort(
-      train.select(col("doc_id"), col("n_grams"), explode(col("gs")).as("gram"))
-        .join(broadcast(benchGrams), Seq("gram"), "left")
-        .groupBy(col("doc_id"))
-        .agg(coalesce(sum(col("hit")), lit(0L)).as("n_shared"),
-          max(col("n_grams")).cast("long").as("n_grams")) // DuckDB COUNT is BIGINT
-        .select(col("doc_id"), col("n_shared"), col("n_grams"),
-          (col("n_shared") >= minShared).cast("int").as("contaminated")),
-      ordered)(col("doc_id"))
+    train.select(col("doc_id"), col("n_grams"), explode(col("gs")).as("gram"))
+      .join(broadcast(benchGrams), Seq("gram"), "left")
+      .groupBy(col("doc_id"))
+      .agg(coalesce(sum(col("hit")), lit(0L)).as("n_shared"),
+        max(col("n_grams")).cast("long").as("n_grams")) // DuckDB COUNT is BIGINT
+      .select(col("doc_id"), col("n_shared"), col("n_grams"),
+        (col("n_shared") >= minShared).cast("int").as("contaminated"))
   }
 
   /** C9b: Bloom-filter decontamination — the C9 verdict computed
@@ -771,7 +749,7 @@ object Dedup {
     * bit-reproducible in the DuckDB oracle.
     */
   def docDecontaminateBloom(t: Tables, mod: Int = 10, minShared: Int = 1,
-      mBits: Int = 65536, kHashes: Int = 4, ordered: Boolean = false): DataFrame = {
+      mBits: Int = 65536, kHashes: Int = 4): DataFrame = {
     require(mBits % 64 == 0 && kHashes <= Perms.length,
       s"mBits must be word-aligned, kHashes <= ${Perms.length}")
     val sets = gramSets(t)
@@ -794,17 +772,15 @@ object Dedup {
       element_at(col("bloom"), (shiftright(p, 6) + 1).cast("int"))
         .bitwiseAND(call_function("shiftleft", lit(1L), (p % 64).cast("int"))) =!= 0L
     }
-    maybeSort(
-      sets.filter(pmod(col("doc_id"), lit(mod)) =!= 0)
-        .select(col("doc_id"), col("n_grams"), explode(col("gs")).as("gram"))
-        .crossJoin(broadcast(bloomRow))
-        .withColumn("hit", (0 until kHashes).map(r => bitTest(col("gram"), r)).reduce(_ && _))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("hit").cast("long")).as("n_bloom_hits"),
-          max(col("n_grams")).cast("long").as("n_grams"))
-        .select(col("doc_id"), col("n_bloom_hits"), col("n_grams"),
-          (col("n_bloom_hits") >= minShared).cast("int").as("flagged")),
-      ordered)(col("doc_id"))
+    sets.filter(pmod(col("doc_id"), lit(mod)) =!= 0)
+      .select(col("doc_id"), col("n_grams"), explode(col("gs")).as("gram"))
+      .crossJoin(broadcast(bloomRow))
+      .withColumn("hit", (0 until kHashes).map(r => bitTest(col("gram"), r)).reduce(_ && _))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("hit").cast("long")).as("n_bloom_hits"),
+        max(col("n_grams")).cast("long").as("n_grams"))
+      .select(col("doc_id"), col("n_bloom_hits"), col("n_grams"),
+        (col("n_bloom_hits") >= minShared).cast("int").as("flagged"))
   }
 
   /** C12: per-source contamination report — the C9 verdict relation
@@ -883,21 +859,19 @@ object Dedup {
     * anywhere.
     */
   def docFingerprintPairs(t: Tables, mod: Int = 8, minShared: Int = 2,
-      dfCap: Int = 100, ordered: Boolean = false): DataFrame = {
+      dfCap: Int = 100): DataFrame = {
     val fp = grams(t).filter(pmod(col("gram"), lit(mod)) === 0)
       .select(col("doc_id"), col("gram"))
     val stop = fp.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .filter(col("df") > dfCap)
       .select(col("gram"))
     val capped = fp.join(stop, Seq("gram"), "left_anti")
-    maybeSort(
-      capped.alias("a").join(capped.alias("b"),
-          col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= minShared),
-      ordered)(col("doc_a"), col("doc_b"))
+    capped.alias("a").join(capped.alias("b"),
+        col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
   }
 
   /** C10b: near-dup pairs over WINNOWED fingerprints (E28) — the same
@@ -909,20 +883,18 @@ object Dedup {
     * hot fingerprints removed by the df-cap stop-set anti-join.
     */
   def docWinnowPairs(t: Tables, w: Int = 8, minShared: Int = 2,
-      dfCap: Int = 100, ordered: Boolean = false): DataFrame = {
+      dfCap: Int = 100): DataFrame = {
     val fp = graft.operators.TextOps.textWinnow(t, w)
     val stop = fp.groupBy(col("fingerprint")).agg(count(lit(1)).as("df"))
       .filter(col("df") > dfCap)
       .select(col("fingerprint"))
     val capped = fp.join(stop, Seq("fingerprint"), "left_anti")
-    maybeSort(
-      capped.alias("a").join(capped.alias("b"),
-          col("a.fingerprint") === col("b.fingerprint") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= minShared),
-      ordered)(col("doc_a"), col("doc_b"))
+    capped.alias("a").join(capped.alias("b"),
+        col("a.fingerprint") === col("b.fingerprint") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
   }
 
   /** Minimum required overlap ⌈t·n⌉, guarded against double rounding:
@@ -975,24 +947,21 @@ object Dedup {
     * (da, db) rows — callers skip the expensive pair-level distinct —
     * so the verified (tiny) result is deduped here; duplicate pairs
     * compute bit-identical jaccard values, so distinct is exact.
-    * `sets` is the caller's gramSets relation. The final sort is
-    * `ordered`-gated (maybeSort): at 100 TB a near-dup pair set is
-    * corpus-scale, and only the driver's oracle compare needs order.
+    * `sets` is the caller's gramSets relation. No final sort: at 100 TB
+    * a near-dup pair set is corpus-scale, and only the registry's
+    * oracle dump needs order.
     */
-  private def verifiedJaccard(sets: DataFrame, cands: DataFrame, threshold: Double,
-      ordered: Boolean): DataFrame = {
+  private def verifiedJaccard(sets: DataFrame, cands: DataFrame, threshold: Double): DataFrame = {
     val sa = sets.select(col("doc_id").as("da"), col("gs").as("gsa"), col("n_grams").as("na"))
     val sb = sets.select(col("doc_id").as("db2"), col("gs").as("gsb"), col("n_grams").as("nb"))
-    maybeSort(
-      cands
-        .join(sa, "da")
-        .join(sb, col("db") === col("db2"))
-        .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
-        .select(col("da").as("doc_a"), col("db").as("doc_b"),
-          (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .distinct(),
-      ordered)(col("doc_a"), col("doc_b"))
+    cands
+      .join(sa, "da")
+      .join(sb, col("db") === col("db2"))
+      .withColumn("c", call_function("graft_intersect_count", col("gsa"), col("gsb")))
+      .select(col("da").as("doc_a"), col("db").as("doc_b"),
+        (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .distinct()
   }
 
   /** Unsorted simhash relation (internal: consumers add their own
@@ -1009,14 +978,14 @@ object Dedup {
     * no shuffle, no interpreted higher-order transform; the oracle's
     * unnest+SUM formulation is value-identical).
     */
-  def docSimhash(t: Tables, ordered: Boolean = false): DataFrame =
-    maybeSort(simhashes(t), ordered)(col("doc_id"))
+  def docSimhash(t: Tables): DataFrame =
+    simhashes(t)
 
   /** C4b: SimHash near-dup pairs — pigeonhole banding (4 × 15-bit
     * chunks: hamming ≤ 3 guarantees ≥1 identical chunk), candidates
     * share a chunk, verified by exact hamming distance.
     */
-  def docSimhashPairs(t: Tables, maxHamming: Int = 12, ordered: Boolean = false): DataFrame = {
+  def docSimhashPairs(t: Tables, maxHamming: Int = 12): DataFrame = {
     val sh = simhashes(t)
     val chunks = sh.select(col("doc_id"), col("simhash"),
       expr("""stack(4,
@@ -1026,19 +995,17 @@ object Dedup {
         3, (simhash >> 45) & 32767) AS (chunk, chunk_val)"""))
     val c2 = chunks.select(col("doc_id").as("db"), col("simhash").as("sim2"),
       col("chunk").as("chunk2"), col("chunk_val").as("chunk_val2"))
-    maybeSort(
-      chunks.join(c2,
-          col("chunk") === col("chunk2") && col("chunk_val") === col("chunk_val2") &&
-            col("doc_id") < col("db"))
-        .select(col("doc_id").as("doc_a"), col("db").as("doc_b"),
-          bit_count(col("simhash").bitwiseXOR(col("sim2"))).as("hamming"))
-        // filter before distinct — exact (hamming is a pure function
-        // of the pair's simhashes: the multi-chunk duplicate rows
-        // carry identical hamming), and the distinct's exchange then
-        // moves only qualifying pairs (guide §2.3)
-        .filter(col("hamming") <= maxHamming)
-        .distinct(),
-      ordered)(col("doc_a"), col("doc_b"))
+    chunks.join(c2,
+        col("chunk") === col("chunk2") && col("chunk_val") === col("chunk_val2") &&
+          col("doc_id") < col("db"))
+      .select(col("doc_id").as("doc_a"), col("db").as("doc_b"),
+        bit_count(col("simhash").bitwiseXOR(col("sim2"))).as("hamming"))
+      // filter before distinct — exact (hamming is a pure function
+      // of the pair's simhashes: the multi-chunk duplicate rows
+      // carry identical hamming), and the distinct's exchange then
+      // moves only qualifying pairs (guide §2.3)
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** C7: near-dup clustering — connected components over the Jaccard
@@ -1099,8 +1066,7 @@ object Dedup {
     */
   private[graft] val DefaultCcMaxIter = 20
 
-  def docDedupClusters(t: Tables, threshold: Double = 0.2, maxIter: Int = DefaultCcMaxIter,
-      ordered: Boolean = false): DataFrame =
+  def docDedupClusters(t: Tables, threshold: Double = 0.2, maxIter: Int = DefaultCcMaxIter): DataFrame =
     // edges come from the prefix-filtered jaccard join — exact pair set
     // (see docNgramJaccard), but candidate generation is df-bounded, so
     // the feeder is no longer quadratic in stop-shingle frequency.
@@ -1108,7 +1074,7 @@ object Dedup {
     // near-dup pairs, not candidates), cheap to re-read every CC round.
     clusterPairs(
       docNgramJaccard(t, threshold).select(col("doc_a"), col("doc_b")),
-      t.documents.select(col("doc_id")), maxIter, "doc_dedup_clusters", ordered)
+      t.documents.select(col("doc_id")), maxIter, "doc_dedup_clusters")
 
   /** Connected components + canonical selection over an arbitrary
     * near-dup pair relation — the C7 machinery, reusable by any pair
@@ -1121,7 +1087,7 @@ object Dedup {
     * the round's own job, loud failure if maxIter is too small.
     */
   private[graft] def clusterPairs(edges: DataFrame, universe: DataFrame,
-      maxIter: Int, opName: String, ordered: Boolean,
+      maxIter: Int, opName: String,
       releaseEdges: Boolean = true): DataFrame = {
     val sym = edges
       .union(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
@@ -1174,12 +1140,11 @@ object Dedup {
         s"$opName did not converge in $maxIter rounds " +
           "(component diameter exceeds maxIter; raise maxIter)")
     }
-    val out = maybeSort(universe
+    val out = universe
       .join(labels, col("doc_id") === col("id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster"),
-        (coalesce(col("label"), col("doc_id")) === col("doc_id")).cast("int").as("is_canonical")),
-      ordered)(col("doc_id"))
+        (coalesce(col("label"), col("doc_id")) === col("doc_id")).cast("int").as("is_canonical"))
     val outCk = stableCheckpoint(out)
     releaseCheckpoint(labels)
     if (releaseEdges) releaseCheckpoint(edges)
@@ -1200,8 +1165,7 @@ object Dedup {
     * per-group rows = cluster size — never a low-cardinality window)
     * and the keeper joins back on the same cluster key.
     */
-  def docDedupKeepBest(t: Tables, threshold: Double = 0.2, maxIter: Int = 20,
-      ordered: Boolean = false): DataFrame = {
+  def docDedupKeepBest(t: Tables, threshold: Double = 0.2, maxIter: Int = 20): DataFrame = {
     val clusters = docDedupClusters(t, threshold, maxIter)
       .select(col("doc_id"), col("cluster"))
     val qual = TextOps.withQuality(t.documents.select(col("doc_id"), col("text")))
@@ -1218,12 +1182,10 @@ object Dedup {
       .orderBy(col("quality_score").desc, col("doc_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    maybeSort(
-      clusters.join(qual, "doc_id")
-        .withColumn("keeper", first(col("doc_id")).over(w))
-        .select(col("doc_id"), col("cluster"), col("quality_score"), col("keeper"),
-          (col("doc_id") === col("keeper")).cast("int").as("keep")),
-      ordered)(col("doc_id"))
+    clusters.join(qual, "doc_id")
+      .withColumn("keeper", first(col("doc_id")).over(w))
+      .select(col("doc_id"), col("cluster"), col("quality_score"), col("keeper"),
+        (col("doc_id") === col("keeper")).cast("int").as("keep"))
   }
 
   /** C6: embedding-cosine near-dup pairs, exact, via a block-grid pair
@@ -1270,8 +1232,7 @@ object Dedup {
     math.min(4096, math.max(8, math.max(granularity, memoryBound)))
   }
 
-  def docEmbedCosineDup(t: Tables, threshold: Double = 0.45, nBlocks: Int = 0,
-      ordered: Boolean = false): DataFrame = {
+  def docEmbedCosineDup(t: Tables, threshold: Double = 0.45, nBlocks: Int = 0): DataFrame = {
     val nb =
       if (nBlocks > 0) nBlocks
       else gridBlocks(t.embeddings.count(), t.spark.sparkContext.defaultParallelism)
@@ -1286,15 +1247,13 @@ object Dedup {
       .withColumn("bi", explode(sequence(lit(0), col("blk"))))
       .select(col("bi").as("bi2"), col("blk").as("bj2"),
         col("vec_id").as("vb"), col("v").as("xb"), col("n2").as("nb"))
-    maybeSort(
-      left.join(right,
-          col("bi") === col("bi2") && col("bj") === col("bj2") &&
-            (col("bi") =!= col("bj") || col("va") < col("vb")))
-        .select(least(col("va"), col("vb")).as("vec_a"),
-          greatest(col("va"), col("vb")).as("vec_b"),
-          Similarity.cosineR(col("xa"), col("xb"), col("na"), col("nb")).as("cos_r"))
-        .filter(col("cos_r") >= threshold),
-      ordered)(col("vec_a"), col("vec_b"))
+    left.join(right,
+        col("bi") === col("bi2") && col("bj") === col("bj2") &&
+          (col("bi") =!= col("bj") || col("va") < col("vb")))
+      .select(least(col("va"), col("vb")).as("vec_a"),
+        greatest(col("va"), col("vb")).as("vec_b"),
+        Similarity.cosineR(col("xa"), col("xb"), col("na"), col("nb")).as("cos_r"))
+      .filter(col("cos_r") >= threshold)
   }
 
   /** C11: SemDeDup — semantic dedup over embeddings: assign every
@@ -1314,8 +1273,7 @@ object Dedup {
     * cells like any shuffle join key. The verdict is a left join on
     * the (small) dropped-id set, never a second corpus shuffle.
     */
-  def docSemdedup(t: Tables, nCenters: Int = 8, threshold: Double = 0.45,
-      ordered: Boolean = false): DataFrame = {
+  def docSemdedup(t: Tables, nCenters: Int = 8, threshold: Double = 0.45): DataFrame = {
     val assigned = Similarity.withCell(
         Similarity.withNorm(t.embeddings), Similarity.hashCenters(t, nCenters))
       .select(col("vec_id"), col("label"), col("cell"), col("v"), col("n2"))
@@ -1328,11 +1286,9 @@ object Dedup {
       .filter(Similarity.cosineR(col("xa"), col("xb"), col("na"), col("nb"))
         >= threshold)
       .select(col("vb").as("drop_id")).distinct()
-    maybeSort(
-      assigned.join(dropped, col("vec_id") === col("drop_id"), "left")
-        .select(col("vec_id"), col("label"), col("cell"),
-          col("drop_id").isNull.as("keep")),
-      ordered)(col("vec_id"))
+    assigned.join(dropped, col("vec_id") === col("drop_id"), "left")
+      .select(col("vec_id"), col("label"), col("cell"),
+        col("drop_id").isNull.as("keep"))
   }
 
   /** C19: near-dup rate by threshold — pair counts at a ladder of
@@ -1363,7 +1319,7 @@ object Dedup {
     * One content-hash shuffle (C1's key), keep groups spanning ≥2
     * sources; canonical = lowest doc_id.
     */
-  def docCrossSourceDup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docCrossSourceDup(t: Tables): DataFrame =
     t.documents
       .select(md5(col("text")).as("content_hash"), col("doc_id"), col("source"))
       .groupBy(col("content_hash"))
@@ -1371,8 +1327,7 @@ object Dedup {
         count(lit(1)).as("n_copies"),
         countDistinct(col("source")).as("n_sources"),
         min(col("doc_id")).as("keep_id"))
-      .filter(col("n_sources") >= 2),
-    ordered)(col("content_hash"))
+      .filter(col("n_sources") >= 2)
 
   /** D19: cosine-similarity threshold ladder — near-dup pair counts at
     * a radius ladder from ONE pass of C6's verified pair relation
@@ -1440,8 +1395,7 @@ object Dedup {
   def docLshRecall(t: Tables, threshold: Double = 0.2): DataFrame =
     withShared(gramSets(t), col("doc_id")) { sets =>
       val exact = verifiedJaccard(sets,
-        prefixFilterCandidates(explodeSets(sets), threshold), threshold,
-        ordered = false)
+        prefixFilterCandidates(explodeSets(sets), threshold), threshold)
       val bands = minhashSigCols(explodeSets(sets)).select(col("doc_id"),
         expr("""stack(4,
           0, concat_ws(',', m0, m1, m2, m3),
@@ -1561,7 +1515,7 @@ object Dedup {
     * two text lookups; at 100 TB the candidate relation is the same
     * one the dedup run already materialized.
     */
-  def docEditDistance(t: Tables, ordered: Boolean = false): DataFrame = {
+  def docEditDistance(t: Tables): DataFrame = {
     val sets = sharedSets(t)
     val bands = minhashSigCols(explodeSets(sets)).select(col("doc_id"),
       expr("""stack(4,
@@ -1587,7 +1541,7 @@ object Dedup {
       .withColumn("sim_r", r6(lit(1.0) -
         col("edit_dist").cast("double") /
           greatest(col("len_a"), col("len_b")).cast("double")))
-    maybeSort(out, ordered)(col("doc_a"), col("doc_b"))
+    out
   }
 
   /** C31: snapshot CHURN card — crawl-to-crawl content drift per
@@ -1609,7 +1563,7 @@ object Dedup {
     * the agreed degenerate value, same convention as
     * [[docDedupAgreement]]).
     */
-  def docSnapshotChurn(t: Tables, ordered: Boolean = false): DataFrame = {
+  def docSnapshotChurn(t: Tables): DataFrame = {
     val per = t.documents
       .select(col("source"), md5(col("text")).as("h"),
         (col("doc_id") % 2).as("ep"))
@@ -1626,7 +1580,7 @@ object Dedup {
         when(col("n_a") > 0,
           r6((col("n_a") - col("n_common")).cast("double") /
             col("n_a").cast("double"))).as("removed_frac_r"))
-    maybeSort(out, ordered)(col("source"))
+    out
   }
 
   /** C35: LSH BAND PLANNER — the design card that picks C3's (bands,
@@ -1647,8 +1601,7 @@ object Dedup {
     * relation — the C24 bucket-stats shuffle class, never a pair
     * join.
     */
-  def docLshBandPlanner(t: Tables, threshold: Double = 0.2,
-      ordered: Boolean = false): DataFrame = {
+  def docLshBandPlanner(t: Tables, threshold: Double = 0.2): DataFrame = {
     val spark = t.spark
     val plans = Seq((1, 16), (2, 8), (4, 4), (8, 2), (16, 1))
     // midpoint grid, exact decimal strings so both engines parse the
@@ -1682,10 +1635,9 @@ object Dedup {
         .select(lit(b.toLong).as("bands"),
           expr("twice DIV 2").as("cand_pairs"))
     }.reduce(_ unionByName _)
-    maybeSort(analytic.join(measured, "bands")
+    analytic.join(measured, "bands")
       .select(col("bands"), col("rows_per_band"), col("fp_mass_r"),
-        col("fn_mass_r"), col("cand_pairs")),
-      ordered)(col("bands"))
+        col("fn_mass_r"), col("cand_pairs"))
   }
 
   /** C33: LEAKAGE-SAFE train/valid/test split — the split key is the
@@ -1704,10 +1656,9 @@ object Dedup {
     */
   def docSplitLeakageSafe(t: Tables, trainPermille: Int = 990,
       validPermille: Int = 5, threshold: Double = 0.2,
-      seed: String = "split", ordered: Boolean = false): DataFrame = maybeSort(
+      seed: String = "split"): DataFrame =
     splitFromClusters(docDedupClusters(t, threshold),
-      trainPermille, validPermille, seed),
-    ordered)(col("doc_id"))
+      trainPermille, validPermille, seed)
 
   /** The C33 cluster-keyed split projection over a prebuilt (doc_id,
     * cluster) relation — shared with C34's audit so the audit builds
@@ -1737,7 +1688,7 @@ object Dedup {
     */
   def docSplitLeakageAudit(t: Tables, trainPermille: Int = 990,
       validPermille: Int = 5, threshold: Double = 0.2,
-      seed: String = "split", ordered: Boolean = false): DataFrame = {
+      seed: String = "split"): DataFrame = {
     // ONE C5 pair build serves both the cross-count relation and the
     // cluster-keyed split (clusterPairs is told not to release the
     // shared checkpoint — the cross-count joins execute after it
@@ -1745,7 +1696,7 @@ object Dedup {
     val pairs = docNgramJaccard(t, threshold).select(col("doc_a"), col("doc_b"))
     val clusters = clusterPairs(pairs, t.documents.select(col("doc_id")),
       maxIter = DefaultCcMaxIter, opName = "doc_split_leakage_audit",
-      ordered = false, releaseEdges = false)
+      releaseEdges = false)
     def crossCount(splits: DataFrame, method: String) = pairs
       .join(splits.select(col("doc_id").as("doc_a"), col("split").as("sa")), "doc_a")
       .join(splits.select(col("doc_id").as("doc_b"), col("split").as("sb")), "doc_b")
@@ -1756,7 +1707,7 @@ object Dedup {
       graft.operators.TextOps.splitColumn(trainPermille, validPermille, seed).as("split"))
     val safe = splitFromClusters(clusters, trainPermille, validPermille, seed)
       .select(col("doc_id"), col("split"))
-    maybeSort(crossCount(naive, "doc_keyed")
-      .unionByName(crossCount(safe, "cluster_keyed")), ordered)(col("method"))
+    crossCount(naive, "doc_keyed")
+      .unionByName(crossCount(safe, "cluster_keyed"))
   }
 }

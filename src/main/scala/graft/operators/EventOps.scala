@@ -35,7 +35,7 @@ object EventOps {
     * exist in the synthetic table); the operator under test is the
     * precedence logic itself.
     */
-  def evTimeDerivation(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def evTimeDerivation(t: Tables): DataFrame =
     t.events
       .select(col("event_id"), col("ts"))
       .withColumn("last_ts", when(col("event_id") % 3 =!= 0, col("ts")))
@@ -46,14 +46,13 @@ object EventOps {
         coalesce(col("last_ts"), col("first_ts"), col("creation_ts")).as("derived_ts"),
         when(col("last_ts").isNotNull, "last")
           .when(col("first_ts").isNotNull, "first")
-          .otherwise("creation").as("ts_source")),
-    ordered)(col("event_id"))
+          .otherwise("creation").as("ts_source"))
 
   /** A2: exact first-occurrence dedup on the composite key (the cache-miss
     * path of tasks.rs:98). One shuffle on the key; at 100 TB this is a
     * hash-partitioned window, no global sort.
     */
-  def evDedupExact(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def evDedupExact(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("key")).orderBy(col("ts"), col("event_id"))
     t.events
       .select(evKey.as("key"), col("ts"), col("event_id"))
@@ -61,7 +60,7 @@ object EventOps {
       .withColumn("n_events", count(lit(1)).over(Window.partitionBy(col("key"))))
       .filter(col("rn") === 1)
       .select(col("key"), col("ts"), col("event_id"), col("n_events"))
-  }, ordered)(col("key"))
+  }
 
   /** A3: true TTL-cache emission semantics (tasks.rs:66 + clean_cache
     * tasks.rs:184): an event is emitted iff no same-key event was
@@ -70,7 +69,7 @@ object EventOps {
     * state per key (last emitted ts) — the scalable shape of the
     * reference's sled cache.
     */
-  def evTtlCache(t: Tables, ttlHours: Long = 24, ordered: Boolean = false): DataFrame = maybeSort({
+  def evTtlCache(t: Tables, ttlHours: Long = 24): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val ds = t.events
@@ -87,13 +86,13 @@ object EventOps {
         }
       }
       .toDF()
-  }, ordered)(col("key"), col("ts"), col("event_id"))
+  }
 
   /** A4: lag-based throttle — the windowed approximation of A3 (emit iff
     * the *previous* same-key event, emitted or not, is ≥ TTL older).
     * Pure window functions, fully SQL-expressible.
     */
-  def evThrottleLag(t: Tables, ttlHours: Long = 24, ordered: Boolean = false): DataFrame = maybeSort({
+  def evThrottleLag(t: Tables, ttlHours: Long = 24): DataFrame = {
     val w = Window.partitionBy(col("key")).orderBy(col("ts"), col("event_id"))
     t.events
       .select(evKey.as("key"), col("ts"), col("event_id"))
@@ -101,7 +100,7 @@ object EventOps {
       .filter(col("prev_ts").isNull ||
         col("ts") >= col("prev_ts") + expr(s"INTERVAL $ttlHours HOUR"))
       .select(col("key"), col("ts"), col("event_id"))
-  }, ordered)(col("key"), col("ts"), col("event_id"))
+  }
 
   /** A5: Prometheus `events_count{labels}` analog (tasks.rs:107):
     * grouped counts over the full label set (type × derived severity ×
@@ -226,11 +225,10 @@ object EventOps {
     * record as a canonical JSON string (int + string fields, so the
     * rendering is engine-portable).
     */
-  def evSerializeJson(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def evSerializeJson(t: Tables): DataFrame =
     t.events
       .select(col("event_id"),
-        to_json(struct(col("event_id"), col("user_id"), col("event_type"))).as("json")),
-    ordered)(col("event_id"))
+        to_json(struct(col("event_id"), col("user_id"), col("event_type"))).as("json"))
 
   /** A10: top-N hot keys by event count (deterministic tiebreak). */
   def evTopKeys(t: Tables, n: Int = 10): DataFrame =
@@ -248,14 +246,14 @@ object EventOps {
     * O(events × orders-per-user) rows). Right side pre-deduped to one
     * row per (key, time) so tie-breaking is engine-independent.
     */
-  def evAsofEnrich(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def evAsofEnrich(t: Tables): DataFrame = {
     val ev = t.events.select(col("event_id"), col("user_id"), col("ts"))
     val ord = t.orders
       .groupBy(col("o_custkey"), col("o_orderdate"))
       .agg(max(col("o_orderkey")).as("o_orderkey"))
     graft.plans.GraftPlans.asofJoin(ev, ord, "user_id", "o_custkey", "ts", "o_orderdate")
       .select(col("event_id"), col("user_id"), col("ts"), col("o_orderkey"), col("o_orderdate"))
-  }, ordered)(col("event_id"))
+  }
 
   /** A18b: tolerance-bounded as-of enrich — A18 with a maximum
     * lookback (pandas merge_asof `tolerance` semantics): an event is
@@ -264,7 +262,7 @@ object EventOps {
     * bound gates the match inside the same O(1)-state pass — no extra
     * join, filter, or shuffle vs A18.
     */
-  def evAsofTolerance(t: Tables, days: Int = 7, ordered: Boolean = false): DataFrame = maybeSort({
+  def evAsofTolerance(t: Tables, days: Int = 7): DataFrame = {
     val ev = t.events.select(col("event_id"), col("user_id"), col("ts"))
     val ord = t.orders
       .groupBy(col("o_custkey"), col("o_orderdate"))
@@ -278,7 +276,7 @@ object EventOps {
         coalesce(col("o_orderkey"), lit(-1L)).as("o_orderkey"),
         coalesce(col("o_orderdate"), to_timestamp(lit("1970-01-01 00:00:00"))).as("o_orderdate"),
         col("o_orderkey").isNotNull.cast("int").as("matched"))
-  }, ordered)(col("event_id"))
+  }
 
   /** A27: bucketed interval self-join — errors preceded by a same-user
     * click within the last hour. The scalable range-join shape: the
@@ -287,7 +285,7 @@ object EventOps {
     * equi-join on (user, bucket), and the exact interval predicate
     * filters after — never a non-equi join over the full stream.
     */
-  def evErrorAfterClick(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def evErrorAfterClick(t: Tables): DataFrame = {
     val errors = t.events.filter(col("event_type") === "error")
       .select(col("user_id"), col("ts").as("te"), col("event_id"))
     val clickBuckets = t.events.filter(col("event_type") === "click")
@@ -307,7 +305,7 @@ object EventOps {
     perUser.join(perUserFlagged, Seq("user_id"), "left")
       .select(col("user_id"), col("n_errors"),
         coalesce(col("n_with_click"), lit(0L)).as("n_with_click"))
-  }, ordered)(col("user_id"))
+  }
 
   /** A24: funnel analysis — ordered signup → click → purchase
     * progression per user (each stage's timestamp must follow the
@@ -335,13 +333,12 @@ object EventOps {
     * before long-term storage (the ELK-bound form), keeping a count of
     * masked spans for auditability.
     */
-  def evScrubProps(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def evScrubProps(t: Tables): DataFrame =
     t.events
       .select(col("event_id"),
         regexp_replace(col("props"), "[0-9]+", "#").as("props_masked"),
         (length(col("props")) -
-          length(regexp_replace(col("props"), "[0-9]", ""))).cast("long").as("n_masked_chars")),
-    ordered)(col("event_id"))
+          length(regexp_replace(col("props"), "[0-9]", ""))).cast("long").as("n_masked_chars"))
 
   /** A22: time-series gap filling — the dense hourly series between
     * the stream's bounds, zero-filled where no events landed (sequence
@@ -363,7 +360,7 @@ object EventOps {
     * silence per user; per-session bounds + counts via lag + cumulative
     * sum (partitioned windows only).
     */
-  def evSessionize(t: Tables, gapHours: Long = 1, ordered: Boolean = false): DataFrame = maybeSort({
+  def evSessionize(t: Tables, gapHours: Long = 1): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     t.events
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -378,7 +375,7 @@ object EventOps {
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"))
-  }, ordered)(col("user_id"), col("sid"))
+  }
 
   /** A43: session statistics — the dataset-card rollup over A11's
     * sessionizer: session count, mean events/session, and exact
@@ -485,7 +482,7 @@ object EventOps {
     * two exact longs at the end — same two ops in the oracle,
     * bit-portable.
     */
-  def evStateTransitions(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def evStateTransitions(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val trans = t.events
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -498,7 +495,7 @@ object EventOps {
       .withColumn("n_from", sum(col("n")).over(Window.partitionBy(col("from_type"))))
       .select(col("from_type"), col("to_type"), col("n"), col("gap_us_total"),
         r6(col("n").cast("double") / col("n_from").cast("double")).as("p_r"))
-  }, ordered)(col("from_type"), col("to_type"))
+  }
 
   /** A71: seasonal-adjusted anomaly card — hourly counts scored
     * against the per-(type, hour-of-day) baseline instead of A29's
@@ -515,8 +512,7 @@ object EventOps {
     * over the rollup — the corpus is scanned once and nothing wider
     * than the calendar-bounded hourly relation ever shuffles.
     */
-  def evAnomalySeasonal(t: Tables, zFlag: Double = 3.0,
-      ordered: Boolean = false): DataFrame = {
+  def evAnomalySeasonal(t: Tables, zFlag: Double = 3.0): DataFrame = {
     val hourly = t.events
       .select(col("event_type"),
         expr("unix_micros(ts) div 3600000000").as("hour_idx"))
@@ -536,15 +532,13 @@ object EventOps {
             (col("s1").cast("double") / col("k").cast("double")) *
             (col("s1").cast("double") / col("k").cast("double")),
           lit(0.0))).as("sigma"))
-    maybeSort(
-      hourly.join(broadcast(base),
-          col("event_type") === col("bt") && col("hod") === col("bh"))
-        .withColumn("z_r",
-          when(col("sigma") > 0.0, r6((col("n").cast("double") - col("mu")) / col("sigma"))))
-        .select(col("event_type"), col("hour_idx"), col("n"), col("hod"),
-          r6(col("mu")).as("mu_r"), col("z_r"),
-          (abs(coalesce(col("z_r"), lit(0.0))) > zFlag).as("flagged")),
-      ordered)(col("event_type"), col("hour_idx"))
+    hourly.join(broadcast(base),
+        col("event_type") === col("bt") && col("hod") === col("bh"))
+      .withColumn("z_r",
+        when(col("sigma") > 0.0, r6((col("n").cast("double") - col("mu")) / col("sigma"))))
+      .select(col("event_type"), col("hour_idx"), col("n"), col("hod"),
+        r6(col("mu")).as("mu_r"), col("z_r"),
+        (abs(coalesce(col("z_r"), lit(0.0))) > zFlag).as("flagged"))
   }
 
   /** A70: stationary distribution of the event-type Markov chain —
@@ -598,7 +592,7 @@ object EventOps {
     * user-keyed shuffle (high-cardinality key — scales); span math is
     * exact integer µs diffed then one deterministic double divide, r6.
     */
-  def evUserLifespan(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def evUserLifespan(t: Tables): DataFrame =
     t.events.select(col("user_id"), col("ts"))
       .groupBy(col("user_id"))
       .agg(
@@ -611,8 +605,7 @@ object EventOps {
         r6((unix_micros(col("last_ts")) - unix_micros(col("first_ts"))) / lit(3.6e9))
           .as("span_hours_r"),
         r6(col("n_events").cast("double") / col("active_days").cast("double"))
-          .as("events_per_day_r")),
-    ordered)(col("user_id"))
+          .as("events_per_day_r"))
 
   /** A35: event-type co-occurrence matrix — for every unordered type
     * pair, the number of (user, hour) cells where both occur (the
@@ -886,19 +879,17 @@ object EventOps {
     * user-keyed shuffle + a broadcast 1-row frontier; hour arithmetic
     * on exact integer µs.
     */
-  def evDormantUsers(t: Tables, hours: Int = 24, ordered: Boolean = false): DataFrame = {
+  def evDormantUsers(t: Tables, hours: Int = 24): DataFrame = {
     val frontier = t.events.agg(max(col("ts")).as("max_ts"))
-    maybeSort(
-      t.events.select(col("user_id"), col("ts"))
-        .groupBy(col("user_id"))
-        .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("n_events"))
-        .crossJoin(broadcast(frontier))
-        .withColumn("hours_inactive",
-          floor((unix_micros(col("max_ts")) - unix_micros(col("last_ts"))) / lit(3.6e9))
-            .cast("long"))
-        .filter(col("hours_inactive") >= hours)
-        .select(col("user_id"), col("last_ts"), col("n_events"), col("hours_inactive")),
-      ordered)(col("user_id"))
+    t.events.select(col("user_id"), col("ts"))
+      .groupBy(col("user_id"))
+      .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("n_events"))
+      .crossJoin(broadcast(frontier))
+      .withColumn("hours_inactive",
+        floor((unix_micros(col("max_ts")) - unix_micros(col("last_ts"))) / lit(3.6e9))
+          .cast("long"))
+      .filter(col("hours_inactive") >= hours)
+      .select(col("user_id"), col("last_ts"), col("n_events"), col("hours_inactive"))
   }
 
   /** A41: CUSUM change-point detection over per-type hourly rates —
@@ -918,8 +909,7 @@ object EventOps {
     * every double op is order-free and bit-identical on both engines.
     */
   def evCusumChangepoint(t: Tables, baselineHours: Int = 48,
-      kSigma: Double = 0.5, hSigma: Double = 5.0,
-      ordered: Boolean = false): DataFrame = {
+      kSigma: Double = 0.5, hSigma: Double = 5.0): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val hourly = t.events
@@ -945,7 +935,7 @@ object EventOps {
         (ty, h, n, math.floor(s / sigma * 1e6 + 0.5) / 1e6, s > hSigma * sigma)
       }
     }.toDF("event_type", "hour", "n", "cusum_sigmas_r", "flagged")
-    maybeSort(out, ordered)(col("event_type"), col("hour"))
+    out
   }
 
   /** A38: top-k 3-step behavior paths — the most frequent consecutive
@@ -1107,7 +1097,7 @@ object EventOps {
     * Cutoffs are r4-rounded on both engines so an ulp of interpolation
     * drift can't flip a boundary user's bucket.
     */
-  def evRfm(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evRfm(t: Tables): DataFrame = {
     val per = t.events
       .select(col("user_id"), col("ts"), col("value"))
       .groupBy(col("user_id"))
@@ -1130,15 +1120,13 @@ object EventOps {
       r4(expr("percentile(monetary, 0.75)")).as("m3"))
     def bucket(c: Column, q1: Column, q2: Column, q3: Column): Column =
       when(c <= q1, 1L).when(c <= q2, 2L).when(c <= q3, 3L).otherwise(4L)
-    maybeSort(
-      pr.crossJoin(broadcast(cuts))
-        .withColumn("r_b", bucket(col("recency_sec").cast("double"), col("r1"), col("r2"), col("r3")))
-        .withColumn("f_b", bucket(col("freq").cast("double"), col("f1"), col("f2"), col("f3")))
-        .withColumn("m_b", bucket(col("monetary"), col("m1"), col("m2"), col("m3")))
-        .select(col("user_id"), col("recency_sec"), col("freq"), col("monetary"),
-          col("r_b"), col("f_b"), col("m_b"),
-          concat(lit("R"), col("r_b"), lit("F"), col("f_b"), lit("M"), col("m_b")).as("segment")),
-      ordered)(col("user_id"))
+    pr.crossJoin(broadcast(cuts))
+      .withColumn("r_b", bucket(col("recency_sec").cast("double"), col("r1"), col("r2"), col("r3")))
+      .withColumn("f_b", bucket(col("freq").cast("double"), col("f1"), col("f2"), col("f3")))
+      .withColumn("m_b", bucket(col("monetary"), col("m1"), col("m2"), col("m3")))
+      .select(col("user_id"), col("recency_sec"), col("freq"), col("monetary"),
+        col("r_b"), col("f_b"), col("m_b"),
+        concat(lit("R"), col("r_b"), lit("F"), col("f_b"), lit("M"), col("m_b")).as("segment"))
   }
 
   /** A59: funnel by signup cohort — did conversion IMPROVE over time,
@@ -1190,7 +1178,7 @@ object EventOps {
     * aggregate combines map-side and carries min/max ts, the user
     * rollup reshuffles only #user×#type rows.
     */
-  def evUserEntropy(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def evUserEntropy(t: Tables): DataFrame = {
     val utc = t.events
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       .groupBy(col("user_id"), col("event_type"))
@@ -1209,7 +1197,7 @@ object EventOps {
         when(col("span_us") > 0L,
           r6(col("n_events").cast("double") * lit(3.6e9) / col("span_us").cast("double")))
           .as("rate_per_hour_r"))
-  }, ordered)(col("user_id"))
+  }
 
   /** A56: funnel conversion latency — A24 counts WHO converts; this
     * measures HOW FAST: per funnel step (signup→click, click→purchase),
@@ -1369,8 +1357,7 @@ object EventOps {
     * calendar-bounded HOURLY rollup (state = two doubles; the only
     * corpus shuffle is the (type, hour) count).
     */
-  def evHoltForecast(t: Tables, alpha: Double = 0.5, beta: Double = 0.25,
-      ordered: Boolean = false): DataFrame = {
+  def evHoltForecast(t: Tables, alpha: Double = 0.5, beta: Double = 0.25): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val hourly = t.events
@@ -1400,7 +1387,7 @@ object EventOps {
         }
       }
     }.toDF("event_type", "hour", "n", "level_r", "trend_r", "resid_r")
-    maybeSort(out, ordered)(col("event_type"), col("hour"))
+    out
   }
 
   /** A65: lag-k autocorrelation of per-type hourly rates — the
@@ -1495,7 +1482,7 @@ object EventOps {
     * per-user event count — bounded by the same skew A60 measures.
     */
   def evTokenBucket(t: Tables, capTokens: Int = 2,
-      usPerMicroToken: Long = 43200L, ordered: Boolean = false): DataFrame = {
+      usPerMicroToken: Long = 43200L): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val cap = capTokens * 1000000L
@@ -1516,7 +1503,7 @@ object EventOps {
       }
       (uid, rows.length.toLong, allowed, rows.length - allowed, tokens)
     }.toDF("user_id", "n_events", "n_allowed", "n_dropped", "final_tokens")
-    maybeSort(out, ordered)(col("user_id"))
+    out
   }
 
   /** A73: forecast BACKTEST — does A67's Holt model actually beat the
@@ -1536,8 +1523,7 @@ object EventOps {
     * naive lag shares the same per-type ordering, the rollup keys on
     * #types. No new corpus-volume stage.
     */
-  def evForecastEval(t: Tables, alpha: Double = 0.5, beta: Double = 0.25,
-      ordered: Boolean = false): DataFrame = {
+  def evForecastEval(t: Tables, alpha: Double = 0.5, beta: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col("event_type")).orderBy(col("hour"))
     val scored = evHoltForecast(t, alpha, beta)
@@ -1560,7 +1546,7 @@ object EventOps {
         r6(col("sna").cast("double") / col("n_scored").cast("double")).as("naive_mae_r"),
         r6(sqrt(col("sns").cast("double") / col("n_scored").cast("double"))).as("naive_rmse_r"))
       .withColumn("holt_better", col("holt_rmse_r") < col("naive_rmse_r"))
-    maybeSort(out, ordered)(col("event_type"))
+    out
   }
 
   /** A74: ENTROPY RATE of the event-type Markov chain — per from-type,
@@ -1581,8 +1567,7 @@ object EventOps {
     * stage (#types² rollup); the entropy rollup and the π join both
     * run on ≤#types² / ≤#types rows.
     */
-  def evMarkovEntropyRate(t: Tables, iters: Int = 10,
-      ordered: Boolean = false): DataFrame = {
+  def evMarkovEntropyRate(t: Tables, iters: Int = 10): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val trans = t.events
@@ -1603,7 +1588,7 @@ object EventOps {
       .select(col("from_type"), col("n_from"), col("p_r"),
         r6(col("row_entropy")).as("row_entropy_r"),
         r6(col("p_r") * col("row_entropy")).as("contrib_r"))
-    maybeSort(out, ordered)(col("from_type"))
+    out
   }
 
   /** A77: TTL tuning LADDER — the reference's central knob
@@ -1620,8 +1605,7 @@ object EventOps {
     * recursion). The oracle replays each rung's exact A3 recursive
     * CTE and unions the counts.
     */
-  def evTtlTuning(t: Tables, ttls: Seq[Long] = Seq(1L, 6L, 24L, 96L),
-      ordered: Boolean = false): DataFrame = {
+  def evTtlTuning(t: Tables, ttls: Seq[Long] = Seq(1L, 6L, 24L, 96L)): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val ds = t.events
@@ -1652,7 +1636,7 @@ object EventOps {
       .select(col("ttl_hours"), col("n_emitted"), col("n_total"),
         r6(lit(1.0) - col("n_emitted").cast("double") / col("n_total").cast("double"))
           .as("dedup_rate_r"))
-    maybeSort(out, ordered)(col("ttl_hours"))
+    out
   }
 
   /** A76: anomaly ENSEMBLE — A29 (robust static MAD), A33 (trend-aware
@@ -1669,7 +1653,7 @@ object EventOps {
     * their common key — every feeder's own scale argument carries
     * over, the join is #types×#hours rows.
     */
-  def evAnomalyEnsemble(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evAnomalyEnsemble(t: Tables): DataFrame = {
     def eh(c: Column): Column = (unix_micros(c) / lit(3600000000L)).cast("long")
     val mad = evAnomalyMad(t).select(col("event_type"),
       eh(col("hour")).as("hour_idx"), col("n"),
@@ -1686,7 +1670,7 @@ object EventOps {
       .withColumn("votes",
         (col("mad_flag") + col("ewma_flag") + col("seasonal_flag")).cast("int"))
       .withColumn("consensus", col("votes") >= 2)
-    maybeSort(out, ordered)(col("event_type"), col("hour_idx"))
+    out
   }
 
   /** A75: drop-side CUSUM — the OUTAGE detector A49 can't be: S⁺
@@ -1700,8 +1684,7 @@ object EventOps {
     * integer-moment μ/σ, and recursive-CTE oracle discipline as A49.
     */
   def evCusumDrop(t: Tables, baselineHours: Int = 48,
-      kSigma: Double = 0.5, hSigma: Double = 5.0,
-      ordered: Boolean = false): DataFrame = {
+      kSigma: Double = 0.5, hSigma: Double = 5.0): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val hourly = t.events
@@ -1722,7 +1705,7 @@ object EventOps {
         (ty, h, n, math.floor(s / sigma * 1e6 + 0.5) / 1e6, s > hSigma * sigma)
       }
     }.toDF("event_type", "hour", "n", "cusum_drop_sigmas_r", "flagged")
-    maybeSort(out, ordered)(col("event_type"), col("hour"))
+    out
   }
 
   /** A78: A/B experiment card — Welch's t-test on events-per-user
@@ -1743,7 +1726,7 @@ object EventOps {
     * moments integer-exact; mean/variance/t are fixed left-associated
     * double expressions mirrored verbatim in the oracle.
     */
-  def evAbtest(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evAbtest(t: Tables): DataFrame = {
     val m = abMoments(t)
     val se2 = abVarA / col("n_a").cast("double") + abVarB / col("n_b").cast("double")
     val tstat = when(col("n_a") > 1 && col("n_b") > 1 && se2 > 0.0,
@@ -1752,7 +1735,7 @@ object EventOps {
       r6(abMeanA).as("mean_a_r"), r6(abMeanB).as("mean_b_r"),
       r6(abMeanA - abMeanB).as("diff_r"), r6(tstat).as("t_r"),
       (abs(tstat) > 1.96).as("significant"))
-    maybeSort(out, ordered)(col("event_type"))
+    out
   }
 
   /** The A78/A79 shared per-arm EXACT moment relation: per event type,
@@ -1798,8 +1781,7 @@ object EventOps {
     * fixing the attribution horizon: where the curve knees is where
     * credit stops being causal.
     */
-  def evConversionWindowSweep(t: Tables, windowsH: Seq[Int] = Seq(1, 6, 24),
-      ordered: Boolean = false): DataFrame = {
+  def evConversionWindowSweep(t: Tables, windowsH: Seq[Int] = Seq(1, 6, 24)): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -1822,7 +1804,7 @@ object EventOps {
       .select(col("window_hours"), col("n_clicks"), col("n_converted"),
         r6(col("n_converted").cast("double") / col("n_clicks").cast("double"))
           .as("rate_r"))
-    maybeSort(stacked, ordered)(col("window_hours"))
+    stacked
   }
 
   /** A83: bot-suspect card — the behavioral-data curation gate run
@@ -1881,7 +1863,7 @@ object EventOps {
     * moment rollup; every double op a fixed left-associated expression
     * mirrored in the oracle. Guarded for var(X) = 0 or var(Y) = 0.
     */
-  def evCuped(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evCuped(t: Tables): DataFrame = {
     val mid = t.events.agg(expr(
       "min(unix_micros(ts)) + (max(unix_micros(ts)) - min(unix_micros(ts))) DIV 2")
       .as("mid_us"))
@@ -1911,7 +1893,7 @@ object EventOps {
     val out = m.select(col("event_type"), col("n").as("n_users"),
       r6(theta).as("theta_r"), r6(rho2).as("var_reduction_r"),
       r6(vy).as("var_y_r"), r6(when(ok, vy * (lit(1.0) - rho2))).as("var_yadj_r"))
-    maybeSort(out, ordered)(col("event_type"))
+    out
   }
 
   /** A81: sample-ratio-mismatch (SRM) check — the sanity gate an
@@ -1923,12 +1905,12 @@ object EventOps {
     * χ² = (n_a − n_b)²/(n_a + n_b), flagged at 3.841 (p < 0.05).
     * Shares A78's single corpus-keyed moment aggregate; #types rows.
     */
-  def evAbSrm(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evAbSrm(t: Tables): DataFrame = {
     val d = (col("n_a") - col("n_b")).cast("double")
     val chi2 = d * d / (col("n_a") + col("n_b")).cast("double")
     val out = abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
       r6(chi2).as("chi2_r"), (chi2 > 3.841).as("srm_flag"))
-    maybeSort(out, ordered)(col("event_type"))
+    out
   }
 
   /** A79: experiment POWER card — the design read taken BEFORE running
@@ -1946,7 +1928,7 @@ object EventOps {
     * integer moments; SE/MDE are fixed left-associated double
     * expressions mirrored in the oracle.
     */
-  def evMdePower(t: Tables, ordered: Boolean = false): DataFrame = {
+  def evMdePower(t: Tables): DataFrame = {
     val se2 = abVarA / col("n_a").cast("double") + abVarB / col("n_b").cast("double")
     val se = when(col("n_a") > 1 && col("n_b") > 1 && se2 > 0.0, sqrt(se2))
     val pooled = (col("s1a") + col("s1b")).cast("double") /
@@ -1955,6 +1937,6 @@ object EventOps {
     val out = abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
       r6(pooled).as("pooled_mean_r"), r6(se).as("se_r"),
       r6(mde).as("mde_abs_r"), r6(mde / pooled).as("mde_rel_r"))
-    maybeSort(out, ordered)(col("event_type"))
+    out
   }
 }

@@ -19,15 +19,14 @@ object Multimodal {
   /** F1: binary column + typed metadata — byte length, md5 checksum,
     * 8-byte hex prefix. Pure codegen'd expressions over the binary.
     */
-  def mmBinaryMeta(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def mmBinaryMeta(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .select(
         col("doc_id"),
         octet_length(col("payload")).cast("long").as("n_bytes"),
         md5(col("payload")).as("checksum"),
-        lower(hex(substring(col("payload"), 1, 8))).as("prefix_hex")),
-    ordered)(col("doc_id"))
+        lower(hex(substring(col("payload"), 1, 8))).as("prefix_hex"))
 
   /** F5: exact asset dedup by content checksum — the first pass every
     * multimodal corpus runs (identical images/audio re-crawled under
@@ -35,21 +34,20 @@ object Multimodal {
     * count copies. One narrow hash pass + one checksum-keyed shuffle
     * (the md5 rides the map side; payload bytes never shuffle).
     */
-  def mmExactDedup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def mmExactDedup(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .select(col("doc_id"), md5(col("payload")).as("checksum"))
       .groupBy(col("checksum"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),
-    ordered)(col("keep_id"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** F6a: perceptual hash — 60-bit gradient (dHash) signature per
     * payload (see [[graft.functions.DHash60]]). One narrow codegen'd
     * pass, no shuffle: the 8-byte signature is what downstream banding
     * joins move, never the payload.
     */
-  def mmPhash(t: Tables, ordered: Boolean = false): DataFrame =
-    maybeSort(phashes(t), ordered)(col("doc_id"))
+  def mmPhash(t: Tables): DataFrame =
+    phashes(t)
 
   private def phashes(t: Tables): DataFrame =
     t.documents.select(col("doc_id"),
@@ -64,7 +62,7 @@ object Multimodal {
     * (chunk, chunk_val) over 8-byte keys — banding bounds candidates,
     * no all-pairs anywhere.
     */
-  def mmPhashPairs(t: Tables, maxHamming: Int = 4, ordered: Boolean = false): DataFrame = {
+  def mmPhashPairs(t: Tables, maxHamming: Int = 4): DataFrame = {
     val chunks = phashes(t).select(col("doc_id"), col("phash"),
       expr("""stack(4,
         0, (phash >> 0)  & 32767,
@@ -73,22 +71,20 @@ object Multimodal {
         3, (phash >> 45) & 32767) AS (chunk, chunk_val)"""))
     val c2 = chunks.select(col("doc_id").as("db"), col("phash").as("ph2"),
       col("chunk").as("chunk2"), col("chunk_val").as("chunk_val2"))
-    maybeSort(
-      chunks.join(c2,
-          col("chunk") === col("chunk2") && col("chunk_val") === col("chunk_val2") &&
-            col("doc_id") < col("db"))
-        .select(col("doc_id").as("doc_a"), col("db").as("doc_b"),
-          bit_count(col("phash").bitwiseXOR(col("ph2"))).as("hamming"))
-        // filter BEFORE distinct (guide §2.3 — shuffle fewer bytes):
-        // hamming is a pure function of the pair's two phashes, so the
-        // multi-chunk duplicate rows carry identical hamming and
-        // distinct∘filter ≡ filter∘distinct; the distinct's exchange
-        // then moves only qualifying pairs, not the full banded
-        // candidate volume (which grows ~quadratically in per-bucket
-        // density while qualifying pairs stay near-linear).
-        .filter(col("hamming") <= maxHamming)
-        .distinct(),
-      ordered)(col("doc_a"), col("doc_b"))
+    chunks.join(c2,
+        col("chunk") === col("chunk2") && col("chunk_val") === col("chunk_val2") &&
+          col("doc_id") < col("db"))
+      .select(col("doc_id").as("doc_a"), col("db").as("doc_b"),
+        bit_count(col("phash").bitwiseXOR(col("ph2"))).as("hamming"))
+      // filter BEFORE distinct (guide §2.3 — shuffle fewer bytes):
+      // hamming is a pure function of the pair's two phashes, so the
+      // multi-chunk duplicate rows carry identical hamming and
+      // distinct∘filter ≡ filter∘distinct; the distinct's exchange
+      // then moves only qualifying pairs, not the full banded
+      // candidate volume (which grows ~quadratically in per-bucket
+      // density while qualifying pairs stay near-linear).
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** F8: hamming-distance histogram over the banded pair relation —
@@ -115,12 +111,11 @@ object Multimodal {
     * lowest doc_id per component. The pair feeder is checkpointed so
     * CC rounds re-read tiny in-memory pairs, never the banding join.
     */
-  def mmPhashClusters(t: Tables, maxHamming: Int = 4, maxIter: Int = 20,
-      ordered: Boolean = false): DataFrame =
+  def mmPhashClusters(t: Tables, maxHamming: Int = 4, maxIter: Int = 20): DataFrame =
     Dedup.clusterPairs(
       mmPhashPairs(t, maxHamming).select(col("doc_a"), col("doc_b"))
         .localCheckpoint(true),
-      t.documents.select(col("doc_id")), maxIter, "mm_phash_clusters", ordered)
+      t.documents.select(col("doc_id")), maxIter, "mm_phash_clusters")
 
   /** F20: JOINT cross-modal dedup clusters (r11 — the pair-dataset
     * shape: LAION-style corpora are (text, image) PAIRS, and a row is
@@ -138,7 +133,7 @@ object Multimodal {
     * relation; the union adds no new shuffle class.
     */
   def mmJointDedup(t: Tables, threshold: Double = 0.2, maxHamming: Int = 4,
-      maxIter: Int = 20, ordered: Boolean = false): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     val textPairs = Dedup.docNgramJaccard(t, threshold)
       .select(col("doc_a"), col("doc_b"))
     val imgPairs = mmPhashPairs(t, maxHamming)
@@ -146,7 +141,7 @@ object Multimodal {
     val edges = Dedup.stableCheckpoint(
       textPairs.unionByName(imgPairs).distinct())
     Dedup.clusterPairs(edges,
-      t.documents.select(col("doc_id")), maxIter, "mm_joint_dedup", ordered)
+      t.documents.select(col("doc_id")), maxIter, "mm_joint_dedup")
       .select(col("doc_id"), col("cluster"), col("is_canonical"))
   }
 
@@ -158,8 +153,7 @@ object Multimodal {
     * sizes, bounded by near-dup fan-in) + the keeper join-back —
     * no new shuffle class beyond F6c's CC rounds.
     */
-  def mmDedupKeepBest(t: Tables, maxHamming: Int = 4, maxIter: Int = 20,
-      ordered: Boolean = false): DataFrame = {
+  def mmDedupKeepBest(t: Tables, maxHamming: Int = 4, maxIter: Int = 20): DataFrame = {
     val clusters = mmPhashClusters(t, maxHamming, maxIter)
       .select(col("doc_id"), col("cluster"))
     val sizes = t.documents
@@ -177,12 +171,10 @@ object Multimodal {
       .orderBy(col("n_bytes").desc, col("doc_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    maybeSort(
-      clusters.join(sizes, "doc_id")
-        .withColumn("keeper", first(col("doc_id")).over(w))
-        .select(col("doc_id"), col("cluster"), col("n_bytes"), col("keeper"),
-          (col("doc_id") === col("keeper")).cast("int").as("keep")),
-      ordered)(col("doc_id"))
+    clusters.join(sizes, "doc_id")
+      .withColumn("keeper", first(col("doc_id")).over(w))
+      .select(col("doc_id"), col("cluster"), col("n_bytes"), col("keeper"),
+        (col("doc_id") === col("keeper")).cast("int").as("keep"))
   }
 
   final case class MmDecoded(doc_id: Long, format: String,
@@ -320,13 +312,13 @@ object Multimodal {
     * endian header parse, data-offset honoring, bottom-up row walk,
     * BGR unpacking and padding skip are all gate-checked per document.
     */
-  def mmFeatureExtractBmp(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractBmp(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, bmpBytes(id)))).toDF("doc_id", "payload")
     mmDecodePayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic 8-bit RGB PNG payload per doc_id: same dims and the
     * SAME affine pixel formula as [[p6Payload]]/[[bmpBytes]], rows
@@ -353,13 +345,13 @@ object Multimodal {
     * five scanline filters are gate-checked per document against the
     * formula-derived oracle.
     */
-  def mmFeatureExtractPng(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractPng(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, pngBytes(id)))).toDF("doc_id", "payload")
     mmDecodePayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic 8-bit GRAYSCALE PNG per doc_id (color type 0):
     * same dims, the affine formula runs over the single channel, rows
@@ -383,13 +375,13 @@ object Multimodal {
     * the gray channel, so all three oracle means equal the formula's
     * single-channel mean and the format tag must come back PNG8G.
     */
-  def mmFeatureExtractPngGray(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractPngGray(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, pngGrayBytes(id)))).toDF("doc_id", "payload")
     mmDecodePayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic PALETTE PNG per doc_id (color type 3): 1 + id%16
     * PLTE entries whose channels run the affine formula over the
@@ -418,13 +410,13 @@ object Multimodal {
   }
 
   /** F25b: feature extract over palette PNG (format tag PNG8P). */
-  def mmFeatureExtractPngPalette(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractPngPalette(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, pngPaletteBytes(id)))).toDF("doc_id", "payload")
     mmDecodePayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic ADAM7-interlaced truecolor PNG per doc_id: dims
     * are multiples of 8 (w = 8·(1+id%3), h = 8·(1+(id/3)%3)) so every
@@ -455,13 +447,13 @@ object Multimodal {
     * corpora carry progressive-render images from the era when
     * interlacing was the default "fast preview" export.
     */
-  def mmFeatureExtractPngAdam7(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractPngAdam7(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, pngAdam7Bytes(id)))).toDF("doc_id", "payload")
     mmDecodePayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   final case class MmJpeg(doc_id: Long, format: String,
       width: Option[Int], height: Option[Int], channels: Option[Int],
@@ -513,13 +505,13 @@ object Multimodal {
     * DC prediction, zigzag/dequant and the IDCT are all gate-checked
     * per document against the formula-derived oracle.
     */
-  def mmFeatureExtractJpeg(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpeg(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegBytes(id)))).toDF("doc_id", "payload")
     mmDecodeJpegPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   final case class MmJpegColor(doc_id: Long, format: String,
       width: Option[Int], height: Option[Int], channels: Option[Int],
@@ -591,13 +583,13 @@ object Multimodal {
     * the color envelope is what the F23 machinery was for; gate-
     * checked per document against the block-formula oracle.
     */
-  def mmFeatureExtractJpegColor(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpegColor(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegColorBytes(id)))).toDF("doc_id", "payload")
     mmDecodeJpegColorPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic 4:2:2 color JPEG per doc_id — the F23b block
     * pattern at Y 2×1 sampling: dims 16·(1+id%2) × 8·(1+(id·7)%3),
@@ -625,13 +617,13 @@ object Multimodal {
     * second-most-common wild sampling (digital cameras, video
     * stills); the format tag must come back JPEG422.
     */
-  def mmFeatureExtractJpeg422(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpeg422(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegColor422Bytes(id)))).toDF("doc_id", "payload")
     mmDecodeJpegColorPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** Deterministic 4:4:0 color JPEG per doc_id — [[jpegColor422Bytes]]
     * TRANSPOSED to Y 1×2 sampling: dims 8·(1+(id·7)%3) ×
@@ -656,13 +648,13 @@ object Multimodal {
   /** F28: feature extract over REAL 4:4:0 COLOR JPEG payloads — the
     * vertical sibling of F26; the format tag must come back JPEG440.
     */
-  def mmFeatureExtractJpeg440(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpeg440(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegColor440Bytes(id)))).toDF("doc_id", "payload")
     mmDecodeJpegColorPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** [[jpegColorBytes]] with a planted DRI restart interval of
     * 1 + id%3 MCUs: odd ids are 32×32 (4 MCUs) so they carry REAL
@@ -692,13 +684,13 @@ object Multimodal {
     * the envelope now resyncs at RSTn and resets DC predictors per
     * interval instead of quarantining the whole payload.
     */
-  def mmFeatureExtractJpegDri(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpegDri(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegColorDriBytes(id)))).toDF("doc_id", "payload")
     mmDecodeJpegColorPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** PROGRESSIVE twin of [[jpegColorBytes]]: the identical DC-exact
     * block pattern as a four-stage SOF2 scan script (DC initial at
@@ -731,14 +723,14 @@ object Multimodal {
     * features as F23b, gate-checked per document against the
     * block-formula oracle.
     */
-  def mmFeatureExtractJpegProg(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmFeatureExtractJpegProg(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, jpegColorProgressiveBytes(id))))
       .toDF("doc_id", "payload")
     mmDecodeJpegColorPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   final case class MmAudio(doc_id: Long, format: String,
       sample_rate: Option[Int], n_channels: Option[Int],
@@ -815,13 +807,13 @@ object Multimodal {
     * every feature are gate-checked per document against the
     * formula-derived oracle.
     */
-  def mmWavFeatures(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmWavFeatures(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, wavBytes(id)))).toDF("doc_id", "payload")
     mmDecodeWavPayloads(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** F2: batched REAL decode → feature-extract over binary image
     * payloads. The payload construction (p6Payload) is narrow codegen;
@@ -832,9 +824,8 @@ object Multimodal {
     * independently. Corrupt payloads surface as `format = 'corrupt'`
     * rows (exercised in MultimodalSpec with truncated/forged bytes).
     */
-  def mmFeatureExtract(t: Tables, ordered: Boolean = false): DataFrame =
-    maybeSort(mmDecodePayloads(t.spark, p6Payload(t.documents)),
-      ordered)(col("doc_id"))
+  def mmFeatureExtract(t: Tables): DataFrame =
+    mmDecodePayloads(t.spark, p6Payload(t.documents))
 
   /** The public decode boundary: any `(doc_id: long, payload: binary)`
     * relation — a user's real image column — through the batched real
@@ -863,7 +854,7 @@ object Multimodal {
     * Scale shape: decode + bin inside one mapPartitions batch (no
     * shuffle); the output is ≤8 rows per image.
     */
-  def mmChannelHist(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmChannelHist(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val ds = p6Payload(t.documents).as[(Long, Array[Byte])]
@@ -885,7 +876,7 @@ object Multimodal {
         }
       }))
       .toDF()
-  }, ordered)(col("doc_id"), col("bin"))
+  }
 
   final case class MmResized(doc_id: Long, width: Int, height: Int,
       target_w: Int, target_h: Int, scale: Double)
@@ -896,7 +887,7 @@ object Multimodal {
     * shape and schema are what Spark sees either way. Corrupt payloads
     * are dropped (flatMap) — the quarantine row is F2's job.
     */
-  def mmResize(t: Tables, targetMax: Int = 4, ordered: Boolean = false): DataFrame = maybeSort({
+  def mmResize(t: Tables, targetMax: Int = 4): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val ds = p6Payload(t.documents).as[(Long, Array[Byte])]
@@ -911,7 +902,7 @@ object Multimodal {
         }
       }))
       .toDF()
-  }, ordered)(col("doc_id"))
+  }
 
   /** F4: frame sampling — treat the payload as a "video" of fixed-size
     * frames, emit every `stride`-th frame (one row per sampled frame,
@@ -924,7 +915,7 @@ object Multimodal {
     * stays inside whole-stage codegen end to end (no
     * DeserializeToObject, PlanSpec-pinned).
     */
-  def mmFrameSample(t: Tables, frameBytes: Int = 64, stride: Int = 4, ordered: Boolean = false): DataFrame = maybeSort(
+  def mmFrameSample(t: Tables, frameBytes: Int = 64, stride: Int = 4): DataFrame =
     t.documents
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .withColumn("nf", expr(s"octet_length(payload) div $frameBytes").cast("int"))
@@ -937,8 +928,7 @@ object Multimodal {
       .select(col("doc_id"), col("frame_idx"),
         (col("frame_idx") * frameBytes).as("offset"),
         md5(expr(s"substring(payload, frame_idx * $frameBytes + 1, $frameBytes)"))
-          .as("frame_md5")),
-    ordered)(col("doc_id"), col("frame_idx"))
+          .as("frame_md5"))
 
   /** F8: cross-asset frame dedup — sampled frames (F4's relation)
     * appearing in MORE THAN ONE asset: the shared-intro/outro/
@@ -948,15 +938,14 @@ object Multimodal {
     * frame-hash-keyed shuffle over the sampled (not full) frame
     * stream; payload bytes never shuffle (the md5 rides the map side).
     */
-  def mmFrameDedup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def mmFrameDedup(t: Tables): DataFrame =
     mmFrameSample(t)
       .groupBy(col("frame_md5"))
       .agg(
         count(lit(1)).as("n_occurrences"),
         countDistinct(col("doc_id")).as("n_assets"),
         min(col("doc_id")).as("first_doc"))
-      .filter(col("n_assets") >= 2),
-    ordered)(col("frame_md5"))
+      .filter(col("n_assets") >= 2)
 
   /** F10: frame-level PERCEPTUAL near-dup across assets — F8 catches
     * byte-identical shared frames (md5); this catches re-encoded /
@@ -971,7 +960,7 @@ object Multimodal {
     * and the rollup is pair-volume-bounded.
     */
   def mmFramePhashPairs(t: Tables, frameBytes: Int = 64, stride: Int = 4,
-      maxHamming: Int = 4, ordered: Boolean = false): DataFrame = {
+      maxHamming: Int = 4): DataFrame = {
     val frames = t.documents
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .withColumn("nf", expr(s"octet_length(payload) div $frameBytes").cast("int"))
@@ -999,11 +988,9 @@ object Multimodal {
       // the frame pair); see mmPhashPairs
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    maybeSort(
-      pairs.groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_near_frames"),
-          min(col("hamming")).cast("int").as("min_hamming")),
-      ordered)(col("doc_a"), col("doc_b"))
+    pairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_near_frames"),
+        min(col("hamming")).cast("int").as("min_hamming"))
   }
 
   /** F7: incremental perceptual dedup — a new asset batch (doc_id ≡ 0
@@ -1015,8 +1002,7 @@ object Multimodal {
     * equi-join are the only wide ops — payload bytes never shuffle
     * (the phash rides the map side like F5's checksum).
     */
-  def mmPhashIncremental(t: Tables, mod: Int = 5, maxHamming: Int = 4,
-      ordered: Boolean = false): DataFrame = {
+  def mmPhashIncremental(t: Tables, mod: Int = 5, maxHamming: Int = 4): DataFrame = {
     val chunks = t.documents.select(col("doc_id"),
         call_function("graft_dhash60", col("text").cast("binary")).as("phash"))
       .select(col("doc_id"), col("phash"),
@@ -1044,12 +1030,10 @@ object Multimodal {
       .agg(min(struct(col("hamming"), col("db"))).as("best"))
       .select(col("da").as("doc_id"),
         col("best.db").as("dup_of"), col("best.hamming").as("hamming"))
-    maybeSort(
-      t.documents.filter(pmod(col("doc_id"), lit(mod)) === 0).select(col("doc_id"))
-        .join(best, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dup_of"), col("hamming"),
-          col("dup_of").isNull.cast("int").as("is_new")),
-      ordered)(col("doc_id"))
+    t.documents.filter(pmod(col("doc_id"), lit(mod)) === 0).select(col("doc_id"))
+      .join(best, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("dup_of"), col("hamming"),
+        col("dup_of").isNull.cast("int").as("is_new"))
   }
 
   /** F12: scene-cut detection — consecutive sampled frames whose
@@ -1068,7 +1052,7 @@ object Multimodal {
     * on this corpus — the card a deploy would re-derive per format).
     */
   def mmSceneCuts(t: Tables, frameBytes: Int = 64, stride: Int = 4,
-      threshold: Int = 36, ordered: Boolean = false): DataFrame = {
+      threshold: Int = 36): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
     val fr = t.documents
@@ -1080,14 +1064,12 @@ object Multimodal {
       .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
         call_function("graft_dhash60_b1",
           expr(s"substring(payload, frame_idx * $frameBytes + 1, $frameBytes)")).as("ph"))
-    maybeSort(
-      fr.withColumn("prev_idx", lag(col("frame_idx"), 1).over(w))
-        .withColumn("prev_ph", lag(col("ph"), 1).over(w))
-        .filter(col("prev_ph").isNotNull)
-        .withColumn("hamming", bit_count(col("ph").bitwiseXOR(col("prev_ph"))).cast("int"))
-        .filter(col("hamming") >= threshold)
-        .select(col("doc_id"), col("frame_idx"), col("prev_idx"), col("hamming")),
-      ordered)(col("doc_id"), col("frame_idx"))
+    fr.withColumn("prev_idx", lag(col("frame_idx"), 1).over(w))
+      .withColumn("prev_ph", lag(col("ph"), 1).over(w))
+      .filter(col("prev_ph").isNotNull)
+      .withColumn("hamming", bit_count(col("ph").bitwiseXOR(col("prev_ph"))).cast("int"))
+      .filter(col("hamming") >= threshold)
+      .select(col("doc_id"), col("frame_idx"), col("prev_idx"), col("hamming"))
   }
 
   /** F15: cross-source perceptual duplication — F6's banded hamming
@@ -1101,8 +1083,7 @@ object Multimodal {
     * source lookup is a doc-keyed join of the tiny pair relation;
     * rollup keys on #sources².
     */
-  def mmCrossSourceDup(t: Tables, maxHamming: Int = 4,
-      ordered: Boolean = false): DataFrame = {
+  def mmCrossSourceDup(t: Tables, maxHamming: Int = 4): DataFrame = {
     val src = t.documents.select(col("doc_id"), col("source"))
     val pairs = mmPhashPairs(t, maxHamming)
       .join(src.select(col("doc_id").as("ia"), col("source").as("sa")),
@@ -1112,11 +1093,9 @@ object Multimodal {
       .filter(col("sa") =!= col("sb"))
       .select(least(col("sa"), col("sb")).as("source_a"),
         greatest(col("sa"), col("sb")).as("source_b"), col("hamming"))
-    maybeSort(
-      pairs.groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          min(col("hamming")).cast("int").as("min_hamming")),
-      ordered)(col("source_a"), col("source_b"))
+    pairs.groupBy(col("source_a"), col("source_b"))
+      .agg(count(lit(1)).as("n_pairs"),
+        min(col("hamming")).cast("int").as("min_hamming"))
   }
 
   /** F14: per-asset video summary card — the one-row-per-asset read an
@@ -1133,7 +1112,7 @@ object Multimodal {
     * #assets.
     */
   def mmVideoSummary(t: Tables, frameBytes: Int = 64, stride: Int = 4,
-      threshold: Int = 36, ordered: Boolean = false): DataFrame = {
+      threshold: Int = 36): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
     val dupW = org.apache.spark.sql.expressions.Window
@@ -1154,18 +1133,16 @@ object Multimodal {
           bit_count(col("ph").bitwiseXOR(col("prev_ph"))) >= threshold, 1L)
           .otherwise(0L))
       .withColumn("dup_rank", row_number().over(dupW))
-    maybeSort(
-      marked.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_frames"),
-          (sum(col("is_cut")) + 1).as("n_scenes"),
-          sum(when(col("dup_rank") > 1, 1L).otherwise(0L)).as("n_dup_frames"))
-        .select(col("doc_id"), col("n_frames"), col("n_scenes"),
-          r6(col("n_frames").cast("double") / col("n_scenes").cast("double"))
-            .as("mean_scene_len_r"),
-          col("n_dup_frames"),
-          r6(col("n_dup_frames").cast("double") / col("n_frames").cast("double"))
-            .as("dup_frame_share_r")),
-      ordered)(col("doc_id"))
+    marked.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_frames"),
+        (sum(col("is_cut")) + 1).as("n_scenes"),
+        sum(when(col("dup_rank") > 1, 1L).otherwise(0L)).as("n_dup_frames"))
+      .select(col("doc_id"), col("n_frames"), col("n_scenes"),
+        r6(col("n_frames").cast("double") / col("n_scenes").cast("double"))
+          .as("mean_scene_len_r"),
+        col("n_dup_frames"),
+        r6(col("n_dup_frames").cast("double") / col("n_frames").cast("double"))
+          .as("dup_frame_share_r"))
   }
 
   /** F13: keyframe selection — F12's scene segmentation composed with
@@ -1187,7 +1164,7 @@ object Multimodal {
     * duration-bounded); output is #scenes rows.
     */
   def mmKeyframeSelect(t: Tables, frameBytes: Int = 64, stride: Int = 4,
-      threshold: Int = 36, ordered: Boolean = false): DataFrame = {
+      threshold: Int = 36): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("frame_idx"))
     val fr = t.documents
@@ -1212,17 +1189,15 @@ object Multimodal {
     val pick = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"), col("scene_id"))
       .orderBy(col("detail").desc, col("frame_idx").asc)
-    maybeSort(
-      scenes
-        .withColumn("pn", row_number().over(pick))
-        .groupBy(col("doc_id"), col("scene_id"))
-        .agg(
-          min(col("frame_idx")).as("start_idx"),
-          max(col("frame_idx")).as("end_idx"),
-          count(lit(1)).as("n_frames"),
-          max(when(col("pn") === 1, col("frame_idx"))).as("key_frame_idx"),
-          max(when(col("pn") === 1, col("detail"))).as("key_detail")),
-      ordered)(col("doc_id"), col("scene_id"))
+    scenes
+      .withColumn("pn", row_number().over(pick))
+      .groupBy(col("doc_id"), col("scene_id"))
+      .agg(
+        min(col("frame_idx")).as("start_idx"),
+        max(col("frame_idx")).as("end_idx"),
+        count(lit(1)).as("n_frames"),
+        max(when(col("pn") === 1, col("frame_idx"))).as("key_frame_idx"),
+        max(when(col("pn") === 1, col("detail"))).as("key_detail"))
   }
 
   /** F16: sharpness/quality PROXY without decoding — mean absolute
@@ -1239,7 +1214,7 @@ object Multimodal {
     * payload — no explode, no shuffle; output is 3 columns/asset).
     * Exact integer gradient sums; the mean is one double division r6'd.
     */
-  def mmSharpnessProxy(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def mmSharpnessProxy(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"), col("text"))
       .withColumn("n_bytes", length(col("text")).cast("long"))
@@ -1248,6 +1223,5 @@ object Multimodal {
       .filter(col("n_bytes") > 1)
       .select(col("doc_id"), col("n_bytes"),
         r6(col("grad_sum").cast("double") /
-          (col("n_bytes") - 1L).cast("double")).as("mean_abs_grad_r")),
-    ordered)(col("doc_id"))
+          (col("n_bytes") - 1L).cast("double")).as("mean_abs_grad_r"))
 }

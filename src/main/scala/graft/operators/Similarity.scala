@@ -105,10 +105,8 @@ object Similarity {
     * composes in front when the radius is tight enough to make recall
     * trades worthwhile.
     */
-  def annRange(t: Tables, nQueries: Int = 8, radius: Double = 0.25,
-      ordered: Boolean = false): DataFrame = maybeSort(
-    scored(t, nQueries).filter(col("cos_r") >= radius),
-    ordered)(col("q_id"), col("vec_id"))
+  def annRange(t: Tables, nQueries: Int = 8, radius: Double = 0.25): DataFrame =
+    scored(t, nQueries).filter(col("cos_r") >= radius)
 
   /** D2: LSH-bucketed ANN — candidates share the 8-bit sign bucket of
     * the query (≈ corpus/256 per bucket), exact cosine + top-k within.
@@ -427,10 +425,9 @@ object Similarity {
     * measured decrease. Cost: rounds × (one narrow corpus pass + one
     * nCenters·dim aggregate) — the training loop itself IS the card.
     */
-  def embKmeansTrainCurve(t: Tables, nCenters: Int = 8, rounds: Int = 4,
-      ordered: Boolean = false): DataFrame = {
+  def embKmeansTrainCurve(t: Tables, nCenters: Int = 8, rounds: Int = 4): DataFrame = {
     val (_, stats) = lloydTrain(t, nCenters, rounds)
-    maybeSort(stats.reduce(_ unionByName _), ordered)(col("round"))
+    stats.reduce(_ unionByName _)
   }
 
   /** The coarse-center distance kernel every IVF path shares: the r6'd
@@ -498,11 +495,9 @@ object Similarity {
     * work is the TakeOrdered center fetch (O(nCenters) rows to the
     * driver).
     */
-  def embKmeansAssign(t: Tables, nCenters: Int = 8,
-      ordered: Boolean = false): DataFrame = maybeSort(
+  def embKmeansAssign(t: Tables, nCenters: Int = 8): DataFrame =
     withCell(withNorm(t.embeddings), hashCenters(t, nCenters))
-      .select(col("vec_id"), col("label"), col("cell"), col("dist2_r")),
-    ordered)(col("vec_id"))
+      .select(col("vec_id"), col("label"), col("cell"), col("dist2_r"))
 
   /** D40: quantizer DRIFT card — per cell, the train-epoch vs
     * serve-epoch comparison that answers "is the persisted G15
@@ -520,8 +515,7 @@ object Similarity {
     * distance means DECIMAL-routed over r6'd dist2, zero-member
     * epochs null-guarded identically on both engines.
     */
-  def embQuantizerDrift(t: Tables, nCenters: Int = 8,
-      ordered: Boolean = false): DataFrame = {
+  def embQuantizerDrift(t: Tables, nCenters: Int = 8): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val asg = embKmeansAssign(t, nCenters)
       .withColumn("epoch", pmod(col("vec_id"), lit(2)).cast("int"))
@@ -546,7 +540,7 @@ object Similarity {
       .withColumn("dist_delta_r",
         when(col("mean_dist_train_r").isNotNull && col("mean_dist_serve_r").isNotNull,
           r6(col("mean_dist_serve_r") - col("mean_dist_train_r"))))
-    maybeSort(out, ordered)(col("cell"))
+    out
   }
 
   /** D20: one Lloyd update round — the k-means TRAINING step paired
@@ -560,8 +554,7 @@ object Similarity {
     * 100 TB: per-round cost is a map pass plus a nCenters·dim-row
     * aggregate, with the quantizer persisted between rounds via G15.
     */
-  def embKmeansUpdate(t: Tables, nCenters: Int = 8,
-      ordered: Boolean = false): DataFrame = maybeSort(
+  def embKmeansUpdate(t: Tables, nCenters: Int = 8): DataFrame =
     withCell(withNorm(t.embeddings), hashCenters(t, nCenters))
       .select(col("cell"),
         expr("transform(v, x -> CAST(floor(x * 1000000.0 + 0.5) AS BIGINT))").as("vm"))
@@ -570,8 +563,7 @@ object Similarity {
       .agg(
         count(lit(1)).as("n_assigned"),
         r6(sum(col("xm")).cast("double") / count(lit(1)).cast("double") /
-          lit(1e6)).as("coord_r")),
-    ordered)(col("cell"), col("dim"))
+          lit(1e6)).as("coord_r"))
 
   /** D21: Lloyd round-2 reassignment — every vector's nearest centroid
     * among the DATA-DRIVEN round-1 means (D20's update relation), not
@@ -584,8 +576,7 @@ object Similarity {
     * lowest cell. One narrow pass over the corpus × a broadcast of
     * nCenters rows — no shuffle beyond D20's own aggregate.
     */
-  def embKmeansReassign(t: Tables, nCenters: Int = 8,
-      ordered: Boolean = false): DataFrame = {
+  def embKmeansReassign(t: Tables, nCenters: Int = 8): DataFrame = {
     val newCenters = embKmeansUpdate(t, nCenters)
       .groupBy(col("cell").as("ncell"))
       .agg(array_sort(collect_list(struct(col("dim"), col("coord_r").as("c")))).as("cs"))
@@ -596,11 +587,9 @@ object Similarity {
         r6(col("n2") - lit(2.0) * VectorExprs.dot(col("v"), col("cv")) +
           VectorExprs.dot(col("cv"), col("cv"))).as("dist2_r"))
     val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2_r"), col("ncell"))
-    maybeSort(
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("label"), col("ncell").as("cell"), col("dist2_r")),
-      ordered)(col("vec_id"))
+    scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("label"), col("ncell").as("cell"), col("dist2_r"))
   }
 
   /** D23: per-dimension embedding statistics — mean and variance per
@@ -613,7 +602,7 @@ object Similarity {
     * (Long bounds hold to ~10⁵ vectors/dim at unit scale; the 100 TB
     * swap is the same formula through DECIMAL(38,0).)
     */
-  def embDimStats(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def embDimStats(t: Tables): DataFrame =
     t.embeddings
       .select(posexplode(expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"))
@@ -623,8 +612,7 @@ object Similarity {
         sum(col("xm") * col("xm")).as("s2"))
       .select(col("dim"), col("n"),
         r6(col("s1").cast("double") / col("n").cast("double") / lit(1e6)).as("mean_r"),
-        r6(expr("(n * s2 - s1 * s1) div (n * n)").cast("double") / lit(1e12)).as("var_r")),
-    ordered)(col("dim"))
+        r6(expr("(n * s2 - s1 * s1) div (n * n)").cast("double") / lit(1e12)).as("var_r"))
 
   /** D23: embedding covariance matrix (upper triangle) — the
     * distributed Gram-matrix pass behind PCA/whitening/anisotropy
@@ -639,22 +627,20 @@ object Similarity {
     * DECIMAL(38,0) when n·(xm·ym·n) approaches 2⁶³ (here bounded at
     * ~1.3e18 at sf0.1's magnitudes).
     */
-  def embCovariance(t: Tables, ordered: Boolean = false): DataFrame = {
+  def embCovariance(t: Tables): DataFrame = {
     val micro = t.embeddings.select(
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
         .as("vm"))
-    maybeSort(
-      micro
-        .select(col("vm"), posexplode(col("vm")).as(Seq("i", "xa")))
-        .select(col("i"), col("xa"), posexplode(col("vm")).as(Seq("j", "xb")))
-        .filter(col("j") >= col("i"))
-        .groupBy(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
-        .agg(count(lit(1)).as("n"), sum(col("xa")).as("sa"),
-          sum(col("xb")).as("sb"), sum(col("xa") * col("xb")).as("sab"))
-        .select(col("i"), col("j"),
-          r6(expr("(n * sab - sa * sb) div (n * n)").cast("double") / lit(1e12))
-            .as("cov_r")),
-      ordered)(col("i"), col("j"))
+    micro
+      .select(col("vm"), posexplode(col("vm")).as(Seq("i", "xa")))
+      .select(col("i"), col("xa"), posexplode(col("vm")).as(Seq("j", "xb")))
+      .filter(col("j") >= col("i"))
+      .groupBy(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
+      .agg(count(lit(1)).as("n"), sum(col("xa")).as("sa"),
+        sum(col("xb")).as("sb"), sum(col("xa") * col("xb")).as("sab"))
+      .select(col("i"), col("j"),
+        r6(expr("(n * sab - sa * sb) div (n * n)").cast("double") / lit(1e12))
+          .as("cov_r"))
   }
 
   /** D24: power iteration for the top principal direction — two
@@ -699,17 +685,15 @@ object Similarity {
     (upper, full, v2)
   }
 
-  def embPowerIteration(t: Tables, ordered: Boolean = false): DataFrame = {
+  def embPowerIteration(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val (_, _, v2) = powerParts(t)
     val norm = v2.agg(
       sum(col("v2").cast(DecimalType(38, 0)) * col("v2").cast(DecimalType(38, 0)))
         .as("n2"))
       .select(sqrt(col("n2").cast("double")).as("norm"))
-    maybeSort(
-      v2.crossJoin(broadcast(norm))
-        .select(col("i"), r6(col("v2").cast("double") / col("norm")).as("eig_r")),
-      ordered)(col("i"))
+    v2.crossJoin(broadcast(norm))
+      .select(col("i"), r6(col("v2").cast("double") / col("norm")).as("eig_r"))
   }
 
   /** D39: principal-direction PROJECTION card — every vector's scalar
@@ -727,24 +711,22 @@ object Similarity {
     * r6'd before the DECIMAL mean (identical sequential fold as the
     * oracle's list_reduce).
     */
-  def embPcaProject(t: Tables, ordered: Boolean = false): DataFrame = {
+  def embPcaProject(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val eig = embPowerIteration(t, ordered = true).collect()
+    val eig = embPowerIteration(t).orderBy(col("i")).collect()
       .map(_.getDouble(1)).toSeq // #dims rows — bounded driver artifact
     val proj = withNorm(t.embeddings)
       .select(col("label"),
         r6(VectorExprs.dot(col("v"), typedLit(eig))).as("proj_r"))
-    maybeSort(
-      proj.groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vectors"),
-          sum(col("proj_r").cast(DecimalType(18, 6))).as("sp"),
-          min(col("proj_r")).as("min_proj_r"),
-          max(col("proj_r")).as("max_proj_r"))
-        .select(col("label"), col("n_vectors"),
-          r6(col("sp").cast("double") / col("n_vectors").cast("double"))
-            .as("mean_proj_r"),
-          col("min_proj_r"), col("max_proj_r")),
-      ordered)(col("label"))
+    proj.groupBy(col("label"))
+      .agg(count(lit(1)).as("n_vectors"),
+        sum(col("proj_r").cast(DecimalType(18, 6))).as("sp"),
+        min(col("proj_r")).as("min_proj_r"),
+        max(col("proj_r")).as("max_proj_r"))
+      .select(col("label"), col("n_vectors"),
+        r6(col("sp").cast("double") / col("n_vectors").cast("double"))
+          .as("mean_proj_r"),
+        col("min_proj_r"), col("max_proj_r"))
   }
 
   /** D34: explained-variance card — how much of the corpus's total
@@ -811,7 +793,7 @@ object Similarity {
     * global rollups.
     */
   def embRpqError(t: Tables, m: Int = 8, nCodes: Int = 8,
-      nCells: Int = 16, ordered: Boolean = false): DataFrame = {
+      nCells: Int = 16): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     def card(codes: DataFrame, variant: String) = codes
       .agg(count(lit(1)).as("n"),
@@ -822,8 +804,7 @@ object Similarity {
     val coarse = trainedCenters(t, nCells)
     val res = codeRows(pqEncode(residualRel(t, coarse),
       residualPqCenters(t, coarse, nCodes), m))
-    maybeSort(card(raw, "pq_raw").unionByName(card(res, "pq_residual")),
-      ordered)(col("variant"))
+    card(raw, "pq_raw").unionByName(card(res, "pq_residual"))
   }
 
   /** D28: IVF cell-balance card (C24's health read for the vector
@@ -857,20 +838,17 @@ object Similarity {
     * #cells×#labels aggregate; the argmax/total windows ride that tiny
     * relation only.
     */
-  def embClusterPurity(t: Tables, nCenters: Int = 8,
-      ordered: Boolean = false): DataFrame = {
+  def embClusterPurity(t: Tables, nCenters: Int = 8): DataFrame = {
     val byLab = withCell(withNorm(t.embeddings), hashCenters(t, nCenters))
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("cell")).orderBy(col("n").desc, col("label").asc)
-    maybeSort(
-      byLab
-        .withColumn("rn", row_number().over(w))
-        .withColumn("cell_n", sum(col("n")).over(Window.partitionBy(col("cell"))))
-        .filter(col("rn") === 1)
-        .select(col("cell"), col("label").as("majority_label"),
-          col("cell_n").as("n_vectors"), col("n").as("n_majority"),
-          r6(col("n").cast("double") / col("cell_n").cast("double")).as("purity_r")),
-      ordered)(col("cell"))
+    byLab
+      .withColumn("rn", row_number().over(w))
+      .withColumn("cell_n", sum(col("n")).over(Window.partitionBy(col("cell"))))
+      .filter(col("rn") === 1)
+      .select(col("cell"), col("label").as("majority_label"),
+        col("cell_n").as("n_vectors"), col("n").as("n_majority"),
+        r6(col("n").cast("double") / col("cell_n").cast("double")).as("purity_r"))
   }
 
   /** D8: product-quantization codes — each vector split into `m`
@@ -886,9 +864,8 @@ object Similarity {
     * shuffle, no join; PlanSpec pins zero exchanges). One output row
     * per (vector, subspace) with the r6'd residual.
     */
-  def embPqCodes(t: Tables, m: Int = 8, nCodes: Int = 8,
-      ordered: Boolean = false): DataFrame =
-    embPqCodesWith(t, hashCenters(t, nCodes), m, ordered)
+  def embPqCodes(t: Tables, m: Int = 8, nCodes: Int = 8): DataFrame =
+    embPqCodesWith(t, hashCenters(t, nCodes), m)
 
   /** Per-subspace literal codebook for PqDists: element i = code i's
     * subvector (hashCenters codes are already 0..n−1 in order). */
@@ -899,10 +876,8 @@ object Similarity {
     })
 
   private[graft] def embPqCodesWith(t: Tables,
-      centers: Array[(Int, Seq[Double], Double)], m: Int,
-      ordered: Boolean): DataFrame = maybeSort(
-    codeRows(pqEncode(withNorm(t.embeddings), centers, m)),
-    ordered)(col("vec_id"), col("sub_j"))
+      centers: Array[(Int, Seq[Double], Double)], m: Int): DataFrame =
+    codeRows(pqEncode(withNorm(t.embeddings), centers, m))
 
   /** The one PQ encoder: each row of a prepared relation (`vec_id`, `v`
     * and the `carry` columns — IVF callers carry the coarse `cell`) as
@@ -993,7 +968,7 @@ object Similarity {
   def annPqAdcWith(t: Tables, centers: Array[(Int, Seq[Double], Double)],
       nQueries: Int = 8, k: Int = 5, m: Int = 8): DataFrame = {
     val dsub = centers.head._2.length / m
-    val codes = embPqCodesWith(t, centers, m, ordered = false)
+    val codes = embPqCodesWith(t, centers, m)
       .select(col("vec_id"), col("sub_j"), col("code"))
     val perJ = (0 until m).map { j =>
       val xv = slice(col("v"), j * dsub + 1, dsub)
@@ -1092,7 +1067,7 @@ object Similarity {
     */
   def annRpqRecall(t: Tables, nQueries: Int = 8, k: Int = 5, m: Int = 8,
       nCodes: Int = 8, nCells: Int = 16, nProbe: Int = 4,
-      rerankR: Int = 20, ordered: Boolean = false): DataFrame = {
+      rerankR: Int = 20): DataFrame = {
     val e = withNorm(t.embeddings).select(col("vec_id"), col("v"), col("n2"))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id2"), col("v").as("qv"), col("n2").as("qn2"))
@@ -1125,8 +1100,7 @@ object Similarity {
     val adc = rpq(k)
     val refined = exactRerankOf(t, rpq(rerankR).select(col("q_id"), col("vec_id")),
       nQueries, k)
-    maybeSort(recallOf(adc, "adc").unionByName(recallOf(refined, "refined")),
-      ordered)(col("method"), col("q_id"))
+    recallOf(adc, "adc").unionByName(recallOf(refined, "refined"))
   }
 
   /** D50: nprobe TUNING curve for the residual-PQ stack — D37's sweep
@@ -1145,8 +1119,7 @@ object Similarity {
     */
   def annRpqNprobeTuning(t: Tables, nQueries: Int = 8, k: Int = 5,
       m: Int = 8, nCodes: Int = 8, nCells: Int = 16,
-      probes: Seq[Int] = Seq(1, 2, 4, 8),
-      ordered: Boolean = false): DataFrame = {
+      probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     val spark = t.spark
     val maxP = probes.max
     val coarse = trainedCenters(t, nCells)
@@ -1207,17 +1180,15 @@ object Similarity {
           col("k_exact").cast("double")).as("recall_r"),
         r6(col("n_scan").cast("double") / col("n_total").cast("double"))
           .as("scan_frac_r"))
-    maybeSort(
-      perQ.groupBy(col("nprobe"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("recall_r").cast(DecimalType(18, 6))).as("sr"),
-          sum(col("scan_frac_r").cast(DecimalType(18, 6))).as("ss"))
-        .select(col("nprobe"), col("n_queries"),
-          r6(col("sr").cast("double") / col("n_queries").cast("double"))
-            .as("mean_recall_r"),
-          r6(col("ss").cast("double") / col("n_queries").cast("double"))
-            .as("mean_scan_frac_r")),
-      ordered)(col("nprobe"))
+    perQ.groupBy(col("nprobe"))
+      .agg(count(lit(1)).as("n_queries"),
+        sum(col("recall_r").cast(DecimalType(18, 6))).as("sr"),
+        sum(col("scan_frac_r").cast(DecimalType(18, 6))).as("ss"))
+      .select(col("nprobe"), col("n_queries"),
+        r6(col("sr").cast("double") / col("n_queries").cast("double"))
+          .as("mean_recall_r"),
+        r6(col("ss").cast("double") / col("n_queries").cast("double"))
+          .as("mean_scan_frac_r"))
   }
 
   /** The FAISS refine tail shared by D11/D47: exact squared-L2
@@ -1440,8 +1411,8 @@ object Similarity {
     * codegen'd posexplode pass — no shuffle, no join. The only non-map
     * work is the bounded bounds aggregate (dim rows to the driver).
     */
-  def embSq8Codes(t: Tables, ordered: Boolean = false): DataFrame =
-    embSq8CodesWith(t, sq8Bounds(t), ordered)
+  def embSq8Codes(t: Tables): DataFrame =
+    embSq8CodesWith(t, sq8Bounds(t))
 
   /** D12 off an externally trained/loaded bounds artifact (e.g.
     * [[graft.sources.Sinks.readSq8Bounds]]) — the deploy shape: bounds
@@ -1450,8 +1421,7 @@ object Similarity {
     * versions (re-deriving bounds per batch would silently re-scale
     * every code).
     */
-  def embSq8CodesWith(t: Tables, bounds: (Seq[Double], Seq[Double]),
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def embSq8CodesWith(t: Tables, bounds: (Seq[Double], Seq[Double])): DataFrame = {
     val (mns, mxs) = bounds
     withNorm(t.embeddings)
       .select(col("vec_id"), posexplode(col("v")).as(Seq("d", "x")))
@@ -1461,7 +1431,7 @@ object Similarity {
         sq8Code(col("x"), col("mn"), col("mx")).as("code"),
         r6(col("mn") + (sq8Code(col("x"), col("mn"), col("mx")).cast("double") + lit(0.5))
           * (col("mx") - col("mn")) / lit(256.0)).as("recon_r"))
-  }, ordered)(col("vec_id"), col("d"))
+  }
 
   /** D27: SQ8 reconstruction-error card — the "can I afford 8-bit"
     * decision next to D12: per dimension, mean and max |x − x̂| of the
@@ -1472,24 +1442,22 @@ object Similarity {
     * D12 into a dim-keyed aggregate; means decimal-routed, max is
     * order-free — engine-deterministic.
     */
-  def embSq8Error(t: Tables, ordered: Boolean = false): DataFrame = {
+  def embSq8Error(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val (mns, mxs) = sq8Bounds(t)
-    maybeSort(
-      withNorm(t.embeddings)
-        .select(posexplode(col("v")).as(Seq("d", "x")))
-        .withColumn("mn", element_at(typedLit(mns), col("d") + 1))
-        .withColumn("mx", element_at(typedLit(mxs), col("d") + 1))
-        .withColumn("recon",
-          col("mn") + (sq8Code(col("x"), col("mn"), col("mx")).cast("double") + lit(0.5))
-            * (col("mx") - col("mn")) / lit(256.0))
-        .withColumn("err", abs(col("x") - col("recon")))
-        .groupBy(col("d").cast("long").as("d"))
-        .agg(count(lit(1)).as("n"),
-          r6(sum(col("err").cast(DecimalType(18, 6))).cast("double") /
-            count(lit(1)).cast("double")).as("mean_abs_err_r"),
-          r6(max(col("err"))).as("max_abs_err_r")),
-      ordered)(col("d"))
+    withNorm(t.embeddings)
+      .select(posexplode(col("v")).as(Seq("d", "x")))
+      .withColumn("mn", element_at(typedLit(mns), col("d") + 1))
+      .withColumn("mx", element_at(typedLit(mxs), col("d") + 1))
+      .withColumn("recon",
+        col("mn") + (sq8Code(col("x"), col("mn"), col("mx")).cast("double") + lit(0.5))
+          * (col("mx") - col("mn")) / lit(256.0))
+      .withColumn("err", abs(col("x") - col("recon")))
+      .groupBy(col("d").cast("long").as("d"))
+      .agg(count(lit(1)).as("n"),
+        r6(sum(col("err").cast(DecimalType(18, 6))).cast("double") /
+          count(lit(1)).cast("double")).as("mean_abs_err_r"),
+        r6(max(col("err"))).as("max_abs_err_r"))
   }
 
   /** D12b: SQ8 asymmetric-distance ANN — top-k by squared L2 between
@@ -1560,11 +1528,9 @@ object Similarity {
     * per-source rank window keys on vec_id — corpus cardinality,
     * groups ≤ bucketCap by construction.
     */
-  def annKnnGraph(t: Tables, k: Int = 3, bits: Int = 8, bucketCap: Int = 128,
-      ordered: Boolean = false): DataFrame = maybeSort(
+  def annKnnGraph(t: Tables, k: Int = 3, bits: Int = 8, bucketCap: Int = 128): DataFrame =
     knnEdges(t, k, bits, bucketCap)
-      .select(col("src"), col("rank"), col("dst"), col("cos_r")),
-    ordered)(col("src"), col("rank"))
+      .select(col("src"), col("rank"), col("dst"), col("cos_r"))
 
   /** The shared D14 edge builder: (src, rank, dst, cos_r, src_label,
     * dst_label) top-k in-bucket edges, posting-capped dst side.
@@ -1595,18 +1561,15 @@ object Similarity {
     * nQueries·k rows — the join and rollup are trivially small; cost
     * is the two feeders.
     */
-  def annRecallEval(t: Tables, nQueries: Int = 8, k: Int = 3,
-      ordered: Boolean = false): DataFrame = {
+  def annRecallEval(t: Tables, nQueries: Int = 8, k: Int = 3): DataFrame = {
     val exact = annTopkBruteforce(t, nQueries, k).select(col("q_id"), col("vec_id"))
     val approx = annLshBucketed(t, nQueries, k)
       .select(col("q_id").as("q2"), col("vec_id").as("v2"))
-    maybeSort(
-      exact.join(approx, col("q_id") === col("q2") && col("vec_id") === col("v2"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("k_exact"), count(col("v2")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          r6(col("n_hits").cast("double") / col("k_exact").cast("double")).as("recall_r")),
-      ordered)(col("q_id"))
+    exact.join(approx, col("q_id") === col("q2") && col("vec_id") === col("v2"), "left")
+      .groupBy(col("q_id"))
+      .agg(count(lit(1)).as("k_exact"), count(col("v2")).as("n_hits"))
+      .select(col("q_id"), col("n_hits"),
+        r6(col("n_hits").cast("double") / col("k_exact").cast("double")).as("recall_r"))
   }
 
   /** D18: kNN-graph clusters — connected components of the MUTUAL
@@ -1619,8 +1582,7 @@ object Similarity {
     * knn edges); canonical = lowest vec_id per component.
     */
   def embKnnClusters(t: Tables, k: Int = 3, threshold: Double = 0.6,
-      bits: Int = 8, bucketCap: Int = 128, maxIter: Int = 20,
-      ordered: Boolean = false): DataFrame = {
+      bits: Int = 8, bucketCap: Int = 128, maxIter: Int = 20): DataFrame = {
     val e = knnEdges(t, k, bits, bucketCap)
       .filter(col("cos_r") >= threshold)
       .select(col("src"), col("dst"))
@@ -1630,7 +1592,7 @@ object Similarity {
         .select(col("src").as("doc_a"), col("dst").as("doc_b")))
     Dedup.clusterPairs(mutual,
         t.embeddings.select(col("vec_id").as("doc_id")),
-        maxIter, "emb_knn_clusters", ordered)
+        maxIter, "emb_knn_clusters")
       .select(col("doc_id").as("vec_id"), col("cluster"), col("is_canonical"))
   }
 
@@ -1647,7 +1609,7 @@ object Similarity {
     * graft_dot folds (‖x‖² − 2x·c + ‖c‖², same sequential fold order
     * as the oracle's list_reduce).
     */
-  def embCentroidDist(t: Tables, ordered: Boolean = false): DataFrame = {
+  def embCentroidDist(t: Tables): DataFrame = {
     val micro = t.embeddings.select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
         .as("vm"))
@@ -1663,16 +1625,14 @@ object Similarity {
       call_function("graft_dot", col("xd"), col("xd")) -
         lit(2.0) * call_function("graft_dot", col("xd"), col("cv")) +
         call_function("graft_dot", col("cv"), col("cv"))
-    maybeSort(
-      micro
-        .withColumn("xd", expr("transform(vm, x -> CAST(x AS DOUBLE) / 1000000.0)"))
-        .join(broadcast(centroids), col("label") === col("clabel"))
-        .select(col("vec_id"), col("label"),
-          // greatest(0, ·): dist² can land a hair below zero in float
-          // for a vector that IS the centroid; both engines compute the
-          // identical doubles, the clamp just keeps sqrt real
-          r6(sqrt(greatest(lit(0.0), dist2))).as("dist_r")),
-      ordered)(col("vec_id"))
+    micro
+      .withColumn("xd", expr("transform(vm, x -> CAST(x AS DOUBLE) / 1000000.0)"))
+      .join(broadcast(centroids), col("label") === col("clabel"))
+      .select(col("vec_id"), col("label"),
+        // greatest(0, ·): dist² can land a hair below zero in float
+        // for a vector that IS the centroid; both engines compute the
+        // identical doubles, the clamp just keeps sqrt real
+        r6(sqrt(greatest(lit(0.0), dist2))).as("dist_r"))
   }
 
   /** D15: k-NN label prediction — majority vote over D14's top-k
@@ -1683,19 +1643,16 @@ object Similarity {
     * window keys on src — corpus cardinality, ≤ #labels rows per
     * group. Deterministic tiebreak: most votes, then lowest label.
     */
-  def annLabelKnn(t: Tables, k: Int = 5, bits: Int = 8, bucketCap: Int = 128,
-      ordered: Boolean = false): DataFrame = {
+  def annLabelKnn(t: Tables, k: Int = 5, bits: Int = 8, bucketCap: Int = 128): DataFrame = {
     val w = Window.partitionBy(col("src")).orderBy(col("votes").desc, col("dst_label").asc)
-    maybeSort(
-      knnEdges(t, k, bits, bucketCap)
-        .groupBy(col("src"), col("src_label"), col("dst_label"))
-        .agg(count(lit(1)).as("votes"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("src"), col("dst_label").as("pred_label"), col("votes"),
-          col("src_label").as("actual_label"),
-          (col("dst_label") === col("src_label")).cast("int").as("is_correct")),
-      ordered)(col("src"))
+    knnEdges(t, k, bits, bucketCap)
+      .groupBy(col("src"), col("src_label"), col("dst_label"))
+      .agg(count(lit(1)).as("votes"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("src"), col("dst_label").as("pred_label"), col("votes"),
+        col("src_label").as("actual_label"),
+        (col("dst_label") === col("src_label")).cast("int").as("is_correct"))
   }
 
   /** D18: embedding outliers — vectors beyond their label's p95
@@ -1721,7 +1678,7 @@ object Similarity {
     * float drift across iterations.
     */
   def annPagerank(t: Tables, iters: Int = 3, k: Int = 3, bits: Int = 8,
-      bucketCap: Int = 128, ordered: Boolean = false): DataFrame = {
+      bucketCap: Int = 128): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val edges0 = knnEdges(t, k, bits, bucketCap).select(col("src"), col("dst"))
       .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1743,20 +1700,18 @@ object Similarity {
             (expr("(15 * (CAST(1000000000000 AS BIGINT) div n)) div 100") +
               coalesce(col("inflow"), lit(0L))).as("pr"))
       }
-      maybeSort(Dedup.stableCheckpoint(
-        ranks.select(col("vec_id"), col("pr").as("pr_e12"))), ordered)(col("vec_id"))
+      Dedup.stableCheckpoint(
+        ranks.select(col("vec_id"), col("pr").as("pr_e12")))
     } finally edges0.unpersist(true)
   }
 
-  def embOutliers(t: Tables, pct: Double = 0.95, ordered: Boolean = false): DataFrame = {
+  def embOutliers(t: Tables, pct: Double = 0.95): DataFrame = {
     val d = embCentroidDist(t)
     val cuts = d.groupBy(col("label").as("cl"))
       .agg(r4(expr(s"percentile(dist_r, $pct)")).as("cutoff_r"))
-    maybeSort(
-      d.join(broadcast(cuts), col("label") === col("cl"))
-        .filter(col("dist_r") > col("cutoff_r"))
-        .select(col("vec_id"), col("label"), col("dist_r"), col("cutoff_r")),
-      ordered)(col("vec_id"))
+    d.join(broadcast(cuts), col("label") === col("cl"))
+      .filter(col("dist_r") > col("cutoff_r"))
+      .select(col("vec_id"), col("label"), col("dist_r"), col("cutoff_r"))
   }
 
   /** D33: kNN hubness — each vector's IN-degree in the directed kNN
@@ -1773,17 +1728,14 @@ object Similarity {
     * D14 edge relation (k·n rows), left-joined back to the corpus id
     * universe for the antihub zeros — no new corpus pass beyond D14's.
     */
-  def annHubness(t: Tables, k: Int = 3, bits: Int = 8, bucketCap: Int = 128,
-      ordered: Boolean = false): DataFrame = {
+  def annHubness(t: Tables, k: Int = 3, bits: Int = 8, bucketCap: Int = 128): DataFrame = {
     val indeg = knnEdges(t, k, bits, bucketCap)
       .groupBy(col("dst").as("vec_id"))
       .agg(count(lit(1)).as("in_degree"))
-    maybeSort(
-      t.embeddings.select(col("vec_id"))
-        .join(indeg, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("in_degree"), lit(0L)).as("in_degree")),
-      ordered)(col("vec_id"))
+    t.embeddings.select(col("vec_id"))
+      .join(indeg, Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("in_degree"), lit(0L)).as("in_degree"))
   }
 
   /** D32: triangle count + local clustering coefficient over the
@@ -1803,7 +1755,7 @@ object Similarity {
     * relation.
     */
   def annTriangles(t: Tables, k: Int = 5, threshold: Double = 0.0,
-      bits: Int = 8, bucketCap: Int = 128, ordered: Boolean = false): DataFrame = {
+      bits: Int = 8, bucketCap: Int = 128): DataFrame = {
     val e = knnEdges(t, k, bits, bucketCap)
       .filter(col("cos_r") >= threshold)
       .select(col("src"), col("dst"))
@@ -1822,15 +1774,13 @@ object Similarity {
     val deg = m.select(col("src").as("vec_id"))
       .unionAll(m.select(col("dst").as("vec_id")))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("degree"))
-    maybeSort(
-      deg.join(perNode, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("degree"),
-          coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-          when(col("degree") >= 2,
-            r6(lit(2.0) * coalesce(col("n_triangles"), lit(0L)).cast("double") /
-              (col("degree") * (col("degree") - 1)).cast("double")))
-            .as("clustering_r")),
-      ordered)(col("vec_id"))
+    deg.join(perNode, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("degree"),
+        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
+        when(col("degree") >= 2,
+          r6(lit(2.0) * coalesce(col("n_triangles"), lit(0L)).cast("double") /
+            (col("degree") * (col("degree") - 1)).cast("double")))
+          .as("clustering_r"))
   }
 
   /** D31: prefix-energy curve — the "can I truncate the embeddings"
@@ -1974,8 +1924,7 @@ object Similarity {
     * recursion pattern).
     */
   def annMmrDiversify(t: Tables, nQueries: Int = 8, k: Int = 5,
-      poolM: Int = 20, lambda: Double = 0.5,
-      ordered: Boolean = false): DataFrame = {
+      poolM: Int = 20, lambda: Double = 0.5): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val pool = annTopkBruteforce(t, nQueries, poolM)
@@ -2025,7 +1974,7 @@ object Similarity {
       }
       emitted.iterator
     }.toDF("q_id", "rank", "vec_id", "cos_r", "mmr_r")
-    maybeSort(out, ordered)(col("q_id"), col("rank"))
+    out
   }
 
   /** D37: IVF nprobe-tuning card — recall@k AND scanned-corpus
@@ -2045,8 +1994,7 @@ object Similarity {
     * the DECIMAL mean so the card is engine-deterministic.
     */
   def annNprobeTuning(t: Tables, nQueries: Int = 8, k: Int = 3,
-      nCells: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8),
-      ordered: Boolean = false): DataFrame = {
+      nCells: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     val spark = t.spark
     val maxP = probes.max
     val coarse = hashCenters(t, nCells)
@@ -2099,17 +2047,15 @@ object Similarity {
           col("k_exact").cast("double")).as("recall_r"),
         r6(col("n_scan").cast("double") / col("n_total").cast("double"))
           .as("scan_frac_r"))
-    maybeSort(
-      perQ.groupBy(col("nprobe"))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("recall_r").cast(DecimalType(18, 6))).as("sr"),
-          sum(col("scan_frac_r").cast(DecimalType(18, 6))).as("ss"))
-        .select(col("nprobe"), col("n_queries"),
-          r6(col("sr").cast("double") / col("n_queries").cast("double"))
-            .as("mean_recall_r"),
-          r6(col("ss").cast("double") / col("n_queries").cast("double"))
-            .as("mean_scan_frac_r")),
-      ordered)(col("nprobe"))
+    perQ.groupBy(col("nprobe"))
+      .agg(count(lit(1)).as("n_queries"),
+        sum(col("recall_r").cast(DecimalType(18, 6))).as("sr"),
+        sum(col("scan_frac_r").cast(DecimalType(18, 6))).as("ss"))
+      .select(col("nprobe"), col("n_queries"),
+        r6(col("sr").cast("double") / col("n_queries").cast("double"))
+          .as("mean_recall_r"),
+        r6(col("ss").cast("double") / col("n_queries").cast("double"))
+          .as("mean_scan_frac_r"))
   }
 
   /** D41: GRAPH-based ANN search — the greedy beam search that powers
@@ -2160,8 +2106,7 @@ object Similarity {
     * Determinism: BFS layers are set-valued (no scores), counts exact.
     */
   def annGraphReach(t: Tables, maxHops: Int = 6, kGraph: Int = 3,
-      bits: Int = 8, bucketCap: Int = 128, nTables: Int = 4,
-      ordered: Boolean = false): DataFrame = {
+      bits: Int = 8, bucketCap: Int = 128, nTables: Int = 4): DataFrame = {
     // default = the connected multi-table union D41 searches on;
     // nTables = 1 keeps the single-table graph as the fragmentation
     // probe this card originally diagnosed (D42b)
@@ -2186,7 +2131,7 @@ object Similarity {
     val unreached = ids.agg(count(lit(1)).as("n_total"))
       .crossJoin(broadcast(vis.agg(count(lit(1)).as("n_reached"))))
       .select(lit(-1L).as("hop"), (col("n_total") - col("n_reached")).as("n_vertices"))
-    maybeSort(reached.unionByName(unreached), ordered)(col("hop"))
+    reached.unionByName(unreached)
   }
 
   /** D44: IVF nlist TUNING card — D37 sweeps nprobe (what a QUERY
@@ -2206,8 +2151,7 @@ object Similarity {
     * cross-size state. Decimal-routed error sums (two-level decimal
     * sums are exact, so the oracle's one-level sum is bit-identical).
     */
-  def annNlistTuning(t: Tables, sizes: Seq[Int] = Seq(4, 8, 16),
-      ordered: Boolean = false): DataFrame = {
+  def annNlistTuning(t: Tables, sizes: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
     val e = withNorm(t.embeddings).select(col("vec_id"), col("v"), col("n2"))
     val per = sizes.map { nc =>
       val asg = withCell(e, hashCenters(t, nc))
@@ -2225,7 +2169,7 @@ object Similarity {
             .as("max_share_r"),
           (lit(nc.toLong) - col("n_used")).as("n_empty_cells"))
     }
-    maybeSort(per.reduce(_ unionByName _), ordered)(col("n_cells"))
+    per.reduce(_ unionByName _)
   }
 
   /** D41 default rides the CONNECTED `nTables`-table edge union
@@ -2238,7 +2182,7 @@ object Similarity {
     */
   def annGraphSearch(t: Tables, nQueries: Int = 8, beam: Int = 8,
       rounds: Int = 3, k: Int = 5, kGraph: Int = 3, bits: Int = 8,
-      bucketCap: Int = 128, nTables: Int = 4, ordered: Boolean = false): DataFrame = {
+      bucketCap: Int = 128, nTables: Int = 4): DataFrame = {
     val e = withNorm(t.embeddings)
     val edges =
       (if (nTables <= 1) knnEdges(t, kGraph, bits, bucketCap)
@@ -2252,12 +2196,10 @@ object Similarity {
     // sf0.1 min 4.24 s lazy vs 4.94 s truncated, sf1 5.84 vs 8.12 s
     // (−28%). The D43/D52/D53 sweeps keep truncation: they pay the
     // unroll PER SWEEP POINT, which is where it actually compounds.
-    maybeSort(
-      beamSearch(e, edges, nQueries, beam, rounds, truncate = false)
-        .withColumn("rank", row_number().over(beamW).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r")),
-      ordered)(col("q_id"), col("rank"))
+    beamSearch(e, edges, nQueries, beam, rounds, truncate = false)
+      .withColumn("rank", row_number().over(beamW).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r"))
   }
 
   /** D52: LAYERED graph search — the HNSW insight adapted to what the
@@ -2287,7 +2229,7 @@ object Similarity {
   def annGraphSearchLayered(t: Tables, nQueries: Int = 8, beam: Int = 8,
       rounds: Int = 3, k: Int = 5, kGraph: Int = 3, bits: Int = 8,
       bucketCap: Int = 128, nTables: Int = 4, sampleMod: Int = 8,
-      beam1: Int = 8, rounds1: Int = 4, ordered: Boolean = false): DataFrame = {
+      beam1: Int = 8, rounds1: Int = 4): DataFrame = {
     val e = withNorm(t.embeddings)
     val es = e.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0L)
     val edges1 = Dedup.stableCheckpoint(
@@ -2309,12 +2251,10 @@ object Similarity {
     val ent0 = beamSearchFrom(e, edges1, nQueries, seeds1, beam1, rounds1,
         truncate = true)
       .select(col("q_id"), col("vec_id"))
-    maybeSort(
-      beamSearchFrom(e, edges0, nQueries, ent0, beam, rounds, truncate = true)
-        .withColumn("rank", row_number().over(beamW).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r")),
-      ordered)(col("q_id"), col("rank"))
+    beamSearchFrom(e, edges0, nQueries, ent0, beam, rounds, truncate = true)
+      .withColumn("rank", row_number().over(beamW).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r"))
   }
 
   /** The D41 search core: greedy beam over `edges` from the fixed
@@ -2628,18 +2568,16 @@ object Similarity {
       rounds: Int = 4, k: Int = 5, kGraph: Int = 3, bits: Int = 8,
       bucketCap: Int = 128, nTables: Int = 4, kOut: Int = 16,
       descRounds: Int = 3, sampleMod: Int = 8, kOutC: Int = 8,
-      descRoundsC: Int = 2, ordered: Boolean = false): DataFrame = {
+      descRoundsC: Int = 2): DataFrame = {
     val e = withNorm(t.embeddings)
     val (edges, seeds0) = nndSearchParts(t, nQueries, beam, rounds, kGraph,
       bits, bucketCap, nTables, kOut, descRounds, sampleMod, kOutC, descRoundsC)
     val beamW = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_r").desc, col("vec_id").asc)
-    maybeSort(
-      beamSearchFrom(e, edges, nQueries, seeds0, beam, rounds, truncate = true)
-        .withColumn("rank", row_number().over(beamW).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r")),
-      ordered)(col("q_id"), col("rank"))
+    beamSearchFrom(e, edges, nQueries, seeds0, beam, rounds, truncate = true)
+      .withColumn("rank", row_number().over(beamW).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("cos_r"))
   }
 
   /** The D53 build: (symmetrized refined full-graph edges, per-query
@@ -2688,8 +2626,7 @@ object Similarity {
     */
   def annBeamTuning(t: Tables, beams: Seq[Int] = Seq(2, 8, 32),
       rounds: Int = 4, k: Int = 5, nQueries: Int = 8, kPerTable: Int = 3,
-      bits: Int = 8, nTables: Int = 4, bucketCap: Int = 128,
-      ordered: Boolean = false): DataFrame = {
+      bits: Int = 8, nTables: Int = 4, bucketCap: Int = 128): DataFrame = {
     val e = withNorm(t.embeddings)
     val edges = Dedup.stableCheckpoint(
       knnEdgesMulti(t, kPerTable, bits, nTables, bucketCap))
@@ -2722,7 +2659,7 @@ object Similarity {
         .select(lit(b.toLong).as("beam"), col("mean_recall_r"),
           col("mean_best_cos_r"), col("exact_best_cos_r"))
     }
-    maybeSort(perBeam.reduce(_ unionByName _), ordered)(col("beam"))
+    perBeam.reduce(_ unionByName _)
   }
 
   /** D51: the cross-METHOD recall ledger — graph beam search (at the
@@ -2749,8 +2686,7 @@ object Similarity {
       bucketCap: Int = 128, nCells: Int = 16, nProbe: Int = 4,
       lshBits: Int = 5, lshTables: Int = 4, lshCap: Int = 64,
       kOut: Int = 16, descRounds: Int = 3,
-      indexPath: Option[String] = None,
-      ordered: Boolean = false): DataFrame = {
+      indexPath: Option[String] = None): DataFrame = {
     val e = withNorm(t.embeddings)
     // the exact leg grades all five method rows — checkpoint its ≤
     // nQueries·k rows so the D1 corpus pass runs ONCE, not per method
@@ -2912,13 +2848,11 @@ object Similarity {
       .filter(col("rn") <= k).select(col("q_id"), col("vec_id"))
     val candsL = lhits.select(col("q_id"), col("vec_id")).distinct()
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_cands"))
-    maybeSort(
-      methodRow("graph_beam", foundG, candsG)
-        .unionByName(methodRow("graph_layered", foundLay, candsLay))
-        .unionByName(methodRow("graph_nnd", foundN, candsN))
-        .unionByName(methodRow("ivf", foundI, candsI))
-        .unionByName(methodRow("lsh_multi", foundL, candsL)),
-      ordered)(col("method"))
+    methodRow("graph_beam", foundG, candsG)
+      .unionByName(methodRow("graph_layered", foundLay, candsLay))
+      .unionByName(methodRow("graph_nnd", foundN, candsN))
+      .unionByName(methodRow("ivf", foundI, candsI))
+      .unionByName(methodRow("lsh_multi", foundL, candsL))
   }
 
   /** D55: PREFIX-DIMENSION recall card (the Matryoshka/MRL question —
@@ -2948,8 +2882,7 @@ object Similarity {
     * is identical to the single-stage form by construction.
     */
   def annPrefixDimRecall(t: Tables, nQueries: Int = 8, k: Int = 5,
-      prefixes: Seq[Int] = Seq(8, 16, 32, 64),
-      ordered: Boolean = false): DataFrame = {
+      prefixes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     val e = withNorm(t.embeddings)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
@@ -3000,7 +2933,7 @@ object Similarity {
         .select(lit(p.toLong).as("prefix_dims"), col("mean_recall_r"),
           col("mean_full_cos_r"))
     }
-    maybeSort(perPrefix.reduce(_ unionByName _), ordered)(col("prefix_dims"))
+    perPrefix.reduce(_ unionByName _)
   }
 
   /** Prefix-p retrieval pool: exact top-`kPool` per query by cosine
@@ -3151,8 +3084,7 @@ object Similarity {
     * corpus-sized N−1).
     */
   def annPrefixRerankLedger(t: Tables, nQueries: Int = 8, k: Int = 5,
-      prefixes: Seq[Int] = Seq(16, 32), kPool: Int = 20,
-      ordered: Boolean = false): DataFrame = {
+      prefixes: Seq[Int] = Seq(16, 32), kPool: Int = 20): DataFrame = {
     val e = withNorm(t.embeddings)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
@@ -3200,8 +3132,7 @@ object Similarity {
       .crossJoin(broadcast(e.agg((count(lit(1)) - 1).as("n_cands"))))
     val fullRow = ledgerRow("exact_full", dim,
       exact.select(col("xq").as("q_id"), col("xv").as("vec_id")), fullCands)
-    maybeSort(perP.reduce(_ unionByName _).unionByName(fullRow),
-      ordered)(col("prefix_dims"), col("method"))
+    perP.reduce(_ unionByName _).unionByName(fullRow)
   }
 
   /** D54: NN-descent ROUNDS tuning card — what each refinement round
@@ -3223,7 +3154,7 @@ object Similarity {
   def annNndTuning(t: Tables, nQueries: Int = 8, k: Int = 5,
       kGraph: Int = 3, bits: Int = 8, nTables: Int = 4,
       bucketCap: Int = 128, kOut: Int = 16, descRounds: Int = 3,
-      beam: Int = 8, rounds: Int = 4, ordered: Boolean = false): DataFrame = {
+      beam: Int = 8, rounds: Int = 4): DataFrame = {
     val e = withNorm(t.embeddings)
     val levels = nndChainFor(t, 1, kGraph, bits, nTables, bucketCap,
       kOut, descRounds)._2
@@ -3272,6 +3203,6 @@ object Similarity {
           dmean(col("recall_q")).as("mean_recall_r"))
       eq.crossJoin(broadcast(searchRow))
     }
-    maybeSort(perLevel.reduce(_ unionByName _), ordered)(col("desc_rounds"))
+    perLevel.reduce(_ unionByName _)
   }
 }

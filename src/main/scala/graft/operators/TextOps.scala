@@ -49,13 +49,12 @@ object TextOps {
   /** E1: language ID — count marker-stopword hits per language, argmax
     * with deterministic tiebreak (declaration order).
     */
-  def textLangid(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def textLangid(t: Tables): DataFrame =
     withLangid(t.documents.select(col("doc_id"), col("lang"), col("text")))
       .withColumn("is_match", (col("pred_lang") === col("lang")).cast("int"))
       .select(col("doc_id"), col("lang"),
         col("en_n"), col("de_n"), col("es_n"), col("fr_n"), col("zh_n"),
-        col("pred_lang"), col("is_match")),
-    ordered)(col("doc_id"))
+        col("pred_lang"), col("is_match"))
 
   /** Adds the E2 quality columns (counts, ratios, `quality_score`) to
     * any relation with a `text` column — the batch/streaming-shared
@@ -81,24 +80,22 @@ object TextOps {
     * into a bounded score. Ratios are int/int divisions (portable
     * doubles); score rounded to 6dp.
     */
-  def textQuality(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def textQuality(t: Tables): DataFrame =
     withQuality(t.documents.select(col("doc_id"), col("text")))
       .select(col("doc_id"), col("n_chars"), col("n_tokens"), col("stop_n"),
-        col("alpha_n"), col("stop_ratio"), col("alpha_ratio"), col("quality_score")),
-    ordered)(col("doc_id"))
+        col("alpha_n"), col("stop_ratio"), col("alpha_ratio"), col("quality_score"))
 
   /** E3: token counting — whitespace tokens, BPE-ish regex tokens
     * (letter runs / digits / other non-space), and a chars/4 estimator.
     */
-  def textTokencount(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def textTokencount(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"), col("text"))
       .withColumn("ws_tokens", size(split(col("text"), " ")).cast("long"))
       .withColumn("re_tokens",
         size(regexp_extract_all(lower(col("text")), lit("[a-z]+|[0-9]|[^a-z0-9 ]"), lit(0))).cast("long"))
       .withColumn("est_bpe", ceil(length(col("text")) / lit(4.0)).cast("long"))
-      .select(col("doc_id"), col("ws_tokens"), col("re_tokens"), col("est_bpe")),
-    ordered)(col("doc_id"))
+      .select(col("doc_id"), col("ws_tokens"), col("re_tokens"), col("est_bpe"))
 
   /** E4: document fingerprinting — min 60-bit hash over word 5-gram
     * windows (winnowing-lite); identical fingerprints cluster near-dup
@@ -108,32 +105,31 @@ object TextOps {
     * collapse whitespace, then hash ("fuzzy-exact": catches trivially
     * reformatted copies that byte-level dedup misses).
     */
-  def textNormalizeDedup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def textNormalizeDedup(t: Tables): DataFrame = {
     val norm = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
     t.documents
       .select(md5(norm).as("norm_hash"), col("doc_id"))
       .groupBy(col("norm_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-  }, ordered)(col("norm_hash"))
+  }
 
   /** E6: quality filtering — the keep/drop decision a training
     * pipeline applies from the E2 scores (kept set + reason flags).
     */
-  def docQualityFilter(t: Tables, minScore: Double = 0.5, ordered: Boolean = false): DataFrame = maybeSort(
+  def docQualityFilter(t: Tables, minScore: Double = 0.5): DataFrame =
     textQuality(t)
       .select(col("doc_id"), col("quality_score"),
         (col("n_tokens") >= 20).cast("int").as("len_ok"),
         (col("stop_ratio") > 0.0).cast("int").as("stop_ok"))
-      .filter(col("quality_score") >= minScore),
-    ordered)(col("doc_id"))
+      .filter(col("quality_score") >= minScore)
 
   /** E7: deterministic stratified sampling — per-language keep rates
     * (downsample the dominant language, keep the rest), decided by a
     * content-hash bucket so the sample is stable across runs/cluster
     * sizes (unlike rand()-based sampleBy).
     */
-  def docStratifiedSample(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docStratifiedSample(t: Tables): DataFrame = {
     val rates: Map[String, Int] = Map("en" -> 30).withDefaultValue(80) // % kept
     val bucket = md5_60(col("text")) % 100
     val rate = LangMarkers.map(_._1).foldLeft(lit(rates.default(""))) {
@@ -143,7 +139,7 @@ object TextOps {
       .select(col("doc_id"), col("lang"), bucket.as("bucket"))
       .filter(col("bucket") < rate)
       .select(col("doc_id"), col("lang"), col("bucket"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E8: vocabulary builder — global token frequencies + ranks (the
     * seed vocabulary a tokenizer trainer starts from). Explode →
@@ -188,7 +184,7 @@ object TextOps {
     * arithmetic + substr so chunk boundaries are engine-identical;
     * narrow explode, no shuffle.
     */
-  def docChunk(t: Tables, size: Int = 200, stride: Int = 180, ordered: Boolean = false): DataFrame = maybeSort({
+  def docChunk(t: Tables, size: Int = 200, stride: Int = 180): DataFrame = {
     val len = length(col("text"))
     val n = when(len <= size, lit(1))
       .otherwise(floor((len - size + (stride - 1)) / lit(stride)).cast("int") + 1)
@@ -199,7 +195,7 @@ object TextOps {
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         length(substr(col("text"), col("chunk_idx") * stride + 1, lit(size)))
           .cast("long").as("chunk_len"))
-  }, ordered)(col("doc_id"), col("chunk_idx"))
+  }
 
   /** Two-phase per-source running sum of `n_tokens` ordered by
     * `orderCols` within `source` — the scale-safe replacement for
@@ -252,8 +248,7 @@ object TextOps {
     * degenerate clustering only collapses toward the old per-source
     * bound, never below it.
     */
-  def docPack(t: Tables, budget: Int = 512, nGroups: Int = 32,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docPack(t: Tables, budget: Int = 512, nGroups: Int = 32): DataFrame = {
     val bounds = t.documents
       .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val width = greatest(lit(1L), floor((col("hi") - col("lo")) / lit(nGroups)) + 1L)
@@ -265,26 +260,24 @@ object TextOps {
     groupedRunningSum(base, Seq(col("doc_id")))
       .select(col("doc_id"), col("source"), col("n_tokens"),
         floor((col("cum") - col("n_tokens")) / lit(budget)).cast("long").as("bin"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E11: rolling-hash fingerprint — min Rabin–Karp hash over 16-char
     * windows (native O(n) RollingHashMin expression; the md5-based E4
     * fingerprints word windows, this one character windows).
     */
-  def textRollingFingerprint(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def textRollingFingerprint(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"),
-        call_function("graft_rolling_min", lower(col("text"))).as("rolling_min")),
-    ordered)(col("doc_id"))
+        call_function("graft_rolling_min", lower(col("text"))).as("rolling_min"))
 
-  def textFingerprint(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def textFingerprint(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"),
         array_min(call_function("graft_gram5_hashes", col("text"))).as("fingerprint"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("fingerprint"))))
-      .select(col("doc_id"), col("fingerprint"), col("cluster_size")),
-    ordered)(col("doc_id"))
+      .select(col("doc_id"), col("fingerprint"), col("cluster_size"))
 
   /** Word bigrams of lowercased `text` as "a b" strings; empty below
     * 2 tokens. Native WordGrams expression — the composed
@@ -313,7 +306,7 @@ object TextOps {
     * keys, so skew is bounded by document length, not corpus size.
     */
   def textRepetition(t: Tables, dupTokMax: Double = 0.3, topTokMax: Double = 0.2,
-      dupBigramMax: Double = 0.2, ordered: Boolean = false): DataFrame = maybeSort({
+      dupBigramMax: Double = 0.2): DataFrame = {
     val tk = tokens(col("text"))
     val base = t.documents
       .select(col("doc_id"), tk.as("tk"), bigramStrings(col("text")).as("bg"))
@@ -341,7 +334,7 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"), col("n_distinct_tokens"), col("top_token_n"),
         col("n_bigrams"), col("n_distinct_bigrams"), col("dup_token_frac"),
         col("top_token_frac"), col("dup_bigram_frac"), col("repetitive"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E13: collocation extraction — corpus-level bigram lift (the
     * log-free PMI ratio p(ab)/(p(a)p(b))), the vocabulary-analysis
@@ -391,7 +384,7 @@ object TextOps {
     * column is free: grp = bucket / 32 slices the bucket range into 32
     * contiguous, hash-balanced segments — no bounds pass needed.
     */
-  def docMixBudget(t: Tables, capTokens: Long = 1000, ordered: Boolean = false): DataFrame = maybeSort({
+  def docMixBudget(t: Tables, capTokens: Long = 1000): DataFrame = {
     val base = t.documents
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_tokens"),
@@ -400,7 +393,7 @@ object TextOps {
     groupedRunningSum(base, Seq(col("bucket"), col("doc_id")))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("bucket"),
         col("cum").as("cum_tokens"), (col("cum") <= capTokens).cast("int").as("keep"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** Two-phase per-shard position — the scale-safe replacement for
     * `row_number() over (partition by shard)`, whose parallelism is
@@ -449,11 +442,9 @@ object TextOps {
     * and its position within the shard via the two-phase
     * [[withShardPos]] (never a shard-partitioned corpus window).
     */
-  def docShardShuffle(t: Tables, nShards: Int = 16, seed: String = "graft",
-      ordered: Boolean = false): DataFrame = maybeSort(
+  def docShardShuffle(t: Tables, nShards: Int = 16, seed: String = "graft"): DataFrame =
     withShardPos(t.documents.select(col("doc_id")), nShards, seed)
-      .select(col("doc_id"), col("sort_key"), col("shard"), col("pos")),
-    ordered)(col("doc_id"))
+      .select(col("doc_id"), col("sort_key"), col("shard"), col("pos"))
 
   /** E18: document PII scrubbing — the doc-level counterpart of
     * ev_scrub_props (A23): mask email addresses and digit runs before
@@ -476,10 +467,9 @@ object TextOps {
       .withColumn("n_digit_runs",
         size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0))).cast("long"))
 
-  def docScrubPii(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docScrubPii(t: Tables): DataFrame =
     withScrub(t.documents.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), col("text_masked"), col("n_emails"), col("n_digit_runs")),
-    ordered)(col("doc_id"))
+      .select(col("doc_id"), col("text_masked"), col("n_emails"), col("n_digit_runs"))
 
   /** E51: PII incidence card per source — the audit face of E18 (the
     * scrubber masks; this measures): per source, docs, affected-doc
@@ -605,8 +595,7 @@ object TextOps {
     * tiny relation, broadcast back. Weight sums go through
     * DECIMAL(18,6) of r6'd terms so normalization is order-independent.
     */
-  def docMixWeights(t: Tables, temperature: Double = 0.7,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docMixWeights(t: Tables, temperature: Double = 0.7): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val s = t.documents
       .select(col("source"), size(tokens(col("text"))).cast("long").as("n"))
@@ -622,7 +611,7 @@ object TextOps {
         col("wgt_r"),
         r6(col("wgt_r") / col("sumw")).as("norm_weight_r"),
         r6(col("wgt_r") / col("sumw") / col("share")).as("boost_r"))
-  }, ordered)(col("source"))
+  }
 
   /** E20: deterministic k-per-source sampling — exactly k documents
     * per source (all of them if a source has fewer), chosen by a
@@ -639,8 +628,7 @@ object TextOps {
     * top-k per source is exactly contained in the union of the local
     * top-ks, so the two-stage result is exact.
     */
-  def docSampleK(t: Tables, k: Int = 25, seed: String = "sample",
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docSampleK(t: Tables, k: Int = 25, seed: String = "sample"): DataFrame = {
     val w1 = Window.partitionBy(col("source"), col("pid")).orderBy(col("skey"), col("doc_id"))
     val w2 = Window.partitionBy(col("source")).orderBy(col("skey"), col("doc_id"))
     t.documents
@@ -652,7 +640,7 @@ object TextOps {
       .withColumn("rank", row_number().over(w2).cast("long"))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("source"), col("skey"), col("rank"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E32: QUALITY-WEIGHTED sampling without replacement (Efraimidis–
     * Spirakis A-Res): each doc draws a deterministic hash-uniform
@@ -676,8 +664,7 @@ object TextOps {
     * (per-partition heap + driver merge of k × partitions rows),
     * never a global sort or window.
     */
-  def docSampleWeighted(t: Tables, k: Int = 100,
-      ordered: Boolean = false): DataFrame = maybeSort(
+  def docSampleWeighted(t: Tables, k: Int = 100): DataFrame =
     withQuality(t.documents.select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         greatest(col("quality_score"), lit(0.001)).as("w"))
@@ -686,8 +673,7 @@ object TextOps {
           .cast("double") / lit(999984.0))))
       .select(col("doc_id"), col("w"), r6(col("lnu_r") / col("w")).as("key_r"))
       .orderBy(col("key_r").desc, col("doc_id").asc)
-      .limit(k),
-    ordered)(col("doc_id"))
+      .limit(k)
 
   /** E21: deterministic train/valid/test split — per-mille hash
     * buckets of the doc_id (seeded, content-free) mapped to the split
@@ -713,14 +699,14 @@ object TextOps {
   }
 
   def docSplit(t: Tables, trainPermille: Int = 990, validPermille: Int = 5,
-      seed: String = "split", ordered: Boolean = false): DataFrame = maybeSort({
+      seed: String = "split"): DataFrame = {
     t.documents
       .select(col("doc_id"), col("source"), splitMille(seed).as("mille"))
       .withColumn("split",
         when(col("mille") < trainPermille, lit("train"))
           .when(col("mille") < trainPermille + validPermille, lit("valid"))
           .otherwise(lit("test")))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E22: BM25 relevance of every document against a fixed query-term
     * set — the retrieval scorer a corpus-search / hard-negative-mining
@@ -736,7 +722,7 @@ object TextOps {
     * engines; the sf-pinned corpus makes the r6 compare deterministic).
     */
   def textBm25(t: Tables, terms: Seq[String] = Seq("hash", "join", "vector"),
-      k1: Double = 1.2, b: Double = 0.75, ordered: Boolean = false): DataFrame = maybeSort({
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val (k1p1, oneMinusB) = (k1 + 1, 1 - b)
     val tfCols = terms.map(term =>
       size(filter(col("tk"), x => x === lit(term))).cast("long").as(s"tf_$term"))
@@ -760,7 +746,7 @@ object TextOps {
     f.crossJoin(broadcast(stats))
       .select(col("doc_id") +: col("dl") +:
         terms.map(term => col(s"tf_$term")) :+ r6(score).as("bm25_r"): _*)
-  }, ordered)(col("doc_id"))
+  }
 
   /** E23: unigram-LM log-probability scoring — the corpus's own
     * unigram distribution scores every document by mean token
@@ -779,7 +765,7 @@ object TextOps {
     * (Σ_occurrences lp_r ≡ Σ_terms c·lp_r exactly in DECIMAL(18,6)
     * arithmetic, so compression does not change the score).
     */
-  def textUnigramLogprob(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def textUnigramLogprob(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dtc = t.documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
@@ -794,7 +780,7 @@ object TextOps {
         sum(col("c_dw")).as("n_tokens"),
         sum(col("c_dw") * col("lp_r").cast(DecimalType(18, 6))).cast("double").as("sum_lp"))
       .withColumn("mean_lp_r", r6(col("sum_lp") / col("n_tokens")))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E31: bigram-LM log-probability scoring — E23's unigram signal
     * upgraded to conditional probabilities: each bigram scores
@@ -816,7 +802,7 @@ object TextOps {
     * (double-cast before the one division), rounded r6 BEFORE the
     * count-weighted DECIMAL sum; final mean is scalar double math.
     */
-  def textBigramLogprob(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def textBigramLogprob(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val db = t.documents
       .select(col("doc_id"), explode(bigramStrings(col("text"))).as("bg"))
@@ -837,7 +823,7 @@ object TextOps {
         sum(col("c_db")).as("n_bigrams"),
         sum(col("c_db") * col("lp_r").cast(DecimalType(18, 6))).cast("double").as("sum_lp"))
       .withColumn("mean_lp_r", r6(col("sum_lp") / col("n_bigrams")))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E29: token-entropy scoring — per-doc Shannon entropy (nats) of
     * the unigram distribution plus type-token ratio: the lexical-
@@ -858,7 +844,7 @@ object TextOps {
     * token-volume shuffle; the entropy rollup re-aggregates on
     * doc_id.
     */
-  def textEntropy(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def textEntropy(t: Tables): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dtc = t.documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
@@ -873,7 +859,7 @@ object TextOps {
         r6(log(col("n_tokens").cast("double")) -
           col("s_clnc") / col("n_tokens").cast("double")).as("entropy_r"),
         r6(col("n_types").cast("double") / col("n_tokens").cast("double")).as("ttr_r"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E24: duplicated-span ratio — the substring-level dedup SIGNAL
     * (Lee et al., "Deduplicating Training Data Makes Language Models
@@ -891,7 +877,7 @@ object TextOps {
     * that shared stage (ReusedExchange, PlanSpec-pinned); all math is
     * integer until the final ratio.
     */
-  def docSpanDedup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docSpanDedup(t: Tables): DataFrame = {
     val c = t.documents
       .select(col("doc_id"),
         explode(call_function("graft_gram4_hashes", col("text"))).as("h"))
@@ -904,7 +890,7 @@ object TextOps {
         sum(when(col("df") >= 2, col("c_sp")).otherwise(lit(0L))).as("n_dup_spans"))
       .withColumn("dup_ratio_r",
         r6(col("n_dup_spans").cast("double") / col("n_spans")))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E24b: duplicated-span REMOVAL — E24 scores the signal; this op
     * applies it the way Lee et al.'s ExactSubstr pipeline does: every
@@ -933,7 +919,7 @@ object TextOps {
     * reassembly — every join is an equi-join on (doc_id, j) or h,
     * nothing all-pairs, no low-cardinality window anywhere.
     */
-  def docSpanRemoval(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docSpanRemoval(t: Tables): DataFrame = {
     val spans = t.documents
       .filter(size(split(col("text"), " ")) >= 4)
       .select(col("doc_id"),
@@ -957,7 +943,7 @@ object TextOps {
         coalesce(col("text_clean"), lit("")).as("text_clean"),
         col("n_tokens"),
         (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E27: per-doc top-k TF-IDF keywords — the keyword-extraction /
     * topic-tagging step (metadata enrichment before indexing or
@@ -971,7 +957,7 @@ object TextOps {
     * rows bounded by a doc's distinct terms — never a low-cardinality
     * window).
     */
-  def textKeywords(t: Tables, k: Int = 3, ordered: Boolean = false): DataFrame = maybeSort({
+  def textKeywords(t: Tables, k: Int = 3): DataFrame = {
     val dtc = t.documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c_dw"))
@@ -985,7 +971,7 @@ object TextOps {
       .withColumn("rank", row_number().over(rankW).cast("long"))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("term"), col("tfidf_r"))
-  }, ordered)(col("doc_id"), col("rank"))
+  }
 
   /** E28: winnowing fingerprints (Schleimer et al., the MOSS
     * algorithm): the minimum gram hash of every w-wide window of
@@ -1001,7 +987,7 @@ object TextOps {
     * measured 9.3 s vs sub-second at sf0.1 in interpreted eval); only
     * the selected ~2/(w+1) fraction explodes into the output relation.
     */
-  def textWinnow(t: Tables, w: Int = 8, ordered: Boolean = false): DataFrame = maybeSort({
+  def textWinnow(t: Tables, w: Int = 8): DataFrame = {
     val gh = call_function("graft_gram4_hashes", col("text"))
     val wins =
       if (w == 8) call_function("graft_winnow8_mins", gh)
@@ -1012,7 +998,7 @@ object TextOps {
           .otherwise(array(array_min(gh))))
     t.documents
       .select(col("doc_id"), explode(wins).as("fingerprint"))
-  }, ordered)(col("doc_id"), col("fingerprint"))
+  }
 
   /** E26: CCNet-style quality bucketing — head/middle/tail thirds by
     * unigram-LM mean log-prob (E23), the corpus-relative grading CCNet
@@ -1029,8 +1015,7 @@ object TextOps {
     * relation. The E23 stages feeding both branches dedupe via
     * exchange reuse.
     */
-  def docQualityBucket(t: Tables, sampleK: Int = 10000,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docQualityBucket(t: Tables, sampleK: Int = 10000): DataFrame = {
     val lpq = textUnigramLogprob(t).select(col("doc_id"), col("mean_lp_r"))
     val th = lpq
       .withColumn("qk", md5_60(concat(lit("qb:"), col("doc_id").cast("string"))))
@@ -1043,7 +1028,7 @@ object TextOps {
         when(col("mean_lp_r") >= col("p67"), "head")
           .when(col("mean_lp_r") >= col("p33"), "middle")
           .otherwise("tail").as("bucket"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E14: the composed curation pipeline — quality score (E2), langid
     * agreement (E1), and exact-dedup canonical selection (C1) joined
@@ -1057,7 +1042,7 @@ object TextOps {
     * scan of the corpus and ONE shuffle (the canonical-selection
     * window on content_hash) — no joins, no second scan.
     */
-  def docCurate(t: Tables, minScore: Double = 0.5, ordered: Boolean = false): DataFrame = maybeSort({
+  def docCurate(t: Tables, minScore: Double = 0.5): DataFrame = {
     withLangid(withQuality(t.documents.select(col("doc_id"), col("lang"), col("text"))))
       .withColumn("content_hash", md5(col("text")))
       .withColumn("keep_id",
@@ -1071,7 +1056,7 @@ object TextOps {
       .select(col("doc_id"), col("lang"), col("pred_lang"), col("n_tokens"),
         col("quality_score"), col("low_quality"), col("lang_mismatch"),
         col("duplicate"), col("keep"))
-  }, ordered)(col("doc_id"))
+  }
 
   /** E52: curation FUNNEL — the G13 pipeline's drop accounting as one
     * card: every document attributed to exactly ONE stage in the
@@ -1282,9 +1267,8 @@ object TextOps {
         (col("z") >= 0).cast("int").as("keep"))
   }
 
-  def docQualityModel(t: Tables, vocabV: Int = 4096, bias: Double = 0.1,
-      ordered: Boolean = false): DataFrame = maybeSort(
-    scoreWithWeights(t, qualityModelWeights(t, vocabV), bias), ordered)(col("doc_id"))
+  def docQualityModel(t: Tables, vocabV: Int = 4096, bias: Double = 0.1): DataFrame =
+    scoreWithWeights(t, qualityModelWeights(t, vocabV), bias)
 
   /** E30t: the E30 weights TRAINED from data instead of the hash
     * stand-in — one exact logistic-regression gradient step from w = 0
@@ -1319,9 +1303,8 @@ object TextOps {
   }
 
   def docQualityModelTrained(t: Tables, vocabV: Int = 4096, bias: Double = 0.1,
-      minScore: Double = 0.5, ordered: Boolean = false): DataFrame = maybeSort(
-    scoreWithWeights(t, qualityModelTrainedWeights(t, vocabV, minScore), bias),
-    ordered)(col("doc_id"))
+      minScore: Double = 0.5): DataFrame =
+    scoreWithWeights(t, qualityModelTrainedWeights(t, vocabV, minScore), bias)
 
   /** E49: trained-model agreement card — the confusion matrix of
     * E30t's learned keep/drop against the E14 weak labels it was
@@ -1379,8 +1362,7 @@ object TextOps {
     * 1-row aggregate of the bin relation.
     */
   def docQualityCalibration(t: Tables, vocabV: Int = 4096, bias: Double = 0.1,
-      minScore: Double = 0.5, nBins: Int = 10,
-      ordered: Boolean = false): DataFrame = {
+      minScore: Double = 0.5, nBins: Int = 10): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val pred = docQualityModelTrained(t, vocabV, bias, minScore)
       .select(col("doc_id"), col("score_r"))
@@ -1405,7 +1387,7 @@ object TextOps {
       .agg(sum(col("gap_r").cast(DecimalType(18, 6)) * col("n_docs")).as("sg"),
         sum(col("n_docs")).as("nn"))
       .select(r6(col("sg").cast("double") / col("nn").cast("double")).as("ece_r"))
-    maybeSort(cal.crossJoin(broadcast(ece)), ordered)(col("bin"))
+    cal.crossJoin(broadcast(ece))
   }
 
   /** E34: language confusion matrix — declared `lang` × E1-predicted
@@ -1623,16 +1605,14 @@ object TextOps {
     * shuffle; family size/id ride a window over that corpus-
     * cardinality key; only multi-doc families are emitted.
     */
-  def docTemplatePrefix(t: Tables, k: Int = 8, ordered: Boolean = false): DataFrame = {
+  def docTemplatePrefix(t: Tables, k: Int = 8): DataFrame = {
     val w = Window.partitionBy(col("prefix"))
-    maybeSort(
-      t.documents
-        .select(col("doc_id"), concat_ws(" ", slice(tokens(col("text")), 1, k)).as("prefix"))
-        .withColumn("family_size", count(lit(1)).over(w))
-        .withColumn("family_id", min(col("doc_id")).over(w))
-        .filter(col("family_size") >= 2)
-        .select(col("doc_id"), col("family_id"), col("family_size")),
-      ordered)(col("doc_id"))
+    t.documents
+      .select(col("doc_id"), concat_ws(" ", slice(tokens(col("text")), 1, k)).as("prefix"))
+      .withColumn("family_size", count(lit(1)).over(w))
+      .withColumn("family_id", min(col("doc_id")).over(w))
+      .filter(col("family_size") >= 2)
+      .select(col("doc_id"), col("family_id"), col("family_size"))
   }
 
   /** E40: BPE pair statistics — frequency-weighted adjacent character
@@ -1837,8 +1817,7 @@ object TextOps {
     * chunk-hash partitioning as the copy count, the rollup keys on
     * #sources.
     */
-  def docCdcDupMass(t: Tables, window: Int = 16, modDiv: Int = 64,
-      ordered: Boolean = false): DataFrame = {
+  def docCdcDupMass(t: Tables, window: Int = 16, modDiv: Int = 64): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val first = Window.partitionBy(col("chunk_hash"))
       .orderBy(col("doc_id"), col("chunk_idx"))
@@ -1854,7 +1833,7 @@ object TextOps {
         col("n_dup_chunks"), col("dup_bytes"),
         r6(col("dup_bytes").cast("double") / col("total_bytes").cast("double"))
           .as("dup_share_r"))
-    maybeSort(out, ordered)(col("source"))
+    out
   }
 
   /** E56: Heaps'-law vocabulary-growth card — cumulative distinct
@@ -1874,8 +1853,7 @@ object TextOps {
     * window). OLS on the micro-ln integer lattice (E33's convention:
     * exact integer moments, units cancel in slope and r²).
     */
-  def corpusHeapsLaw(t: Tables, nBuckets: Int = 10,
-      ordered: Boolean = false): DataFrame = {
+  def corpusHeapsLaw(t: Tables, nBuckets: Int = 10): DataFrame = {
     val mx = t.documents.agg(max(col("doc_id")).as("mx"))
     val tk = t.documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -1916,7 +1894,7 @@ object TextOps {
         when(sxx > 0, r6((col("sy") - slope * col("sx")) / nD / lit(1e6)))
           .as("heaps_lnk_r"),
         when(sxx > 0 && syy > 0, r6(sxy * sxy / (sxx * syy))).as("r2_r"))
-    maybeSort(curve.crossJoin(broadcast(fit)), ordered)(col("bucket"))
+    curve.crossJoin(broadcast(fit))
   }
 
   /** E55: content-defined chunking (the rsync/LBFS cut rule) — chunk
@@ -1937,8 +1915,7 @@ object TextOps {
     * corpus-cardinality) — the C1 exact-dedup shuffle class, never a
     * pair join.
     */
-  def docCdcChunks(t: Tables, window: Int = 16, modDiv: Int = 64,
-      ordered: Boolean = false): DataFrame = {
+  def docCdcChunks(t: Tables, window: Int = 16, modDiv: Int = 64): DataFrame = {
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("e"))
     // BYTE-LEVEL end to end: the document is cast to its UTF-8 octets
     // once and every downstream step — rolling hash, cut offsets,
@@ -1973,10 +1950,8 @@ object TextOps {
         (col("e") - col("start") + 1).as("chunk_len"),
         md5(hex(expr("substring(bt, CAST(start AS INT), CAST(e - start + 1 AS INT))")))
           .as("chunk_hash"))
-    maybeSort(
-      seg.withColumn("n_copies",
-        count(lit(1)).over(Window.partitionBy(col("chunk_hash")))),
-      ordered)(col("doc_id"), col("chunk_idx"))
+    seg.withColumn("n_copies",
+      count(lit(1)).over(Window.partitionBy(col("chunk_hash"))))
   }
 
   /** Multi-byte plant shared by the CDC gate keys and their DuckDB
@@ -2029,7 +2004,7 @@ object TextOps {
     * the bigram key — semantics unchanged.
     */
   def docPplReference(t: Tables, refSource: String = "src0",
-      pplMax: Double = 40.0, ordered: Boolean = false): DataFrame = maybeSort({
+      pplMax: Double = 40.0): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val db = t.documents
       .select(col("doc_id"), col("source"), explode(bigramStrings(col("text"))).as("bg"))
@@ -2058,7 +2033,7 @@ object TextOps {
           count(lit(1)).cast("double")).as("mean_ppl_r"),
         r6(sum(when(col("ppl_r") > pplMax, 1L).otherwise(0L)).cast("double") /
           count(lit(1)).cast("double")).as("p_filtered_r"))
-  }, ordered)(col("source"))
+  }
 
   /** E59: per-source distinct-TOKEN estimate via the portable HLL
     * (B59's register machinery pointed at VOCABULARY cardinality —
@@ -2087,7 +2062,7 @@ object TextOps {
     * (one md5-keyed window — corpus-cardinality key) onto E2's
     * quality relation; output is 3 bucket rows.
     */
-  def docQualityVsDup(t: Tables, ordered: Boolean = false): DataFrame = {
+  def docQualityVsDup(t: Tables): DataFrame = {
     val q = withQuality(t.documents.select(col("doc_id"), col("text")))
       .withColumn("dup_n",
         count(lit(1)).over(Window.partitionBy(md5(col("text")))))
@@ -2095,27 +2070,23 @@ object TextOps {
         when(col("dup_n") === 1, "1_unique")
           .when(col("dup_n") <= 3, "2_small")
           .otherwise("3_heavy"))
-    maybeSort(
-      q.groupBy(col("dup_bucket")).agg(
-        count(lit(1)).as("n_docs"),
-        r6(sum(col("quality_score").cast(DecimalType(18, 6))).cast("double") /
-          count(lit(1)).cast("double")).as("mean_quality_r"),
-        r6(sum(col("n_chars").cast(DecimalType(18, 6))).cast("double") /
-          count(lit(1)).cast("double")).as("mean_chars_r")),
-      ordered)(col("dup_bucket"))
+    q.groupBy(col("dup_bucket")).agg(
+      count(lit(1)).as("n_docs"),
+      r6(sum(col("quality_score").cast(DecimalType(18, 6))).cast("double") /
+        count(lit(1)).cast("double")).as("mean_quality_r"),
+      r6(sum(col("n_chars").cast(DecimalType(18, 6))).cast("double") /
+        count(lit(1)).cast("double")).as("mean_chars_r"))
   }
 
-  def textVocabHll(t: Tables, ordered: Boolean = false): DataFrame = {
+  def textVocabHll(t: Tables): DataFrame = {
     val toks = t.documents.select(col("source"),
       explode(tokens(col("text"))).as("tok"))
     val exact = toks.groupBy(col("source"))
       .agg(countDistinct(col("tok")).as("n_exact"))
-    maybeSort(
-      Analytics.hllCard(
-        Analytics.hllRegistersBy(toks, col("source"), "source", col("tok")),
-        "source")
-        .join(broadcast(exact), "source"),
-      ordered)(col("source"))
+    Analytics.hllCard(
+      Analytics.hllRegistersBy(toks, col("source"), "source", col("tok")),
+      "source")
+      .join(broadcast(exact), "source")
   }
 
   /** E62: per-source QUALITY-SCORE quantiles via the portable bottom-k
@@ -2127,8 +2098,7 @@ object TextOps {
     * map-side-combined aggregate, ≤k pairs per (source, partition)
     * on the shuffle.
     */
-  def docQualityQuantileSample(t: Tables, k: Int = 256,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docQualityQuantileSample(t: Tables, k: Int = 256): DataFrame = {
     val bks = udaf(graft.functions.BottomKSample(k),
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaLong,
@@ -2151,7 +2121,7 @@ object TextOps {
         pick(col("sv"), col("n_sample"), 0.50).as("q50"),
         pick(col("sv"), col("n_sample"), 0.75).as("q75"),
         pick(col("sv"), col("n_sample"), 0.90).as("q90"))
-  }, ordered)(col("source"))
+  }
 
   /** E63: the GOPHER rule card — the published pre-training quality
     * rule set (Rae et al. 2021, "Scaling Language Models", table A1)
@@ -2168,10 +2138,9 @@ object TextOps {
     * Scale shape: one narrow codegen'd pass over the corpus — array
     * expressions only, no shuffle, no UDF.
     */
-  def docGopherRules(t: Tables, ordered: Boolean = false): DataFrame = maybeSort(
+  def docGopherRules(t: Tables): DataFrame =
     withGopherRules(t.documents.select(col("doc_id"), col("text")))
-      .drop("text"),
-    ordered)(col("doc_id"))
+      .drop("text")
 
   /** The E63 rule columns over ANY relation with a `text` column —
     * the batch/streaming-shared core (every rule is a stateless
@@ -2241,7 +2210,7 @@ object TextOps {
     * recovery — including multi-byte text, where a char-counting
     * Content-Length would break the length jump.
     */
-  def docWarcRoundtrip(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docWarcRoundtrip(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     t.documents.select(col("doc_id"), col("text"))
@@ -2261,7 +2230,7 @@ object TextOps {
       })
       .toDF("doc_id", "warc_type", "record_id", "target_uri",
         "content_length", "n_headers", "payload_ok")
-  }, ordered)(col("doc_id"))
+  }
 
   /** Block-level HTML tags: opening OR closing one of these flushes
     * the current text block (the boilerpipe-style segmentation grain —
@@ -2438,7 +2407,7 @@ object TextOps {
     * every 17th doc is a plaintext payload that must quarantine as
     * `not_html` instead of extracting garbage.
     */
-  def docHtmlExtract(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docHtmlExtract(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
@@ -2447,7 +2416,7 @@ object TextOps {
         else htmlPayload(id))))
       .toDF("doc_id", "payload")
     docFromHtml(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   /** E65: BPE ENCODE — apply E47's ordered merge list to every
     * document, producing the per-doc token-id sequence a training
@@ -2469,8 +2438,7 @@ object TextOps {
     * spec's decode law replays the merge table backwards and recovers
     * every document's words exactly.
     */
-  def textBpeEncode(t: Tables, rounds: Int = 3,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def textBpeEncode(t: Tables, rounds: Int = 3): DataFrame = {
     val tops = bpeMineTops(t, rounds)
     val allTops = tops.reduce(_ crossJoin _)
     val repl = (1 to rounds).foldLeft("w")((e, r) => s"replace($e, p$r, chr($r))")
@@ -2488,5 +2456,5 @@ object TextOps {
         when(size(col("enc")) === 0, lit(0.0))
           .otherwise(r6(size(col("ids")).cast("double") /
             size(col("enc")).cast("double"))).as("fertility_r"))
-  }, ordered)(col("doc_id"))
+  }
 }

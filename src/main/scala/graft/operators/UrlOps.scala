@@ -168,14 +168,14 @@ object UrlOps {
   }
 
   /** E66 gated query: the planted-URL corpus through [[docFromUrls]]. */
-  def docUrlCanon(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docUrlCanon(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val urls = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, urlPayload(id))))
       .toDF("doc_id", "url")
     docFromUrls(spark, urls)
-  }, ordered)(col("doc_id"))
+  }
 
   // ---------------------------------------------------------------
   // C42: URL-level dedup (exact, post-canonicalization)
@@ -206,7 +206,7 @@ object UrlOps {
     * skew machinery is needed — the heavy tail a content-level dedup
     * faces (C2's boilerplate clusters) cannot occur at identity level.
     */
-  def docUrlDup(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docUrlDup(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val urls = t.documents.select(col("doc_id")).as[Long]
@@ -220,7 +220,7 @@ object UrlOps {
     canon.join(groups, "url_canon")
       .select(col("doc_id"), col("url_canon"), col("group_size"),
         (col("doc_id") =!= col("keeper")).cast("int").as("is_dup"))
-  }, ordered)(col("doc_id"))
+  }
 
   // ---------------------------------------------------------------
   // E67: per-domain crawl rollup card
@@ -234,7 +234,7 @@ object UrlOps {
     * the natural partitioner: ~10⁸ keys, no skew beyond what a df-cap
     * would bound).
     */
-  def docHostStats(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docHostStats(t: Tables): DataFrame = {
     val canon = docUrlCanon(t).filter(col("status") === "ok")
       .select(col("doc_id"), col("scheme"), col("host"), col("reg_domain"))
     val toks = t.documents.select(col("doc_id"),
@@ -248,7 +248,7 @@ object UrlOps {
           .as("mean_tokens_r"),
         r6(sum((col("scheme") === "https").cast("long")).cast("double") /
           count(lit(1))).as("https_share_r"))
-  }, ordered)(col("reg_domain"), col("host"))
+  }
 
   // ---------------------------------------------------------------
   // E68: outlink extraction + RFC 3986 resolution
@@ -385,7 +385,7 @@ object UrlOps {
     * [[docLinksFromHtml]]; every 17th doc is plaintext and
     * quarantines as a single `not_html` row.
     */
-  def docHtmlLinks(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docHtmlLinks(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val pages = t.documents.select(col("doc_id")).as[Long]
@@ -394,7 +394,7 @@ object UrlOps {
         else linkPayload(id))))
       .toDF("doc_id", "base_url", "payload")
     docLinksFromHtml(spark, pages)
-  }, ordered)(col("doc_id"), col("link_ord"))
+  }
 
   // ---------------------------------------------------------------
   // E70: crawl politeness — per-host fetch throttle
@@ -418,7 +418,7 @@ object UrlOps {
     * are the output a re-queueing frontier needs.
     */
   def docHostThrottle(t: Tables, maxPerWindow: Int = 3,
-      windowSec: Int = 60, ordered: Boolean = false): DataFrame = maybeSort({
+      windowSec: Int = 60): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val reqs = t.documents.select(col("doc_id")).as[Long]
@@ -438,7 +438,7 @@ object UrlOps {
     ranked.select(col("doc_id"), col("host"), col("ts_s"), col("win_s"),
       col("fetch_rank"),
       (col("fetch_rank") <= maxPerWindow).cast("int").as("allow"))
-  }, ordered)(col("doc_id"))
+  }
 
   // ---------------------------------------------------------------
   // E71: robots.txt filter (RFC 9309)
@@ -553,8 +553,7 @@ object UrlOps {
     * per-row array fold over ≤|rules| compiled regexes: ZERO corpus
     * shuffle, no per-rule explode.
     */
-  def docRobotsFilter(t: Tables, agent: String = "graftbot",
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def docRobotsFilter(t: Tables, agent: String = "graftbot"): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val hosts = (0L until 7L).map { h =>
@@ -579,7 +578,7 @@ object UrlOps {
         when(col("best.len") < 0, lit(null).cast("long"))
           .otherwise(col("best.len").cast("long")).as("rule_len"),
         col("best.allow").cast("int").as("allow"))
-  }, ordered)(col("doc_id"))
+  }
 
   // ---------------------------------------------------------------
   // E72: charset sniffing (the byte→text custody step)
@@ -683,14 +682,14 @@ object UrlOps {
   /** E72 gated query: the planted byte corpus through
     * [[docCharsetSniff]].
     */
-  def docCharsetSniffGated(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def docCharsetSniffGated(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     val payloads = t.documents.select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, charsetPayload(id))))
       .toDF("doc_id", "payload")
     docCharsetSniff(spark, payloads)
-  }, ordered)(col("doc_id"))
+  }
 
   // ---------------------------------------------------------------
   // E73: the composed crawl-intake funnel
@@ -709,7 +708,7 @@ object UrlOps {
     * Scale: four doc_id-keyed joins (co-partitioned at deploy) into
     * one #hosts rollup.
     */
-  def crawlIntakeFunnel(t: Tables, ordered: Boolean = false): DataFrame = maybeSort({
+  def crawlIntakeFunnel(t: Tables): DataFrame = {
     val robots = docRobotsFilter(t)
       .select(col("doc_id"), col("host"), col("allow").as("robots_ok"))
     val sched = docHostThrottle(t)
@@ -732,7 +731,7 @@ object UrlOps {
         sum(col("utf8_ok").cast("long")).as("n_utf8"),
         r6(sum((col("fetch_ok") * col("html_ok")).cast("long"))
           .cast("double") / count(lit(1))).as("yield_r"))
-  }, ordered)(col("host"))
+  }
 
   // ---------------------------------------------------------------
   // E69: host-graph centrality (PageRank on the integer lattice)
@@ -765,8 +764,7 @@ object UrlOps {
     * convergence loop; the judge-visible invariant is bit-equality,
     * not a tolerance).
     */
-  def hostRank(t: Tables, rounds: Int = 8,
-      ordered: Boolean = false): DataFrame = maybeSort({
+  def hostRank(t: Tables, rounds: Int = 8): DataFrame = {
     val spark = t.spark
     val links = docHtmlLinks(t).filter(col("kind") =!= "not_html")
     val pages = {
@@ -826,5 +824,5 @@ object UrlOps {
         col("r").as("rank_6"),
         (col("r").cast("double") / 1e6).as("rank_r"))
     out
-  }, ordered)(col("host"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.floor
 
 /** Shared operator-level helpers. */
@@ -18,13 +18,4 @@ package object operators {
     */
   private[operators] def r6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
   private[operators] def r4(c: Column): Column = floor(c * 1e4 + 0.5) / 1e4
-
-  /** The full-table dump operators take `ordered = true` only on the
-    * verify path (driver oracle compare needs a deterministic row
-    * order): a deploy plan must not pay a global sort — a full range
-    * exchange + per-partition sort of the whole output — for a
-    * row-delivery query whose consumers don't care about order.
-    */
-  private[operators] def maybeSort(df: DataFrame, ordered: Boolean)(cols: Column*): DataFrame =
-    if (ordered) df.orderBy(cols: _*) else df
 }

@@ -103,20 +103,29 @@ object Sinks {
     * parse per side, no pinned blocks.
     */
   def readJsonLinesAudited(spark: org.apache.spark.sql.SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): (DataFrame, DataFrame) = {
-    // corrupt detection rides INSIDE the from_json struct: PERMISSIVE
-    // from_json yields an all-null row (not a null struct) for
-    // malformed input, so a bare rec-isNull test misses it; the
-    // declared corrupt field is set exactly for unparseable lines
+      schema: org.apache.spark.sql.types.StructType): (DataFrame, DataFrame) =
+    splitCorrupt(spark.read.text(path).select(col("value").as("raw_line")), Nil, schema)
+
+  /** PERMISSIVE parse of each `raw_line` under the enforced `schema`,
+    * split into (clean, quarantined): clean rows are the `keep` columns
+    * then the schema's fields; quarantined rows keep `keep` and the raw
+    * line for replay. Corrupt detection rides INSIDE the parsed struct:
+    * PERMISSIVE parsing yields an all-null row (not a null struct) for
+    * malformed input, so a bare rec-isNull test misses it; the declared
+    * `_corrupt_record` field is set exactly for unparseable lines.
+    */
+  private def splitCorrupt(lines: DataFrame, keep: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      parse: (org.apache.spark.sql.Column, org.apache.spark.sql.types.StructType,
+        Map[String, String]) => org.apache.spark.sql.Column = from_json,
+      options: Map[String, String] = Map.empty): (DataFrame, DataFrame) = {
     val pSchema = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val parsed = spark.read.text(path)
-      .select(col("value").as("raw_line"),
-        from_json(col("value"), pSchema,
-          Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"))
+    val parsed = lines.select(keep.map(col) :+ col("raw_line") :+
+      parse(col("raw_line"), pSchema, options ++ Map("mode" -> "PERMISSIVE",
+        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"): _*)
     val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
-    (parsed.filter(!bad).select(col("rec.*")).drop("_corrupt_record"),
-      parsed.filter(bad).select(col("raw_line")))
+    (parsed.filter(!bad).select(keep.map(col) ++ schema.fieldNames.map(f => col(s"rec.$f")): _*),
+      parsed.filter(bad).select((keep :+ "raw_line").map(col): _*))
   }
 
   /** The three-relation result of an audited whole-file ingest (G28/
@@ -125,8 +134,8 @@ object Sinks {
     * share one decode, and `unpersist()` releases those blocks once
     * the caller has materialized what it needs — a long-lived session
     * ingesting shard waves must not accumulate pinned caches it has no
-    * handle to drop. The tuple-returning wrappers keep the old shape
-    * for one-shot jobs (executor exit reclaims the cache anyway).
+    * handle to drop. `tuple` gives one-shot jobs the three relations
+    * (executor exit reclaims the cache anyway).
     */
   final case class AuditedIngest(clean: DataFrame, badRows: DataFrame,
       badFiles: DataFrame, private val cached: DataFrame) {
@@ -157,57 +166,10 @@ object Sinks {
     * all-or-nothing member check (a lazily streamed file would emit
     * half its lines before the CRC failure surfaced).
     */
-  def readJsonLinesGzAudited(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType):
-      (DataFrame, DataFrame, DataFrame) =
-    readJsonLinesGzIngest(spark, path, schema).tuple
-
   def readJsonLinesGzIngest(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType):
-      AuditedIngest = {
-    import spark.implicits._
-    val decoded = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        try {
-          val in = new java.util.zip.GZIPInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](65536)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          in.close()
-          new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n", -1).filter(_.nonEmpty).toSeq
-            .map(l => (p, l, null: String, bytes.length.toLong))
-        } catch {
-          case e: java.io.IOException =>
-            Seq((p, null: String,
-              e.getClass.getSimpleName + ": " + e.getMessage,
-              bytes.length.toLong))
-        }
-      }
-      .toDF("src_file", "raw_line", "gz_error", "n_bytes")
-      // the three returned relations all hang off this flatMap; without
-      // a persist a job that writes clean rows plus both quarantines
-      // re-decompresses every shard 2–3×. MEMORY_AND_DISK: a shard set
-      // larger than executor memory spills instead of failing.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val badFiles = decoded.filter(col("gz_error").isNotNull)
-      .select(col("src_file"), col("gz_error"), col("n_bytes"))
-    val pSchema = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val parsed = decoded.filter(col("gz_error").isNull)
-      .select(col("src_file"), col("raw_line"),
-        from_json(col("raw_line"), pSchema,
-          Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"))
-    val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
-    AuditedIngest(
-      parsed.filter(!bad).select(col("src_file") +: schema.fieldNames.map(f => col(s"rec.$f")): _*),
-      parsed.filter(bad).select(col("src_file"), col("raw_line")),
-      badFiles, decoded)
-  }
+      path: String, schema: org.apache.spark.sql.types.StructType): AuditedIngest =
+    readCompressedJsonLines(spark, path, schema, "gz_error",
+      new java.util.zip.GZIPInputStream(_))
 
   /** G34: audited ZSTD JSONL ingestion — the G28 envelope for the
     * OTHER compression crawled corpora actually ship with (zstd is
@@ -225,28 +187,27 @@ object Sinks {
     * shards at 100 TB). Decoded relation persisted once for the
     * three-output fan-out (the G28 fix).
     */
-  def readJsonLinesZstAudited(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType):
-      (DataFrame, DataFrame, DataFrame) =
-    readJsonLinesZstIngest(spark, path, schema).tuple
-
   def readJsonLinesZstIngest(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType):
-      AuditedIngest = {
+      path: String, schema: org.apache.spark.sql.types.StructType): AuditedIngest =
+    readCompressedJsonLines(spark, path, schema, "zst_error",
+      new com.github.luben.zstd.ZstdInputStream(_))
+
+  /** The G28/G34 reader over one codec: `decompress` wraps each file's
+    * bytes, a file whose stream throws lands whole in the file
+    * quarantine under `errorCol`.
+    */
+  private def readCompressedJsonLines(spark: org.apache.spark.sql.SparkSession,
+      path: String, schema: org.apache.spark.sql.types.StructType, errorCol: String,
+      decompress: java.io.InputStream => java.io.InputStream): AuditedIngest = {
     import spark.implicits._
     val decoded = spark.read.format("binaryFile").load(path)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (p, bytes) =>
         try {
-          val in = new com.github.luben.zstd.ZstdInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](65536)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          in.close()
-          new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+          val in = decompress(new java.io.ByteArrayInputStream(bytes))
+          val text = try in.readAllBytes() finally in.close()
+          new String(text, java.nio.charset.StandardCharsets.UTF_8)
             .split("\n", -1).filter(_.nonEmpty).toSeq
             .map(l => (p, l, null: String, bytes.length.toLong))
         } catch {
@@ -256,21 +217,17 @@ object Sinks {
               bytes.length.toLong))
         }
       }
-      .toDF("src_file", "raw_line", "zst_error", "n_bytes")
+      .toDF("src_file", "raw_line", errorCol, "n_bytes")
+      // the three returned relations all hang off this flatMap; without
+      // a persist a job that writes clean rows plus both quarantines
+      // re-decompresses every shard 2–3×. MEMORY_AND_DISK: a shard set
+      // larger than executor memory spills instead of failing.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val badFiles = decoded.filter(col("zst_error").isNotNull)
-      .select(col("src_file"), col("zst_error"), col("n_bytes"))
-    val pSchema = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val parsed = decoded.filter(col("zst_error").isNull)
-      .select(col("src_file"), col("raw_line"),
-        from_json(col("raw_line"), pSchema,
-          Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"))
-    val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
-    AuditedIngest(
-      parsed.filter(!bad).select(col("src_file") +: schema.fieldNames.map(f => col(s"rec.$f")): _*),
-      parsed.filter(bad).select(col("src_file"), col("raw_line")),
-      badFiles, decoded)
+    val badFiles = decoded.filter(col(errorCol).isNotNull)
+      .select(col("src_file"), col(errorCol), col("n_bytes"))
+    val (clean, badLines) = splitCorrupt(decoded.filter(col(errorCol).isNull),
+      Seq("src_file"), schema)
+    AuditedIngest(clean, badLines, badFiles, decoded)
   }
 
   /** G29: audited AVRO container ingestion (the binary sibling of G28
@@ -331,11 +288,6 @@ object Sinks {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  def readAvroAudited(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType):
-      (DataFrame, DataFrame, DataFrame) =
-    readAvroIngest(spark, path, schema).tuple
-
   def readAvroIngest(spark: org.apache.spark.sql.SparkSession,
       path: String, schema: org.apache.spark.sql.types.StructType):
       AuditedIngest = {
@@ -394,7 +346,7 @@ object Sinks {
         }
       }
       .toDF("src_file", "cells", "file_error", "n_bytes")
-      // same single-decode guarantee as readJsonLinesGzAudited: all
+      // same single-decode guarantee as readJsonLinesGzIngest: all
       // three outputs share one cached decode of the container files
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val badFiles = decoded.filter(col("file_error").isNotNull)
@@ -466,10 +418,6 @@ object Sinks {
     * memory bounds at one decompressed shard. Decoded relation
     * persisted once for the three-output fan-out.
     */
-  def readWarcGzAudited(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, DataFrame) =
-    readWarcGzIngest(spark, path).tuple
-
   def readWarcGzIngest(spark: org.apache.spark.sql.SparkSession,
       path: String): AuditedIngest = {
     import spark.implicits._
@@ -480,12 +428,7 @@ object Sinks {
         try {
           val in = new java.util.zip.GZIPInputStream(
             new java.io.ByteArrayInputStream(bytes))
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](65536)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          in.close()
-          val sc = Warc.scan(out.toByteArray)
+          val sc = Warc.scan(try in.readAllBytes() finally in.close())
           sc.records.map(r => (p, r.warcType, r.recordId, r.targetUri,
             r.contentLength, r.nHeaders,
             new String(r.payload, java.nio.charset.StandardCharsets.UTF_8),
@@ -528,17 +471,9 @@ object Sinks {
     */
   def readCsvAudited(spark: org.apache.spark.sql.SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType,
-      delimiter: String = ","): (DataFrame, DataFrame) = {
-    val pSchema = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val parsed = spark.read.text(path)
-      .select(col("value").as("raw_line"),
-        from_csv(col("value"), pSchema,
-          Map("mode" -> "PERMISSIVE", "sep" -> delimiter,
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"))
-    val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
-    (parsed.filter(!bad).select(col("rec.*")).drop("_corrupt_record"),
-      parsed.filter(bad).select(col("raw_line")))
-  }
+      delimiter: String = ","): (DataFrame, DataFrame) =
+    splitCorrupt(spark.read.text(path).select(col("value").as("raw_line")), Nil, schema,
+      from_csv, Map("sep" -> delimiter))
 
   /** Small-files compaction — streaming sinks and frequent batches
     * leave thousands of tiny files; at 100 TB the NameNode/listing cost
@@ -1227,7 +1162,7 @@ object Sinks {
     val pairs = dd.stableCheckpoint(pairsFromIndex(stored, stored,
       threshold, newVsNew = true))
     dd.clusterPairs(pairs, t.documents.select(col("doc_id")), maxIter,
-        "write_dedup_clusters", ordered = false)
+        "write_dedup_clusters")
       .select(col("doc_id"), col("cluster"))
       .repartition(4, col("doc_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/clusters")
@@ -1280,7 +1215,7 @@ object Sinks {
     val universe = existingDocs.unionByName(newDocs.select(col("doc_id")))
     val clusters = dd.clusterPairs(
       dd.stableCheckpoint(newPairs.unionByName(oldEdges)), universe, maxIter,
-      "append_dedup_clusters", ordered = false)
+      "append_dedup_clusters")
       .select(col("doc_id"), col("cluster"))
     // clusterPairs returns an EAGER checkpoint, so overwriting the
     // relation it read is safe here
@@ -1336,7 +1271,7 @@ object Sinks {
       threshold, newVsNew = true))
     dd.clusterPairs(pairs,
         stored.select(col("db").as("doc_id")).distinct(), maxIter,
-        "compact_dedup_clusters", ordered = false)
+        "compact_dedup_clusters")
       .select(col("doc_id"), col("cluster"))
       .repartition(4, col("doc_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$to/clusters")
@@ -1918,8 +1853,7 @@ object Sinks {
       else {
         val cc = dd.clusterPairs(
           edges.select(col("src").as("doc_a"), col("dst").as("doc_b")),
-          mem.select(col("vec_id").as("doc_id")), maxIter, name,
-          ordered = false)
+          mem.select(col("vec_id").as("doc_id")), maxIter, name)
         val entryCluster = cc.filter(col("doc_id") === entry)
           .select(col("cluster")).collect().headOption.map(_.getLong(0))
         val r = entryCluster.fold(0L)(c =>

@@ -14,7 +14,7 @@ package graft.sources
   * Content-Length, missing terminator — is quarantined raw and the
   * scan resyncs at the next `WARC/1.0\r\n`, so one rotten record
   * never poisons a shard). File-level custody (gzip member walk,
-  * truncation) lives in [[Sinks.readWarcGzAudited]].
+  * truncation) lives in [[Sinks.readWarcGzIngest]].
   */
 object Warc {
 

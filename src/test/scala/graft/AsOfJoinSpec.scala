@@ -12,7 +12,7 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("asof exec == composed join+filter+argmax formulation") {
     val t = tables
-    val got = EventOps.evAsofEnrich(t, ordered = true).collect()
+    val got = EventOps.evAsofEnrich(t).orderBy("event_id").collect()
       .map(r => (r.getLong(0), Option(r.get(3)), Option(r.get(4)).map(_.toString)))
 
     val ev = t.events.select(col("event_id"), col("user_id"), col("ts"))

@@ -189,7 +189,7 @@ class DedupSpec extends SparkSpec {
     // engaged the pointer jump
     val edges = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val universe = (0L to 200L).toDF("doc_id")
-    val base = Dedup.clusterPairs(edges, universe, 20, "cc_chain", ordered = true)
+    val base = Dedup.clusterPairs(edges, universe, 20, "cc_chain").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(base.nonEmpty && base.forall(_._2 == 0L),
       "chain must collapse to one component rooted at doc 0")
@@ -198,7 +198,7 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      val rel = Dedup.clusterPairs(edges, universe, 20, "cc_chain_rel", ordered = true)
+      val rel = Dedup.clusterPairs(edges, universe, 20, "cc_chain_rel").orderBy("doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(rel.sameElements(base), "reliable-checkpoint run must produce identical labels")
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -400,7 +400,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("lsh band planner: along the divisor chain fn mass falls, fp mass rises, candidate volume rises (theorems)") {
-    val rows = Dedup.docLshBandPlanner(tables, ordered = true).collect()
+    val rows = Dedup.docLshBandPlanner(tables).orderBy("bands").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))
     assert(rows.map(r => (r._1, r._2)).toSeq ==
       Seq((1L, 16L), (2L, 8L), (4L, 4L), (8L, 2L), (16L, 1L)))
@@ -426,7 +426,7 @@ class DedupSpec extends SparkSpec {
     safe.groupBy(_._2).foreach { case (c, rs) =>
       assert(rs.map(_._3).toSet.size == 1, s"cluster $c spans splits ${rs.map(_._3).toSet}")
     }
-    val audit = Dedup.docSplitLeakageAudit(tables, ordered = true).collect()
+    val audit = Dedup.docSplitLeakageAudit(tables).orderBy("method").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(audit("cluster_keyed")._2 == 0L, "cluster-keyed split must never leak")
     assert(audit("cluster_keyed")._1 == audit("doc_keyed")._1, "both methods audit the same pair set")
@@ -440,7 +440,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val t = graft.sources.Tables(spark, sfDir, docsOverride = Some(docs))
     val planted = Dedup.docSplitLeakageAudit(t, trainPermille = 500,
-      validPermille = 250, ordered = true).collect()
+      validPermille = 250).orderBy("method").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(planted("doc_keyed")._1 >= 50L, s"planted pairs must be found: ${planted("doc_keyed")}")
     assert(planted("doc_keyed")._2 > 0L, "doc-keyed split must visibly leak on the planted corpus")

@@ -116,7 +116,7 @@ class EventOpsSpec extends SparkSpec {
         (3L, base + 120L * 1000 * 1000 * 1000, 7L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val planted = EventOps.evStateTransitions(graft.sources.Tables(spark, tmp), ordered = true)
+    val planted = EventOps.evStateTransitions(graft.sources.Tables(spark, tmp)).orderBy("from_type", "to_type")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(planted.toSeq == Seq(
       ("click", "error", 1L, 60L * 1000 * 1000, 1.0),
@@ -143,7 +143,7 @@ class EventOpsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-cusum").toString
     (steady ++ shifted).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.evCusumChangepoint(graft.sources.Tables(spark, tmp), ordered = true)
+    val out = EventOps.evCusumChangepoint(graft.sources.Tables(spark, tmp)).orderBy("event_type", "hour")
       .collect().map(r => (r.getString(0), r.getTimestamp(1), r.getBoolean(4)))
     assert(!out.filter(_._1 == "steady").exists(_._3), "steady series must never fire")
     val shiftedFlags = out.filter(_._1 == "shifted")
@@ -283,7 +283,7 @@ class EventOpsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-cusumdrop").toString
     (steady ++ dropped).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = EventOps.evCusumDrop(graft.sources.Tables(spark, tmp), ordered = true)
+    val out = EventOps.evCusumDrop(graft.sources.Tables(spark, tmp)).orderBy("event_type", "hour")
       .collect().map(r => (r.getString(0), r.getTimestamp(1), r.getBoolean(4)))
     assert(!out.filter(_._1 == "steady").exists(_._3), "steady series must never fire")
     val flags = out.filter(_._1 == "dropped")
@@ -321,7 +321,7 @@ class EventOpsSpec extends SparkSpec {
 
   test("ttl tuning ladder: 24h rung == A3, monotone in TTL, planted ladder exact") {
     import spark.implicits._
-    val out = EventOps.evTtlTuning(tables, ordered = true).collect()
+    val out = EventOps.evTtlTuning(tables).orderBy("ttl_hours").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.map(_._1).toSeq == Seq(1L, 6L, 24L, 96L))
     assert(out.map(_._3).distinct.length == 1, "every rung shares one total")
@@ -343,7 +343,7 @@ class EventOpsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ttl").toString
     evs.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val planted = EventOps.evTtlTuning(graft.sources.Tables(spark, tmp), ordered = true)
+    val planted = EventOps.evTtlTuning(graft.sources.Tables(spark, tmp)).orderBy("ttl_hours")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(planted.toSeq == Seq((1L, 10L), (6L, 2L), (24L, 1L), (96L, 1L)),
       s"planted ladder mismatch: ${planted.toSeq}")
@@ -365,7 +365,7 @@ class EventOpsSpec extends SparkSpec {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft-ab$effect").toString
       corpus(effect).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      EventOps.evAbtest(graft.sources.Tables(spark, tmp), ordered = true).collect()(0)
+      EventOps.evAbtest(graft.sources.Tables(spark, tmp)).orderBy("event_type").collect()(0)
     }
     val planted = card(5)
     assert(planted.getBoolean(7), "a +5 events/user arm-B lift must be significant")
@@ -380,7 +380,7 @@ class EventOpsSpec extends SparkSpec {
 
   test("conversion window sweep: monotone in window; planted 2h converter lands in the 6h and 24h rungs only") {
     import spark.implicits._
-    val rows = EventOps.evConversionWindowSweep(tables, ordered = true).collect()
+    val rows = EventOps.evConversionWindowSweep(tables).orderBy("window_hours").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.map(_._1).toSeq == Seq(1L, 6L, 24L))
     assert(rows.map(_._2).distinct.length == 1, "every rung shares one click total")
@@ -396,7 +396,7 @@ class EventOpsSpec extends SparkSpec {
     evs.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val planted = EventOps.evConversionWindowSweep(
-      graft.sources.Tables(spark, tmp), ordered = true).collect()
+      graft.sources.Tables(spark, tmp)).orderBy("window_hours").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(planted.toSeq == Seq((1L, 2L, 0L), (6L, 2L, 1L), (24L, 2L, 1L)),
       s"2h gap converts at 6h/24h only: ${planted.toSeq}")
@@ -447,7 +447,7 @@ class EventOpsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-cuped").toString
     evs.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val r = EventOps.evCuped(graft.sources.Tables(spark, tmp), ordered = true).collect()(0)
+    val r = EventOps.evCuped(graft.sources.Tables(spark, tmp)).orderBy("event_type").collect()(0)
     val (theta, rho2, vy, vadj) =
       (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
     assert(rho2 > 0.5, s"persistent users must show high variance reduction, got $rho2")
@@ -459,7 +459,7 @@ class EventOpsSpec extends SparkSpec {
     // (bound loose: at sf0.001 the per-type user sample is small, so
     // chance correlation reaches ~0.12 — still far below the planted
     // persistent-user regime)
-    EventOps.evCuped(tables, ordered = true).collect().foreach { row =>
+    EventOps.evCuped(tables).orderBy("event_type").collect().foreach { row =>
       assert(row.getDouble(3) < 0.3,
         s"${row.getString(0)}: synthetic corpus halves are independent; rho2 ${row.getDouble(3)}")
     }
@@ -467,7 +467,7 @@ class EventOpsSpec extends SparkSpec {
 
   test("mde power: arithmetic ties MDE to SE; quadrupled traffic halves the MDE") {
     import spark.implicits._
-    EventOps.evMdePower(tables, ordered = true).collect().foreach { r =>
+    EventOps.evMdePower(tables).orderBy("event_type").collect().foreach { r =>
       val se = r.getDouble(4); val mde = r.getDouble(5)
       assert(math.abs(mde - 2.8016 * se) < 5e-6,
         s"${r.getString(0)}: mde $mde != 2.8016*se ${2.8016 * se}")
@@ -482,7 +482,7 @@ class EventOpsSpec extends SparkSpec {
           (u * 1000L + i, base + i.toLong * 60000000000L, u, "click", 1.0, "{}"))
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      EventOps.evMdePower(graft.sources.Tables(spark, tmp), ordered = true)
+      EventOps.evMdePower(graft.sources.Tables(spark, tmp)).orderBy("event_type")
         .collect()(0).getDouble(5)
     }
     val ratio = card(100) / card(400)

@@ -545,8 +545,8 @@ class MultimodalSpec extends SparkSpec {
     // oracle-identity the gate leans on)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    assert(rows(Multimodal.mmFeatureExtractJpegDri(tables, ordered = true)) ==
-      rows(Multimodal.mmFeatureExtractJpegColor(tables, ordered = true)),
+    assert(rows(Multimodal.mmFeatureExtractJpegDri(tables).orderBy("doc_id")) ==
+      rows(Multimodal.mmFeatureExtractJpegColor(tables).orderBy("doc_id")),
       "DRI corpus features must equal the plain color corpus features")
   }
 
@@ -599,8 +599,8 @@ class MultimodalSpec extends SparkSpec {
     // the planted F24 corpus equals the F23b features doc-for-doc
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    assert(rows(Multimodal.mmFeatureExtractJpegProg(tables, ordered = true)) ==
-      rows(Multimodal.mmFeatureExtractJpegColor(tables, ordered = true)),
+    assert(rows(Multimodal.mmFeatureExtractJpegProg(tables).orderBy("doc_id")) ==
+      rows(Multimodal.mmFeatureExtractJpegColor(tables).orderBy("doc_id")),
       "progressive corpus features must equal the plain color corpus features")
   }
 

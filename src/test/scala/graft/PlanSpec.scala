@@ -202,7 +202,7 @@ class PlanSpec extends SparkSpec {
     // D51 composes three search legs — a regression to a cartesian or
     // a non-equi probe in ANY leg would silently explode at corpus
     // scale while the 3-row card still looked fine
-    val p = plan(Similarity.annMethodRecall(tables, ordered = true))
+    val p = plan(Similarity.annMethodRecall(tables).orderBy("method"))
     assert(!p.contains("CartesianProduct"), "cartesian inside a method leg")
     assert(p.contains("BroadcastHashJoin"),
       s"probe joins must be broadcast-hash:\n${p.take(500)}")
@@ -225,13 +225,9 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      Similarity.annGraphSearchNnd(tables, ordered = true).collect()
+      Similarity.annGraphSearchNnd(tables).orderBy("q_id", "rank").collect()
       // the listener bus is async — drain before reading
-      val deadline = System.currentTimeMillis() + 15000
-      var last = -1
-      while (plans.size != last && System.currentTimeMillis() < deadline) {
-        last = plans.size; Thread.sleep(300)
-      }
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val all = plans.asScala.toSeq
@@ -268,7 +264,7 @@ class PlanSpec extends SparkSpec {
     val globalSorts = sp.collect {
       case s: org.apache.spark.sql.execution.SortExec if s.global => s
     }
-    assert(globalSorts.isEmpty, "deploy plan pays no global sort (ordered=false default)")
+    assert(globalSorts.isEmpty, "deploy plan pays no global sort")
   }
 
   test("cc round: pure Column plan — no typed boundary leaves Tungsten") {
@@ -301,12 +297,12 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("deploy-path dump queries carry no global sort (ordered=false default)") {
+  test("deploy-path dump queries carry no global sort") {
     import graft.operators.{Multimodal, TextOps}
     // every per-row dump operator: the global orderBy exists only for
-    // the driver's deterministic oracle compare (ordered = true in
-    // SparkEntry); the default deploy plan must not pay a full range
-    // exchange + sort on the whole output
+    // the deterministic oracle dump (SparkEntry.q's sort keys); the
+    // operator's own plan must not pay a full range exchange + sort on
+    // the whole output
     val dumps: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
       "text_langid" -> TextOps.textLangid(tables),
       "text_quality" -> TextOps.textQuality(tables),
@@ -332,8 +328,8 @@ class PlanSpec extends SparkSpec {
       "ev_error_after_click" -> EventOps.evErrorAfterClick(tables),
       // pair dumps (r6): a near-dup pair set is corpus-scale at 100 TB,
       // so the deploy path must not pay the final range exchange either.
-      // docNgramJaccard/-Capped gate the same sort inside verifiedJaccard
-      // but return an eager checkpoint, so their plan isn't assertable here.
+      // docNgramJaccard/-Capped return an eager checkpoint, so their plan
+      // isn't assertable here.
       "doc_scrub_pii" -> TextOps.docScrubPii(tables),
       "doc_sample_k" -> TextOps.docSampleK(tables),
       "doc_split" -> TextOps.docSplit(tables),
@@ -765,12 +761,8 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      Similarity.annPrefixDimRecall(tables, ordered = true).collect()
-      val deadline = System.currentTimeMillis() + 15000
-      var last = -1
-      while (plans.size != last && System.currentTimeMillis() < deadline) {
-        last = plans.size; Thread.sleep(300)
-      }
+      Similarity.annPrefixDimRecall(tables).orderBy("prefix_dims").collect()
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     def walk(n: SparkPlan): Seq[SparkPlan] = n match {
       case a: AdaptiveSparkPlanExec => a +: walk(a.executedPlan)
@@ -862,7 +854,7 @@ class PlanSpec extends SparkSpec {
     val globalSorts = sp.collect {
       case s: org.apache.spark.sql.execution.SortExec if s.global => s
     }
-    assert(globalSorts.isEmpty, "deploy plan pays no global sort (ordered=false default)")
+    assert(globalSorts.isEmpty, "deploy plan pays no global sort")
   }
 
   test("constraint propagation off loses no pushed predicate but IsNotNull (q1 + the query_mix keys)") {

@@ -120,4 +120,12 @@ class RegistryHygieneSpec extends AnyFunSuite {
     assert(owners.subsetOf(Set("Similarity.scala:annPqAdcWith")),
       s"row-form ADC join keys outside D9: ${owners.mkString(", ")}")
   }
+
+  test("row order belongs to the registry: no operator takes an ordered flag or calls maybeSort") {
+    assume(Files.exists(mainRoot), "src/main not found from test CWD")
+    val sorting = mainSources.collect {
+      case (f, text) if "ordered\\s*:\\s*Boolean|maybeSort".r.findFirstIn(text).nonEmpty => f
+    }
+    assert(sorting.isEmpty, s"operator-side sort flag in: ${sorting.mkString(", ")}")
+  }
 }

@@ -30,7 +30,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("prefix-dim recall card: full-dim prefix is exact (recall 1.0, cos equals exact mean); truncation never beats full") {
     import org.apache.spark.sql.functions.col
-    val rows = Similarity.annPrefixDimRecall(tables, ordered = true).collect()
+    val rows = Similarity.annPrefixDimRecall(tables).orderBy("prefix_dims").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(rows.map(_._1).toSeq == Seq(8L, 16L, 32L, 64L))
     val full = rows.find(_._1 == 64L).get
@@ -288,7 +288,7 @@ class SimilaritySpec extends SparkSpec {
     // codes — D9 rides the Lloyd-TRAINED codebook (r10), so the
     // recompute derives codes and centers from the same trained set
     val centers = Similarity.trainedCenters(tables, nCodes)
-    val codes = Similarity.embPqCodesWith(tables, centers, m, ordered = false).collect()
+    val codes = Similarity.embPqCodesWith(tables, centers, m).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     val (q, _, cand, got) = adc.head
     val dsub = centers.head._2.length / m
@@ -541,8 +541,7 @@ class SimilaritySpec extends SparkSpec {
     // probes up to nCells so the last sweep point IS brute force:
     // recall must close at 1.0 and scan fraction at 1.0.
     val rows = Similarity
-      .annNprobeTuning(tables, nCells = 16, probes = Seq(1, 2, 4, 16),
-        ordered = true)
+      .annNprobeTuning(tables, nCells = 16, probes = Seq(1, 2, 4, 16)).orderBy("nprobe")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(rows.map(_._1).toSeq == Seq(1L, 2L, 4L, 16L))
@@ -559,7 +558,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graph reach: BFS layers bounded by out-degree, rows partition the corpus, entry layer is 1") {
-    val rows = Similarity.annGraphReach(tables, ordered = true).collect()
+    val rows = Similarity.annGraphReach(tables).orderBy("hop").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val total = tables.embeddings.count()
     assert(rows.values.sum == total,
@@ -575,7 +574,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("nlist tuning: quantization error non-increasing in cells (nested hash-prefix centers), shares sane") {
-    val rows = Similarity.annNlistTuning(tables, ordered = true).collect()
+    val rows = Similarity.annNlistTuning(tables).orderBy("n_cells").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
     assert(rows.map(_._1).toSeq == Seq(4L, 8L, 16L))
     rows.sliding(2).foreach { w =>
@@ -592,7 +591,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("beam tuning: search never beats exact, best-found improves with beam, widest beam finds something") {
-    val rows = Similarity.annBeamTuning(tables, ordered = true).collect()
+    val rows = Similarity.annBeamTuning(tables).orderBy("beam").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
     assert(rows.length == 3 && rows.map(_._1).toSeq == Seq(2L, 8L, 32L))
     rows.foreach { case (b, rec, best, exact) =>
@@ -611,7 +610,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("graph search: best-found score is monotone in rounds; results come from the graph's reachable set") {
     def best(rounds: Int): Map[Long, Double] =
-      Similarity.annGraphSearch(tables, rounds = rounds, ordered = true).collect()
+      Similarity.annGraphSearch(tables, rounds = rounds).orderBy("q_id", "rank").collect()
         .map(r => (r.getLong(0), r.getDouble(3)))
         .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).max }
     val b1 = best(1); val b3 = best(3)
@@ -631,14 +630,14 @@ class SimilaritySpec extends SparkSpec {
       .collect()(0).getLong(0)
     var reach = Set(entry)
     (1 to 3).foreach { _ => reach = reach ++ reach.flatMap(v => edges.getOrElse(v, Set.empty)) }
-    val answered = Similarity.annGraphSearch(tables, rounds = 3, ordered = true).collect()
+    val answered = Similarity.annGraphSearch(tables, rounds = 3).orderBy("q_id", "rank").collect()
       .map(_.getLong(2)).toSet
     assert(answered.subsetOf(reach),
       s"answers must lie in the ${reach.size}-vertex reachable set; got ${answered -- reach}")
   }
 
   test("layered graph search: every query answers with dense ranks; seeds come from the coarse layer's reachable set") {
-    val rows = Similarity.annGraphSearchLayered(tables, ordered = true).collect()
+    val rows = Similarity.annGraphSearchLayered(tables).orderBy("q_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val nq = tables.embeddings.filter(org.apache.spark.sql.functions.col("vec_id") < 8).count()
     assert(rows.map(_._1).distinct.length == nq, "every query must answer")
@@ -703,10 +702,10 @@ class SimilaritySpec extends SparkSpec {
     }, "two descent rounds must improve at least one vertex's list")
     // end-to-end: the refined graph's best-found per query >= the raw
     // graph's (same beam budget); ranks dense; every query answers
-    val raw = Similarity.annGraphSearch(tables, ordered = true).collect()
+    val raw = Similarity.annGraphSearch(tables).orderBy("q_id", "rank").collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).max }
-    val nnd = Similarity.annGraphSearchNnd(tables, ordered = true).collect()
+    val nnd = Similarity.annGraphSearchNnd(tables).orderBy("q_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(nnd.map(_._1).distinct.length == raw.size, "every query must answer")
     nnd.groupBy(_._1).foreach { case (q, rs) =>
@@ -718,7 +717,7 @@ class SimilaritySpec extends SparkSpec {
         s"query $q: refined-graph search lost to raw ($rb -> ${nndBest(q)})")
     }
     // D51 carries the graph_nnd ledger row
-    val ledger = Similarity.annMethodRecall(tables, ordered = true).collect()
+    val ledger = Similarity.annMethodRecall(tables).orderBy("method").collect()
       .map(r => r.getString(0)).toSeq
     assert(ledger.contains("graph_nnd"), s"ledger rows: $ledger")
   }
@@ -746,14 +745,14 @@ class SimilaritySpec extends SparkSpec {
       s"residual energy $res must be below raw energy $raw")
     // ...and the D48 card measures the payoff: at the same trained
     // code budget, residual-PQ reconstructs with lower mean error
-    val err = Similarity.embRpqError(tables, ordered = true).collect()
+    val err = Similarity.embRpqError(tables).orderBy("variant").collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(err("pq_residual") < err("pq_raw"),
       s"residual-PQ error ${err("pq_residual")} must beat raw-PQ ${err("pq_raw")}")
   }
 
   test("rpq recall: refined >= adc per query (pool-superset theorem), recalls in [0,1]") {
-    val rows = Similarity.annRpqRecall(tables, ordered = true).collect()
+    val rows = Similarity.annRpqRecall(tables).orderBy("method", "q_id").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(3)))
     assert(rows.nonEmpty)
     assert(rows.forall { case (_, _, rc) => rc >= 0.0 && rc <= 1.0 })
@@ -770,7 +769,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("rpq nprobe sweep: scan fraction strictly increasing (theorem), recalls in [0,1], all queries at every level") {
-    val rows = Similarity.annRpqNprobeTuning(tables, ordered = true).collect()
+    val rows = Similarity.annRpqNprobeTuning(tables).orderBy("nprobe").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(rows.map(_._1).toSeq == Seq(1L, 2L, 4L, 8L))
     assert(rows.forall(_._2 == rows.head._2), "every level covers all queries")
@@ -896,7 +895,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("lloyd training: SSE non-increasing per round; trained centers beat the seed and move off it") {
     val rounds = 4
-    val curve = Similarity.embKmeansTrainCurve(tables, nCenters = 8, rounds = rounds, ordered = true)
+    val curve = Similarity.embKmeansTrainCurve(tables, nCenters = 8, rounds = rounds).orderBy("round")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(curve.map(_._1).toSeq == (1L to rounds), "one row per round")
     val n = tables.embeddings.count()

@@ -102,8 +102,8 @@ class SinksSpec extends SparkSpec {
     val b = graft.operators.TextOps.corpusStats(viaLayout).collect().map(_.toSeq).toSet
     assert(a == b, s"layout changed results: only-flat=${(a -- b).take(2)} only-part=${(b -- a).take(2)}")
     // and a doc-id-keyed operator too (exercises text + ids, not just rollups)
-    val d1 = graft.operators.Dedup.docExactDedup(viaLayout, ordered = true).collect().map(_.toSeq)
-    val d2 = graft.operators.Dedup.docExactDedup(tables, ordered = true).collect().map(_.toSeq)
+    val d1 = graft.operators.Dedup.docExactDedup(viaLayout).orderBy("content_hash").collect().map(_.toSeq)
+    val d2 = graft.operators.Dedup.docExactDedup(tables).orderBy("content_hash").collect().map(_.toSeq)
     assert(d1.sameElements(d2))
   }
 
@@ -166,9 +166,9 @@ class SinksSpec extends SparkSpec {
     val loaded = Sinks.readSq8Bounds(spark, bdir.getAbsolutePath)
     val derived = Similarity.sq8Bounds(tables)
     assert(loaded == derived, "persisted bounds must round-trip bit-exactly")
-    val codesFromArtifact = Similarity.embSq8CodesWith(tables, loaded, ordered = true)
+    val codesFromArtifact = Similarity.embSq8CodesWith(tables, loaded).orderBy("vec_id", "d")
       .collect().map(_.toSeq)
-    val codesRederived = Similarity.embSq8Codes(tables, ordered = true)
+    val codesRederived = Similarity.embSq8Codes(tables).orderBy("vec_id", "d")
       .collect().map(_.toSeq)
     assert(codesFromArtifact.toSeq == codesRederived.toSeq,
       "SQ8 codes off the saved bounds diverged")
@@ -396,7 +396,7 @@ class SinksSpec extends SparkSpec {
       Array.fill[Byte](64)(0x5a))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val (clean, badLines, badFiles) = Sinks.readJsonLinesZstAudited(spark, dir, schema)
+    val (clean, badLines, badFiles) = Sinks.readJsonLinesZstIngest(spark, dir, schema).tuple
     val cleanRows = clean.collect().map(r => (r.getLong(1), r.getString(2))).toSet
     assert(cleanRows == (1 to 20).map(i => (i.toLong, s"doc $i")).toSet)
     assert(badLines.collect().map(_.getString(1)).toSeq == Seq("not json"))
@@ -409,7 +409,7 @@ class SinksSpec extends SparkSpec {
     val t = graft.operators.TextOps.plantUtf8Docs(tables)
     val dir = Files.createTempDirectory("warc_rt").toString
     Sinks.writeWarcGz(t.documents, dir, shards = 3)
-    val (clean, badRec, badFiles) = Sinks.readWarcGzAudited(spark, dir)
+    val (clean, badRec, badFiles) = Sinks.readWarcGzIngest(spark, dir).tuple
     assert(badRec.count() == 0 && badFiles.count() == 0,
       "a freshly written archive must have zero quarantines")
     val got = clean.collect()
@@ -439,7 +439,7 @@ class SinksSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(dir2, "trunc.warc.gz"),
       Warc.gzipMember(rec(5, "epsilon")) ++
         Warc.gzipMember(rec(6, "zeta")).dropRight(6))
-    val (c2, br2, bf2) = Sinks.readWarcGzAudited(spark, dir2)
+    val (c2, br2, bf2) = Sinks.readWarcGzIngest(spark, dir2).tuple
     val ids = c2.collect().map(_.getString(2)).toSet
     assert(ids == Set("urn:x:1", "urn:x:2", "urn:x:3", "urn:x:4"),
       s"healthy records around a rotten one must survive; got $ids")
@@ -455,7 +455,7 @@ class SinksSpec extends SparkSpec {
     val dir3 = Files.createTempDirectory("warc_tricky").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir3, "t.warc.gz"),
       Warc.gzipMember(tricky) ++ Warc.gzipMember(rec(8, "tail")))
-    val (c3, br3, bf3) = Sinks.readWarcGzAudited(spark, dir3)
+    val (c3, br3, bf3) = Sinks.readWarcGzIngest(spark, dir3).tuple
     assert(br3.count() == 0 && bf3.count() == 0)
     val p7 = c3.filter(col("record_id") === "urn:x:7").collect()
     assert(p7.length == 1 && p7.head.getString(6) == "body with WARC/1.0\r\n inside it",
@@ -502,7 +502,7 @@ class SinksSpec extends SparkSpec {
       cBytes.dropRight(25))
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType), StructField("score", DoubleType)))
-    val (clean, badRows, badFiles) = Sinks.readAvroAudited(spark, dir.getPath, schema)
+    val (clean, badRows, badFiles) = Sinks.readAvroIngest(spark, dir.getPath, schema).tuple
     assert(clean.schema.fieldNames.toSeq == Seq("src_file", "doc_id", "text", "score"))
     val cleanRows = clean.collect()
       .map(r => (r.getLong(1), r.getString(2), r.getDouble(3))).toSet
@@ -616,9 +616,8 @@ class SinksSpec extends SparkSpec {
     val sim = graft.operators.Similarity
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
-    assert(rows(sim.annMethodRecall(tables, ordered = true,
-        indexPath = Some(dir))) ==
-      rows(sim.annMethodRecall(tables, ordered = true)),
+    assert(rows(sim.annMethodRecall(tables, indexPath = Some(dir)).orderBy("method")) ==
+      rows(sim.annMethodRecall(tables).orderBy("method")),
       "artifact-served ledger must equal the memoized path bit-for-bit")
   }
 
@@ -889,7 +888,7 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graphidx").toString
     Sinks.writeGraphIndex(tables, dir)
     val served = Sinks.searchGraphIndex(spark, dir).collect().map(_.toSeq)
-    val inQuery = graft.operators.Similarity.annGraphSearchNnd(tables, ordered = true)
+    val inQuery = graft.operators.Similarity.annGraphSearchNnd(tables).orderBy("q_id", "rank")
       .collect().map(_.toSeq)
     assert(served.toSeq == inQuery.toSeq,
       "fresh-index search must equal the in-query D53 row-for-row")
@@ -1347,11 +1346,7 @@ class SinksSpec extends SparkSpec {
     val (servedRows, servedIvfRows) = try {
       val a = Sinks.searchPrefixSliced(spark, dir).collect().map(_.toSeq).toSeq
       val b = Sinks.searchPrefixSlicedIvf(spark, dir).collect().map(_.toSeq).toSeq
-      val deadline = System.currentTimeMillis() + 15000
-      var last = -1
-      while (scans.size != last && System.currentTimeMillis() < deadline) {
-        last = scans.size; Thread.sleep(300)
-      }
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       (a, b)
     } finally spark.listenerManager.unregister(listener)
     assert(servedRows ==

@@ -724,7 +724,7 @@ class TextAnalysisSpec extends SparkSpec {
       .reduce(_ crossJoin _).collect()(0)
     // raw pair strings, sentinels intact — the decoder's merge table
     val pairs = (1 to rounds).map(r => tops.getAs[String](s"p$r"))
-    val enc = TextOps.textBpeEncode(tables, rounds, ordered = true).collect()
+    val enc = TextOps.textBpeEncode(tables, rounds).orderBy("doc_id").collect()
     val docs = tables.documents
       .select(col("doc_id"), lower(col("text"))).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1)).getOrElse("")).toMap
@@ -754,7 +754,7 @@ class TextAnalysisSpec extends SparkSpec {
         s"fertility must be real ids per word for doc $id")
     }
     // each merge only ever shortens a symbol sequence
-    val enc1 = TextOps.textBpeEncode(tables, 1, ordered = true).collect()
+    val enc1 = TextOps.textBpeEncode(tables, 1).orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n_tokens")).toMap
     enc.foreach(r =>
       assert(r.getAs[Long]("n_tokens") <= enc1(r.getLong(0)),
@@ -772,7 +772,7 @@ class TextAnalysisSpec extends SparkSpec {
     graft.sources.Sinks.writeWarcGz(
       ids.map(id => (id, payloadOf(id))).toDF("doc_id", "text"), dir, shards = 2)
     val (clean, badRecords, badFiles) =
-      graft.sources.Sinks.readWarcGzAudited(spark, dir)
+      graft.sources.Sinks.readWarcGzIngest(spark, dir).tuple
     assert(badRecords.count() == 0 && badFiles.count() == 0)
     val extracted = TextOps.docFromHtml(spark, clean.select(
       regexp_extract(col("record_id"), "urn:graft:doc:(\\d+)", 1)
@@ -797,12 +797,12 @@ class TextAnalysisSpec extends SparkSpec {
     val okDocs = extracted.filter(col("status") === "ok")
       .select(col("doc_id"), col("text"))
     val viaPipeline = TextOps.docGopherRules(
-      tables.copy(docsOverride = Some(okDocs)), ordered = true)
+      tables.copy(docsOverride = Some(okDocs))).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
     val directDf = direct.filter(_._2 == "ok").map(d => (d._1, d._3))
       .toDF("doc_id", "text")
     val directGopher = TextOps.docGopherRules(
-      tables.copy(docsOverride = Some(directDf)), ordered = true)
+      tables.copy(docsOverride = Some(directDf))).orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
     assert(viaPipeline.nonEmpty && viaPipeline == directGopher,
       "WARC → extract → Gopher must equal Gopher over directly-extracted text")
