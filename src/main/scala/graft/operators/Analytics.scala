@@ -232,7 +232,7 @@ object Analytics {
     val pick = (sv: Column, m: Column, p: Double) =>
       element_at(sv, (floor(lit(p) * (m - 1).cast("double") + 0.5) + 1)
         .cast("int"))
-    val out = t.events
+    t.events
       .select($("event_type"),
         graft.functions.Hashing.md5_60(concat(lit("qsample:"),
           $("event_id").cast("string"))).as("hv"),
@@ -247,7 +247,6 @@ object Analytics {
         pick($("sv"), $("n_sample"), 0.50).as("q50"),
         pick($("sv"), $("n_sample"), 0.75).as("q75"),
         pick($("sv"), $("n_sample"), 0.90).as("q90"))
-    out
   }
 
   /** A88: per-event-type top-k events by value via the bounded
@@ -259,14 +258,13 @@ object Analytics {
       org.apache.spark.sql.Encoders.tuple(
         org.apache.spark.sql.Encoders.scalaDouble,
         org.apache.spark.sql.Encoders.scalaLong))
-    val out = t.events
+    t.events
       .groupBy($("event_type"))
       .agg(topk($("value"), $("event_id")).as("top"))
       .select($("event_type"), posexplode($("top")).as(Seq("i", "p")))
       .select($("event_type"), ($("i") + 1).cast("long").as("rnk"),
         $("p").getField("_2").as("event_id"),
         $("p").getField("_1").as("value"))
-    out
   }
 
   /** B63: EXACT top-k per group via the bounded [[graft.functions.TopKRows]]
@@ -1369,7 +1367,7 @@ object Analytics {
       .cast("long")
     val w = Window.partitionBy($("o_custkey")).orderBy($("day_n"))
       .rangeBetween(-(days - 1).toLong, 0L)
-    val out = t.orders
+    t.orders
       .select($("o_custkey"), $("o_orderkey"), dayN.as("day_n"),
         $("o_totalprice"))
       .withColumn("n_in_window", count(lit(1)).over(w))
@@ -1378,7 +1376,6 @@ object Analytics {
       .select($("o_custkey"), $("o_orderkey"), $("day_n"), $("n_in_window"),
         col("trail_sum"),
         r6(col("trail_sum") / $("n_in_window").cast("double")).as("trail_avg_r"))
-    out
   }
 
   /** B55: product-type profit (TPC-H Q9 shape on the available data

@@ -1530,7 +1530,7 @@ object Dedup {
           col("doc_id") < col("db"))
       .select(col("doc_id").as("da"), col("db")).distinct()
     val docs = t.documents.select(col("doc_id"), col("text"))
-    val out = docs
+    docs
       .join(broadcast(cands), col("doc_id") === col("da"))
       .select(col("da"), col("db"), col("text").as("text_a"))
       .join(docs, col("doc_id") === col("db"))
@@ -1541,7 +1541,6 @@ object Dedup {
       .withColumn("sim_r", r6(lit(1.0) -
         col("edit_dist").cast("double") /
           greatest(col("len_a"), col("len_b")).cast("double")))
-    out
   }
 
   /** C31: snapshot CHURN card — crawl-to-crawl content drift per
@@ -1570,7 +1569,7 @@ object Dedup {
       .groupBy(col("source"), col("h"))
       .agg(max(when(col("ep") === 0, 1L).otherwise(0L)).as("a"),
         max(when(col("ep") === 1, 1L).otherwise(0L)).as("b"))
-    val out = per.groupBy(col("source")).agg(
+    per.groupBy(col("source")).agg(
         sum(col("a")).as("n_a"), sum(col("b")).as("n_b"),
         sum(col("a") * col("b")).as("n_common"))
       .select(col("source"), col("n_a"), col("n_b"), col("n_common"),
@@ -1580,7 +1579,6 @@ object Dedup {
         when(col("n_a") > 0,
           r6((col("n_a") - col("n_common")).cast("double") /
             col("n_a").cast("double"))).as("removed_frac_r"))
-    out
   }
 
   /** C35: LSH BAND PLANNER — the design card that picks C3's (bands,

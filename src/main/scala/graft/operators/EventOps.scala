@@ -1534,7 +1534,7 @@ object EventOps {
         r6(col("resid_r") * col("resid_r")).as("h_sq"),
         abs(col("n") - col("prev_n")).as("nv_abs"),
         ((col("n") - col("prev_n")) * (col("n") - col("prev_n"))).as("nv_sq"))
-    val out = scored.groupBy(col("event_type"))
+    scored.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_scored"),
         sum(col("h_abs").cast(DecimalType(18, 6))).as("sha"),
         sum(col("h_sq").cast(DecimalType(18, 6))).as("shs"),
@@ -1546,7 +1546,6 @@ object EventOps {
         r6(col("sna").cast("double") / col("n_scored").cast("double")).as("naive_mae_r"),
         r6(sqrt(col("sns").cast("double") / col("n_scored").cast("double"))).as("naive_rmse_r"))
       .withColumn("holt_better", col("holt_rmse_r") < col("naive_rmse_r"))
-    out
   }
 
   /** A74: ENTROPY RATE of the event-type Markov chain — per from-type,
@@ -1584,11 +1583,10 @@ object EventOps {
       .groupBy(col("from_type"), col("n_from"))
       .agg(sum(col("term_r").cast(DecimalType(18, 6))).cast("double").as("row_entropy"))
     val pi = evStationaryDist(t, iters).select(col("event_type"), col("p_r"))
-    val out = rowEnt.join(pi, col("from_type") === col("event_type"))
+    rowEnt.join(pi, col("from_type") === col("event_type"))
       .select(col("from_type"), col("n_from"), col("p_r"),
         r6(col("row_entropy")).as("row_entropy_r"),
         r6(col("p_r") * col("row_entropy")).as("contrib_r"))
-    out
   }
 
   /** A77: TTL tuning LADDER — the reference's central knob
@@ -1631,12 +1629,11 @@ object EventOps {
         ttls.indices.map(i => (ttls(i), counts(i), total))
       }
       .toDF("ttl_hours", "emitted", "total")
-    val out = perKey.groupBy(col("ttl_hours"))
+    perKey.groupBy(col("ttl_hours"))
       .agg(sum(col("emitted")).as("n_emitted"), sum(col("total")).as("n_total"))
       .select(col("ttl_hours"), col("n_emitted"), col("n_total"),
         r6(lit(1.0) - col("n_emitted").cast("double") / col("n_total").cast("double"))
           .as("dedup_rate_r"))
-    out
   }
 
   /** A76: anomaly ENSEMBLE — A29 (robust static MAD), A33 (trend-aware
@@ -1662,7 +1659,7 @@ object EventOps {
       eh(col("hour")).as("h2"), col("is_spike").cast("int").as("ewma_flag"))
     val se = evAnomalySeasonal(t).select(col("event_type").as("et3"),
       col("hour_idx").as("h3"), col("flagged").cast("int").as("seasonal_flag"))
-    val out = mad
+    mad
       .join(ew, col("event_type") === col("et2") && col("hour_idx") === col("h2"))
       .join(se, col("event_type") === col("et3") && col("hour_idx") === col("h3"))
       .select(col("event_type"), col("hour_idx"), col("n"),
@@ -1670,7 +1667,6 @@ object EventOps {
       .withColumn("votes",
         (col("mad_flag") + col("ewma_flag") + col("seasonal_flag")).cast("int"))
       .withColumn("consensus", col("votes") >= 2)
-    out
   }
 
   /** A75: drop-side CUSUM — the OUTAGE detector A49 can't be: S⁺
@@ -1731,11 +1727,10 @@ object EventOps {
     val se2 = abVarA / col("n_a").cast("double") + abVarB / col("n_b").cast("double")
     val tstat = when(col("n_a") > 1 && col("n_b") > 1 && se2 > 0.0,
       (abMeanA - abMeanB) / sqrt(se2))
-    val out = m.select(col("event_type"), col("n_a"), col("n_b"),
+    m.select(col("event_type"), col("n_a"), col("n_b"),
       r6(abMeanA).as("mean_a_r"), r6(abMeanB).as("mean_b_r"),
       r6(abMeanA - abMeanB).as("diff_r"), r6(tstat).as("t_r"),
       (abs(tstat) > 1.96).as("significant"))
-    out
   }
 
   /** The A78/A79 shared per-arm EXACT moment relation: per event type,
@@ -1890,10 +1885,9 @@ object EventOps {
     val ok = col("n") > 1 && vx > 0.0 && vy > 0.0
     val theta = when(ok, cxy / vx)
     val rho2 = when(ok, cxy * cxy / (vx * vy))
-    val out = m.select(col("event_type"), col("n").as("n_users"),
+    m.select(col("event_type"), col("n").as("n_users"),
       r6(theta).as("theta_r"), r6(rho2).as("var_reduction_r"),
       r6(vy).as("var_y_r"), r6(when(ok, vy * (lit(1.0) - rho2))).as("var_yadj_r"))
-    out
   }
 
   /** A81: sample-ratio-mismatch (SRM) check — the sanity gate an
@@ -1908,9 +1902,8 @@ object EventOps {
   def evAbSrm(t: Tables): DataFrame = {
     val d = (col("n_a") - col("n_b")).cast("double")
     val chi2 = d * d / (col("n_a") + col("n_b")).cast("double")
-    val out = abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
+    abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
       r6(chi2).as("chi2_r"), (chi2 > 3.841).as("srm_flag"))
-    out
   }
 
   /** A79: experiment POWER card — the design read taken BEFORE running
@@ -1934,9 +1927,8 @@ object EventOps {
     val pooled = (col("s1a") + col("s1b")).cast("double") /
       (col("n_a") + col("n_b")).cast("double")
     val mde = lit(2.8016) * se
-    val out = abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
+    abMoments(t).select(col("event_type"), col("n_a"), col("n_b"),
       r6(pooled).as("pooled_mean_r"), r6(se).as("se_r"),
       r6(mde).as("mde_abs_r"), r6(mde / pooled).as("mde_rel_r"))
-    out
   }
 }

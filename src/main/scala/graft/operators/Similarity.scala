@@ -530,7 +530,7 @@ object Similarity {
     def share(n: Column, tt: Column) = r6(n.cast("double") / tt.cast("double"))
     def meanD(sd: Column, n: Column) =
       when(n > 0L, r6(sd.cast("double") / n.cast("double")))
-    val out = totals.select(col("cell"), col("n_train"), col("n_serve"),
+    totals.select(col("cell"), col("n_train"), col("n_serve"),
         share(col("n_train"), col("tt_train")).as("share_train_r"),
         share(col("n_serve"), col("tt_serve")).as("share_serve_r"),
         meanD(col("sd_train"), col("n_train")).as("mean_dist_train_r"),
@@ -540,7 +540,6 @@ object Similarity {
       .withColumn("dist_delta_r",
         when(col("mean_dist_train_r").isNotNull && col("mean_dist_serve_r").isNotNull,
           r6(col("mean_dist_serve_r") - col("mean_dist_train_r"))))
-    out
   }
 
   /** D20: one Lloyd update round — the k-means TRAINING step paired

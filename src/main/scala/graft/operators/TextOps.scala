@@ -1824,7 +1824,7 @@ object TextOps {
     val chunks = docCdcChunks(t, window, modDiv)
       .withColumn("occ_rank", row_number().over(first))
       .join(t.documents.select(col("doc_id"), col("source")), "doc_id")
-    val out = chunks.groupBy(col("source"))
+    chunks.groupBy(col("source"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("chunk_len")).as("total_bytes"),
         sum(when(col("occ_rank") > 1, col("chunk_len")).otherwise(0L)).as("dup_bytes"),
@@ -1833,7 +1833,6 @@ object TextOps {
         col("n_dup_chunks"), col("dup_bytes"),
         r6(col("dup_bytes").cast("double") / col("total_bytes").cast("double"))
           .as("dup_share_r"))
-    out
   }
 
   /** E56: Heaps'-law vocabulary-growth card — cumulative distinct
