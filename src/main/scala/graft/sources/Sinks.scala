@@ -124,7 +124,7 @@ object Sinks {
       parse(col("raw_line"), pSchema, options ++ Map("mode" -> "PERMISSIVE",
         "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"): _*)
     val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
-    (parsed.filter(!bad).select(keep.map(col) ++ schema.fieldNames.map(f => col(s"rec.$f")): _*),
+    (parsed.filter(!bad).select(keep.map(col) :+ col("rec.*"): _*).drop("_corrupt_record"),
       parsed.filter(bad).select((keep :+ "raw_line").map(col): _*))
   }
 
