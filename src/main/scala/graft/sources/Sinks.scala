@@ -121,8 +121,8 @@ object Sinks {
       options: Map[String, String] = Map.empty): (DataFrame, DataFrame) = {
     val pSchema = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
     val parsed = lines.select(keep.map(col) :+ col("raw_line") :+
-      parse(col("raw_line"), pSchema, options ++ Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"): _*)
+      parse(col("raw_line"), pSchema, Map("mode" -> "PERMISSIVE") ++ options ++
+        Map("columnNameOfCorruptRecord" -> "_corrupt_record")).as("rec"): _*)
     val bad = col("rec").isNull || col("rec._corrupt_record").isNotNull
     (parsed.filter(!bad).select(keep.map(col) :+ col("rec.*"): _*).drop("_corrupt_record"),
       parsed.filter(bad).select((keep :+ "raw_line").map(col): _*))
