@@ -220,7 +220,7 @@ object SparkEntry {
     "ann_recall_eval"      -> q(Similarity.annRecallEval(_), "q_id"),
     "ann_nprobe_tuning"    -> q(Similarity.annNprobeTuning(_), "nprobe"),
     "ann_mmr_diversify"    -> q(Similarity.annMmrDiversify(_), "q_id", "rank"),
-    "emb_knn_clusters"     -> q(Similarity.embKnnClusters(_), "doc_id"),
+    "emb_knn_clusters"     -> q(Similarity.embKnnClusters(_), "vec_id"),
     "ann_ivf"              -> q(Similarity.annIvf(_)),
     "ann_maxsim"           -> q(Similarity.annMaxsim(_)),
     "emb_norm_stats"       -> q(Similarity.embNormStats),
